@@ -68,7 +68,7 @@ object Connectors {
     * when present, makes the write idempotent under checkpoint replay
     * (the ES connector gets this for free from doc-id upserts; the
     * parquet store uses the commit-marker protocol of
-    * [[graft.sinks.IndexedParquetSink.writeBatchExactlyOnce]]). */
+    * [[graft.sinks.IndexedParquetSink.commitBatch]]). */
   trait BulkSinkConnector {
     def name: String
     def writeBatch(batch: DataFrame, target: String,
@@ -105,21 +105,15 @@ object Connectors {
   }
 
   /** The indexed parquet store as the bulk sink (ES bulk-API analog;
-    * partition directory = index). */
+    * partition directory = index): every batch, with or without an id,
+    * goes through the one commit path. */
   object IndexedParquetBulk extends BulkSinkConnector {
     val name = "indexed-parquet"
     def writeBatch(batch: DataFrame, target: String,
         isFailed: Option[Column], failedTarget: Option[String],
         batchId: Option[Long]): DataFrame =
-      batchId match {
-        case Some(id) => graft.sinks.IndexedParquetSink
-          .writeBatchExactlyOnce(batch, target, id, isFailed, failedTarget)
-        case None => isFailed match {
-          case Some(cond) => graft.sinks.IndexedParquetSink
-            .writeBatchAccounted(batch, target, cond, failedTarget)
-          case None => graft.sinks.IndexedParquetSink.writeBatch(batch, target)
-        }
-      }
+      graft.sinks.IndexedParquetSink.commitBatch(batch, target, isFailed,
+        failedTarget, batchId)
   }
 
   private val sources = Seq(ParquetMessages, JsonLinesMessages)

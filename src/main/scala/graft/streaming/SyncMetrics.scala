@@ -10,16 +10,26 @@ import java.util.concurrent.atomic.LongAdder
   * increasing totals, scrape-able as a text snapshot. Progress-level
   * counters (rows in/processed, batch count) come from the
   * StreamingQueryListener; per-(index, app) written totals are fed by the
-  * sink's bulk-metrics DataFrame (IndexedParquetSink.writeBatch). All
+  * bulk metrics each sink commit returns ([[recordBulk]]). All
   * driver-side state is O(#labels) — counters only, never rows. */
 object SyncMetrics {
 
   private val counters = new ConcurrentHashMap[String, LongAdder]()
 
+  /** Label values are escaped as the exposition format requires
+    * (backslash, double quote, newline): `index` and `app` come from
+    * message payloads and must not break a scrape line. */
   def incBy(name: String, labels: Seq[(String, String)], v: Long): Unit = {
     val key = name + labels.sortBy(_._1)
-      .map { case (k, x) => s"""$k="$x"""" }.mkString("{", ",", "}")
+      .map { case (k, x) => s"""$k="${escape(x)}"""" }.mkString("{", ",", "}")
     counters.computeIfAbsent(key, _ => new LongAdder).add(v)
+  }
+
+  private def escape(v: String): String = v.flatMap {
+    case '\\' => "\\\\"
+    case '"' => "\\\""
+    case '\n' => "\\n"
+    case c => c.toString
   }
 
   def value(key: String): Long =

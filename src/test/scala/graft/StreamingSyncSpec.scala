@@ -219,24 +219,44 @@ class StreamingSyncSpec extends SparkSpec {
 
   test("withRetries retries transient sink failures and counts them") {
     import graft.sinks.IndexedParquetSink
+    val analysis = intercept[org.apache.spark.sql.AnalysisException](
+      spark.table("no_such_table_for_retries"))
+    // (label, what the attempt throws, attempts expected before giving up)
+    val cases = Seq[(String, Throwable, Int)](
+      ("transient", new RuntimeException("transient"), 4),
+      ("interrupt", new InterruptedException("stop"), 1),
+      ("fatal", new StackOverflowError("fatal"), 1),
+      ("analysis", analysis, 1))
+    cases.foreach { case (label, err, expected) =>
+      withClue(s"$label: ") {
+        graft.streaming.SyncMetrics.reset()
+        var attempts = 0
+        val thrown = intercept[Throwable] {
+          IndexedParquetSink.withRetries(3, backoffMs = 1, label = label) { () =>
+            attempts += 1
+            throw err
+          }
+        }
+        assert(thrown eq err)
+        assert(attempts == expected)
+        assert(graft.streaming.SyncMetrics
+          .value(s"""graft_es_retry_total{sink="$label"}""") == expected - 1)
+      }
+    }
+    // a transient failure that clears succeeds, after a non-zero linear
+    // default backoff (100 ms, then 200 ms)
     graft.streaming.SyncMetrics.reset()
     var attempts = 0
+    val t0 = System.nanoTime()
     val out = IndexedParquetSink.withRetries(3, label = "test") { () =>
       attempts += 1
       if (attempts < 3) throw new RuntimeException("transient")
       "ok"
     }
     assert(out == "ok" && attempts == 3)
+    assert((System.nanoTime() - t0) / 1000000 >= 300)
     assert(graft.streaming.SyncMetrics
       .value("""graft_es_retry_total{sink="test"}""") == 2)
-    // exhausted retries rethrow (micro-batch fails -> checkpoint replay)
-    intercept[RuntimeException] {
-      IndexedParquetSink.withRetries(1, label = "test2") { () =>
-        throw new RuntimeException("permanent")
-      }
-    }
-    assert(graft.streaming.SyncMetrics
-      .value("""graft_es_retry_total{sink="test2"}""") == 1)
   }
 
   test("sync runs unchanged through a swapped source connector (jsonlines)") {
@@ -270,14 +290,14 @@ class StreamingSyncSpec extends SparkSpec {
   }
 
   test("mid-batch crash + restart from checkpoint: store equals batch relation exactly (no loss, no dup)") {
-    // the r6-verdict #4 fault injection: the stream is KILLED mid-write
-    // (orphan batch-scoped files on disk, no commit marker), restarted
-    // from the checkpoint, and the indexed store must converge to the
-    // batch relation bit-for-bit — replay scrubs the orphans (no dup)
-    // and rewrites the uncommitted batch (no loss)
+    // fault-injection matrix over the commit protocol's crash points:
+    // the stream is KILLED while committing batch 1, restarted from the
+    // checkpoint, and the store must converge to the batch relation
+    // exactly — replay scrubs the orphans (no dup) and rewrites the
+    // uncommitted batch (no loss), or skips a committed one
+    import graft.sinks.IndexedParquetSink
     import graft.sources.Connectors
     import org.apache.hadoop.fs.{FileSystem, Path}
-    val tmp = Files.createTempDirectory("graft-crash").toString
     // no rate limits: admission is then batch-split-invariant, so the
     // final store must equal the batch pipeline regardless of batching
     val cfg2 = SyncConfig(
@@ -287,82 +307,86 @@ class StreamingSyncSpec extends SparkSpec {
       .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
         timestamp_micros(expr("ts div 1000")).as("publish_time"),
         col("props").as("data"))
-    msgs.repartition(3).write.parquet(s"$tmp/src") // 3 files → 3 batches
+    val poison = "\"k\": 5[0-9]\\}"
+    val all = SyncPipeline(cfg2)(msgs)
+    val batch = all.filter(!col("data").rlike(poison))
+    val expected = batch.select("msg_id", "index", "app").orderBy("msg_id")
+      .collect().toSeq
+    val expectedFailed = all.filter(col("data").rlike(poison))
+      .select("msg_id").orderBy("msg_id").collect().toSeq
 
-    val fs = FileSystem.get(new java.net.URI(tmp),
-      spark.sparkContext.hadoopConfiguration)
-    object CrashOnce extends Connectors.BulkSinkConnector {
-      val name = "crash-once"
+    /** Crashes batch 1 once, at `point`: a step of the sink's commit, or
+      * "committed" — after the marker, before StreamingSync writes the
+      * batch's metrics-store rows. */
+    final class CrashAt(point: String) extends Connectors.BulkSinkConnector {
+      val name = "crash-at"
       @volatile var fired = false
       def writeBatch(batch: org.apache.spark.sql.DataFrame, target: String,
           isFailed: Option[org.apache.spark.sql.Column],
           failedTarget: Option[String],
           batchId: Option[Long]): org.apache.spark.sql.DataFrame = {
-        if (!fired && batchId.exists(_ >= 1)) {
+        val armed = !fired && batchId.contains(1L)
+        def crash(step: String): Unit = if (armed && step == point) {
           fired = true
-          // leave exactly the wreckage a crashed commit-move leaves:
-          // some b<id>-* files in their index dirs, NO marker
-          val stage = s"$target/_staging/__crash"
-          batch.limit(7).coalesce(1).write.mode("overwrite")
-            .partitionBy("index").parquet(stage)
-          fs.globStatus(new Path(s"$stage/index=*/part-*"))
-            .zipWithIndex.foreach { case (s0, i) =>
-              val idxDir = new Path(s"$target/${s0.getPath.getParent.getName}")
-              fs.mkdirs(idxDir)
-              fs.rename(s0.getPath,
-                new Path(idxDir, s"b${batchId.get}-orphan$i.parquet"))
-            }
-          fs.delete(new Path(stage), true)
-          throw new RuntimeException("injected mid-batch crash")
+          throw new RuntimeException(s"injected crash at $step")
         }
-        Connectors.IndexedParquetBulk.writeBatch(batch, target, isFailed,
-          failedTarget, batchId)
+        val m = IndexedParquetSink.commitBatch(batch, target, isFailed,
+          failedTarget, batchId, onStep = crash)
+        crash("committed")
+        m
       }
     }
 
-    val poison = "\"k\": 5[0-9]\\}"
-    val q1 = StreamingSync.start(spark, cfg2, s"$tmp/src", s"$tmp/sink",
-      s"$tmp/metrics", availableNow = true, batchFiles = Some(1),
-      maxRetries = 0, sink = CrashOnce, failedDocPattern = Some(poison))
-    val died = try { q1.awaitTermination(120000); false } catch {
-      case _: org.apache.spark.sql.streaming.StreamingQueryException => true
+    Seq("staged", "move 0", "moves-done", "committed").foreach { point =>
+      withClue(s"crash at '$point': ") {
+        val tmp = Files.createTempDirectory("graft-crash").toString
+        msgs.repartition(3).write.parquet(s"$tmp/src") // 3 files → 3 batches
+        val fs = FileSystem.get(new java.net.URI(tmp),
+          spark.sparkContext.hadoopConfiguration)
+        def files(p: String): Seq[Path] =
+          Option(fs.globStatus(new Path(p))).toSeq.flatten.map(_.getPath)
+        def dataFiles(name: String): Seq[Path] =
+          files(s"$tmp/sink/index=*/$name") ++ files(s"$tmp/sink/_failed/index=*/$name")
+        val sink = new CrashAt(point)
+        def run(): org.apache.spark.sql.streaming.StreamingQuery =
+          StreamingSync.start(spark, cfg2, s"$tmp/src", s"$tmp/sink",
+            s"$tmp/metrics", availableNow = true, batchFiles = Some(1),
+            maxRetries = 0, sink = sink, failedDocPattern = Some(poison))
+        val died = try { run().awaitTermination(120000); false } catch {
+          case _: org.apache.spark.sql.streaming.StreamingQueryException => true
+        }
+        assert(died, "the injected crash must kill the stream")
+        // the crash left the wreckage of its point
+        assert(fs.exists(new Path(s"$tmp/sink/_commits/0")))
+        assert(fs.exists(new Path(s"$tmp/sink/_commits/1")) == (point == "committed"))
+        assert(files(s"$tmp/sink/_staging/b1/*/*/part-*").nonEmpty ==
+          (point == "staged" || point == "move 0"))
+        assert(dataFiles("b1-*").nonEmpty ==
+          (point != "staged"))
+        assert(!fs.exists(new Path(s"$tmp/metrics/bid=1")))
+
+        // restart from the same checkpoint: batch 1 replays, batch 2 runs
+        run().awaitTermination(120000)
+
+        val store = spark.read.parquet(s"$tmp/sink")
+        assert(store.select("msg_id", "index", "app").orderBy("msg_id")
+          .collect().toSeq == expected, "store == batch relation exactly")
+        // the failed-docs log rides the same commit: exactly the poison set
+        assert(spark.read.parquet(s"$tmp/sink/_failed").select("msg_id")
+          .orderBy("msg_id").collect().toSeq == expectedFailed,
+          "_failed == poison set exactly")
+        assert(spark.read.parquet(s"$tmp/metrics")
+          .agg(sum("written")).head.getLong(0) == store.count())
+        // no orphans: staging is empty and every data file belongs to a
+        // batch whose marker is in place
+        assert(files(s"$tmp/sink/_staging/*").isEmpty)
+        val batchesOnDisk = dataFiles("*.parquet")
+          .map(_.getName.takeWhile(_ != '-')).toSet
+        assert(batchesOnDisk == Set("b0", "b1", "b2"))
+        Seq(0, 1, 2).foreach(b =>
+          assert(fs.exists(new Path(s"$tmp/sink/_commits/$b")), s"marker $b"))
+      }
     }
-    assert(died, "the injected crash must kill the stream")
-    // the crash left real wreckage: orphan files present, batch 0 committed
-    assert(fs.globStatus(new Path(s"$tmp/sink/index=*/b1-orphan*")).nonEmpty)
-    assert(fs.exists(new Path(s"$tmp/sink/_commits/0")))
-    assert(!fs.exists(new Path(s"$tmp/sink/_commits/1")))
-
-    // restart from the same checkpoint: batch 1 replays (scrub+rewrite),
-    // batch 2 runs fresh
-    StreamingSync.start(spark, cfg2, s"$tmp/src", s"$tmp/sink",
-      s"$tmp/metrics", availableNow = true, batchFiles = Some(1),
-      maxRetries = 0, sink = CrashOnce,
-      failedDocPattern = Some(poison)).awaitTermination(120000)
-
-    val all = SyncPipeline(cfg2)(msgs)
-    val batch = all.filter(!col("data").rlike(poison))
-    // the FAILED-docs store rides the same commit protocol: exactly the
-    // batch poison set, no dup, even through the crash window
-    val failedStore = spark.read.parquet(s"$tmp/sink/_failed")
-    assert(failedStore.count() ==
-      all.filter(col("data").rlike(poison)).count(), "failed-store no loss")
-    assert(failedStore.select("msg_id").distinct().count()
-      == failedStore.count(), "failed-store no dup")
-    val store = spark.read.parquet(s"$tmp/sink")
-    assert(store.count() == batch.count(), "no loss")
-    assert(store.select("msg_id").distinct().count() == store.count(), "no dup")
-    assert(store.select("msg_id", "index", "app").orderBy("msg_id")
-      .collect().toSeq ==
-      batch.select("msg_id", "index", "app").orderBy("msg_id")
-        .collect().toSeq, "store == batch relation exactly")
-    // the orphans were scrubbed, every batch has its marker, and the
-    // once-per-batch metrics agree with the store
-    assert(fs.globStatus(new Path(s"$tmp/sink/index=*/b1-orphan*")).isEmpty)
-    Seq(0, 1, 2).foreach(b =>
-      assert(fs.exists(new Path(s"$tmp/sink/_commits/$b")), s"marker $b"))
-    assert(spark.read.parquet(s"$tmp/metrics")
-      .agg(sum("written")).head.getLong(0) == store.count())
   }
 
   test("second availableNow run is incremental (checkpoint): no re-write") {

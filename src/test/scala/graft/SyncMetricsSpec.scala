@@ -55,4 +55,19 @@ class SyncMetricsSpec extends SparkSpec {
       assert(body.contains("""graft_test_total{topic="web"} 42"""))
     } finally server.stop(0)
   }
+
+  test("payload-derived label values are escaped into valid exposition lines") {
+    SyncMetrics.reset()
+    val hostile = "evil\"} 1\ninjected_total{x=\"y\\"
+    SyncMetrics.incBy("graft_es_write_success_total",
+      Seq("index" -> "logs-2024", "app" -> hostile), 3)
+    val lines = SyncMetrics.snapshot().linesIterator.toSeq
+    // one sample line, the raw quote/newline/backslash escaped in place
+    assert(lines == Seq("graft_es_write_success_total{app=\"" +
+      "evil\\\"} 1\\ninjected_total{x=\\\"y\\\\" +
+      "\",index=\"logs-2024\"} 3"))
+    // every label value is a well-formed exposition string
+    val sample = "[a-z_]+\\{([a-z_]+=\"([^\"\\\\\\n]|\\\\[\\\\\"n])*\",?)*\\} [0-9]+"
+    assert(lines.forall(_.matches(sample)), lines)
+  }
 }
