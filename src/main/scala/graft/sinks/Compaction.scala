@@ -76,62 +76,64 @@ object Compaction {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20,
       partitionCol: String = "index"): Report = {
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val root = new Path(path)
-    val old0 = new Path(s"$path._precompact")
-    // a leftover `._precompact` means a prior compaction crashed after
-    // its swap but before its carry-forward: the consumer state it
-    // stranded must be recovered FIRST — blindly deleting it (the old
-    // behavior) would destroy the only copy of _checkpoint/_failed
-    if (fs.exists(old0) && !fs.exists(root)) {
-      // crashed BETWEEN the two swap renames: the store is wholly at
-      // `._precompact` — restore it wholesale before anything else
-      if (!fs.rename(old0, root))
-        throw new IllegalStateException(
-          s"could not restore crashed-compaction store from $old0")
-    } else if (fs.exists(old0) && fs.exists(root))
-      carryForward(fs, root, old0, partitionCol, strict = false)
-    val before = partitionSizes(fs, root, partitionCol)
-    val filesBefore = before.values.map(_._1).sum
-    val totalBytes = before.values.map(_._2).sum
+    ForklessLocalFileSystem.withFileSystem(path,
+        spark.sparkContext.hadoopConfiguration) { fs =>
+      val root = new Path(path)
+      val old0 = new Path(s"$path._precompact")
+      // a leftover `._precompact` means a prior compaction crashed after
+      // its swap but before its carry-forward: the consumer state it
+      // stranded must be recovered FIRST — blindly deleting it (the old
+      // behavior) would destroy the only copy of _checkpoint/_failed
+      if (fs.exists(old0) && !fs.exists(root)) {
+        // crashed BETWEEN the two swap renames: the store is wholly at
+        // `._precompact` — restore it wholesale before anything else
+        if (!fs.rename(old0, root))
+          throw new IllegalStateException(
+            s"could not restore crashed-compaction store from $old0")
+      } else if (fs.exists(old0) && fs.exists(root))
+        carryForward(fs, root, old0, partitionCol, strict = false)
+      val before = partitionSizes(fs, root, partitionCol)
+      val filesBefore = before.values.map(_._1).sum
+      val totalBytes = before.values.map(_._2).sum
 
-    // bucket plan: index value -> output file count (small, broadcast)
-    import spark.implicits._
-    val plan = before.toSeq.map { case (dir, (_, bytes)) =>
-      val value = dir.stripPrefix(s"$partitionCol=")
-      (value, math.max(1L, (bytes + targetBytes - 1) / targetBytes))
-    }.toDF(partitionCol, "__nf")
+      // bucket plan: index value -> output file count (small, broadcast)
+      import spark.implicits._
+      val plan = before.toSeq.map { case (dir, (_, bytes)) =>
+        val value = dir.stripPrefix(s"$partitionCol=")
+        (value, math.max(1L, (bytes + targetBytes - 1) / targetBytes))
+      }.toDF(partitionCol, "__nf")
 
-    val df = spark.read.parquet(path)
-    // parquet footer count — metadata-only, no data scan
-    val totalRows = math.max(1L, df.count())
-    val bytesPerRow = math.max(1L, totalBytes / totalRows)
-    val maxRecords = math.max(1L, targetBytes / bytesPerRow)
-    val salted = df
-      .join(broadcast(plan), partitionCol)
-      .withColumn("__salt",
-        pmod(xxhash64(struct(df.columns.map(col): _*)), col("__nf")))
-    val tmp = new Path(s"$path._compacting")
-    fs.delete(tmp, true)
-    salted
-      .repartition(col(partitionCol), col("__salt"))
-      .drop("__nf", "__salt")
-      .write.option("maxRecordsPerFile", maxRecords)
-      .partitionBy(partitionCol).parquet(tmp.toString)
+      val df = spark.read.parquet(path)
+      // parquet footer count — metadata-only, no data scan
+      val totalRows = math.max(1L, df.count())
+      val bytesPerRow = math.max(1L, totalBytes / totalRows)
+      val maxRecords = math.max(1L, targetBytes / bytesPerRow)
+      val salted = df
+        .join(broadcast(plan), partitionCol)
+        .withColumn("__salt",
+          pmod(xxhash64(struct(df.columns.map(col): _*)), col("__nf")))
+      val tmp = new Path(s"$path._compacting")
+      fs.delete(tmp, true)
+      salted
+        .repartition(col(partitionCol), col("__salt"))
+        .drop("__nf", "__salt")
+        .write.options(ForklessLocalFileSystem.options)
+        .option("maxRecordsPerFile", maxRecords)
+        .partitionBy(partitionCol).parquet(tmp.toString)
 
-    val old = old0
-    if (!fs.rename(root, old) || !fs.rename(tmp, root))
-      throw new IllegalStateException(s"compaction swap failed for $path")
-    // carry forward the store's NON-DATA entries: the rewrite only
-    // produces index= partitions (+ its own _SUCCESS), but a LIVE sync
-    // keeps operational state beside them (the streaming _checkpoint,
-    // the _failed payload log) — dropping those with the old layout
-    // would reset the consumer and erase the failure audit
-    // (CompactionSpec's fault tests pin this)
-    carryForward(fs, root, old, partitionCol, strict = true)
+      val old = old0
+      if (!fs.rename(root, old) || !fs.rename(tmp, root))
+        throw new IllegalStateException(s"compaction swap failed for $path")
+      // carry forward the store's NON-DATA entries: the rewrite only
+      // produces index= partitions (+ its own _SUCCESS), but a LIVE sync
+      // keeps operational state beside them (the streaming _checkpoint,
+      // the _failed payload log) — dropping those with the old layout
+      // would reset the consumer and erase the failure audit
+      // (CompactionSpec's fault tests pin this)
+      carryForward(fs, root, old, partitionCol, strict = true)
 
-    val after = partitionSizes(fs, root, partitionCol)
-    Report(after.size, filesBefore, after.values.map(_._1).sum, totalBytes)
+      val after = partitionSizes(fs, root, partitionCol)
+      Report(after.size, filesBefore, after.values.map(_._1).sum, totalBytes)
+    }
   }
 }

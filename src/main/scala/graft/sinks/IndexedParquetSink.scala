@@ -69,75 +69,93 @@ object IndexedParquetSink {
       batchId: Option[Long] = None,
       onStep: String => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val schema = StructType(Seq(StructField("index", StringType),
-      StructField("app", StringType), StructField("written", LongType)) ++
-      isFailed.map(_ => StructField("failed", LongType)))
-    def metricsDf(rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
-    def glob(p: String): Seq[org.apache.hadoop.fs.FileStatus] =
-      Option(fs.globStatus(new Path(p))).toSeq.flatten
-    val marker = batchId.map(id => new Path(s"$path/_commits/$id"))
-    marker.filter(fs.exists) match {
-      case Some(m) => metricsDf(readMarker(fs, m))
-      case None =>
-        val tag = batchId.fold(s"u${java.util.UUID.randomUUID()}")(id => s"b$id")
-        val roots = path +: isFailed.flatMap(_ => failedPath).toSeq
-        val staging = new Path(s"$path/_staging/$tag")
-        fs.delete(staging, true)
-        roots.foreach(r => glob(s"$r/index=*/$tag-*")
-          .foreach(s => fs.delete(s.getPath, false)))
-        val tagged = batch.withColumn(Dest,
-          isFailed.fold(lit(0))(c => when(c, 1).otherwise(0)))
-        tagged.cache()
-        try {
-          tagged.filter(col(Dest) < roots.size)
-            .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-              col(Dest), col("index"))
-            .write.mode("overwrite").partitionBy(Dest, "index")
-            .parquet(staging.toString)
-          onStep("staged")
-          glob(s"$staging/$Dest=*/index=*/part-*").sortBy(_.getPath.toString)
-            .zipWithIndex.foreach { case (s, k) =>
-              val idx = s.getPath.getParent
-              val root = roots(idx.getParent.getName.stripPrefix(s"$Dest=").toInt)
-              val dir = new Path(root, idx.getName)
-              fs.mkdirs(dir)
-              if (!fs.rename(s.getPath, new Path(dir, s"$tag-$k.parquet")))
-                throw new IllegalStateException(s"commit move failed for ${s.getPath}")
-              onStep(s"move $k")
-            }
+    ForklessLocalFileSystem.withFileSystem(path,
+        spark.sparkContext.hadoopConfiguration) { fs =>
+      val schema = StructType(Seq(StructField("index", StringType),
+        StructField("app", StringType), StructField("written", LongType)) ++
+        isFailed.map(_ => StructField("failed", LongType)))
+      def metricsDf(rows: Seq[Row]): DataFrame =
+        spark.createDataFrame(rows.asJava, schema)
+      def glob(p: String): Seq[org.apache.hadoop.fs.FileStatus] =
+        Option(fs.globStatus(new Path(p))).toSeq.flatten
+      val marker = batchId.map(id => new Path(s"$path/_commits/$id"))
+      marker.filter(fs.exists) match {
+        case Some(m) => metricsDf(readMarker(fs, m))
+        case None =>
+          val tag = batchId.fold(s"u${java.util.UUID.randomUUID()}")(id => s"b$id")
+          val roots = path +: isFailed.flatMap(_ => failedPath).toSeq
+          val staging = new Path(s"$path/_staging/$tag")
           fs.delete(staging, true)
-          onStep("moves-done")
-          val counts = Seq(sum(lit(1) - col(Dest)).as("written")) ++
-            isFailed.map(_ => sum(col(Dest)).as("failed"))
-          val rows = tagged.groupBy("index", "app")
-            .agg(counts.head, counts.tail: _*).collect().toSeq
-          marker.foreach(writeMarker(fs, _, rows))
-          metricsDf(rows)
-        } finally tagged.unpersist()
+          roots.foreach(r => glob(s"$r/index=*/$tag-*")
+            .foreach(s => fs.delete(s.getPath, false)))
+          val tagged = batch.withColumn(Dest,
+            isFailed.fold(lit(0))(c => when(c, 1).otherwise(0)))
+          tagged.cache()
+          try {
+            tagged.filter(col(Dest) < roots.size)
+              .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+                col(Dest), col("index"))
+              .write.options(ForklessLocalFileSystem.options)
+              .mode("overwrite").partitionBy(Dest, "index")
+              .parquet(staging.toString)
+            onStep("staged")
+            glob(s"$staging/$Dest=*/index=*/part-*").sortBy(_.getPath.toString)
+              .zipWithIndex.foreach { case (s, k) =>
+                val idx = s.getPath.getParent
+                val root = roots(idx.getParent.getName.stripPrefix(s"$Dest=").toInt)
+                val dir = new Path(root, idx.getName)
+                fs.mkdirs(dir)
+                if (!fs.rename(s.getPath, new Path(dir, s"$tag-$k.parquet")))
+                  throw new IllegalStateException(s"commit move failed for ${s.getPath}")
+                onStep(s"move $k")
+              }
+            fs.delete(staging, true)
+            onStep("moves-done")
+            val counts = Seq(sum(lit(1) - col(Dest)).as("written")) ++
+              isFailed.map(_ => sum(col(Dest)).as("failed"))
+            val rows = tagged.groupBy("index", "app")
+              .agg(counts.head, counts.tail: _*).collect().toSeq
+            marker.foreach(writeMarker(fs, _, rows))
+            metricsDf(rows)
+          } finally tagged.unpersist()
+      }
     }
   }
+
+  /** A marker's first line names the format and its version. Markers
+    * written before the header existed hold rows only and read as
+    * version 1. The header cannot be taken for a row: it has two fields,
+    * and a row has at least three (index, app, written). */
+  private val MarkerHeader = "graft-commit-marker"
+  private val MarkerVersion = "1"
 
   private def readMarker(fs: FileSystem, m: Path): Seq[Row] = {
     val in = fs.open(m)
     val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    content.linesIterator.filter(_.nonEmpty).map { l =>
-      val f = l.split("\t", -1).toSeq.map(unesc)
+    val lines = content.linesIterator.filter(_.nonEmpty)
+      .map(_.split("\t", -1).toSeq).toSeq
+    val rows = lines match {
+      case Seq(MarkerHeader, MarkerVersion) +: rest => rest
+      case Seq(MarkerHeader, v) +: _ => throw new IllegalStateException(
+        s"commit marker $m has version $v; this build reads $MarkerVersion")
+      case headerless => headerless
+    }
+    rows.map { r =>
+      val f = r.map(unesc)
       Row.fromSeq(f.take(2) ++ f.drop(2).map(_.toLong))
-    }.toSeq
+    }
   }
 
   /** Marker last, atomically: temp file + rename — the commit point. */
   private def writeMarker(fs: FileSystem, m: Path, rows: Seq[Row]): Unit = {
     val tmp = new Path(m.getParent, s".tmp-${m.getName}")
     val out = fs.create(tmp, true)
-    try out.write(rows.map(_.toSeq.map {
-        case s: String => esc(s)
-        case v => String.valueOf(v)
-      }.mkString("\t")).mkString("", "\n", "\n").getBytes("UTF-8"))
+    val lines = s"$MarkerHeader\t$MarkerVersion" +: rows.map(_.toSeq.map {
+      case s: String => esc(s)
+      case v => String.valueOf(v)
+    }.mkString("\t"))
+    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     if (!fs.rename(tmp, m))
       throw new IllegalStateException(s"marker rename failed for $m")

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{SyncConfig, SyncPipeline}
-import graft.sinks.IndexedParquetSink
+import graft.sinks.{ForklessLocalFileSystem, IndexedParquetSink}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -115,7 +115,8 @@ object StreamingSync {
         SyncMetrics.recordBulk(metrics)
         metrics.withColumn("batch_id",
             org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("overwrite").parquet(s"$metricsPath/bid=$batchId")
+          .write.options(ForklessLocalFileSystem.options)
+          .mode("overwrite").parquet(s"$metricsPath/bid=$batchId")
         ()
       }
       .option("checkpointLocation", s"$sinkPath/_checkpoint")

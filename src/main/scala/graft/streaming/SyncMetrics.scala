@@ -18,14 +18,15 @@ object SyncMetrics {
 
   /** Label values are escaped as the exposition format requires
     * (backslash, double quote, newline): `index` and `app` come from
-    * message payloads and must not break a scrape line. */
+    * message payloads and must not break a scrape line. A null value is
+    * the empty string. */
   def incBy(name: String, labels: Seq[(String, String)], v: Long): Unit = {
     val key = name + labels.sortBy(_._1)
       .map { case (k, x) => s"""$k="${escape(x)}"""" }.mkString("{", ",", "}")
     counters.computeIfAbsent(key, _ => new LongAdder).add(v)
   }
 
-  private def escape(v: String): String = v.flatMap {
+  private def escape(v: String): String = Option(v).getOrElse("").flatMap {
     case '\\' => "\\\\"
     case '"' => "\\\""
     case '\n' => "\\n"
@@ -48,7 +49,8 @@ object SyncMetrics {
     * (pulsar_message_consumed_total analog at the query level). */
   final class Listener extends StreamingQueryListener {
     override def onQueryStarted(e: QueryStartedEvent): Unit =
-      incBy("graft_query_started_total", Seq("query" -> e.name), 1)
+      incBy("graft_query_started_total",
+        Seq("query" -> Option(e.name).getOrElse(e.id.toString)), 1)
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
       val q = Option(e.progress.name).getOrElse(e.progress.id.toString)
       incBy("graft_batches_total", Seq("query" -> q), 1)

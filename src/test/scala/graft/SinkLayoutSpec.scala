@@ -1,14 +1,29 @@
 package graft
 
+import graft.sinks.IndexedParquetSink
 import graft.sources.Connectors
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
 
 /** The indexed sink's on-disk layout per committed batch: one data file
   * per (destination, index) however many tasks produced the batch, no
-  * staging leftovers, and bulk metrics equal to a groupBy of the input. */
+  * staging leftovers, bulk metrics equal to a groupBy of the input, the
+  * modes and checksums Hadoop's local filesystem gives, and a versioned
+  * commit marker. */
 class SinkLayoutSpec extends SparkSpec {
+
+  private def docs(n: Int) = {
+    import spark.implicits._
+    (0 until n).map { i =>
+      val data = if (i % 7 == 3) s"""{"poison": $i}""" else s"""{"k": $i}"""
+      (i.toLong, data, s"logs-${i % 3}", s"app${i % 2}")
+    }.toDF("msg_id", "data", "index", "app").repartition(4)
+  }
+  private val poison = col("data").contains("poison")
 
   test("one batch lands as one file per index in the store and in _failed") {
     import spark.implicits._
@@ -56,5 +71,91 @@ class SinkLayoutSpec extends SparkSpec {
           input.filter(!isFailed).select("msg_id").as[Long].collect().sorted.toSeq)
       }
     }
+  }
+
+  test("a commit forks no chmod and keeps Hadoop's modes, .crc sidecars and checksums") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    Seq(None, Some("077")).foreach { umask =>
+      withClue(s"umask $umask: ") {
+        umask.foreach(hconf.set("fs.permissions.umask-mode", _))
+        try {
+          val root = Files.createTempDirectory("graft-forkless")
+          val probe = Files.createTempDirectory("graft-probe")
+          // Hadoop's default local filesystem, uncached so that it reads
+          // this umask, with its bad-file quarantine move turned off
+          val plain = new LocalFileSystem {
+            override def reportChecksumFailure(p: Path,
+                in: org.apache.hadoop.fs.FSDataInputStream, inPos: Long,
+                sums: org.apache.hadoop.fs.FSDataInputStream, sumsPos: Long) = false
+          }
+          plain.initialize(root.toUri, hconf)
+          def mode(p: java.nio.file.Path) =
+            PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+          val rec = new jdk.jfr.Recording()
+          rec.enable("jdk.ProcessStart")
+          val jfr = Files.createTempFile("graft-forks", ".jfr")
+          rec.setDestination(jfr)
+          rec.start()
+          try {
+            plain.create(new Path(s"$probe/d/f")).close()
+            IndexedParquetSink.commitBatch(docs(200), root.toString,
+              Some(poison), Some(s"$root/_failed"), Some(3L))
+          } finally rec.stop()
+          val chmods = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+            .map(_.getString("command")).filter(_.startsWith("chmod"))
+          rec.close()
+          assert(!chmods.exists(_.contains(root.toString)), chmods)
+          // the recorder sees the forks Hadoop makes without libhadoop
+          if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+            assert(chmods.exists(_.contains(probe.toString)))
+
+          val (fileMode, dirMode) = (mode(probe.resolve("d/f")), mode(probe.resolve("d")))
+          val entries = Files.walk(root).iterator.asScala.toSeq.filter(_ != root)
+          val (dirs, files) = entries.partition(Files.isDirectory(_))
+          assert(dirs.map(mode).toSet == Set(dirMode), dirs)
+          assert(files.map(mode).toSet == Set(fileMode), files)
+          assert(umask.forall(_ => fileMode == "rw-------" && dirMode == "rwx------"))
+
+          val data = files.filter(_.toString.endsWith(".parquet"))
+          assert(data.nonEmpty && data.exists(_.toString.contains("/_failed/")))
+          (data :+ root.resolve("_commits/3")).foreach { f =>
+            assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f)
+          }
+          val f = data.head
+          val bytes = Files.readAllBytes(f)
+          bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+          Files.write(f, bytes)
+          intercept[ChecksumException] {
+            val in = plain.open(new Path(f.toUri))
+            try in.readFully(new Array[Byte](bytes.length)) finally in.close()
+          }
+          plain.close()
+        } finally hconf.unset("fs.permissions.umask-mode")
+      }
+    }
+  }
+
+  test("commit markers carry a version header; headerless ones still read") {
+    val root = Files.createTempDirectory("graft-marker")
+    def commit(batchId: Long) = IndexedParquetSink.commitBatch(docs(40),
+      root.toString, Some(poison), Some(s"$root/_failed"), Some(batchId))
+    def marker(id: Long) = root.resolve(s"_commits/$id")
+    def tree() = Files.walk(root).iterator.asScala.map(_.toString).toSet
+
+    commit(1)
+    assert(Files.readAllLines(marker(1), UTF_8).asScala.head ==
+      "graft-commit-marker\t1")
+    val written = tree()
+    // a marker without the header, as earlier builds wrote it: the batch
+    // counts as committed, its recorded metrics come back
+    Files.write(marker(2), "logs-0\tapp0\t5\t2\nlogs-1\tapp1\t4\t0\n".getBytes(UTF_8))
+    assert(commit(2).orderBy("index").collect().toSeq.map(_.toSeq) ==
+      Seq(Seq("logs-0", "app0", 5L, 2L), Seq("logs-1", "app1", 4L, 0L)))
+    // an unknown version fails before anything is written
+    Files.write(marker(3), "graft-commit-marker\t2\nlogs-0\tapp0\t5\t2\n".getBytes(UTF_8))
+    val e = intercept[IllegalStateException](commit(3))
+    assert(e.getMessage.contains("version 2"))
+    assert(tree() == written ++ Set(marker(2), marker(3)).map(_.toString))
   }
 }

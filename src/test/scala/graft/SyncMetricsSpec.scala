@@ -36,6 +36,9 @@ class SyncMetricsSpec extends SparkSpec {
       // (StreamingSync.start records each batch's bulk metrics)
       val snap = SyncMetrics.snapshot()
       assert(snap.contains("graft_rows_consumed_total"))
+      // an unnamed query is labelled by its id
+      assert(snap.linesIterator.contains(
+        s"""graft_query_started_total{query="${q.id}"} 1"""), snap)
       assert(snap.contains("graft_es_write_success_total"))
       val written = snap.linesIterator
         .filter(_.startsWith("graft_es_write_success_total"))
