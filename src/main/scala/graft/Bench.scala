@@ -31,7 +31,11 @@ import java.nio.file.{Files, Paths}
   * message lands in `errors` and on stderr.
   */
 object Bench {
-  private def jstr(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (< 0x20) — one raw tab or CR in a query name, an error
+    * message or oracle SQL would make the reader's JSON parse fail.
+    * Shared by the bench line and Verify's oracle_sql.json. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

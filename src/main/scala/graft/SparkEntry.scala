@@ -74,14 +74,8 @@ object SparkEntry {
       // foreachBatch admission, and the commit-marker indexed sink —
       // and the STORE read back must hold exactly sync_pipeline's
       // relation; the IDENTICAL DuckDB SQL anchors both
-      import org.apache.spark.sql.expressions.Window
-      val m = messages(s, dir)
-      val n = m.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = m
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("msg_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(messages(s, dir), 5, col("msg_id"))
       graft.streaming.StreamedBatch
         .syncedStore(s, batched, demoCfg, nBatches = 5)
         .select(col("msg_id"), col("index").as("es_index"), col("app"),
@@ -95,14 +89,8 @@ object SparkEntry {
       // commit-marker sink, then Compaction.compact rewrites the store
       // (salted buckets, atomic swap) BEFORE the read-back — the
       // flagship oracle SQL must still hold row for row
-      import org.apache.spark.sql.expressions.Window
-      val m = messages(s, dir)
-      val n = m.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = m
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("msg_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(messages(s, dir), 5, col("msg_id"))
       graft.streaming.StreamedBatch
         .syncedCompactedStore(s, batched, demoCfg, nBatches = 5)
         .select(col("msg_id"), col("index").as("es_index"), col("app"),

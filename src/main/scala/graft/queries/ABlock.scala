@@ -171,14 +171,8 @@ object ABlock {
       // smallest state here), the in-order replay reproduces the batch
       // cumsum exactly, and the aggregated generations land on
       // sync_rollover's own oracle
-      import org.apache.spark.sql.expressions.Window
-      val m = msgs(s, dir)
-      val n = m.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = m
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("msg_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(msgs(s, dir), 5, col("msg_id"))
       graft.streaming.StreamedBatch
         .rolledGenerations(s, batched, nBatches = 5)
         .groupBy(col("topic"), col("gen"))
@@ -204,13 +198,10 @@ object ABlock {
       import org.apache.spark.sql.expressions.Window
       val m = msgs(s, dir)
       val n = m.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = m
+      val batched = graft.streaming.StreamedBatch.chunked(m
         .withColumn("arrival", col("msg_id") +
-          when(pmod(col("msg_id"), lit(17)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("msg_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("msg_id"), lit(17)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("msg_id"))
       val wEvent = Window.partitionBy(col("topic")).orderBy(col("msg_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val eventGen = m
@@ -492,11 +483,8 @@ object ABlock {
         .unionByName(m.filter(isDup)
           .withColumn("arrival", col("msg_id") + lit(2 * n)))
       val total = n + 2 * ((n + 16) / 17)
-      val chunk = math.max(1L, (total + 4) / 5)
-      val batched = planted
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("msg_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(planted, total, 5, col("arrival"), col("msg_id"))
       graft.streaming.StreamedBatch
         .dedupedMessages(s, batched, nBatches = 5, horizon = "1 hour")
         .select(col("msg_id"), col("topic"), col("publish_time"))
@@ -517,13 +505,10 @@ object ABlock {
         rateLimitWindow = "hour")
       val m = msgs(s, dir).withColumn("app", col("topic"))
       val n = m.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = m
+      val batched = graft.streaming.StreamedBatch.chunked(m
         .withColumn("arrival", col("msg_id") +
-          when(pmod(col("msg_id"), lit(17)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("msg_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("msg_id"), lit(17)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("msg_id"))
       graft.streaming.StreamedBatch
         .rateLimitedMulti(s, batched, nBatches = 5, cfg)
         .select(col("msg_id"), col("app"))

@@ -1180,13 +1180,10 @@ object BBlock {
         .filter(col("event_type").isin("view", "purchase"))
         .select(col("event_type"), col("ts"), col("event_id"), col("user_id"))
       val n = ev.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val ranked = ev
+      val ranked = graft.streaming.StreamedBatch.chunked(ev
         .withColumn("arrival", col("event_id") +
-          when(pmod(col("event_id"), lit(5)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("event_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("event_id"), lit(5)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("event_id"))
       val imps = ranked.filter(col("event_type") === "view")
         .select(col("user_id"), col("ts").as("imp_ts"),
           col("event_id").as("imp_id"), col("batch"))
@@ -1522,12 +1519,8 @@ object BBlock {
       // SFs before the oracle was written down.
       val ev = eventsUs(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"))
-      val n = ev.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = ev
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("event_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(ev, 5, col("event_id"))
       graft.streaming.StreamedBatch
         .sessionsMulti(s, batched, nBatches = 5, gapMinutes = 30)
         .orderBy(col("user_id"), col("session_start"))
@@ -1548,12 +1541,8 @@ object BBlock {
       val ranked = eventsUs(s, dir)
         .select(col("event_type").as("topic"), col("ts"), col("event_id"))
         .withColumn("arrival", lateArrival)
-      val n = ranked.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 9) / 10)
-      val batched = ranked
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("event_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(ranked, 10, col("arrival"), col("event_id"))
       graft.streaming.StreamedBatch
         .watermarkedWindowCounts(s, batched, nBatches = 10)
         .orderBy(col("win_start"), col("topic"))
@@ -1569,12 +1558,8 @@ object BBlock {
       val ranked = eventsUs(s, dir)
         .select(col("event_type").as("topic"), col("ts"), col("event_id"))
         .withColumn("arrival", lateArrival)
-      val n = ranked.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 9) / 10)
-      val batched = ranked
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("event_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(ranked, 10, col("arrival"), col("event_id"))
       graft.streaming.StreamedBatch
         .watermarkedWindowCounts(s, batched, nBatches = 10,
           horizon = "2 hours", windowDur = "1 hour")

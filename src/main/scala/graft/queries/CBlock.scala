@@ -378,16 +378,12 @@ object CBlock {
       // rows at sf0.001 flip vs the doc-id relation); the registry
       // carries that ownership forward and every later (doc, bucket)
       // pair collides. The oracle recomputes exactly that relation.
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
+      val batched = graft.streaming.StreamedBatch.chunked(docs
         .withColumn("arrival", col("doc_id") +
-          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("doc_id"))
       graft.streaming.StreamedBatch
         .nearDupCollisionsMulti(s, batched, nBatches = 5)
         .orderBy(col("doc_id"), col("bucket"))
@@ -405,16 +401,12 @@ object CBlock {
       // invisible to ownership, so the oracle is
       // dedup_gate_multibatch's SQL VERBATIM; the restarted state
       // store holds only phase-2 buckets (spec-measured).
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
+      val batched = graft.streaming.StreamedBatch.chunked(docs
         .withColumn("arrival", col("doc_id") +
-          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("doc_id"))
       val p1 = batched.filter(col("batch") <= 2)
       val g1 = graft.streaming.StreamedBatch
         .nearDupCollisionsMulti(s, p1, nBatches = 3)
@@ -443,16 +435,12 @@ object CBlock {
       // recur at gap ≤ 1 batch, inside any positive ttl's safe window;
       // registry keys are eviction-immune by the base join), so the
       // oracle is dedup_gate_multibatch's SQL VERBATIM.
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
+      val batched = graft.streaming.StreamedBatch.chunked(docs
         .withColumn("arrival", col("doc_id") +
-          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("doc_id"))
       val p1 = batched.filter(col("batch") <= 2)
       val g1 = graft.streaming.StreamedBatch
         .nearDupCollisionsMulti(s, p1, nBatches = 3)
@@ -481,16 +469,12 @@ object CBlock {
       // before termination, so the store provably drains DURING the
       // query. Eviction is invisible to ownership: the oracle is
       // dedup_gate_multibatch's SQL VERBATIM.
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
+      val batched = graft.streaming.StreamedBatch.chunked(docs
         .withColumn("arrival", col("doc_id") +
-          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("doc_id"))
       graft.streaming.StreamedBatch
         .nearDupCollisionsTtlMulti(s, batched, nBatches = 5, ttlBatches = 3)
         .orderBy(col("doc_id"), col("bucket"))
@@ -2731,17 +2715,13 @@ object CBlock {
       // redelivered doc burns a LATER admission slot — or none, when
       // its domain's budget filled in an earlier batch; the oracle
       // recomputes first-cap per domain in (batch, doc id) order
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source").as("domain"))
       val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
+      val batched = graft.streaming.StreamedBatch.chunked(docs
         .withColumn("arrival", col("doc_id") +
-          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L))
-        .withColumn("rk", row_number()
-          .over(Window.orderBy(col("arrival"), col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+          when(pmod(col("doc_id"), lit(7)) === 0, lit(n)).otherwise(0L)),
+        n, 5, col("arrival"), col("doc_id"))
       graft.streaming.StreamedBatch
         .quotaAdmittedMulti(s, batched, nBatches = 5, cap = 20)
         .select(col("doc_id"), col("domain"), col("slot"))
@@ -2998,14 +2978,9 @@ object CBlock {
       // must equal the batch lineSupport relation EXACTLY — the stored
       // registry C195 consumes can be maintained from the stream
       // alone, no batch recount. Same 5-batch replay as C193.
-      import org.apache.spark.sql.expressions.Window
       val docs = linePlantedCorpus(s, dir).select(col("doc_id"), col("text"))
-      val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
-        .withColumn("rk",
-          row_number().over(Window.orderBy(col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(docs, 5, col("doc_id"))
       graft.streaming.StreamedBatch
         .lineGatedMulti(s, batched, nBatches = 5)
         .select(col("line"), col("doc_id")).distinct()
@@ -3106,14 +3081,9 @@ object CBlock {
       // 1-4 arrive pre-stripped; the oracle recomputes the per-batch
       // cumulative-support relation exactly. Reassembly of the gated
       // lines is the stateless batch step downstream of the stream.
-      import org.apache.spark.sql.expressions.Window
       val docs = linePlantedCorpus(s, dir).select(col("doc_id"), col("text"))
-      val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
-        .withColumn("rk",
-          row_number().over(Window.orderBy(col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(docs, 5, col("doc_id"))
       graft.streaming.StreamedBatch
         .lineGatedMulti(s, batched, nBatches = 5)
         .groupBy(col("doc_id"), col("n_lines"))
@@ -3137,14 +3107,9 @@ object CBlock {
       // The flush is invisible to verdicts — the oracle is
       // dedup_lines_stream's SQL VERBATIM — while the restarted gate's
       // state store holds only phase-2 lines (spec-measured).
-      import org.apache.spark.sql.expressions.Window
       val docs = linePlantedCorpus(s, dir).select(col("doc_id"), col("text"))
-      val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
-        .withColumn("rk",
-          row_number().over(Window.orderBy(col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(docs, 5, col("doc_id"))
       val g1 = graft.streaming.StreamedBatch
         .lineGatedMulti(s, batched.filter(col("batch") <= 2), nBatches = 3)
       val reg = graft.streaming.StreamingDedup.registryFold(g1)
@@ -3175,14 +3140,9 @@ object CBlock {
       // activity, past phase 2's gap-1 recurrences; flushed support is
       // eviction-immune by the base join) — the oracle is
       // dedup_lines_stream's SQL VERBATIM.
-      import org.apache.spark.sql.expressions.Window
       val docs = linePlantedCorpus(s, dir).select(col("doc_id"), col("text"))
-      val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
-        .withColumn("rk",
-          row_number().over(Window.orderBy(col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(docs, 5, col("doc_id"))
       val g1 = graft.streaming.StreamedBatch
         .lineGatedMulti(s, batched.filter(col("batch") <= 2), nBatches = 3)
       val reg = graft.streaming.StreamingDedup.registryFold(g1)
@@ -3214,14 +3174,9 @@ object CBlock {
       // (at ttl = 1 one real sf0.1 line — "scan query" — flips, the
       // spec's negative control). Eviction is invisible to verdicts:
       // the oracle is dedup_lines_stream's SQL VERBATIM.
-      import org.apache.spark.sql.expressions.Window
       val docs = linePlantedCorpus(s, dir).select(col("doc_id"), col("text"))
-      val n = docs.count() // bounded plan-time action (chunk sizing)
-      val chunk = math.max(1L, (n + 4) / 5)
-      val batched = docs
-        .withColumn("rk",
-          row_number().over(Window.orderBy(col("doc_id"))) - 1)
-        .withColumn("batch", expr(s"rk div $chunk"))
+      val batched = graft.streaming.StreamedBatch
+        .chunked(docs, 5, col("doc_id"))
       graft.streaming.StreamedBatch
         .lineGatedTtlMulti(s, batched, nBatches = 5, ttlBatches = 2)
         .groupBy(col("doc_id"), col("n_lines"))

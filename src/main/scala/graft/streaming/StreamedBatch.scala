@@ -1,27 +1,31 @@
 package graft.streaming
 
 import graft.operators.SyncConfig
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Batch-twin runners for the stateful streaming operators — the seam
   * that promotes "streaming ≡ batch proven in a spec" to an ORACLE row:
-  * each runner feeds a deterministic bounded input through the REAL
-  * streaming operator (file source → flatMapGroupsWithState → memory
-  * sink, Trigger.AvailableNow) and returns the emitted relation as a
+  * each twin feeds a deterministic bounded input through the REAL
+  * streaming operator (file source → operator → memory sink or store,
+  * Trigger.AvailableNow) and returns the emitted relation as a
   * DataFrame, which the driver then compares against the SAME DuckDB
-  * SQL that anchors the batch operator.
+  * SQL that anchors the batch operator. Every twin goes through the one
+  * runner, [[replay]].
   *
-  * Determinism: the input is written as ONE parquet file and consumed
-  * without maxFilesPerTrigger, so the whole stream is a single
-  * micro-batch — the initial watermark (0) drops nothing as late, and
-  * admission/session state starts empty, making the emitted set a pure
-  * function of the data (proven equal to the batch window relations in
-  * StreamingRateLimitSpec / ScaleTechniquesSpec; here the equality is
-  * re-checked against the batch operator's own oracle SQL every round).
+  * Determinism: each source file is one micro-batch. A one-file source
+  * is therefore a single micro-batch — the initial watermark (0) drops
+  * nothing as late, and admission/session state starts empty, making the
+  * emitted set a pure function of the data (proven equal to the batch
+  * window relations in StreamingRateLimitSpec / ScaleTechniquesSpec;
+  * here the equality is re-checked against the batch operator's own
+  * oracle SQL). A chunked source replays its batches in order, one file
+  * each ([[writeChunkedFiles]]).
   */
 object StreamedBatch {
 
@@ -30,105 +34,181 @@ object StreamedBatch {
   /** Replay-twin scratch dirs (source copies, checkpoints, state-store
     * deltas, store sinks) — bounded single-run artifacts deleted in the
     * runner's own `finally`, placed via [[graft.operators.Scratch]]
-    * (tmpfs when available; r13 optimization). */
+    * (tmpfs when available). */
   private[graft] def twinTempDir(prefix: String): String =
     graft.operators.Scratch.tempDir(prefix)
 
-  /** Monotone count of streaming replays started by this JVM — every
-    * runner in this object ticks it. [[graft.Bench]] samples it around
+  /** Monotone count of streaming replays started by this JVM — the
+    * runner ticks it once per replay. [[graft.Bench]] samples it around
     * each timed query to SPLIT the bench total into `batch_total` /
-    * `replay_total` (r12, verdict #3): the ~26 replay rows pay real
-    * multi-micro-batch checkpoint + state-store cost (seconds each at
-    * ANY scale factor) and were masking batch-plan deltas inside one
-    * aggregate number. Classification is observed at run time, so a new
-    * replay row is split correctly with no list to maintain. */
+    * `replay_total`: replay rows pay real multi-micro-batch checkpoint +
+    * state-store cost (seconds each at ANY scale factor) that would mask
+    * batch-plan deltas inside one aggregate number. Classification is
+    * observed at run time, so a new replay row is split correctly with
+    * no list to maintain. */
   def replayRuns: Int = seq.get
 
   /** Tick the replay counter from a row that drives REAL streaming-query
-    * lifecycles outside this object's runners (the watchdog replay, r13):
+    * lifecycles outside this object's runner (the watchdog replay):
     * Bench's batch/replay split is observed around each timed run, so a
     * row paying query-startup + checkpoint cost must register here to be
     * classified with the other replay rows. */
   def noteReplay(): Unit = { seq.incrementAndGet(); () }
 
   /** Isolated-conf session for the twin's streaming run with the state
-    * store right-sized to the bounded oracle input: the session default
-    * (32) spreads a few thousand state rows over 32 store partitions ×
-    * per-batch task overhead — measured 6.6 s → 2.9 s on the
-    * stream-stream twin at 8. The PRODUCTION operators keep the
-    * caller's partitioning (this clone only governs the runner);
-    * results are partition-layout-independent (spec-proven for every
-    * stateful operator, and the driver compare sorts). */
+    * store right-sized to the bounded oracle input. The replay inputs are
+    * a few thousand rows, so per-micro-batch cost is per-PARTITION state
+    * commit overhead, not compute: fewer partitions is strictly cheaper
+    * until the corpus stops fitting one task (on a 13-row replay subset
+    * at sf0.1, partitions 8 / 4 / 2 / 1 measured 115.9 / 96.8 / 69.9 /
+    * 60.6 s). `SPARK_GRAFT_TWIN_PARTITIONS` (default 1) sets it; a
+    * deployment replaying production volumes sets its real parallelism.
+    * The default rests on every stateful twin being
+    * partition-layout-INDEPENDENT (group iterators sorted by explicit
+    * keys, spec-proven; the oracle compare sorts) — a twin without that
+    * property must not be added under it. The PRODUCTION operators keep
+    * the caller's partitioning; this clone only governs the runner. */
   private def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
-    // SPARK_GRAFT_TWIN_PARTITIONS parameterizes the twin's state-store
-    // layout (r13): the replay inputs are bounded oracle corpora (a few
-    // thousand rows), so per-micro-batch cost is per-PARTITION state
-    // commit overhead, not compute — fewer partitions is strictly
-    // cheaper until the corpus stops fitting one task. Measured on a
-    // 13-row replay subset at sf0.1 (3 interleaved sweeps each,
-    // same session): partitions 8 / 4 / 2 / 1 → subset totals
-    // 115.9 / 96.8 / 69.9 / 60.6 s (q_attribution_multibatch alone
-    // 27.5 → 7.0 s at 1). Results are byte-identical — partition-layout
-    // independence is spec-proven for every stateful operator and the
-    // oracle compare sorts. A deployment replaying production volumes
-    // sets the env to its real parallelism; the PRODUCTION operators
-    // keep the caller's partitioning (this clone only governs the
-    // bounded runner).
-    // Validated here (r14, ADVICE): a non-numeric value would otherwise
-    // fail deep inside Spark with an opaque error. NOTE for new twins:
-    // the default of 1 rests on every stateful twin being
-    // partition-layout-INDEPENDENT (group iterators sorted by explicit
-    // keys, spec-proven) — a future twin without that property must not
-    // be added under this default.
+    // validated here: a non-numeric value would otherwise fail deep
+    // inside Spark with an opaque error
     val twinParts = sys.env.getOrElse("SPARK_GRAFT_TWIN_PARTITIONS", "1")
     require(scala.util.Try(twinParts.trim.toInt).toOption.exists(_ > 0),
       s"SPARK_GRAFT_TWIN_PARTITIONS must be a positive integer, got '$twinParts'")
     ss.conf.set("spark.sql.shuffle.partitions", twinParts.trim)
-    // State-store provider knob for the replay floor (r14, verdict #4):
-    // lets an A/B pit RocksDB against the default HDFS-backed store on
-    // the many-tiny-state-files workload (A/B table in
-    // OPTIMIZATION_r14.md; the default stays whatever that table says).
-    sys.env.get("SPARK_GRAFT_TWIN_STATE_PROVIDER").foreach(p =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", p.trim))
     ss
   }
 
-  /** Run `build`'s streaming query to completion against a one-file
-    * parquet copy of `input`, then PIN the memory-sink relation as a
-    * local DataFrame and clean up — the memory table is dropped and the
-    * temp dir deleted, so repeated invocations (Bench runs every query
-    * twice) leak neither driver memory nor disk. A timed-out query is
-    * an ERROR, never a silently partial relation. */
-  private def throughStream(s: SparkSession, input: DataFrame, name: String)
-      (build: (SparkSession, String) => org.apache.spark.sql.streaming.DataStreamWriter[_])
-      : DataFrame = {
-    val tmp = twinTempDir(s"graft-$name-twin")
+  /** One replay source: the schema its stream reads with (the frame's
+    * own), and how the runner writes it under a scratch dir, returning
+    * the source directory. */
+  private[streaming] final case class Source(schema: StructType,
+      write: String => String)
+
+  /** `df` whole as ONE file: a single micro-batch. */
+  private[streaming] def oneFile(df: DataFrame): Source =
+    Source(df.schema, { dir =>
+      df.coalesce(1).write.parquet(s"$dir/src")
+      s"$dir/src"
+    })
+
+  /** `df`'s `cols` as one file per `batch` value in `[0, nBatches)` (see
+    * [[writeChunkedFiles]]): one micro-batch per file, in batch order. */
+  private[streaming] def perBatch(df: DataFrame, nBatches: Int,
+      cols: String*): Source =
+    Source(df.select(cols.map(col): _*).schema,
+      writeChunkedFiles(df, cols, nBatches, _))
+
+  /** What a replay's `build` sees: the twin session, each source as a
+    * stream that takes one file per micro-batch, each source's directory
+    * (for a static read of the same files), and each static input read
+    * back from the runner's copy. */
+  private[streaming] final class Twin(val ss: SparkSession,
+      val srcDirs: Seq[String], schemas: Seq[StructType],
+      val statics: Seq[DataFrame]) {
+    lazy val streams: Seq[DataFrame] = srcDirs.zip(schemas).map {
+      case (dir, schema) => ss.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+    }
+    def stream: DataFrame = streams.head
+  }
+
+  /** Where a replay's output goes, and so what the runner pins. */
+  private[streaming] sealed trait Sink
+
+  /** `build`'s writer into the memory sink in `mode` ("append", or
+    * "complete" for streaming AGGREGATIONS — append would demand a
+    * watermark and emit nothing for an unwindowed agg); the drained
+    * table is the result. */
+  private[streaming] final case class Memory(mode: String,
+      build: Twin => DataStreamWriter[_]) extends Sink
+
+  private[streaming] def append(build: Twin => DataStreamWriter[_]): Sink =
+    Memory("append", build)
+
+  private[streaming] def complete(build: Twin => DataStreamWriter[_]): Sink =
+    Memory("complete", build)
+
+  /** [[StreamingSync.start]] over the first source into the
+    * commit-marker store; the store read back — after
+    * [[graft.sinks.Compaction.compact]] when `compact` — is the result. */
+  private[streaming] final case class Store(cfg: SyncConfig,
+      compact: Boolean) extends Sink
+
+  /** THE replay runner: write every source and static input into one
+    * scratch dir, run the query to completion in a [[streamSession]],
+    * then PIN the result as a local DataFrame and clean up — the memory
+    * table is dropped and the dir deleted, so repeated invocations
+    * (Bench runs every query more than once) leak neither driver memory
+    * nor disk, on failure paths too. A query that does not drain within
+    * 300 s is an ERROR, never a silently partial relation. */
+  private[streaming] def replay(s: SparkSession, name: String,
+      sources: Seq[Source], statics: Seq[DataFrame] = Nil)
+      (sink: Sink): DataFrame = {
+    val dir = twinTempDir(s"graft-$name-twin")
     val qn = s"${name}_twin_${seq.incrementAndGet()}"
     val ss = streamSession(s)
     try {
-      input.coalesce(1).write.parquet(s"$tmp/src")
-      // explicit checkpoint under the twin's scratch dir: a temp
-      // checkpoint would otherwise land in java.io.tmpdir (r13)
-      val q = build(ss, s"$tmp/src")
-        .format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
+      val srcDirs = sources.zipWithIndex.map { case (src, i) =>
+        src.write(s"$dir/s$i")
+      }
+      val staticsRead = statics.zipWithIndex.map { case (df, i) =>
+        df.write.parquet(s"$dir/static$i")
+        ss.read.parquet(s"$dir/static$i")
+      }
+      val q = sink match {
+        case Memory(mode, build) =>
+          build(new Twin(ss, srcDirs, sources.map(_.schema), staticsRead))
+            .format("memory").queryName(qn).outputMode(mode)
+            // explicit checkpoint under the scratch dir: a temp
+            // checkpoint would otherwise land in java.io.tmpdir
+            .option("checkpointLocation", s"$dir/ckpt")
+            .trigger(Trigger.AvailableNow()).start()
+        case Store(cfg, _) =>
+          StreamingSync.start(ss, cfg, srcDirs.head, s"$dir/sink",
+            s"$dir/metrics", availableNow = true, batchFiles = Some(1))
+      }
       if (!q.awaitTermination(300000)) {
         q.stop()
         throw new IllegalStateException(s"$qn did not drain within 300 s")
       }
-      val sink = ss.table(qn)
+      val result = sink match {
+        case _: Memory => ss.table(qn)
+        case Store(_, compact) =>
+          if (compact) {
+            val report = graft.sinks.Compaction.compact(ss, s"$dir/sink",
+              targetBytes = 64L << 10)
+            require(report.filesAfter <= report.filesBefore,
+              s"compaction grew the store: $report")
+          }
+          ss.read.parquet(s"$dir/sink")
+      }
       s.createDataFrame(
-        s.sparkContext.parallelize(sink.collect().toIndexedSeq, 1),
-        sink.schema)
-    } finally { // failure paths must not leak the sink table or the copy
+        s.sparkContext.parallelize(result.collect().toIndexedSeq, 1),
+        result.schema)
+    } finally { // failure paths must not leak the sink table or the copies
       try ss.catalog.dropTempView(qn) catch { case _: Exception => () }
       org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
+        .get(new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(dir), true)
       ()
     }
+  }
+
+  /** `df` with the replay's arrival plan: `rk` = 0-based rank in
+    * `order`, `batch` = rk div ⌈rows / nBatches⌉, so batches fill in
+    * `order` and the last may run short. Costs one count of `df`. */
+  private[graft] def chunked(df: DataFrame, nBatches: Int,
+      order: Column*): DataFrame =
+    chunked(df, df.count(), nBatches, order: _*)
+
+  /** [[chunked]] for a site that already knows `df`'s row count `rows`
+    * (its planted-arrival column needs it). */
+  private[graft] def chunked(df: DataFrame, rows: Long, nBatches: Int,
+      order: Column*): DataFrame = {
+    val chunk = math.max(1L, (rows + nBatches - 1) / nBatches)
+    df.withColumn("rk", row_number().over(Window.orderBy(order: _*)) - 1)
+      .withColumn("batch", expr(s"rk div $chunk"))
   }
 
   /** [[StreamingSessionize]] fed `events(user_id, ts)` plus one
@@ -151,80 +231,10 @@ object StreamedBatch {
     val maxUs = maxRow.getLong(0)
     val sentinel = evs.select(col("user_id")).distinct()
       .withColumn("ts", timestamp_micros(lit(maxUs + 864000000000L)))
-    agg(throughStream(s, evs.unionByName(sentinel), "sess") { (ss, src) =>
-      val stream = ss.readStream.schema("user_id LONG, ts TIMESTAMP")
-        .parquet(src).as[StreamingSessionize.Event]
-      StreamingSessionize.sessions(stream, gapMinutes)(ss).writeStream
-    })
-  }
-
-  /** Complete-mode variant of [[throughStream]] for streaming
-    * AGGREGATIONS (append mode would demand a watermark and emit
-    * nothing for an unwindowed agg): the memory sink holds the final
-    * aggregate table after the AvailableNow drain. Same pin-and-clean
-    * contract. */
-  private def throughStreamComplete(s: SparkSession, input: DataFrame,
-      name: String)
-      (build: (SparkSession, String) => org.apache.spark.sql.streaming.DataStreamWriter[_])
-      : DataFrame = {
-    val tmp = twinTempDir(s"graft-$name-twin")
-    val qn = s"${name}_twin_${seq.incrementAndGet()}"
-    val ss = streamSession(s)
-    try {
-      input.coalesce(1).write.parquet(s"$tmp/src")
-      val q = build(ss, s"$tmp/src")
-        .format("memory").queryName(qn).outputMode("complete")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(s"$qn did not drain within 300 s")
-      }
-      val sink = ss.table(qn)
-      s.createDataFrame(
-        s.sparkContext.parallelize(sink.collect().toIndexedSeq, 1),
-        sink.schema)
-    } finally {
-      try ss.catalog.dropTempView(qn) catch { case _: Exception => () }
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      ()
-    }
-  }
-
-  /** Two-source variant of [[throughStream]] for stream-STREAM
-    * operators (each side its own file source; both drain in the same
-    * AvailableNow run). Same pin-and-clean contract. */
-  private def throughStream2(s: SparkSession, left: DataFrame,
-      right: DataFrame, name: String)
-      (build: (SparkSession, String, String) => org.apache.spark.sql.streaming.DataStreamWriter[_])
-      : DataFrame = {
-    val tmp = twinTempDir(s"graft-$name-twin")
-    val qn = s"${name}_twin_${seq.incrementAndGet()}"
-    val ss = streamSession(s)
-    try {
-      left.coalesce(1).write.parquet(s"$tmp/left")
-      right.coalesce(1).write.parquet(s"$tmp/right")
-      val q = build(ss, s"$tmp/left", s"$tmp/right")
-        .format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(s"$qn did not drain within 300 s")
-      }
-      val sink = ss.table(qn)
-      s.createDataFrame(
-        s.sparkContext.parallelize(sink.collect().toIndexedSeq, 1),
-        sink.schema)
-    } finally {
-      try ss.catalog.dropTempView(qn) catch { case _: Exception => () }
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      ()
-    }
+    agg(replay(s, "sess", Seq(oneFile(evs.unionByName(sentinel))))(append {
+      t => StreamingSessionize.sessions(
+        t.stream.as[StreamingSessionize.Event], gapMinutes)(t.ss).writeStream
+    }))
   }
 
   /** [[StreamingRateLimit]] fed the enriched message stream: with one
@@ -235,14 +245,12 @@ object StreamedBatch {
   def rateLimited(s: SparkSession, msgs: DataFrame,
       cfg: SyncConfig): DataFrame = {
     import s.implicits._
-    val enc = implicitly[org.apache.spark.sql.Encoder[StreamingRateLimit.RlMsg]]
     val input = msgs.select(col("msg_id").cast("long"), col("topic"),
       col("publish_time").cast("timestamp"), col("data"), col("app"))
-    throughStream(s, input, "rl") { (ss, src) =>
-      val stream = ss.readStream.schema(enc.schema).parquet(src)
-        .as[StreamingRateLimit.RlMsg]
-      StreamingRateLimit(cfg)(stream).writeStream
-    }.select(col("msg_id"), col("app"))
+    replay(s, "rl", Seq(oneFile(input)))(append { t =>
+      StreamingRateLimit(cfg)(t.stream.as[StreamingRateLimit.RlMsg])
+        .writeStream
+    }).select(col("msg_id"), col("app"))
   }
 
   /** [[StreamingQuota]] fed `(doc_id, domain)`: one micro-batch + empty
@@ -254,11 +262,10 @@ object StreamedBatch {
     import s.implicits._
     val input = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("domain").cast("string").as("domain"))
-    throughStream(s, input, "quota") { (ss, src) =>
-      val stream = ss.readStream.schema("doc_id LONG, domain STRING")
-        .parquet(src).as[StreamingQuota.Arrival]
-      StreamingQuota.quotaGate(stream, cap).toDF().writeStream
-    }
+    replay(s, "quota", Seq(oneFile(input)))(append { t =>
+      StreamingQuota.quotaGate(t.stream.as[StreamingQuota.Arrival], cap)
+        .toDF().writeStream
+    })
   }
 
   /** [[StreamingIntervalJoin.attribute]] as a REAL stream-STREAM join:
@@ -276,14 +283,10 @@ object StreamedBatch {
     val convs = conversions.select(col("c_user_id").cast("long").as("c_user_id"),
       col("conv_ts").cast("timestamp").as("conv_ts"),
       col("conv_id").cast("long").as("conv_id"))
-    throughStream2(s, imps, convs, "attr") { (ss, l, r) =>
-      val impStream = ss.readStream
-        .schema("user_id LONG, imp_ts TIMESTAMP, imp_id LONG").parquet(l)
-      val convStream = ss.readStream
-        .schema("c_user_id LONG, conv_ts TIMESTAMP, conv_id LONG").parquet(r)
-      StreamingIntervalJoin.attribute(impStream, convStream,
+    replay(s, "attr", Seq(oneFile(imps), oneFile(convs)))(append { t =>
+      StreamingIntervalJoin.attribute(t.streams(0), t.streams(1),
         windowSec = windowSec).writeStream
-    }
+    })
   }
 
   /** [[graft.operators.Sketches.hllRegisters]] maintained by a REAL
@@ -295,12 +298,10 @@ object StreamedBatch {
       key: String, valueCol: String): DataFrame = {
     val input = rows.select(col(key).cast("string").as(key),
       col(valueCol).cast("long").as(valueCol))
-    throughStreamComplete(s, input, "hll") { (ss, src) =>
-      val stream = ss.readStream.schema(s"$key STRING, $valueCol LONG")
-        .parquet(src)
-      graft.operators.Sketches.hllRegisters(stream, Seq(key), col(valueCol))
+    replay(s, "hll", Seq(oneFile(input)))(complete { t =>
+      graft.operators.Sketches.hllRegisters(t.stream, Seq(key), col(valueCol))
         .writeStream
-    }
+    })
   }
 
   /** [[graft.operators.Sketches.cmsCells]] maintained by a REAL
@@ -310,13 +311,12 @@ object StreamedBatch {
     * own oracle SQL. */
   def cmsCellsStreamed(s: SparkSession, docs: DataFrame): DataFrame = {
     val input = docs.select(col("text").cast("string").as("text"))
-    throughStreamComplete(s, input, "cms") { (ss, src) =>
-      val stream = ss.readStream.schema("text STRING").parquet(src)
+    replay(s, "cms", Seq(oneFile(input)))(complete { t =>
       graft.operators.Sketches.cmsCells(
-        stream.select(explode(
+        t.stream.select(explode(
           graft.functions.Portable.tokens(col("text"))).as("word")),
         col("word")).writeStream
-    }
+    })
   }
 
   /** [[graft.operators.Sketches.cmsGridsByKey]] maintained as a LIVE
@@ -328,14 +328,12 @@ object StreamedBatch {
   def cmsGridsByKeyStreamed(s: SparkSession, docs: DataFrame): DataFrame = {
     val input = docs.select(col("source").cast("string").as("source"),
       col("text").cast("string").as("text"))
-    throughStreamComplete(s, input, "cmsk") { (ss, src) =>
-      val stream = ss.readStream.schema("source STRING, text STRING")
-        .parquet(src)
+    replay(s, "cmsk", Seq(oneFile(input)))(complete { t =>
       graft.operators.Sketches.cmsGridsByKey(
-        stream.select(col("source"), explode(
+        t.stream.select(col("source"), explode(
           graft.functions.Portable.tokens(col("text"))).as("word")),
         col("source"), col("word")).writeStream
-    }
+    })
   }
 
   /** [[graft.plans.SkylineAggregator]] as a LIVE complete-mode
@@ -347,17 +345,15 @@ object StreamedBatch {
     * Input `pts`: (id, x, y, batch). */
   def skylineStreamed(s: SparkSession, pts: DataFrame,
       nBatches: Int): DataFrame =
-    throughChunkedStreamMode(s, "sky", nBatches, "complete",
-      (pts, Seq("id", "x", "y"))) { (ss, srcs) =>
-      import ss.implicits._
-      ss.readStream.schema("id LONG, x LONG, y LONG")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[graft.plans.FrontPoint]
-        .groupByKey(_ => 0L)
-        .agg(new graft.plans.SkylineAggregator().toColumn.name("front"))
-        .toDF("k", "front")
-        .writeStream
-    }
+    replay(s, "sky", Seq(perBatch(pts, nBatches, "id", "x", "y")))(complete {
+      t =>
+        import t.ss.implicits._
+        t.stream.as[graft.plans.FrontPoint]
+          .groupByKey(_ => 0L)
+          .agg(new graft.plans.SkylineAggregator().toColumn.name("front"))
+          .toDF("k", "front")
+          .writeStream
+    })
 
   /** [[graft.plans.AckLedgerAggregator]] as a LIVE complete-mode
     * streaming aggregation across REAL micro-batches: per-topic ack
@@ -368,17 +364,15 @@ object StreamedBatch {
     * Input `obs`: (topic, seq, acked, batch). */
   def ackLedgerStreamed(s: SparkSession, obs: DataFrame,
       nBatches: Int): DataFrame =
-    throughChunkedStreamMode(s, "ackl", nBatches, "complete",
-      (obs, Seq("topic", "seq", "acked"))) { (ss, srcs) =>
-      import ss.implicits._
-      ss.readStream.schema("topic STRING, seq LONG, acked INT")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[graft.plans.AckObs]
-        .groupByKey(_.topic)
-        .agg(new graft.plans.AckLedgerAggregator().toColumn.name("ledger"))
-        .toDF("topic", "ledger")
-        .writeStream
-    }
+    replay(s, "ackl", Seq(perBatch(obs, nBatches, "topic", "seq", "acked")))(
+      complete { t =>
+        import t.ss.implicits._
+        t.stream.as[graft.plans.AckObs]
+          .groupByKey(_.topic)
+          .agg(new graft.plans.AckLedgerAggregator().toColumn.name("ledger"))
+          .toDF("topic", "ledger")
+          .writeStream
+      })
 
   /** [[graft.plans.BottomKDistinctAggregator]] as a LIVE complete-mode
     * streaming aggregation: the KMV k-min sets accumulate per key in
@@ -388,15 +382,14 @@ object StreamedBatch {
   def kmvMinKStreamed(s: SparkSession, obs: DataFrame, k: Int): DataFrame = {
     val input = obs.select(col("key").cast("string").as("key"),
       col("h").cast("long").as("h"))
-    throughStreamComplete(s, input, "kmv") { (ss, src) =>
-      import ss.implicits._
-      ss.readStream.schema("key STRING, h LONG").parquet(src)
-        .as[graft.plans.KmvObs]
+    replay(s, "kmv", Seq(oneFile(input)))(complete { t =>
+      import t.ss.implicits._
+      t.stream.as[graft.plans.KmvObs]
         .groupByKey(_.key)
         .agg(new graft.plans.BottomKDistinctAggregator(k).toColumn.name("hs"))
         .toDF("key", "hs")
         .writeStream
-    }
+    })
   }
 
   /** [[graft.operators.Dedup.bloomGateWith]] — benchmark
@@ -410,11 +403,9 @@ object StreamedBatch {
       bits: Array[Long], n: Int = 8): DataFrame = {
     val input = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("text").cast("string").as("text"))
-    throughStream(s, input, "blg") { (ss, src) =>
-      graft.operators.Dedup.bloomGateWith(
-        ss.readStream.schema("doc_id LONG, text STRING").parquet(src),
-        bits, n).writeStream
-    }
+    replay(s, "blg", Seq(oneFile(input)))(append { t =>
+      graft.operators.Dedup.bloomGateWith(t.stream, bits, n).writeStream
+    })
   }
 
   /** [[graft.plans.BottomKPairsAggregator]] as a LIVE complete-mode
@@ -428,15 +419,14 @@ object StreamedBatch {
       k: Int): DataFrame = {
     val input = rows.select(col("key").cast("string").as("key"),
       col("u").cast("long").as("u"), col("id").cast("long").as("id"))
-    throughStreamComplete(s, input, "smpk") { (ss, src) =>
-      import ss.implicits._
-      ss.readStream.schema("key STRING, u LONG, id LONG").parquet(src)
-        .as[graft.plans.PairObs]
+    replay(s, "smpk", Seq(oneFile(input)))(complete { t =>
+      import t.ss.implicits._
+      t.stream.as[graft.plans.PairObs]
         .groupByKey(_.key)
         .agg(new graft.plans.BottomKPairsAggregator(k).toColumn.name("ps"))
         .toDF("key", "ps")
         .writeStream
-    }
+    })
   }
 
   /** Per-(key, bin) histogram counts maintained as a LIVE complete-mode
@@ -447,12 +437,11 @@ object StreamedBatch {
   def histBinsStreamed(s: SparkSession, rows: DataFrame): DataFrame = {
     val input = rows.select(col("key").cast("string").as("key"),
       col("bin").cast("int").as("bin"))
-    throughStreamComplete(s, input, "hist") { (ss, src) =>
-      ss.readStream.schema("key STRING, bin INT").parquet(src)
-        .groupBy(col("key"), col("bin"))
+    replay(s, "hist", Seq(oneFile(input)))(complete { t =>
+      t.stream.groupBy(col("key"), col("bin"))
         .agg(count(lit(1)).as("cnt"))
         .writeStream
-    }
+    })
   }
 
   /** The CDC last-writer-wins merge as a LIVE complete-mode streaming
@@ -463,17 +452,15 @@ object StreamedBatch {
     * relation must match the batch merge's rank-window result. Input
     * `log`: (doc_id, version, op, text, batch). */
   def cdcApplied(s: SparkSession, log: DataFrame, nBatches: Int): DataFrame =
-    throughChunkedStreamMode(s, "cdc", nBatches, "complete",
-      (log, Seq("doc_id", "version", "op", "text"))) { (ss, srcs) =>
-      ss.readStream
-        .schema("doc_id LONG, version LONG, op STRING, text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .groupBy(col("doc_id"))
-        .agg(max(struct(col("version"), col("op"), col("text"))).as("last"))
-        .select(col("doc_id"), col("last.version").as("version"),
-          col("last.op").as("op"), col("last.text").as("text"))
-        .writeStream
-    }
+    replay(s, "cdc",
+      Seq(perBatch(log, nBatches, "doc_id", "version", "op", "text")))(
+      complete { t =>
+        t.stream.groupBy(col("doc_id"))
+          .agg(max(struct(col("version"), col("op"), col("text"))).as("last"))
+          .select(col("doc_id"), col("last.version").as("version"),
+            col("last.op").as("op"), col("last.text").as("text"))
+          .writeStream
+      })
 
   /** [[StreamingRollover.assignGenerations]] across REAL micro-batches:
     * the in-order message stream replays one file per micro-batch, the
@@ -483,15 +470,11 @@ object StreamedBatch {
   def rolledGenerations(s: SparkSession, batched: DataFrame,
       nBatches: Int, capBytes: Long = 16384L): DataFrame = {
     import s.implicits._
-    throughChunkedStream(s, "roll", nBatches,
-      (batched, Seq("msg_id", "topic", "data"))) { (ss, srcs) =>
-      val stream = ss.readStream
-        .schema("msg_id LONG, topic STRING, data STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[StreamingRollover.Msg]
-      StreamingRollover.assignGenerations(stream, capBytes)
-        .toDF().writeStream
-    }
+    replay(s, "roll",
+      Seq(perBatch(batched, nBatches, "msg_id", "topic", "data")))(append {
+      t => StreamingRollover.assignGenerations(
+        t.stream.as[StreamingRollover.Msg], capBytes).toDF().writeStream
+    })
   }
 
   /** [[graft.operators.Curation.hashedLinearScore]] + shard assignment
@@ -504,19 +487,17 @@ object StreamedBatch {
     val input = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("lang").cast("string").as("lang"),
       col("text").cast("string").as("text"))
-    throughStream(s, input, "clf") { (ss, src) =>
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING").parquet(src)
+    replay(s, "clf", Seq(oneFile(input)))(append { t =>
       graft.operators.Curation.shardAssign(
-          graft.operators.Curation.hashedLinearScore(stream), nShards)
+          graft.operators.Curation.hashedLinearScore(t.stream), nShards)
         .select(col("doc_id"), col("lang"), col("n_tok"), col("score"),
           col("pred"), col("shard"))
         .writeStream
-    }
+    })
   }
 
-  /** The FULL ingest-side curation projection as ONE streaming plan
-    * (r11 capstone): quality score + admission verdict + shard route +
+  /** The FULL ingest-side curation projection as ONE streaming plan:
+    * quality score + admission verdict + shard route +
     * benchmark-contamination count, every column a stateless narrow
     * expression over frozen artifacts (the hashed classifier kernel,
     * the shard hash, the offline-trained Bloom bits) — what a
@@ -528,18 +509,16 @@ object StreamedBatch {
     val input = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("lang").cast("string").as("lang"),
       col("text").cast("string").as("text"))
-    throughStream(s, input, "curi") { (ss, src) =>
-      val stream = ss.readStream
-        .schema("doc_id LONG, lang STRING, text STRING").parquet(src)
+    replay(s, "curi", Seq(oneFile(input)))(append { t =>
       graft.operators.Curation.shardAssign(
-          graft.operators.Curation.hashedLinearScore(stream), nShards)
+          graft.operators.Curation.hashedLinearScore(t.stream), nShards)
         .withColumn("n_contaminated", coalesce(
           graft.operators.Dedup.bloomHitCountCol(col("text"), bits),
           lit(0L)))
         .select(col("doc_id"), col("lang"), col("n_tok"), col("score"),
           col("pred"), col("shard"), col("n_contaminated"))
         .writeStream
-    }
+    })
   }
 
   /** [[graft.operators.Sketches.moments]] maintained by a REAL
@@ -550,12 +529,10 @@ object StreamedBatch {
   def momentsStreamed(s: SparkSession, rows: DataFrame): DataFrame = {
     val input = rows.select(col("event_type").cast("string").as("event_type"),
       col("value").cast("double").as("value"))
-    throughStreamComplete(s, input, "mom") { (ss, src) =>
-      val stream = ss.readStream.schema("event_type STRING, value DOUBLE")
-        .parquet(src)
-      graft.operators.Sketches.moments(stream, Seq("event_type"),
+    replay(s, "mom", Seq(oneFile(input)))(complete { t =>
+      graft.operators.Sketches.moments(t.stream, Seq("event_type"),
         col("value")).writeStream
-    }
+    })
   }
 
   /** [[graft.operators.Tokenizer.encodeWith]] (the frozen-artifact
@@ -567,13 +544,12 @@ object StreamedBatch {
       merges: Seq[(String, String)], ids: Map[String, Long]): DataFrame = {
     val input = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("text").cast("string").as("text"))
-    throughStream(s, input, "tokenc") { (ss, src) =>
-      ss.readStream.schema("doc_id LONG, text STRING").parquet(src)
-        .select(col("doc_id"),
+    replay(s, "tokenc", Seq(oneFile(input)))(append { t =>
+      t.stream.select(col("doc_id"),
           graft.operators.Tokenizer.encodeWith(col("text"), merges, ids)
             .as("ids"))
         .writeStream
-    }.select(col("doc_id"), posexplode(col("ids")).as(Seq("pos", "tok_id")))
+    }).select(col("doc_id"), posexplode(col("ids")).as(Seq("pos", "tok_id")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok_id"))
   }
 
@@ -582,26 +558,18 @@ object StreamedBatch {
     * source → narrow argmin projection → memory sink), then exploded to
     * the (vec_id, subspace, code) relation with the ordinal mapped back
     * to its centroid id, so the emitted stream lands on the BATCH
-    * assignment's oracle SQL. The C61 component's oracle anchor (r11):
-    * every new vector is indexed at consume time, no state, no
-    * shuffle. */
+    * assignment's oracle SQL: every new vector is indexed at consume
+    * time, no state, no shuffle. */
   def pqCodesStream(s: SparkSession, emb: DataFrame,
       cents: Array[(Long, Seq[Double])]): DataFrame = {
     val input = emb.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding"))
-    val streamed = throughStream(s, input, "pqc") { (ss, src) =>
-      graft.operators.Similarity.pqCodesWith(
-        ss.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .parquet(src), cents)
-        .writeStream
-    }
-    streamed
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("subspace", "ord")))
+    replay(s, "pqc", Seq(oneFile(input)))(append { t =>
+      graft.operators.Similarity.pqCodesWith(t.stream, cents).writeStream
+    }).select(col("vec_id"), posexplode(col("codes")).as(Seq("subspace", "ord")))
       .select(col("vec_id"), col("subspace").cast("long").as("subspace"),
         element_at(typedLit(cents.map(_._1).toSeq), col("ord") + 1).as("code"))
   }
-
-
 
   /** Write `batches` as ONE parquet FILE per `batch` value, in batch
     * order with distinct mod-times, so a file source with
@@ -618,16 +586,9 @@ object StreamedBatch {
     // relation; for every multibatch row at least nBatches extra scans
     // + plant transforms). Guide §2.4/§5: one pass computes the
     // relation, the per-batch jobs then scan tiny materialized blocks.
-    // Row MEMBERSHIP per batch file is unchanged; within-file row order
-    // after the repartition shuffle is pinned by the explicit
-    // sortWithinPartitions below (r14, ADVICE — the r13 shape left it
-    // to shuffle fetch order): no current twin depends on file row
-    // order (every admission order the oracles model is an EXPLICIT
-    // sort key of the operator, spec-proven), but byte-deterministic
-    // files close the trap for any future order-sensitive twin.
     val mat = graft.operators.Materialize(
       batches.select((cols :+ "batch").distinct.map(col): _*))
-    // ONE partitioned write instead of nBatches sequential jobs (r13):
+    // ONE partitioned write instead of nBatches sequential jobs:
     // repartition(nBatches, batch) puts each batch value in exactly one
     // task, so the dynamic-partition write emits exactly one file per
     // batch= directory in a single job. An EMPTY batch produces no
@@ -635,9 +596,14 @@ object StreamedBatch {
     // — the micro-batch sequence (and the two-source lockstep of the
     // stream-stream replays) must stay exactly nBatches files per
     // source.
+    // Rows within a file are sorted by `cols`, so the files are
+    // byte-deterministic. The sort LEADS with `batch`: a partitioned
+    // write requires its input ordered by the partition column, and
+    // Spark plans its own Sort [batch] over any ordering that does not
+    // start with it — which drops a `cols`-only sort underneath.
     val stage = s"$tmp/stage"
     mat.repartition(nBatches, col("batch"))
-      .sortWithinPartitions(cols.map(col): _*)
+      .sortWithinPartitions(("batch" +: cols).map(col): _*)
       .write.partitionBy("batch").parquet(stage)
     // Mod-times are set EXPLICITLY, 1 s apart (some filesystems have
     // 1-second mtime granularity, so sleeping between writes would not
@@ -666,55 +632,6 @@ object StreamedBatch {
     src
   }
 
-  /** Chunked-source variant of [[throughStream]]: each `sources` entry
-    * `(batchedDf, cols)` is written as one file per `batch` value (see
-    * [[writeChunkedFiles]]) into its own directory, `build` receives
-    * the source directories (readers should set
-    * `maxFilesPerTrigger = 1` so each file is one micro-batch), and the
-    * drain-timeout / memory-sink pin / cleanup contract is the same as
-    * the single-batch runner's. */
-  private def throughChunkedStream(s: SparkSession, name: String,
-      nBatches: Int, sources: (DataFrame, Seq[String])*)
-      (build: (SparkSession, Seq[String]) => org.apache.spark.sql.streaming.DataStreamWriter[_])
-      : DataFrame =
-    throughChunkedStreamMode(s, name, nBatches, "append", sources: _*)(build)
-
-  /** [[throughChunkedStream]] with an explicit sink output mode —
-    * "complete" for streaming AGGREGATIONS accumulated across the real
-    * micro-batches (the chunked sibling of [[throughStreamComplete]]). */
-  private def throughChunkedStreamMode(s: SparkSession, name: String,
-      nBatches: Int, outputMode: String, sources: (DataFrame, Seq[String])*)
-      (build: (SparkSession, Seq[String]) => org.apache.spark.sql.streaming.DataStreamWriter[_])
-      : DataFrame = {
-    val tmp = twinTempDir(s"graft-$name-twin")
-    val qn = s"${name}_twin_${seq.incrementAndGet()}"
-    val ss = streamSession(s)
-    try {
-      val srcs = sources.zipWithIndex.map { case ((df, cols), i) =>
-        val dir = if (sources.size == 1) tmp else s"$tmp/s$i"
-        writeChunkedFiles(df, cols, nBatches, dir)
-      }
-      val q = build(ss, srcs)
-        .format("memory").queryName(qn).outputMode(outputMode)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(s"$qn did not drain within 300 s")
-      }
-      val sink = ss.table(qn)
-      s.createDataFrame(
-        s.sparkContext.parallelize(sink.collect().toIndexedSeq, 1),
-        sink.schema)
-    } finally {
-      try ss.catalog.dropTempView(qn) catch { case _: Exception => () }
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      ()
-    }
-  }
-
   /** A REAL watermark-drop replay: `batches` (topic, ts, batch) is
     * written as ONE FILE PER MICRO-BATCH in batch order (distinct
     * mod-times keep the file-source order deterministic), streamed with
@@ -729,23 +646,13 @@ object StreamedBatch {
   def watermarkedWindowCounts(s: SparkSession, batches: DataFrame,
       nBatches: Int, horizon: String = "1 hour",
       windowDur: String = "1 hour"): DataFrame =
-    throughChunkedStream(s, "wm", nBatches,
-      (batches, Seq("topic", "ts"))) { (ss, srcs) =>
-      ss.readStream.schema("topic STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .withWatermark("ts", horizon)
+    replay(s, "wm", Seq(perBatch(batches, nBatches, "topic", "ts")))(append {
+      t => t.stream.withWatermark("ts", horizon)
         .groupBy(window(col("ts"), windowDur).as("w"), col("topic"))
         .agg(count(lit(1)).as("cnt"))
         .select(col("w.start").as("win_start"), col("topic"), col("cnt"))
         .writeStream
-    }
-
-
-
-
-
-
-
+    })
 
   /** [[StreamingSync.dedupMessages]] across REAL micro-batches with
     * planted DUPLICATE redelivery: the twin proves exactly-once holds
@@ -756,13 +663,12 @@ object StreamedBatch {
     * emitted relation must therefore equal the DISTINCT message set. */
   def dedupedMessages(s: SparkSession, batched: DataFrame,
       nBatches: Int, horizon: String): DataFrame =
-    throughChunkedStream(s, "mdedup", nBatches,
-      (batched, Seq("msg_id", "topic", "publish_time", "data"))) { (ss, srcs) =>
-      val stream = ss.readStream
-        .schema("msg_id LONG, topic STRING, publish_time TIMESTAMP, data STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-      StreamingSync.dedupMessages(horizon)(stream).writeStream
-    }
+    replay(s, "mdedup", Seq(perBatch(batched, nBatches,
+      "msg_id", "topic", "publish_time", "data")))(append { t =>
+      StreamingSync.dedupMessages(horizon)(t.stream).writeStream
+    })
+
+  private val syncCols = Seq("msg_id", "topic", "publish_time", "data")
 
   /** THE flagship twin: [[StreamingSync.start]] run for REAL — the
     * chunked message relation replays one file per micro-batch through
@@ -773,7 +679,8 @@ object StreamedBatch {
     * exactly the batch relation. */
   def syncedStore(s: SparkSession, batched: DataFrame, cfg: SyncConfig,
       nBatches: Int): DataFrame =
-    runSyncedStore(s, batched, cfg, nBatches, compactFirst = false)
+    replay(s, "sync", Seq(perBatch(batched, nBatches, syncCols: _*)))(
+      Store(cfg, compact = false))
 
   /** [[syncedStore]] plus the OPTIMIZE pass: after the stream drains,
     * the accumulated store is COMPACTED in place
@@ -784,39 +691,8 @@ object StreamedBatch {
     * targetBytes forces a real multi-file rewrite at test scale. */
   def syncedCompactedStore(s: SparkSession, batched: DataFrame,
       cfg: SyncConfig, nBatches: Int): DataFrame =
-    runSyncedStore(s, batched, cfg, nBatches, compactFirst = true)
-
-  private def runSyncedStore(s: SparkSession, batched: DataFrame,
-      cfg: SyncConfig, nBatches: Int, compactFirst: Boolean): DataFrame = {
-    val tmp = twinTempDir("graft-sync-twin")
-    seq.incrementAndGet() // count toward replayRuns like every runner
-    val ss = streamSession(s)
-    try {
-      val src = writeChunkedFiles(batched,
-        Seq("msg_id", "topic", "publish_time", "data"), nBatches, tmp)
-      val q = StreamingSync.start(ss, cfg, src, s"$tmp/sink",
-        s"$tmp/metrics", availableNow = true, batchFiles = Some(1))
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("sync twin did not drain within 300 s")
-      }
-      if (compactFirst) {
-        val report = graft.sinks.Compaction.compact(ss, s"$tmp/sink",
-          targetBytes = 64L << 10)
-        require(report.filesAfter <= report.filesBefore,
-          s"compaction grew the store: $report")
-      }
-      val store = ss.read.parquet(s"$tmp/sink")
-      s.createDataFrame(
-        s.sparkContext.parallelize(store.collect().toIndexedSeq, 1),
-        store.schema)
-    } finally {
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      ()
-    }
-  }
+    replay(s, "sync", Seq(perBatch(batched, nBatches, syncCols: _*)))(
+      Store(cfg, compact = true))
 
   /** [[StreamingSessionize]] across REAL micro-batches with the
     * EVENT-TIME TIMEOUT path live (no sentinel): the in-order stream
@@ -830,13 +706,11 @@ object StreamedBatch {
   def sessionsMulti(s: SparkSession, batched: DataFrame, nBatches: Int,
       gapMinutes: Int): DataFrame = {
     import s.implicits._
-    throughChunkedStream(s, "sessm", nBatches,
-      (batched, Seq("user_id", "ts"))) { (ss, srcs) =>
-      val stream = ss.readStream.schema("user_id LONG, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[StreamingSessionize.Event]
-      StreamingSessionize.sessions(stream, gapMinutes)(ss).writeStream
-    }
+    replay(s, "sessm", Seq(perBatch(batched, nBatches, "user_id", "ts")))(
+      append { t =>
+        StreamingSessionize.sessions(t.stream.as[StreamingSessionize.Event],
+          gapMinutes)(t.ss).writeStream
+      })
   }
 
   /** [[StreamingIntervalJoin.attribute]] across REAL micro-batches with
@@ -853,19 +727,13 @@ object StreamedBatch {
   def attributedMulti(s: SparkSession, impsBatched: DataFrame,
       convsBatched: DataFrame, nBatches: Int, windowSec: Int,
       horizon: String): DataFrame =
-    throughChunkedStream(s, "attrm", nBatches,
-      (impsBatched, Seq("user_id", "imp_ts", "imp_id")),
-      (convsBatched, Seq("c_user_id", "conv_ts", "conv_id"))) { (ss, srcs) =>
-      val imps = ss.readStream
-        .schema("user_id LONG, imp_ts TIMESTAMP, imp_id LONG")
-        .option("maxFilesPerTrigger", "1").parquet(srcs(0))
-      val convs = ss.readStream
-        .schema("c_user_id LONG, conv_ts TIMESTAMP, conv_id LONG")
-        .option("maxFilesPerTrigger", "1").parquet(srcs(1))
-      StreamingIntervalJoin
-        .attribute(imps, convs, horizon = horizon, windowSec = windowSec)
-        .writeStream
-    }
+    replay(s, "attrm", Seq(
+      perBatch(impsBatched, nBatches, "user_id", "imp_ts", "imp_id"),
+      perBatch(convsBatched, nBatches, "c_user_id", "conv_ts", "conv_id")))(
+      append { t =>
+        StreamingIntervalJoin.attribute(t.streams(0), t.streams(1),
+          horizon = horizon, windowSec = windowSec).writeStream
+      })
 
   /** [[StreamingRateLimit]] across REAL micro-batches: the
     * planted-arrival `batched` message relation replays one file per
@@ -876,14 +744,11 @@ object StreamedBatch {
   def rateLimitedMulti(s: SparkSession, batched: DataFrame,
       nBatches: Int, cfg: SyncConfig): DataFrame = {
     import s.implicits._
-    throughChunkedStream(s, "rlm", nBatches,
-      (batched, Seq("msg_id", "topic", "publish_time", "data", "app"))) { (ss, srcs) =>
-      val stream = ss.readStream
-        .schema("msg_id LONG, topic STRING, publish_time TIMESTAMP, data STRING, app STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[StreamingRateLimit.RlMsg]
-      StreamingRateLimit(cfg)(stream).toDF().writeStream
-    }
+    replay(s, "rlm", Seq(perBatch(batched, nBatches,
+      "msg_id", "topic", "publish_time", "data", "app")))(append { t =>
+      StreamingRateLimit(cfg)(t.stream.as[StreamingRateLimit.RlMsg])
+        .toDF().writeStream
+    })
   }
 
   /** [[StreamingQuota.quotaGate]] across REAL micro-batches: the
@@ -896,13 +761,11 @@ object StreamedBatch {
   def quotaAdmittedMulti(s: SparkSession, batched: DataFrame,
       nBatches: Int, cap: Int): DataFrame = {
     import s.implicits._
-    throughChunkedStream(s, "quotam", nBatches,
-      (batched, Seq("doc_id", "domain"))) { (ss, srcs) =>
-      val stream = ss.readStream.schema("doc_id LONG, domain STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[StreamingQuota.Arrival]
-      StreamingQuota.quotaGate(stream, cap).toDF().writeStream
-    }
+    replay(s, "quotam", Seq(perBatch(batched, nBatches, "doc_id", "domain")))(
+      append { t =>
+        StreamingQuota.quotaGate(t.stream.as[StreamingQuota.Arrival], cap)
+          .toDF().writeStream
+      })
   }
 
   /** [[StreamingDedup.nearDupGate]] across REAL micro-batches: the
@@ -914,52 +777,37 @@ object StreamedBatch {
   def nearDupCollisionsMulti(s: SparkSession, batched: DataFrame,
       nBatches: Int): DataFrame = {
     import s.implicits._
-    throughChunkedStream(s, "ndgm", nBatches,
-      (batched, Seq("doc_id", "text"))) { (ss, srcs) =>
-      val stream = ss.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[StreamingDedup.Doc]
-      StreamingDedup.nearDupGate(stream).toDF().writeStream
-    }
+    replay(s, "ndgm", Seq(perBatch(batched, nBatches, "doc_id", "text")))(
+      append { t =>
+        StreamingDedup.nearDupGate(t.stream.as[StreamingDedup.Doc])
+          .toDF().writeStream
+      })
   }
 
   /** [[nearDupCollisionsMulti]] RESTARTED from a flushed ownership
-    * registry — the bucket gate's state-eviction half (r11, the line
-    * gate's C199 lifecycle applied to the first-seen registry): the
-    * gate runs with EMPTY state, each arriving (doc, bucket) pair
-    * carries the bucket's STORED first owner via a stream-static left
-    * join against `registry` (bucket, first_doc) — min per bucket
-    * first, so overlapping flushes collapse to the earliest owner —
-    * and ownership continues exactly where the flushed run stopped
+    * registry — the bucket gate's state-eviction half (the line gate's
+    * lifecycle applied to the first-seen registry): the gate runs with
+    * EMPTY state, each arriving (doc, bucket) pair carries the bucket's
+    * STORED first owner via a stream-static left join against
+    * `registry` (bucket, first_doc) — min per bucket first, so
+    * overlapping flushes collapse to the earliest owner — and ownership
+    * continues exactly where the flushed run stopped
     * (`dedup_gate_evict` shares `dedup_gate_multibatch`'s SQL
     * verbatim). */
   def nearDupCollisionsMultiFrom(s: SparkSession, batched: DataFrame,
-      nBatches: Int, registry: DataFrame): DataFrame = {
-    val regTmp = twinTempDir("graft-ndgf-reg")
-    try {
-      registry.select(col("bucket"), col("first_doc"))
-        .write.parquet(s"$regTmp/reg")
-      throughChunkedStream(s, "ndgf", nBatches,
-        (batched, Seq("doc_id", "text"))) { (ss, srcs) =>
-        import ss.implicits._
-        val reg = ss.read.parquet(s"$regTmp/reg")
-          .groupBy(col("bucket")).agg(min(col("first_doc")).as("__first"))
-        val stream = ss.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        val keyed = graft.operators.Dedup.minhashBuckets(stream)
-          .join(reg, Seq("bucket"), "left")
-          .select(col("doc_id"), col("bucket"),
-            coalesce(col("__first"), lit(Long.MaxValue)).as("first"))
-          .as[(Long, Long, Long)]
-        StreamingDedup.keyedFirstSeenGateFrom(keyed).toDF().writeStream
-      }
-    } finally {
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(regTmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(regTmp), true)
-      ()
-    }
-  }
+      nBatches: Int, registry: DataFrame): DataFrame =
+    replay(s, "ndgf", Seq(perBatch(batched, nBatches, "doc_id", "text")),
+      Seq(registry.select(col("bucket"), col("first_doc"))))(append { t =>
+      import t.ss.implicits._
+      val reg = t.statics.head
+        .groupBy(col("bucket")).agg(min(col("first_doc")).as("__first"))
+      val keyed = graft.operators.Dedup.minhashBuckets(t.stream)
+        .join(reg, Seq("bucket"), "left")
+        .select(col("doc_id"), col("bucket"),
+          coalesce(col("__first"), lit(Long.MaxValue)).as("first"))
+        .as[(Long, Long, Long)]
+      StreamingDedup.keyedFirstSeenGateFrom(keyed).toDF().writeStream
+    })
 
   /** The LINE-BOILERPLATE gate at ingest across REAL micro-batches:
     * each arriving document splits into its fixed-window lines INSIDE
@@ -974,82 +822,75 @@ object StreamedBatch {
     * the downstream job. */
   def lineGatedMulti(s: SparkSession, batched: DataFrame,
       nBatches: Int, lineLen: Int = 10, minSupport: Int = 3): DataFrame =
-    throughChunkedStream(s, "lng", nBatches,
-      (batched, Seq("doc_id", "text"))) { (ss, srcs) =>
-      import ss.implicits._
-      val stream = ss.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-      StreamingDedup.lineSupportGate(
-        graft.operators.Dedup.docLines(stream, lineLen)
-          .as[StreamingDedup.LineRow],
-        minSupport).toDF().writeStream
-    }
+    replay(s, "lng", Seq(perBatch(batched, nBatches, "doc_id", "text")))(
+      append { t =>
+        import t.ss.implicits._
+        StreamingDedup.lineSupportGate(
+          graft.operators.Dedup.docLines(t.stream, lineLen)
+            .as[StreamingDedup.LineRow],
+          minSupport).toDF().writeStream
+      })
 
   /** [[lineGatedMulti]] RESTARTED from a flushed registry — the state
-    * EVICTION half of the line gate's lifecycle (r11): the gate runs
-    * with EMPTY state, each arriving line carries its stored support
-    * via a stream-static left join against `registry` (summed per line
-    * first, so a union of daily flushes is a valid input), and the
-    * verdict is stored + since-flush support
+    * EVICTION half of the line gate's lifecycle: the gate runs with
+    * EMPTY state, each arriving line carries its stored support via a
+    * stream-static left join against `registry` (summed per line first,
+    * so a union of daily flushes is a valid input), and the verdict is
+    * stored + since-flush support
     * ([[StreamingDedup.lineSupportGateFrom]]). Flush(phase-1 emissions)
     * → restart(phase 2) must replay EXACTLY like the never-flushed gate
     * (the `dedup_lines_evict` oracle row shares `dedup_lines_stream`'s
     * SQL verbatim) while the state store holds only phase-2 lines. */
   def lineGatedMultiFrom(s: SparkSession, batched: DataFrame,
       nBatches: Int, registry: DataFrame, lineLen: Int = 10,
-      minSupport: Int = 3): DataFrame = {
-    val regTmp = twinTempDir("graft-lngf-reg")
-    try {
-      registry.select(col("line"), col("sup")).write.parquet(s"$regTmp/reg")
-      throughChunkedStream(s, "lngf", nBatches,
-        (batched, Seq("doc_id", "text"))) { (ss, srcs) =>
-        import ss.implicits._
-        val base = ss.read.parquet(s"$regTmp/reg")
-          .groupBy(col("line")).agg(sum(col("sup")).as("__base"))
-        val stream = ss.readStream.schema("doc_id LONG, text STRING")
-          .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        val withBase = graft.operators.Dedup.docLines(stream, lineLen)
-          .join(base, Seq("line"), "left")
-          .select(col("doc_id"), col("n_lines"), col("line_id"),
-            col("line"), coalesce(col("__base"), lit(0L)).as("base"))
-          .as[StreamingDedup.LineRowBase]
-        StreamingDedup.lineSupportGateFrom(withBase, minSupport)
-          .toDF().writeStream
-      }
-    } finally {
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(regTmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(regTmp), true)
-      ()
-    }
-  }
+      minSupport: Int = 3): DataFrame =
+    replay(s, "lngf", Seq(perBatch(batched, nBatches, "doc_id", "text")),
+      Seq(registry.select(col("line"), col("sup"))))(append { t =>
+      import t.ss.implicits._
+      val base = t.statics.head
+        .groupBy(col("line")).agg(sum(col("sup")).as("__base"))
+      val withBase = graft.operators.Dedup.docLines(t.stream, lineLen)
+        .join(base, Seq("line"), "left")
+        .select(col("doc_id"), col("n_lines"), col("line_id"),
+          col("line"), coalesce(col("__base"), lit(0L)).as("base"))
+        .as[StreamingDedup.LineRowBase]
+      StreamingDedup.lineSupportGateFrom(withBase, minSupport)
+        .toDF().writeStream
+    })
+
+  private val ttlInterval = 60000L
 
   /** Event-time base + watermark-advancing SENTINEL shared by the TTL
-    * replays (r12, verdict #1): every data row gets
-    * ts = batch · 1 min, and ONE sentinel row (doc_id = −1, a
-    * control-char-prefixed text no corpus document can produce)
-    * arrives as an extra final micro-batch at a far-future timestamp,
-    * driving the watermark past every live timeout so the store
-    * provably drains before the query terminates. The sentinel is
+    * replays: every data row gets ts = batch · 1 min, and ONE sentinel
+    * row (doc_id = −1, a control-char-prefixed text no corpus document
+    * can produce) arrives as an extra final micro-batch at a far-future
+    * timestamp, driving the watermark past every live timeout so the
+    * store provably drains before the query terminates. The sentinel is
     * output-invisible: its rows are filtered after the gate, and since
-    * it arrives last it cannot change any real verdict. */
-  private def withTtlTimeline(batched: DataFrame,
-      nBatches: Int): DataFrame = {
-    val interval = 60000L
+    * it arrives last it cannot change any real verdict. Returned as the
+    * nBatches + 1 file source. */
+  private def ttlTimeline(batched: DataFrame, nBatches: Int): Source = {
     val sentinelText =
       "\u0001wm \u0001adv \u0001s1 \u0001s2 \u0001s3"
-    batched.select(col("doc_id"), col("text"),
+    val timeline = batched.select(col("doc_id"), col("text"),
         col("batch").cast("long").as("batch"))
       .unionByName(batched.sparkSession.range(1)
         .select(lit(-1L).as("doc_id"), lit(sentinelText).as("text"),
           lit(nBatches.toLong).as("batch")))
       .withColumn("ts", expr(
-        s"timestamp_millis(CASE WHEN doc_id < 0 THEN ${3600L * interval} " +
+        s"timestamp_millis(CASE WHEN doc_id < 0 THEN ${3600L * ttlInterval} " +
           // batch + 1, NOT batch: the first batch must sit strictly
           // above the INITIAL watermark (0) — a ts equal to the
           // watermark is dropped as late by the stateful operator
-          s"ELSE (batch + 1) * $interval END)"))
+          s"ELSE (batch + 1) * $ttlInterval END)"))
+    perBatch(timeline, nBatches + 1, "doc_id", "text", "ts")
   }
+
+  /** The TTL twins re-attach event time by doc id through a
+    * stream-STATIC join (docs are unique in the replay); the static
+    * side is the same one-file-per-batch source directory. */
+  private def ttlTimes(t: Twin): DataFrame =
+    t.ss.read.parquet(t.srcDirs.head).select(col("doc_id"), col("ts"))
 
   /** [[lineGatedMulti]] through the EventTimeTimeout gate
     * ([[StreamingDedup.lineSupportGateTtl]], ttl = `ttlBatches` batch
@@ -1062,31 +903,19 @@ object StreamedBatch {
     * SQL verbatim). */
   def lineGatedTtlMulti(s: SparkSession, batched: DataFrame,
       nBatches: Int, ttlBatches: Int, lineLen: Int = 10,
-      minSupport: Int = 3): DataFrame = {
-    val interval = 60000L
-    throughChunkedStream(s, "lngt", nBatches + 1,
-      (withTtlTimeline(batched, nBatches), Seq("doc_id", "text", "ts"))) {
-      (ss, srcs) =>
-        import ss.implicits._
-        val stream = ss.readStream
-          .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-          .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        // event time re-attaches by doc id through a stream-STATIC join
-        // (docs are unique in the replay); the static side is the same
-        // one-file-per-batch source directory
-        val tsRel = ss.read.parquet(srcs.head)
-          .select(col("doc_id"), col("ts"))
-        val rows = graft.operators.Dedup.docLines(stream, lineLen)
-          .join(tsRel, "doc_id")
-          .select(col("doc_id"), col("n_lines"), col("line_id"),
-            col("line"), col("ts"))
-          .as[StreamingDedup.LineRowT]
-        StreamingDedup.lineSupportGateTtl(rows,
-            ttlMs = ttlBatches * interval, minSupport = minSupport)
-          .filter(col("doc_id") >= 0)
-          .toDF().writeStream
-    }
-  }
+      minSupport: Int = 3): DataFrame =
+    replay(s, "lngt", Seq(ttlTimeline(batched, nBatches)))(append { t =>
+      import t.ss.implicits._
+      val rows = graft.operators.Dedup.docLines(t.stream, lineLen)
+        .join(ttlTimes(t), "doc_id")
+        .select(col("doc_id"), col("n_lines"), col("line_id"),
+          col("line"), col("ts"))
+        .as[StreamingDedup.LineRowT]
+      StreamingDedup.lineSupportGateTtl(rows,
+          ttlMs = ttlBatches * ttlInterval, minSupport = minSupport)
+        .filter(col("doc_id") >= 0)
+        .toDF().writeStream
+    })
 
   /** [[nearDupCollisionsMulti]] through the EventTimeTimeout gate
     * ([[StreamingDedup.keyedFirstSeenGateTtl]], ttl = `ttlBatches`
@@ -1097,113 +926,71 @@ object StreamedBatch {
     * verbatim while buckets idle past the ttl leave the store
     * in-stream. */
   def nearDupCollisionsTtlMulti(s: SparkSession, batched: DataFrame,
-      nBatches: Int, ttlBatches: Int): DataFrame = {
-    val interval = 60000L
-    throughChunkedStream(s, "ndgt", nBatches + 1,
-      (withTtlTimeline(batched, nBatches), Seq("doc_id", "text", "ts"))) {
-      (ss, srcs) =>
-        import ss.implicits._
-        val stream = ss.readStream
-          .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-          .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        val tsRel = ss.read.parquet(srcs.head)
-          .select(col("doc_id"), col("ts"))
-        val keyed = graft.operators.Dedup
-          .minhashBuckets(stream.select(col("doc_id"), col("text")))
-          .join(tsRel, "doc_id")
-          .select(col("doc_id"), col("bucket").as("key"), col("ts"))
-          .as[StreamingDedup.KeyedT]
-        StreamingDedup.keyedFirstSeenGateTtl(keyed,
-            ttlMs = ttlBatches * interval)
-          .filter(col("doc_id") >= 0)
-          .toDF().writeStream
-    }
-  }
+      nBatches: Int, ttlBatches: Int): DataFrame =
+    replay(s, "ndgt", Seq(ttlTimeline(batched, nBatches)))(append { t =>
+      import t.ss.implicits._
+      val keyed = graft.operators.Dedup
+        .minhashBuckets(t.stream.select(col("doc_id"), col("text")))
+        .join(ttlTimes(t), "doc_id")
+        .select(col("doc_id"), col("bucket").as("key"), col("ts"))
+        .as[StreamingDedup.KeyedT]
+      StreamingDedup.keyedFirstSeenGateTtl(keyed,
+          ttlMs = ttlBatches * ttlInterval)
+        .filter(col("doc_id") >= 0)
+        .toDF().writeStream
+    })
 
-  /** The COMPOSED production lifecycle runner for the bucket gate
-    * (r12): phase-2 replay through
+  /** The COMPOSED production lifecycle runner for the bucket gate:
+    * phase-2 replay through
     * [[StreamingDedup.keyedFirstSeenGateTtlFrom]] — every arrival
     * carries its stored owner from `registry` via the stream-static
     * join AND idle keys evict in-stream as the watermark advances, so
     * the store holds only ttl-active keys while evicted registry
     * ownership re-seeds losslessly on the next arrival. */
   def nearDupCollisionsTtlMultiFrom(s: SparkSession, batched: DataFrame,
-      nBatches: Int, registry: DataFrame, ttlMs: Long): DataFrame = {
-    val regTmp = twinTempDir("graft-ndgtf-reg")
-    try {
-      registry.select(col("bucket"), col("first_doc"))
-        .write.parquet(s"$regTmp/reg")
-      throughChunkedStream(s, "ndgtf", nBatches + 1,
-        (withTtlTimeline(batched, nBatches), Seq("doc_id", "text", "ts"))) {
-        (ss, srcs) =>
-          import ss.implicits._
-          val reg = ss.read.parquet(s"$regTmp/reg")
-            .groupBy(col("bucket")).agg(min(col("first_doc")).as("__first"))
-          val stream = ss.readStream
-            .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-          val tsRel = ss.read.parquet(srcs.head)
-            .select(col("doc_id"), col("ts"))
-          val keyed = graft.operators.Dedup
-            .minhashBuckets(stream.select(col("doc_id"), col("text")))
-            .join(tsRel, "doc_id")
-            .join(reg, Seq("bucket"), "left")
-            .select(col("doc_id"), col("bucket").as("key"),
-              coalesce(col("__first"), lit(Long.MaxValue)).as("base"),
-              col("ts"))
-            .as[StreamingDedup.KeyedBT]
-          StreamingDedup.keyedFirstSeenGateTtlFrom(keyed, ttlMs)
-            .filter(col("doc_id") >= 0)
-            .toDF().writeStream
-      }
-    } finally {
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(regTmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(regTmp), true)
-      ()
-    }
-  }
+      nBatches: Int, registry: DataFrame, ttlMs: Long): DataFrame =
+    replay(s, "ndgtf", Seq(ttlTimeline(batched, nBatches)),
+      Seq(registry.select(col("bucket"), col("first_doc"))))(append { t =>
+      import t.ss.implicits._
+      val reg = t.statics.head
+        .groupBy(col("bucket")).agg(min(col("first_doc")).as("__first"))
+      val keyed = graft.operators.Dedup
+        .minhashBuckets(t.stream.select(col("doc_id"), col("text")))
+        .join(ttlTimes(t), "doc_id")
+        .join(reg, Seq("bucket"), "left")
+        .select(col("doc_id"), col("bucket").as("key"),
+          coalesce(col("__first"), lit(Long.MaxValue)).as("base"),
+          col("ts"))
+        .as[StreamingDedup.KeyedBT]
+      StreamingDedup.keyedFirstSeenGateTtlFrom(keyed, ttlMs)
+        .filter(col("doc_id") >= 0)
+        .toDF().writeStream
+    })
 
-  /** The COMPOSED production lifecycle runner for the line gate (r12):
+  /** The COMPOSED production lifecycle runner for the line gate:
     * phase-2 replay through [[StreamingDedup.lineSupportGateTtlFrom]] —
     * stored support joins in as the verdict base AND idle lines evict
     * in-stream, so the store is O(ttl-active lines) while long-horizon
     * support lives in the registry. */
   def lineGatedTtlMultiFrom(s: SparkSession, batched: DataFrame,
       nBatches: Int, registry: DataFrame, ttlMs: Long, lineLen: Int = 10,
-      minSupport: Int = 3): DataFrame = {
-    val regTmp = twinTempDir("graft-lngtf-reg")
-    try {
-      registry.select(col("line"), col("sup")).write.parquet(s"$regTmp/reg")
-      throughChunkedStream(s, "lngtf", nBatches + 1,
-        (withTtlTimeline(batched, nBatches), Seq("doc_id", "text", "ts"))) {
-        (ss, srcs) =>
-          import ss.implicits._
-          val base = ss.read.parquet(s"$regTmp/reg")
-            .groupBy(col("line")).agg(sum(col("sup")).as("__base"))
-          val stream = ss.readStream
-            .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-          val tsRel = ss.read.parquet(srcs.head)
-            .select(col("doc_id"), col("ts"))
-          val rows = graft.operators.Dedup.docLines(stream, lineLen)
-            .join(tsRel, "doc_id")
-            .join(base, Seq("line"), "left")
-            .select(col("doc_id"), col("n_lines"), col("line_id"),
-              col("line"), coalesce(col("__base"), lit(0L)).as("base"),
-              col("ts"))
-            .as[StreamingDedup.LineRowBaseT]
-          StreamingDedup.lineSupportGateTtlFrom(rows, ttlMs, minSupport)
-            .filter(col("doc_id") >= 0)
-            .toDF().writeStream
-      }
-    } finally {
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(regTmp), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(regTmp), true)
-      ()
-    }
-  }
+      minSupport: Int = 3): DataFrame =
+    replay(s, "lngtf", Seq(ttlTimeline(batched, nBatches)),
+      Seq(registry.select(col("line"), col("sup"))))(append { t =>
+      import t.ss.implicits._
+      val base = t.statics.head
+        .groupBy(col("line")).agg(sum(col("sup")).as("__base"))
+      val rows = graft.operators.Dedup.docLines(t.stream, lineLen)
+        .join(ttlTimes(t), "doc_id")
+        .join(base, Seq("line"), "left")
+        .select(col("doc_id"), col("n_lines"), col("line_id"),
+          col("line"), coalesce(col("__base"), lit(0L)).as("base"),
+          col("ts"))
+        .as[StreamingDedup.LineRowBaseT]
+      StreamingDedup.lineSupportGateTtlFrom(rows, ttlMs, minSupport)
+        .filter(col("doc_id") >= 0)
+        .toDF().writeStream
+    })
 
   /** The image near-dup gate AT INGEST across REAL micro-batches:
     * doc ids replay one file per micro-batch (batch = id mod 3, an
@@ -1215,12 +1002,9 @@ object StreamedBatch {
     * (batch, id), every later holder of the image collides. */
   def phashCollisionsMulti(s: SparkSession, batched: DataFrame,
       nBatches: Int): DataFrame =
-    throughChunkedStream(s, "phg", nBatches,
-      (batched, Seq("doc_id"))) { (ss, srcs) =>
-      import ss.implicits._
-      val keyed = ss.readStream.schema("doc_id LONG")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .as[Long]
+    replay(s, "phg", Seq(perBatch(batched, nBatches, "doc_id")))(append { t =>
+      import t.ss.implicits._
+      val keyed = t.stream.as[Long]
         .mapPartitions(_.map { id =>
           val payload = graft.operators.Multimodal.synthesizeBmp(id % 97)
           val ph = graft.operators.Multimodal.perceptualHash(payload)
@@ -1228,7 +1012,7 @@ object StreamedBatch {
           (id, ph)
         })
       StreamingDedup.keyedFirstSeenGate(keyed).toDF().writeStream
-    }
+    })
 
   /** The TEMPLATE gate at ingest across REAL micro-batches: each
     * arrival's digit-masked text hash keys the same first-seen registry
@@ -1237,16 +1021,15 @@ object StreamedBatch {
     * arrives. Input `docs`: (doc_id, text, batch). */
   def templateCollisionsMulti(s: SparkSession, docs: DataFrame,
       nBatches: Int): DataFrame =
-    throughChunkedStream(s, "tmplg", nBatches,
-      (docs, Seq("doc_id", "text"))) { (ss, srcs) =>
-      import ss.implicits._
-      val keyed = ss.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1").parquet(srcs.head)
-        .select(col("doc_id"), graft.plans.native.poly_hash(
-          regexp_replace(col("text"), "[0-9]+", "#")).as("k"))
-        .as[(Long, Long)]
-      StreamingDedup.keyedFirstSeenGate(keyed).toDF().writeStream
-    }
+    replay(s, "tmplg", Seq(perBatch(docs, nBatches, "doc_id", "text")))(
+      append { t =>
+        import t.ss.implicits._
+        val keyed = t.stream
+          .select(col("doc_id"), graft.plans.native.poly_hash(
+            regexp_replace(col("text"), "[0-9]+", "#")).as("k"))
+          .as[(Long, Long)]
+        StreamingDedup.keyedFirstSeenGate(keyed).toDF().writeStream
+      })
 
   /** [[StreamingDedup.nearDupGate]] fed `(doc_id, text)`: one
     * micro-batch + empty registry flags exactly the batch relation —
@@ -1257,10 +1040,9 @@ object StreamedBatch {
     import s.implicits._
     val input = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("text").cast("string").as("text"))
-    throughStream(s, input, "ndg") { (ss, src) =>
-      val stream = ss.readStream.schema("doc_id LONG, text STRING")
-        .parquet(src).as[StreamingDedup.Doc]
-      StreamingDedup.nearDupGate(stream).toDF().writeStream
-    }
+    replay(s, "ndg", Seq(oneFile(input)))(append { t =>
+      StreamingDedup.nearDupGate(t.stream.as[StreamingDedup.Doc])
+        .toDF().writeStream
+    })
   }
 }

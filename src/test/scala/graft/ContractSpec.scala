@@ -12,6 +12,17 @@ class ContractSpec extends SparkSpec {
     assert(q.subsetOf(o), s"queries without oracles: ${q -- o}")
   }
 
+  test("Bench.jstr output parses back to the input (every ASCII char, quote, backslash, non-ASCII)") {
+    // Bench's JSON line and Verify's oracle_sql.json share this escaper;
+    // a control char it let through would make the reader's parse fail
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val all = (0 to 0x7f).map(_.toChar).mkString + "\"\\\u00e9\u20ac"
+    (all.map(_.toString) :+ all).foreach { s =>
+      assert(mapper.readValue(Bench.jstr(s), classOf[String]) == s,
+        s"round-trip failed for ${s.map(_.toInt).mkString(",")}")
+    }
+  }
+
   test("flagship entry returns rows (driver smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
