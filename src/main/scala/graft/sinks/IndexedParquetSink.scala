@@ -1,10 +1,13 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoders, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
@@ -35,14 +38,18 @@ object IndexedParquetSink {
     * absent; it must share the store's filesystem) and are counted in a
     * `failed` metrics column.
     *
-    * Per batch: cache once, tag each doc with its destination,
-    * hash-partition by (destination, index) into
+    * Per batch, one pass over the documents: tag each doc with its
+    * destination, hash-partition by (destination, index) into
     * `spark.sql.shuffle.partitions` (an explicit count, so AQE cannot
     * coalesce the write into one task), run ONE partitioned write into
     * `<path>/_staging/<tag>`, move each staged file to
-    * `<root>/index=<i>/<tag>-<k>.parquet`, aggregate the metrics from
-    * the same cache, and — with a `batchId` — rename the marker
-    * `_commits/<batchId>` into place last. The marker is the
+    * `<root>/index=<i>/<tag>-<k>.parquet`, and — with a `batchId` —
+    * rename the marker `_commits/<batchId>` into place last. The
+    * metrics are counted inside that write: an observed
+    * [[BulkCountAggregator]] sits above the shuffle, before the filter
+    * that drops failed docs without a `failedPath`, so it runs in the
+    * write's result stage, whose accumulator updates Spark applies once
+    * per partition even when a task is retried. The marker is the
     * commit-marker protocol that makes checkpoint REPLAY (the streaming
     * counterpart of broker redelivery, pulsar.rs:193-221) safe for a
     * file sink the way ES doc-ids make it safe for the reference:
@@ -59,11 +66,12 @@ object IndexedParquetSink {
     * (a plain append, not idempotent under retry).
     *
     * Marker payloads are escaped TSV, so tab/newline/backslash in
-    * payload-derived index/app values cannot break framing. Underscore
-    * dirs (`_commits`, `_staging`) are invisible to parquet readers, so
-    * the store stays `index=`-partitioned for pruning, retention and
-    * compaction. `onStep` is a fault-injection seam: it is called with
-    * "staged", "move <k>" after each move, and "moves-done". */
+    * payload-derived index/app values cannot break framing, and a null
+    * label is written as `\N`. Underscore dirs (`_commits`, `_staging`)
+    * are invisible to parquet readers, so the store stays
+    * `index=`-partitioned for pruning, retention and compaction.
+    * `onStep` is a fault-injection seam: it is called with "staged",
+    * "move <k>" after each move, and "moves-done". */
   def commitBatch(batch: DataFrame, path: String,
       isFailed: Option[Column] = None, failedPath: Option[String] = None,
       batchId: Option[Long] = None,
@@ -90,37 +98,51 @@ object IndexedParquetSink {
             .foreach(s => fs.delete(s.getPath, false)))
           val tagged = batch.withColumn(Dest,
             isFailed.fold(lit(0))(c => when(c, 1).otherwise(0)))
-          tagged.cache()
-          try {
-            tagged.filter(col(Dest) < roots.size)
-              .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-                col(Dest), col("index"))
-              .write.options(ForklessLocalFileSystem.options)
-              .mode("overwrite").partitionBy(Dest, "index")
-              .parquet(staging.toString)
-            onStep("staged")
-            glob(s"$staging/$Dest=*/index=*/part-*").sortBy(_.getPath.toString)
-              .zipWithIndex.foreach { case (s, k) =>
-                val idx = s.getPath.getParent
-                val root = roots(idx.getParent.getName.stripPrefix(s"$Dest=").toInt)
-                val dir = new Path(root, idx.getName)
-                fs.mkdirs(dir)
-                if (!fs.rename(s.getPath, new Path(dir, s"$tag-$k.parquet")))
-                  throw new IllegalStateException(s"commit move failed for ${s.getPath}")
-                onStep(s"move $k")
-              }
-            fs.delete(staging, true)
-            onStep("moves-done")
-            val counts = Seq(sum(lit(1) - col(Dest)).as("written")) ++
-              isFailed.map(_ => sum(col(Dest)).as("failed"))
-            val rows = tagged.groupBy("index", "app")
-              .agg(counts.head, counts.tail: _*).collect().toSeq
-            marker.foreach(writeMarker(fs, _, rows))
-            metricsDf(rows)
-          } finally tagged.unpersist()
+          // a fresh observation per attempt: one can be completed once
+          val obs = new Observation()
+          tagged.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+              col(Dest), col("index"))
+            .observe(obs, bulkCounts(col("index"), col("app"), col(Dest) === 1).as("bulk"))
+            .filter(col(Dest) < roots.size)
+            .write.options(ForklessLocalFileSystem.options)
+            .mode("overwrite").partitionBy(Dest, "index")
+            .parquet(staging.toString)
+          val rows = observedCounts(obs, tag).map { c =>
+            Row.fromSeq(Seq(c.getString(0), c.getString(1), c.getLong(2)) ++
+              isFailed.map(_ => c.getLong(3)))
+          }
+          onStep("staged")
+          glob(s"$staging/$Dest=*/index=*/part-*").sortBy(_.getPath.toString)
+            .zipWithIndex.foreach { case (s, k) =>
+              val idx = s.getPath.getParent
+              val root = roots(idx.getParent.getName.stripPrefix(s"$Dest=").toInt)
+              val dir = new Path(root, idx.getName)
+              fs.mkdirs(dir)
+              if (!fs.rename(s.getPath, new Path(dir, s"$tag-$k.parquet")))
+                throw new IllegalStateException(s"commit move failed for ${s.getPath}")
+              onStep(s"move $k")
+            }
+          fs.delete(staging, true)
+          onStep("moves-done")
+          marker.foreach(writeMarker(fs, _, rows))
+          metricsDf(rows)
       }
     }
   }
+
+  private val bulkCounts = udaf(new BulkCountAggregator, Encoders.product[BulkDoc])
+
+  /** How long a commit waits for its bulk metrics once its write has
+    * returned. Spark hands an observation's result to the driver through
+    * an asynchronous listener, so it may land a little after the write;
+    * a commit that waits longer throws, and the attempt is retried or
+    * the batch replayed like any other failed write. */
+  private val MetricsWaitMs = 60000L
+
+  private def observedCounts(obs: Observation, tag: String): Seq[Row] =
+    try Await.result(obs.future, MetricsWaitMs.millis).getSeq[Row](0)
+    catch { case _: TimeoutException => throw new TimeoutException(
+      s"bulk metrics of $tag not observed within $MetricsWaitMs ms") }
 
   /** A marker's first line names the format and its version. Markers
     * written before the header existed hold rows only and read as
@@ -142,7 +164,7 @@ object IndexedParquetSink {
       case headerless => headerless
     }
     rows.map { r =>
-      val f = r.map(unesc)
+      val f = r.map(v => if (v == NullField) null else unesc(v))
       Row.fromSeq(f.take(2) ++ f.drop(2).map(_.toLong))
     }
   }
@@ -152,6 +174,7 @@ object IndexedParquetSink {
     val tmp = new Path(m.getParent, s".tmp-${m.getName}")
     val out = fs.create(tmp, true)
     val lines = s"$MarkerHeader\t$MarkerVersion" +: rows.map(_.toSeq.map {
+      case null => NullField
       case s: String => esc(s)
       case v => String.valueOf(v)
     }.mkString("\t"))
@@ -160,6 +183,10 @@ object IndexedParquetSink {
     if (!fs.rename(tmp, m))
       throw new IllegalStateException(s"marker rename failed for $m")
   }
+
+  /** A null label. `esc` doubles every backslash, so no string escapes
+    * to this field. */
+  private val NullField = "\\N"
 
   private def esc(v: String): String = v.flatMap {
     case '\\' => "\\\\"

@@ -2,6 +2,14 @@ package graft.streaming
 
 import graft.operators.{SyncConfig, SyncPipeline}
 import graft.sinks.{ForklessLocalFileSystem, IndexedParquetSink}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopStreams
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -104,24 +112,67 @@ object StreamingSync {
         // prometheus-style counters are observability: at-least-once
         // under a post-marker-crash replay is acceptable (and matches
         // the reference's counter semantics). The metrics STORE is not:
-        // it feeds written==stored audits, so each batch OVERWRITES its
-        // own bid=<id> directory — a replay rewrites the same rows
-        // instead of appending duplicates (idempotent like the sink
-        // itself). batch_id stays a LongType DATA column so readers
-        // keep the schema they always had (`bid` is only the partition
-        // key the overwrite scopes to); a store from the old
-        // append-at-root layout must be drained before pointing the
-        // sync at it (mixed layouts fail partition discovery).
+        // it feeds written==stored audits, so each batch REPLACES its
+        // own bid=<id> file — a replay rewrites the same rows instead of
+        // appending duplicates (idempotent like the sink itself).
         SyncMetrics.recordBulk(metrics)
-        metrics.withColumn("batch_id",
-            org.apache.spark.sql.functions.lit(batchId))
-          .write.options(ForklessLocalFileSystem.options)
-          .mode("overwrite").parquet(s"$metricsPath/bid=$batchId")
-        ()
+        writeMetricsStore(s"$metricsPath/bid=$batchId", batchId, metrics)
       }
       .option("checkpointLocation", s"$sinkPath/_checkpoint")
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime(
        flushIntervalMs.getOrElse(cfg.flushIntervalMs)))).start()
+  }
+
+  /** One batch's bulk metrics plus a `batch_id` column, written from the
+    * driver as the one parquet file of `dir` (`<metricsPath>/bid=<id>`).
+    * The rows are already on the driver after the sink's commit, so no
+    * Spark job runs. `batch_id` stays a LongType DATA column, so readers
+    * keep the schema they always had; `bid` is only the partition key a
+    * replay replaces. The file is written under a hidden temp name, every
+    * earlier file of `dir` is deleted, and the temp file is renamed into
+    * place. A store from the old append-at-root layout must be drained
+    * before pointing the sync at it (mixed layouts fail partition
+    * discovery). */
+  private def writeMetricsStore(dir: String, batchId: Long,
+      metrics: DataFrame): Unit = {
+    val fields = metrics.schema.fields.toSeq :+ StructField("batch_id", LongType)
+    val schema = Types.buildMessage().addFields(fields.map { f =>
+      f.dataType match {
+        case StringType => Types.optional(PrimitiveTypeName.BINARY)
+          .as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case LongType => Types.optional(PrimitiveTypeName.INT64).named(f.name)
+        case t => throw new IllegalArgumentException(
+          s"bulk metrics column ${f.name} has type $t; the store takes strings and longs")
+      }
+    }: _*).named("spark_schema")
+    val rows = metrics.collect()
+    ForklessLocalFileSystem.withFileSystem(dir,
+        metrics.sparkSession.sparkContext.hadoopConfiguration) { fs =>
+      val tmp = new Path(dir, ".part-00000.parquet.tmp")
+      // a temp file left by a died attempt is overwritten
+      val out = new OutputFile {
+        def create(blockSize: Long) = HadoopStreams.wrap(fs.create(tmp, true))
+        def createOrOverwrite(blockSize: Long) = create(blockSize)
+        def supportsBlockSize = false
+        def defaultBlockSize = 0L
+      }
+      val w = ExampleParquetWriter.builder(out).withType(schema).withConf(fs.getConf)
+        .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      val groups = new SimpleGroupFactory(schema)
+      try rows.foreach { r =>
+        val g = groups.newGroup()
+        (r.toSeq :+ batchId).zip(fields).foreach {
+          case (v: String, f) => g.add(f.name, v)
+          case (v: Long, f) => g.add(f.name, v)
+          case _ => // null: an optional field left unset
+        }
+        w.write(g)
+      } finally w.close()
+      fs.listStatus(new Path(dir)).map(_.getPath)
+        .filter(_.getName != tmp.getName).foreach(fs.delete(_, true))
+      if (!fs.rename(tmp, new Path(dir, "part-00000.snappy.parquet")))
+        throw new IllegalStateException(s"metrics-store rename failed in $dir")
+    }
   }
 }

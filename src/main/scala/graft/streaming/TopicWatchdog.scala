@@ -45,7 +45,7 @@ final class TopicWatchdog(
     val now = topicSet()
     if (now == current && queryOpt.nonEmpty) false
     else {
-      queryOpt.foreach { q => q.stop(); q.awaitTermination() }
+      queryOpt.foreach(stopAndAwait)
       current = now
       generationCount += 1
       SyncMetrics.incBy("graft_consumer_recreated_total",
@@ -59,7 +59,23 @@ final class TopicWatchdog(
   def activeQuery: Option[StreamingQuery] = queryOpt
 
   def stop(): Unit = {
-    queryOpt.foreach { q => q.stop(); q.awaitTermination() }
+    queryOpt.foreach(stopAndAwait)
     queryOpt = None
   }
+
+  /** Stop a generation's query and wait for it to end, at most
+    * [[TopicWatchdog.StopWaitMs]]: a query still running then is an
+    * error, never a silent hang of the poll loop. A query that died
+    * rethrows its failure here. */
+  private def stopAndAwait(q: StreamingQuery): Unit = {
+    q.stop()
+    if (!q.awaitTermination(TopicWatchdog.StopWaitMs))
+      throw new IllegalStateException(s"query ${q.id} still running " +
+        s"${TopicWatchdog.StopWaitMs} ms after stop()")
+  }
+}
+
+object TopicWatchdog {
+  /** How long a stopped query may take to terminate. */
+  val StopWaitMs = 60000L
 }

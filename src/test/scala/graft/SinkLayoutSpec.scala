@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * per (destination, index) however many tasks produced the batch, no
   * staging leftovers, bulk metrics equal to a groupBy of the input, the
   * modes and checksums Hadoop's local filesystem gives, and a versioned
-  * commit marker. */
+  * commit marker. A commit is one pass: its metrics are counted inside
+  * its one write. */
 class SinkLayoutSpec extends SparkSpec {
 
   private def docs(n: Int) = {
@@ -157,5 +158,120 @@ class SinkLayoutSpec extends SparkSpec {
     val e = intercept[IllegalStateException](commit(3))
     assert(e.getMessage.contains("version 2"))
     assert(tree() == written ++ Set(marker(2), marker(3)).map(_.toString))
+  }
+
+  /** `groupBy(index, app)` of `input`: (index, app, written, failed),
+    * the sink's metrics computed the plain way. */
+  private def groupByMetrics(input: org.apache.spark.sql.DataFrame,
+      isFailed: org.apache.spark.sql.Column): Seq[Seq[Any]] =
+    input.groupBy("index", "app")
+      .agg(sum(when(isFailed, 0L).otherwise(1L)).as("written"),
+        sum(when(isFailed, 1L).otherwise(0L)).as("failed"))
+      .orderBy("index", "app").collect().toSeq.map(_.toSeq)
+  private def sorted(metrics: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    metrics.select("index", "app", "written", "failed")
+      .orderBy("index", "app").collect().toSeq.map(_.toSeq)
+
+  test("a commit with failed docs and a batch id runs at most 2 Spark jobs") {
+    // no shuffle of its own in the input, so every job is the commit's
+    val input = spark.range(0, 400, 1, 4).select(col("id").as("msg_id"),
+      when(col("id") % 7 === 3, lit("""{"poison": 1}""")).otherwise(lit("""{"k": 1}""")).as("data"),
+      concat(lit("logs-"), (col("id") % 3).cast("string")).as("index"),
+      concat(lit("app"), (col("id") % 2).cast("string")).as("app"))
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    val root = Files.createTempDirectory("graft-jobs").toString
+    spark.sparkContext.addSparkListener(listener)
+    val metrics = try {
+      val m = IndexedParquetSink.commitBatch(input, root, Some(poison),
+        Some(s"$root/_failed"), Some(1L))
+      // listener events arrive asynchronously: every job that started has
+      // ended once the commit returned
+      val deadline = System.currentTimeMillis() + 10000
+      while (ended.get < started.get && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      m
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(started.get >= 1 && started.get <= 2, s"${started.get} jobs")
+    assert(sorted(metrics) == groupByMetrics(input, poison))
+  }
+
+  test("failed docs without a failedPath are counted as failed, not written") {
+    val input = docs(300)
+    val root = Files.createTempDirectory("graft-nofailedpath")
+    val metrics = IndexedParquetSink.commitBatch(input, root.toString,
+      Some(poison), None, Some(2L))
+    assert(sorted(metrics) == groupByMetrics(input, poison))
+    assert(groupByMetrics(input, poison).map(_(3).asInstanceOf[Long]).sum > 0)
+    assert(!Files.exists(root.resolve("_failed")))
+    import spark.implicits._
+    assert(spark.read.parquet(root.toString).select("msg_id").as[Long]
+      .collect().sorted.toSeq ==
+      input.filter(!poison).select("msg_id").as[Long].collect().sorted.toSeq)
+  }
+
+  test("null labels and tab/newline/backslash in labels are counted and round-trip the marker") {
+    import spark.implicits._
+    val labels = Seq[String](null, "a\tb", "c\nd", "e\\f", "\\N", "plain")
+    val input = (0 until 240).map { i =>
+      val data = if (i % 5 == 0) s"""{"poison": $i}""" else s"""{"k": $i}"""
+      (i.toLong, data, labels(i % labels.size), labels((i / 2) % labels.size))
+    }.toDF("msg_id", "data", "index", "app").repartition(4)
+    val expected = groupByMetrics(input, poison)
+    assert(expected.exists(_(0) == null) && expected.exists(_(1) == null))
+    val root = Files.createTempDirectory("graft-labels").toString
+    def commit() = IndexedParquetSink.commitBatch(input, root, Some(poison),
+      Some(s"$root/_failed"), Some(4L))
+    assert(sorted(commit()) == expected)
+    // the second commit of the batch reads its metrics back from the marker
+    assert(sorted(commit()) == expected)
+    assert(spark.read.parquet(root).count() == input.filter(!poison).count())
+  }
+
+  test("an attempt killed after staging and retried counts each doc once") {
+    val input = docs(300)
+    val root = Files.createTempDirectory("graft-retry").toString
+    var attempts = 0
+    def kill(step: String): Unit =
+      if (attempts == 1 && step == "staged") throw new RuntimeException("killed")
+    def commit() = IndexedParquetSink.withRetries(2, backoffMs = 1) { () =>
+      attempts += 1
+      IndexedParquetSink.commitBatch(input, root, Some(poison),
+        Some(s"$root/_failed"), Some(6L), onStep = kill)
+    }
+    val expected = groupByMetrics(input, poison)
+    assert(sorted(commit()) == expected)
+    assert(attempts == 2)
+    assert(sorted(commit()) == expected) // from the marker
+    import spark.implicits._
+    assert(spark.read.parquet(root).select("msg_id").as[Long]
+      .collect().sorted.toSeq ==
+      input.filter(!poison).select("msg_id").as[Long].collect().sorted.toSeq)
+  }
+
+  test("a batch the filters empty commits with empty metrics and a marker") {
+    val emptied = Seq(docs(50).filter(col("msg_id") < 0),
+      docs(50).filter(col("data").contains("poison") && !col("data").contains("poison")))
+    emptied.zipWithIndex.foreach { case (input, i) =>
+      withClue(s"input $i: ") {
+        val root = Files.createTempDirectory("graft-empty")
+        val t0 = System.nanoTime()
+        val metrics = IndexedParquetSink.commitBatch(input, root.toString,
+          Some(poison), Some(s"$root/_failed"), Some(8L))
+        assert((System.nanoTime() - t0) / 1000000 < 30000)
+        assert(metrics.columns.toSeq == Seq("index", "app", "written", "failed"))
+        assert(metrics.collect().isEmpty)
+        assert(Files.readAllLines(root.resolve("_commits/8"), UTF_8).asScala ==
+          Seq("graft-commit-marker\t1"))
+        assert(sorted(IndexedParquetSink.commitBatch(input, root.toString,
+          Some(poison), Some(s"$root/_failed"), Some(8L))).isEmpty)
+      }
+    }
   }
 }

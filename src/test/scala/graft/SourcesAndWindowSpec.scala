@@ -95,6 +95,44 @@ class SourcesAndWindowSpec extends SparkSpec {
       .toSet == Set("web", "audit"))
   }
 
+  test("TopicWatchdog waits a bounded time for a stopped query and fails loudly") {
+    // a query that never terminates: stop() returns, it keeps running
+    final class HungQuery extends org.apache.spark.sql.streaming.StreamingQuery {
+      val id = java.util.UUID.randomUUID()
+      var waits = Seq.empty[Long]
+      def name = "hung"
+      def runId = id
+      def sparkSession = spark
+      def isActive = true
+      def exception = None
+      def status = null
+      def recentProgress = Array.empty
+      def lastProgress = null
+      def awaitTermination(): Unit = throw new AssertionError("unbounded wait")
+      def awaitTermination(timeoutMs: Long): Boolean = { waits :+= timeoutMs; false }
+      def processAllAvailable(): Unit = ()
+      def stop(): Unit = ()
+      def explain(): Unit = ()
+      def explain(extended: Boolean): Unit = ()
+    }
+    val tmp = Files.createTempDirectory("graft-watchdog-hung").toString
+    Files.createDirectories(Paths.get(s"$tmp/web"))
+    var started = Seq.empty[HungQuery]
+    val dog = new graft.streaming.TopicWatchdog(spark, tmp, "^(web|audit)$",
+      _ => { started :+= new HungQuery; started.last })
+    assert(dog.tick())
+    Files.createDirectories(Paths.get(s"$tmp/audit"))
+    // the membership change stops the hung generation: tick() throws
+    // instead of waiting forever, and starts no new generation
+    val e = intercept[IllegalStateException](dog.tick())
+    assert(e.getMessage.contains("still running"))
+    assert(started.size == 1)
+    assert(started.head.waits == Seq(graft.streaming.TopicWatchdog.StopWaitMs))
+    // stop() bounds its wait the same way
+    intercept[IllegalStateException](dog.stop())
+    assert(started.head.waits.size == 2)
+  }
+
   test("connector registry resolves by config name; unknown names fail with roster") {
     import graft.sources.Connectors
     assert(Connectors.source("parquet").name === "parquet")

@@ -5,6 +5,7 @@ import graft.streaming.StreamingSync
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end streaming sync: file-source message stream → transforms →
   * per-batch admission → indexed parquet sink with bulk metrics. The
@@ -405,6 +406,42 @@ class StreamingSyncSpec extends SparkSpec {
       availableNow = true).awaitTermination(120000)
     val n2 = spark.read.parquet(sinkDir).count()
     assert(n1 == n2)
+  }
+
+  test("metrics store: the schema readers expect, one data file per bid, replaced on replay") {
+    import org.apache.spark.sql.types._
+    val tmp = Files.createTempDirectory("graft-metrics-store").toString
+    Tables.events(spark, sf())
+      .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
+        timestamp_micros(expr("ts div 1000")).as("publish_time"),
+        col("props").as("data"))
+      .limit(200).write.parquet(s"$tmp/src")
+    val poison = "\"k\": 5[0-9]\\}"
+    def run(): Unit = StreamingSync.start(spark, cfg, s"$tmp/src", s"$tmp/sink",
+      s"$tmp/metrics", availableNow = true, failedDocPattern = Some(poison))
+      .awaitTermination(120000)
+    def dataFiles(): Seq[String] = Files.list(java.nio.file.Paths.get(s"$tmp/metrics/bid=0"))
+      .iterator.asScala.map(_.getFileName.toString)
+      .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSeq
+    def totals() = spark.read.parquet(s"$tmp/metrics")
+      .agg(sum("written"), sum("failed")).head
+    run()
+    assert(spark.read.parquet(s"$tmp/metrics").schema == StructType(Seq(
+      StructField("index", StringType), StructField("app", StringType),
+      StructField("written", LongType), StructField("failed", LongType),
+      StructField("batch_id", LongType), StructField("bid", IntegerType))))
+    assert(dataFiles().size == 1, dataFiles())
+    val first = totals()
+    assert(first.getLong(0) == spark.read.parquet(s"$tmp/sink").count())
+    // drop the checkpoint's commit of batch 0: the restart replays it,
+    // the sink returns the marker's metrics, and bid=0 is rewritten
+    Files.list(java.nio.file.Paths.get(s"$tmp/sink/_checkpoint/commits")).iterator.asScala
+      .filter(f => Set("0", ".0.crc")(f.getFileName.toString)).foreach(Files.delete)
+    run()
+    assert(dataFiles().size == 1, dataFiles())
+    assert(totals() == first)
+    assert(spark.read.parquet(s"$tmp/metrics").select("batch_id").distinct()
+      .collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
 
   test("writeChunkedFiles: one job emits one file per batch, empty batches included") {
