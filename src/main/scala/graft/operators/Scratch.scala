@@ -20,30 +20,35 @@ import java.nio.file.{Files, Path, Paths}
   * SPILL landing there defeats spill's memory-relief purpose, and a
   * larger-SF run could ENOSPC mid-job. `/dev/shm` is auto-chosen only
   * when its usable space is at least `SPARK_GRAFT_SCRATCH_MIN_FREE_GB`
-  * (default 32 GiB — an order of magnitude above the bounded sf0.1
-  * footprint, conservative for anything bigger); below that the choice
-  * falls back to `java.io.tmpdir`, and the decision is logged once.
+  * (default: the smaller of 32 GiB — an order of magnitude above the
+  * bounded sf0.1 footprint — and a quarter of the tmpfs's total size,
+  * so a small machine's tmpfs qualifies while three quarters of it stay
+  * free); below that the choice falls back to `java.io.tmpdir`, and the
+  * decision is logged once.
   * An explicit `SPARK_GRAFT_SCRATCH` always wins — the operator knows
   * their media.
   */
 object Scratch {
-  private val defaultMinFreeGb = 32L
+  private val maxMinFreeBytes = 32L << 30
 
   /** The placement decision, separated from the environment for the
-    * spec: explicit env beats guarded tmpfs beats tmpdir. */
+    * spec: explicit env beats guarded tmpfs beats tmpdir. A tmpfs of
+    * unknown total size gets the 32 GiB floor. */
   private[operators] def chooseBase(env: Map[String, String],
       shmDir: Option[Path], shmUsableBytes: => Long,
-      tmpDir: Path): (Path, String) = {
+      tmpDir: Path, shmTotalBytes: => Long = Long.MaxValue): (Path, String) = {
     val fromEnv = env.get("SPARK_GRAFT_SCRATCH").map(Paths.get(_))
-    val minFree = env.get("SPARK_GRAFT_SCRATCH_MIN_FREE_GB")
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-      .getOrElse(defaultMinFreeGb) * (1L << 30)
+    def minFree = env.get("SPARK_GRAFT_SCRATCH_MIN_FREE_GB")
+      .flatMap(s => scala.util.Try(s.trim.toLong << 30).toOption)
+      .getOrElse(math.min(maxMinFreeBytes, shmTotalBytes / 4))
     fromEnv match {
       case Some(p) => (p, "SPARK_GRAFT_SCRATCH")
       case None => shmDir match {
         case Some(shm) if shmUsableBytes >= minFree => (shm, "tmpfs")
         case Some(_) =>
-          (tmpDir, s"java.io.tmpdir (tmpfs below ${minFree >> 30} GiB free)")
+          val gib = (BigDecimal(minFree) / (1L << 30))
+            .setScale(2, BigDecimal.RoundingMode.HALF_UP).bigDecimal.stripTrailingZeros
+          (tmpDir, s"java.io.tmpdir (tmpfs below ${gib.toPlainString} GiB free)")
         case None => (tmpDir, "java.io.tmpdir")
       }
     }
@@ -55,7 +60,8 @@ object Scratch {
     val (p, why) = chooseBase(sys.env,
       if (shmOk) Some(shm) else None,
       shm.toFile.getUsableSpace,
-      Paths.get(System.getProperty("java.io.tmpdir")))
+      Paths.get(System.getProperty("java.io.tmpdir")),
+      shm.toFile.getTotalSpace)
     System.err.println(s"[graft.Scratch] scratch base: $p ($why)")
     p
   }

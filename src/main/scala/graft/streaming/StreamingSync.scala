@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{SyncConfig, SyncPipeline}
 import graft.sinks.{ForklessLocalFileSystem, IndexedParquetSink}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -10,6 +10,8 @@ import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.OutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -63,9 +65,56 @@ object StreamingSync {
       .transform(SyncPipeline.namespaceFilter(cfg))
       .transform(SyncPipeline.enrich(cfg))
 
+  /** The session a graft streaming query runs in, checkpointed under
+    * `checkpointRoot`: a clone of `spark`, so it keeps the caller's
+    * runtime confs, temp views and functions. A query lives in its own
+    * session's `streams`, so the clone also registers the query listeners
+    * `spark.streams` holds now (those of a class the clone already has,
+    * such as the ones Spark registers from its conf, are left out). It
+    * adds settings the sync owns, which the caller's session never sees:
+    *  - A file source hands each micro-batch's files to Spark as an
+    *    explicit list. Above `parallelPartitionDiscovery.threshold`
+    *    (default 32) Spark checks that list with a Spark job of one task
+    *    per file; with the threshold at `Int.MaxValue` the driver does it.
+    *  - `stopTimeout` bounds `StreamingQuery.stop()` (Spark's default
+    *    waits forever) by the same constant as the watchdog's wait.
+    *  - On a `file:` root the checkpoint and state logs go through
+    *    `FileSystemBasedCheckpointFileManager` over
+    *    [[ForklessLocalFileSystem]], instead of Spark's `FileContext`
+    *    manager, which forks `chmod` and `readlink` for each log file.
+    *    Both managers write a temp file and rename it into place. On
+    *    `file:` the rename is `File.renameTo`, i.e. rename(2), which is
+    *    atomic and replaces its target, so both check for the target
+    *    first: the `FileSystem` manager with `fs.exists`, `FileContext`
+    *    through Hadoop's `AbstractFileSystem.renameInternal(src, dst,
+    *    overwrite)`, which throws `FileAlreadyExistsException` and then
+    *    calls the same rename. The switch keeps that guarantee and adds
+    *    no race the default has not. Other schemes keep Spark's default
+    *    manager, whose `FileContext` rename is atomic on HDFS. */
+  def session(spark: SparkSession, checkpointRoot: String): SparkSession = {
+    val ss = DatasetBridge.cloneSession(spark)
+    val listeners = spark.streams.listListeners()
+    if (listeners.nonEmpty) { // else leave the clone's `streams` uncreated
+      val own = ss.streams.listListeners().map(_.getClass).toSet
+      listeners.filterNot(l => own(l.getClass)).foreach(ss.streams.addListener)
+    }
+    val scheme = Option(new Path(checkpointRoot).toUri.getScheme).getOrElse(
+      FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    val local = if (scheme != "file") Map.empty[String, String]
+      else ForklessLocalFileSystem.options + ("spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+    (local ++ Map(
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString,
+      "spark.sql.streaming.stopTimeout" -> TopicWatchdog.StopWaitMs.toString))
+      .foreach { case (k, v) => ss.conf.set(k, v) }
+    ss
+  }
+
   /** Start the full sync: source → transforms → per-batch admission →
     * indexed sink. `availableNow` drains what's there and stops (tests);
-    * otherwise runs on a processing-time trigger = flush_interval.
+    * otherwise runs on a processing-time trigger = flush_interval. The
+    * query runs in [[session]] over `<sinkPath>/_checkpoint`, so
+    * `q.sparkSession` is that clone, not `spark`.
     *
     * `failedDocPattern` models the per-item bulk failures of the
     * reference's ES response handling (es.rs:133-191): matching docs are
@@ -92,7 +141,8 @@ object StreamingSync {
     // connection-identity knobs travel config → seam verbatim; the
     // file stand-ins ignore the client fields, a Pulsar binding uses
     // them
-    val out = transform(cfg)(source.readStreamWith(spark,
+    val checkpoint = s"$sinkPath/_checkpoint"
+    val out = transform(cfg)(source.readStreamWith(session(spark, checkpoint),
       graft.sources.Connectors.subscriptionFor(cfg, sourceDir, batchFiles)))
     val writer = out.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -118,7 +168,7 @@ object StreamingSync {
         SyncMetrics.recordBulk(metrics)
         writeMetricsStore(s"$metricsPath/bid=$batchId", batchId, metrics)
       }
-      .option("checkpointLocation", s"$sinkPath/_checkpoint")
+      .option("checkpointLocation", checkpoint)
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
      else writer.trigger(Trigger.ProcessingTime(
        flushIntervalMs.getOrElse(cfg.flushIntervalMs)))).start()

@@ -76,6 +76,7 @@ final class TopicWatchdog(
 }
 
 object TopicWatchdog {
-  /** How long a stopped query may take to terminate. */
+  /** How long a stopped query may take to terminate; also the
+    * `spark.sql.streaming.stopTimeout` of [[StreamingSync.session]]. */
   val StopWaitMs = 60000L
 }

@@ -137,6 +137,7 @@ object ScaleProbe {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val baseDir = "/root/testdata/sf0.1"
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", baseDir) // as Bench and CoreProbe
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .appName("graft-scale-probe")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -148,7 +149,7 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
 
     val scaledDir = Files.createTempDirectory("graft-scale").toString
-    replicateCorpus(spark, baseDir, scaledDir, replicas)
+    replicateCorpus(spark, sfDir, scaledDir, replicas)
 
     def time(name: String, dir: String): Double = {
       val fn = graft.SparkEntry.queries(name)
@@ -167,7 +168,7 @@ object ScaleProbe {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val selected = onlyProbes.fold(probes)(s => probes.filter(s))
     val rows = selected.map { q =>
-      val b = time(q, baseDir)
+      val b = time(q, sfDir)
       val s = time(q, scaledDir)
       println(f"[scale] $q%-20s base=$b%.2fs scaled=$s%.2fs slope=${s / b}%.2f (data x$replicas)")
       s""""$q":{"base_sec":${fmt(b)},"scaled_sec":${fmt(s)},"slope":${fmt(s / b)}}"""

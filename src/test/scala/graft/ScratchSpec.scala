@@ -36,6 +36,22 @@ class ScratchSpec extends AnyFunSuite {
     assert(hi == tmp)
   }
 
+  test("a 15 GiB tmpfs has a floor of a quarter of its size") {
+    val (p, why) = Scratch.chooseBase(Map.empty, Some(shm), 12L * gib, tmp, 15L * gib)
+    assert(p == shm && why == "tmpfs")
+    val (lo, loWhy) = Scratch.chooseBase(Map.empty, Some(shm), 2L * gib, tmp, 15L * gib)
+    assert(lo == tmp && loWhy.contains("below 3.75 GiB"), loWhy)
+    // the env floor still wins over the proportional one
+    val (hi, _) = Scratch.chooseBase(Map("SPARK_GRAFT_SCRATCH_MIN_FREE_GB" -> "13"),
+      Some(shm), 12L * gib, tmp, 15L * gib)
+    assert(hi == tmp)
+  }
+
+  test("a tmpfs of 128 GiB or more keeps the 32 GiB floor") {
+    val (p, why) = Scratch.chooseBase(Map.empty, Some(shm), 31L * gib, tmp, 512L * gib)
+    assert(p == tmp && why.contains("below 32 GiB"), why)
+  }
+
   test("no writable tmpfs: java.io.tmpdir") {
     val (p, _) = Scratch.chooseBase(Map.empty, None, Long.MaxValue, tmp)
     assert(p == tmp)

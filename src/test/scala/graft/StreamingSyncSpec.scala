@@ -444,6 +444,90 @@ class StreamingSyncSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
 
+  test("a 3-batch sync forks no chmod or readlink for its sink or checkpoint") {
+    import org.apache.hadoop.fs.{LocalFileSystem, Path}
+    val root = Files.createTempDirectory("graft-sync-forks")
+    val probe = Files.createTempDirectory("graft-probe")
+    val src = Files.createTempDirectory("graft-sync-src").resolve("src").toString
+    Tables.events(spark, sf())
+      .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
+        timestamp_micros(expr("ts div 1000")).as("publish_time"),
+        col("props").as("data"))
+      .repartition(3).write.parquet(src) // 3 files → 3 batches
+    // Hadoop's default local filesystem, which forks without libhadoop
+    val plain = new LocalFileSystem
+    plain.initialize(probe.toUri, spark.sparkContext.hadoopConfiguration)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val jfr = Files.createTempFile("graft-forks", ".jfr")
+    rec.setDestination(jfr)
+    rec.start()
+    try {
+      plain.create(new Path(s"$probe/d/f")).close()
+      assert(StreamingSync.start(spark, cfg, src, s"$root/sink", s"$root/metrics",
+        availableNow = true, batchFiles = Some(1)).awaitTermination(120000))
+    } finally rec.stop()
+    val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .map(_.getString("command"))
+      .filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+    rec.close()
+    plain.close()
+    Seq(0, 1, 2).foreach(b => assert(Files.exists(root.resolve(s"sink/_commits/$b"))))
+    assert(Files.exists(root.resolve("sink/_checkpoint/commits/2")))
+    assert(!forks.exists(_.contains(root.toString)), forks)
+    // the recorder sees the forks Hadoop makes without libhadoop
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+      assert(forks.exists(_.contains(probe.toString)), forks)
+  }
+
+  test("the sync runs in a clone of the caller's session with the sync's settings") {
+    import graft.sinks.ForklessLocalFileSystem
+    import graft.streaming.{StreamedBatch, TopicWatchdog}
+    val settings = Map(
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString,
+      "spark.sql.streaming.checkpointFileManagerClass" -> ("org.apache.spark.sql.execution" +
+        ".streaming.checkpointing.FileSystemBasedCheckpointFileManager"),
+      "fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
+      "spark.sql.streaming.stopTimeout" -> TopicWatchdog.StopWaitMs.toString)
+    val tmp = Files.createTempDirectory("graft-sync-session").toString
+    Tables.events(spark, sf())
+      .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
+        timestamp_micros(expr("ts div 1000")).as("publish_time"),
+        col("props").as("data"))
+      .limit(50).write.parquet(s"$tmp/src")
+    spark.conf.set("graft.test.caller-conf", "kept")
+    try {
+      val q = StreamingSync.start(spark, cfg, s"$tmp/src", s"$tmp/sink",
+        s"$tmp/metrics", availableNow = true)
+      assert(q.awaitTermination(120000))
+      assert(q.sparkSession ne spark)
+      settings.foreach { case (k, v) =>
+        assert(q.sparkSession.conf.get(k) == v, k)
+        assert(!spark.conf.getAll.contains(k), k)
+      }
+      // a conf the caller set at run time reaches the sync's session and
+      // the replay twins' session
+      assert(q.sparkSession.conf.get("graft.test.caller-conf") == "kept")
+      val twin = StreamedBatch.streamSession(spark, tmp)
+      assert(twin.conf.get("graft.test.caller-conf") == "kept")
+      assert(twin.conf.get("spark.sql.streaming.stopTimeout") ==
+        TopicWatchdog.StopWaitMs.toString)
+    } finally spark.conf.unset("graft.test.caller-conf")
+  }
+
+  test("a checkpoint root that is not file: keeps Spark's checkpoint manager and filesystem") {
+    val keys = Seq("spark.sql.streaming.checkpointFileManagerClass", "fs.file.impl",
+      "fs.file.impl.disable.cache")
+    val remote = StreamingSync.session(spark, "hdfs://namenode:8020/sync/_checkpoint")
+    keys.foreach(k => assert(!remote.conf.getAll.contains(k), k))
+    assert(remote.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") ==
+      Int.MaxValue.toString)
+    Seq("file:/sync/_checkpoint", "/sync/_checkpoint").foreach { root =>
+      val local = StreamingSync.session(spark, root)
+      keys.foreach(k => assert(local.conf.getAll.contains(k), s"$root: $k"))
+    }
+  }
+
   test("writeChunkedFiles: one job emits one file per batch, empty batches included") {
     // r13: the chunk writer moved from nBatches sequential filter+write
     // jobs to ONE partitioned write. The micro-batch sequence is
