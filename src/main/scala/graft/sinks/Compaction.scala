@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Small-file compaction for the indexed store (the OPTIMIZE pass every
   * streaming sink needs at scale: each trigger appends a file per task per
@@ -19,38 +20,29 @@ import org.apache.spark.sql.functions._
   * renames — atomic on HDFS-like filesystems; on object stores run it
   * inside the table-format transaction (Delta/Iceberg) instead.
   *
-  * Driver cost is one file listing, O(#files) — the same listing any
-  * compaction planner pays; the data move is one shuffle of the store. */
+  * Driver cost is the store's manifest read (a listing for a store
+  * without one) and one listing of the new layout, O(#files); the data
+  * move is one shuffle of the store. */
 object Compaction {
 
   final case class Report(partitions: Int, filesBefore: Long,
       filesAfter: Long, bytes: Long)
 
-  /** File counts/bytes per `index=` partition directory. */
-  private def partitionSizes(fs: FileSystem, root: Path,
-      partitionCol: String): Map[String, (Long, Long)] =
-    fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionCol="))
-      .map { d =>
-        val files = fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        (d.getPath.getName, (files.length.toLong, files.map(_.getLen).sum))
-      }.toMap
-
   /** Move the old layout's NON-DATA entries (streaming _checkpoint,
-    * _failed payload log, _spark_metadata…) into the new root. In
-    * `strict` mode (the fresh post-swap carry) an already-existing
-    * destination means a CONCURRENT writer recreated state mid-swap —
-    * neither copy can be auto-chosen, so fail loudly; in lenient mode
-    * (crash recovery — entries may have been carried before the crash)
-    * an existing destination is simply already done. Deletes `old`
-    * only once every entry is accounted for. */
+    * _failed payload log, _commits, _spark_metadata…) into the new root.
+    * The old `_snapshot` stays behind: the new layout's snapshot
+    * supersedes it. In `strict` mode (the fresh post-swap carry) an
+    * already-existing destination means a CONCURRENT writer recreated
+    * state mid-swap — neither copy can be auto-chosen, so fail loudly;
+    * in lenient mode (crash recovery — entries may have been carried
+    * before the crash) an existing destination is simply already done.
+    * Deletes `old` only once every entry is accounted for. */
   private def carryForward(fs: FileSystem, root: Path, old: Path,
-      partitionCol: String, strict: Boolean): Unit = {
+      strict: Boolean): Unit = {
     fs.listStatus(old)
       .filter { st =>
         val n = st.getPath.getName
-        !n.startsWith(s"$partitionCol=") && n != "_SUCCESS"
+        !n.startsWith("index=") && n != "_SUCCESS" && n != "_snapshot"
       }
       .foreach { st =>
         val n = st.getPath.getName
@@ -73,9 +65,14 @@ object Compaction {
     ()
   }
 
+  /** Rewrite the store's committed snapshot (see
+    * [[IndexedParquetSink.readIndexed]]) into files of about
+    * `targetBytes`, and commit the new layout with its own
+    * `_snapshot/<n>`, which folds in every marker read. A store with no
+    * manifest is read by listing, as a plain parquet dataset; its first
+    * compaction gives it a snapshot. */
   def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L << 20,
-      partitionCol: String = "index"): Report = {
+      targetBytes: Long = 128L << 20): Report = {
     ForklessLocalFileSystem.withFileSystem(path,
         spark.sparkContext.hadoopConfiguration) { fs =>
       val root = new Path(path)
@@ -91,49 +88,56 @@ object Compaction {
           throw new IllegalStateException(
             s"could not restore crashed-compaction store from $old0")
       } else if (fs.exists(old0) && fs.exists(root))
-        carryForward(fs, root, old0, partitionCol, strict = false)
-      val before = partitionSizes(fs, root, partitionCol)
-      val filesBefore = before.values.map(_._1).sum
-      val totalBytes = before.values.map(_._2).sum
+        carryForward(fs, root, old0, strict = false)
+      val committed = StoreManifest.live(fs, root)
+      // a listed store's markers are listed before its files: every
+      // marker folded in below then has its files in the rewrite
+      val folded = committed.fold(StoreManifest.markers(fs, root))(_.markers)
+      val before = committed.fold(StoreManifest.listed(fs, root))(_.files)
+      val totalBytes = before.map(_.bytes).sum
 
       // bucket plan: index value -> output file count (small, broadcast)
       import spark.implicits._
-      val plan = before.toSeq.map { case (dir, (_, bytes)) =>
-        val value = dir.stripPrefix(s"$partitionCol=")
-        (value, math.max(1L, (bytes + targetBytes - 1) / targetBytes))
-      }.toDF(partitionCol, "__nf")
+      val plan = before.groupBy(_.index).toSeq.map { case (value, files) =>
+        (value, math.max(1L, (files.map(_.bytes).sum + targetBytes - 1) / targetBytes))
+      }.toDF("index", "__nf")
 
-      val df = spark.read.parquet(path)
+      val df = committed.fold(spark.read.parquet(path))(
+        StoreManifest.relation(spark, root, _))
       // parquet footer count — metadata-only, no data scan
       val totalRows = math.max(1L, df.count())
       val bytesPerRow = math.max(1L, totalBytes / totalRows)
       val maxRecords = math.max(1L, targetBytes / bytesPerRow)
       val salted = df
-        .join(broadcast(plan), partitionCol)
+        .join(broadcast(plan), df("index") <=> plan("index"))
+        .drop(plan("index"))
         .withColumn("__salt",
-          pmod(xxhash64(struct(df.columns.map(col): _*)), col("__nf")))
+          pmod(xxhash64(struct(df.columns.map(df(_)): _*)), col("__nf")))
       val tmp = new Path(s"$path._compacting")
       fs.delete(tmp, true)
       salted
-        .repartition(col(partitionCol), col("__salt"))
+        .repartition(col("index"), col("__salt"))
         .drop("__nf", "__salt")
         .write.options(ForklessLocalFileSystem.options)
         .option("maxRecordsPerFile", maxRecords)
-        .partitionBy(partitionCol).parquet(tmp.toString)
+        .partitionBy("index").parquet(tmp.toString)
+      val after = StoreManifest.listed(fs, tmp)
+      StoreManifest.writeSnapshot(fs, tmp,
+        StoreManifest.latestSnapshot(fs, root).fold(0L)(_._1 + 1), after,
+        StructType(df.schema.filterNot(_.name == "index")), folded)
 
       val old = old0
       if (!fs.rename(root, old) || !fs.rename(tmp, root))
         throw new IllegalStateException(s"compaction swap failed for $path")
       // carry forward the store's NON-DATA entries: the rewrite only
-      // produces index= partitions (+ its own _SUCCESS), but a LIVE sync
-      // keeps operational state beside them (the streaming _checkpoint,
-      // the _failed payload log) — dropping those with the old layout
-      // would reset the consumer and erase the failure audit
-      // (CompactionSpec's fault tests pin this)
-      carryForward(fs, root, old, partitionCol, strict = true)
+      // produces index= partitions, its _SUCCESS and its _snapshot, but a
+      // LIVE sync keeps operational state beside them (the streaming
+      // _checkpoint, the _failed payload log, the _commits markers) —
+      // dropping those with the old layout would reset the consumer and
+      // erase the failure audit (CompactionSpec's fault tests pin this)
+      carryForward(fs, root, old, strict = true)
 
-      val after = partitionSizes(fs, root, partitionCol)
-      Report(after.size, filesBefore, after.values.map(_._1).sum, totalBytes)
+      Report(after.map(_.dir).distinct.size, before.size, after.size, totalBytes)
     }
   }
 }

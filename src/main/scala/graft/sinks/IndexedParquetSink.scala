@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoders, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -21,7 +21,20 @@ import scala.util.{Failure, Success, Try}
   * micro-batch lands as one file per (destination, index): one
   * hash-partitioned write job stages the store's and the failed-docs
   * log's files together, and downstream consumers prune by index
-  * directory exactly like an ES index query. */
+  * directory exactly like an ES index query.
+  *
+  * A batch becomes searchable when its commit marker is in place, as a
+  * flush does when Elasticsearch has taken its bulk request
+  * (es.rs:133-191). A marker (version 2) lists the data files its commit
+  * moved into the store root and the data schema; [[Compaction]] and
+  * [[Retention]] write `_snapshot/<n>`, the whole live file list plus
+  * the names of the markers it folds in. [[readIndexed]] serves the
+  * newest snapshot plus the markers it has not folded in — no listing
+  * of the index directories, no schema-inference job, and never a file
+  * no marker names. Stores without a version-2 manifest (earlier
+  * builds' headerless and version-1 markers, plain Spark writes) are
+  * read by listing until their first compaction writes a snapshot.
+  * [[StoreManifest]] holds the formats. */
 object IndexedParquetSink {
 
   /** Partition column of the staged write: 0 = the store, 1 = the
@@ -43,8 +56,9 @@ object IndexedParquetSink {
     * `spark.sql.shuffle.partitions` (an explicit count, so AQE cannot
     * coalesce the write into one task), run ONE partitioned write into
     * `<path>/_staging/<tag>`, move each staged file to
-    * `<root>/index=<i>/<tag>-<k>.parquet`, and — with a `batchId` —
-    * rename the marker `_commits/<batchId>` into place last. The
+    * `<root>/index=<i>/<tag>-<k>.parquet`, and rename the marker
+    * `_commits/<batchId>` (`_commits/<tag>` without one) into place
+    * last. The
     * metrics are counted inside that write: an observed
     * [[BulkCountAggregator]] sits above the shuffle, before the filter
     * that drops failed docs without a `failedPath`, so it runs in the
@@ -62,8 +76,9 @@ object IndexedParquetSink {
     *
     * A crash at ANY point replays into case 2 and converges: the store
     * after restart equals the batch relation exactly. Without a
-    * `batchId` the tag is a fresh unique prefix and no marker is written
-    * (a plain append, not idempotent under retry).
+    * `batchId` the tag is a fresh unique prefix `u<uuid>`: a plain
+    * append, not idempotent under retry, whose marker only publishes
+    * its files.
     *
     * Marker payloads are escaped TSV, so tab/newline/backslash in
     * payload-derived index/app values cannot break framing, and a null
@@ -86,9 +101,11 @@ object IndexedParquetSink {
         spark.createDataFrame(rows.asJava, schema)
       def glob(p: String): Seq[org.apache.hadoop.fs.FileStatus] =
         Option(fs.globStatus(new Path(p))).toSeq.flatten
-      val marker = batchId.map(id => new Path(s"$path/_commits/$id"))
-      marker.filter(fs.exists) match {
-        case Some(m) => metricsDf(readMarker(fs, m))
+      val replayed = batchId.map(id => new Path(s"$path/_commits/$id")).filter(fs.exists)
+      replayed match {
+        case Some(m) => metricsDf(StoreManifest.readMarker(fs, m).rows.map { f =>
+          Row.fromSeq(f.take(2) ++ f.drop(2).map(_.toLong))
+        })
         case None =>
           val tag = batchId.fold(s"u${java.util.UUID.randomUUID()}")(id => s"b$id")
           val roots = path +: isFailed.flatMap(_ => failedPath).toSeq
@@ -112,19 +129,24 @@ object IndexedParquetSink {
               isFailed.map(_ => c.getLong(3)))
           }
           onStep("staged")
-          glob(s"$staging/$Dest=*/index=*/part-*").sortBy(_.getPath.toString)
-            .zipWithIndex.foreach { case (s, k) =>
+          val stored = glob(s"$staging/$Dest=*/index=*/part-*").sortBy(_.getPath.toString)
+            .zipWithIndex.flatMap { case (s, k) =>
               val idx = s.getPath.getParent
-              val root = roots(idx.getParent.getName.stripPrefix(s"$Dest=").toInt)
-              val dir = new Path(root, idx.getName)
+              val dest = idx.getParent.getName.stripPrefix(s"$Dest=").toInt
+              val dir = new Path(roots(dest), idx.getName)
+              val name = s"$tag-$k.parquet"
               fs.mkdirs(dir)
-              if (!fs.rename(s.getPath, new Path(dir, s"$tag-$k.parquet")))
+              if (!fs.rename(s.getPath, new Path(dir, name)))
                 throw new IllegalStateException(s"commit move failed for ${s.getPath}")
               onStep(s"move $k")
+              if (dest == 0) Some(StoreManifest.DataFile.of(s).copy(name = name)) else None
             }
           fs.delete(staging, true)
           onStep("moves-done")
-          marker.foreach(writeMarker(fs, _, rows))
+          StoreManifest.writeMarker(fs,
+            new Path(s"$path/_commits/${batchId.fold(tag)(_.toString)}"),
+            rows.map(_.toSeq.map(v => if (v == null) null else String.valueOf(v))),
+            stored, StructType(batch.schema.filterNot(_.name == "index")))
           metricsDf(rows)
       }
     }
@@ -143,73 +165,6 @@ object IndexedParquetSink {
     try Await.result(obs.future, MetricsWaitMs.millis).getSeq[Row](0)
     catch { case _: TimeoutException => throw new TimeoutException(
       s"bulk metrics of $tag not observed within $MetricsWaitMs ms") }
-
-  /** A marker's first line names the format and its version. Markers
-    * written before the header existed hold rows only and read as
-    * version 1. The header cannot be taken for a row: it has two fields,
-    * and a row has at least three (index, app, written). */
-  private val MarkerHeader = "graft-commit-marker"
-  private val MarkerVersion = "1"
-
-  private def readMarker(fs: FileSystem, m: Path): Seq[Row] = {
-    val in = fs.open(m)
-    val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = content.linesIterator.filter(_.nonEmpty)
-      .map(_.split("\t", -1).toSeq).toSeq
-    val rows = lines match {
-      case Seq(MarkerHeader, MarkerVersion) +: rest => rest
-      case Seq(MarkerHeader, v) +: _ => throw new IllegalStateException(
-        s"commit marker $m has version $v; this build reads $MarkerVersion")
-      case headerless => headerless
-    }
-    rows.map { r =>
-      val f = r.map(v => if (v == NullField) null else unesc(v))
-      Row.fromSeq(f.take(2) ++ f.drop(2).map(_.toLong))
-    }
-  }
-
-  /** Marker last, atomically: temp file + rename — the commit point. */
-  private def writeMarker(fs: FileSystem, m: Path, rows: Seq[Row]): Unit = {
-    val tmp = new Path(m.getParent, s".tmp-${m.getName}")
-    val out = fs.create(tmp, true)
-    val lines = s"$MarkerHeader\t$MarkerVersion" +: rows.map(_.toSeq.map {
-      case null => NullField
-      case s: String => esc(s)
-      case v => String.valueOf(v)
-    }.mkString("\t"))
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, m))
-      throw new IllegalStateException(s"marker rename failed for $m")
-  }
-
-  /** A null label. `esc` doubles every backslash, so no string escapes
-    * to this field. */
-  private val NullField = "\\N"
-
-  private def esc(v: String): String = v.flatMap {
-    case '\\' => "\\\\"
-    case '\t' => "\\t"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case c => c.toString
-  }
-
-  private def unesc(v: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < v.length) {
-      if (v(i) == '\\' && i + 1 < v.length) {
-        b += (v(i + 1) match {
-          case 't' => '\t'; case 'n' => '\n'; case 'r' => '\r'
-          case c => c
-        })
-        i += 2
-      } else { b += v(i); i += 1 }
-    }
-    b.result()
-  }
 
   /** Transient-failure retry with linear backoff — the engine analog of
     * the reference's ES connect/retry loop (es.rs: connection retried on
@@ -236,7 +191,18 @@ object IndexedParquetSink {
     run(0)
   }
 
-  /** The indexed store as a DataFrame (index directories → `index`). */
-  def readIndexed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The committed snapshot of the indexed store as a DataFrame (index
+    * directories → `index`): the files of the newest `_snapshot` plus
+    * those of every marker it has not folded in, read without listing
+    * the index directories or inferring the schema from a footer. A
+    * store with no manifest to read — no snapshot and no version-2
+    * marker, or an unfolded marker of version 1 — is listed with
+    * `spark.read.parquet`, as are a missing path (same
+    * `AnalysisException`) and an empty committed set. */
+  def readIndexed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StoreManifest.live(fs, root).filter(_.files.nonEmpty)
+      .fold(spark.read.parquet(path))(StoreManifest.relation(spark, root, _))
+  }
 }

@@ -32,37 +32,40 @@ object Retention {
   private val DatedIndex = "^(.+)-(\\d{4}\\.\\d{2}\\.\\d{2})$".r
   private val GenIndex = "^(.+)-g(\\d+)$".r
 
-  private def indexDirs(fs: FileSystem, root: Path,
-      partitionCol: String): Seq[Path] =
+  private def indexNames(fs: FileSystem, root: Path): Seq[String] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionCol="))
-      .map(_.getPath)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("index="))
+      .map(_.getPath.getName.stripPrefix("index="))
 
-  private def run(spark: SparkSession, path: String, partitionCol: String)(
-      expired: String => Boolean): Report = {
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val dirs = indexDirs(fs, new Path(path), partitionCol)
-    val (drop, keep) = dirs.partition { d =>
-      expired(d.getName.stripPrefix(s"$partitionCol="))
+  /** Delete the `index=` directories whose name is `expired`. A store
+    * with a manifest first commits a snapshot without their files, so
+    * [[IndexedParquetSink.readIndexed]] never names a deleted file. */
+  private def run(spark: SparkSession, path: String)(
+      expired: String => Boolean): Report =
+    ForklessLocalFileSystem.withFileSystem(path,
+        spark.sparkContext.hadoopConfiguration) { fs =>
+      val root = new Path(path)
+      val (drop, keep) = indexNames(fs, root).partition(expired)
+      if (drop.nonEmpty) StoreManifest.live(fs, root).foreach { l =>
+        val gone = drop.map(d => s"index=$d").toSet
+        StoreManifest.writeSnapshot(fs, root, l.snapshot.fold(0L)(_ + 1),
+          l.files.filterNot(f => gone(f.dir)), l.schema, l.markers)
+      }
+      drop.foreach { d =>
+        if (!fs.delete(new Path(root, s"index=$d"), true))
+          throw new IllegalStateException(s"retention delete failed for index=$d")
+      }
+      Report(drop.sorted, keep.sorted)
     }
-    drop.foreach { d =>
-      if (!fs.delete(d, true))
-        throw new IllegalStateException(s"retention delete failed for $d")
-    }
-    Report(drop.map(_.getName.stripPrefix(s"$partitionCol=")).sorted,
-      keep.map(_.getName.stripPrefix(s"$partitionCol=")).sorted)
-  }
 
   /** Delete dated indices strictly older than `horizon` (`yyyy.MM.dd`,
     * lexicographic == chronological for this format). Undated and
     * generation-named indices are kept. */
-  def expireBefore(spark: SparkSession, path: String, horizon: String,
-      partitionCol: String = "index"): Report = {
+  def expireBefore(spark: SparkSession, path: String, horizon: String): Report = {
     require(horizon.matches("\\d{4}\\.\\d{2}\\.\\d{2}"),
       s"horizon must be yyyy.MM.dd, got $horizon")
-    run(spark, path, partitionCol) {
+    run(spark, path) {
       case DatedIndex(_, date) => date < horizon
       case _ => false
     }
@@ -71,13 +74,11 @@ object Retention {
   /** For `{topic}-g{N}` generation indices, keep the newest `keepLast`
     * generations of each topic and delete the rest. Non-generation
     * indices are kept. */
-  def expireGenerations(spark: SparkSession, path: String, keepLast: Int,
-      partitionCol: String = "index"): Report = {
+  def expireGenerations(spark: SparkSession, path: String, keepLast: Int): Report = {
     require(keepLast >= 1, "keepLast must be >= 1")
     val fs = FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
-    val names = indexDirs(fs, new Path(path), partitionCol)
-      .map(_.getName.stripPrefix(s"$partitionCol="))
+    val names = indexNames(fs, new Path(path))
     // floor = the keepLast-th LARGEST existing generation per topic (not
     // max+1-keepLast): generation numbers can be non-contiguous after an
     // external delete (e.g. web-g0, web-g7), and an arithmetic floor
@@ -89,7 +90,7 @@ object Retention {
         val sorted = gs.map(_._2).distinct.sorted(Ordering[Long].reverse)
         (t, sorted(math.min(keepLast, sorted.size) - 1))
       }
-    run(spark, path, partitionCol) {
+    run(spark, path) {
       case GenIndex(topic, g) => g.toLong < floor.getOrElse(topic, Long.MinValue)
       case _ => false
     }

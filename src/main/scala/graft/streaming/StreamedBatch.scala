@@ -134,7 +134,8 @@ object StreamedBatch {
     Memory("complete", build)
 
   /** [[StreamingSync.start]] over the first source into the
-    * commit-marker store; the store read back — after
+    * commit-marker store; its committed snapshot read back
+    * ([[graft.sinks.IndexedParquetSink.readIndexed]]) — after
     * [[graft.sinks.Compaction.compact]] when `compact` — is the result. */
   private[streaming] final case class Store(cfg: SyncConfig,
       compact: Boolean) extends Sink
@@ -185,7 +186,7 @@ object StreamedBatch {
             require(report.filesAfter <= report.filesBefore,
               s"compaction grew the store: $report")
           }
-          ss.read.parquet(s"$dir/sink")
+          graft.sinks.IndexedParquetSink.readIndexed(ss, s"$dir/sink")
       }
       s.createDataFrame(
         s.sparkContext.parallelize(result.collect().toIndexedSeq, 1),

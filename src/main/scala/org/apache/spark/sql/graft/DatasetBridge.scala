@@ -17,6 +17,11 @@ object DatasetBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** `s` with every field nullable, as a file source reports a data
+    * schema (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
 

@@ -4,6 +4,7 @@ import graft.sinks.IndexedParquetSink
 import graft.sources.Connectors
 import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
@@ -13,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * per (destination, index) however many tasks produced the batch, no
   * staging leftovers, bulk metrics equal to a groupBy of the input, the
   * modes and checksums Hadoop's local filesystem gives, and a versioned
-  * commit marker. A commit is one pass: its metrics are counted inside
+  * commit marker (the current version 2, and versions 1 and headerless
+  * as earlier builds wrote them). A commit is one pass: its metrics are counted inside
   * its one write. */
 class SinkLayoutSpec extends SparkSpec {
 
@@ -146,18 +148,21 @@ class SinkLayoutSpec extends SparkSpec {
 
     commit(1)
     assert(Files.readAllLines(marker(1), UTF_8).asScala.head ==
-      "graft-commit-marker\t1")
+      "graft-commit-marker\t2")
     val written = tree()
     // a marker without the header, as earlier builds wrote it: the batch
     // counts as committed, its recorded metrics come back
     Files.write(marker(2), "logs-0\tapp0\t5\t2\nlogs-1\tapp1\t4\t0\n".getBytes(UTF_8))
     assert(commit(2).orderBy("index").collect().toSeq.map(_.toSeq) ==
       Seq(Seq("logs-0", "app0", 5L, 2L), Seq("logs-1", "app1", 4L, 0L)))
+    // a version-1 marker: its rows come back the same way
+    Files.write(marker(4), "graft-commit-marker\t1\nlogs-2\tapp0\t3\t1\n".getBytes(UTF_8))
+    assert(commit(4).collect().toSeq.map(_.toSeq) == Seq(Seq("logs-2", "app0", 3L, 1L)))
     // an unknown version fails before anything is written
-    Files.write(marker(3), "graft-commit-marker\t2\nlogs-0\tapp0\t5\t2\n".getBytes(UTF_8))
+    Files.write(marker(3), "graft-commit-marker\t3\nlogs-0\tapp0\t5\t2\n".getBytes(UTF_8))
     val e = intercept[IllegalStateException](commit(3))
-    assert(e.getMessage.contains("version 2"))
-    assert(tree() == written ++ Set(marker(2), marker(3)).map(_.toString))
+    assert(e.getMessage.contains("version 3"))
+    assert(tree() == written ++ Set(marker(2), marker(3), marker(4)).map(_.toString))
   }
 
   /** `groupBy(index, app)` of `input`: (index, app, written, failed),
@@ -267,8 +272,10 @@ class SinkLayoutSpec extends SparkSpec {
         assert((System.nanoTime() - t0) / 1000000 < 30000)
         assert(metrics.columns.toSeq == Seq("index", "app", "written", "failed"))
         assert(metrics.collect().isEmpty)
-        assert(Files.readAllLines(root.resolve("_commits/8"), UTF_8).asScala ==
-          Seq("graft-commit-marker\t1"))
+        // no rows and no files: the header and the data schema
+        assert(Files.readAllLines(root.resolve("_commits/8"), UTF_8).asScala.toSeq ==
+          Seq("graft-commit-marker\t2", "\\schema\t" + StructType(
+            input.schema.filterNot(_.name == "index")).json))
         assert(sorted(IndexedParquetSink.commitBatch(input, root.toString,
           Some(poison), Some(s"$root/_failed"), Some(8L))).isEmpty)
       }
