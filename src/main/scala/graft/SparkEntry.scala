@@ -87,7 +87,7 @@ object SparkEntry {
       // the store-level row ONE maintenance pass later: the same
       // 5-micro-batch replay through the full chain and the
       // commit-marker sink, then Compaction.compact rewrites the store
-      // (salted buckets, atomic swap) BEFORE the read-back — the
+      // in place (salted buckets) BEFORE the read-back — the
       // flagship oracle SQL must still hold row for row
       val batched = graft.streaming.StreamedBatch
         .chunked(messages(s, dir), 5, col("msg_id"))

@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-import java.nio.file.Files
+import java.nio.file.{Files, InvalidPathException}
 import java.nio.file.attribute.PosixFilePermissions
 
 /** Hadoop's checksummed local filesystem, minus one `chmod` process per
@@ -29,12 +29,16 @@ object ForklessLocalFileSystem {
 
   final class Raw extends RawLocalFileSystem {
     // toShort, not toString: a create passes an FsCreateModes, whose
-    // toString is not a mode string
+    // toString is not a mode string. A name the JVM's file-name encoding
+    // cannot represent has no NIO path; Hadoop's own call handles it.
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val mode = permission.toShort
-      if ((mode & ~0x1ff) != 0) super.setPermission(p, permission) // beyond rwxrwxrwx
-      else Files.setPosixFilePermissions(pathToFile(p).toPath,
-        PosixFilePermissions.fromString(new FsPermission(mode).toString))
+      val nio = try Some(pathToFile(p).toPath) catch { case _: InvalidPathException => None }
+      nio.filter(_ => (mode & ~0x1ff) == 0) match { // beyond rwxrwxrwx: Hadoop
+        case Some(f) => Files.setPosixFilePermissions(f,
+          PosixFilePermissions.fromString(new FsPermission(mode).toString))
+        case None => super.setPermission(p, permission)
+      }
     }
   }
 

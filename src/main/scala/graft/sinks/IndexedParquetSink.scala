@@ -28,13 +28,15 @@ import scala.util.{Failure, Success, Try}
   * (es.rs:133-191). A marker (version 2) lists the data files its commit
   * moved into the store root and the data schema; [[Compaction]] and
   * [[Retention]] write `_snapshot/<n>`, the whole live file list plus
-  * the names of the markers it folds in. [[readIndexed]] serves the
+  * the names of the markers it folds in, and delete the files it
+  * supersedes only once it is in place. [[readIndexed]] serves the
   * newest snapshot plus the markers it has not folded in — no listing
   * of the index directories, no schema-inference job, and never a file
   * no marker names. Stores without a version-2 manifest (earlier
   * builds' headerless and version-1 markers, plain Spark writes) are
-  * read by listing until their first compaction writes a snapshot.
-  * [[StoreManifest]] holds the formats. */
+  * read by listing until a compaction or retention run adopts them into
+  * a snapshot. [[StoreManifest]] holds the formats and the deletion
+  * rule. */
 object IndexedParquetSink {
 
   /** Partition column of the staged write: 0 = the store, 1 = the
@@ -99,8 +101,6 @@ object IndexedParquetSink {
         isFailed.map(_ => StructField("failed", LongType)))
       def metricsDf(rows: Seq[Row]): DataFrame =
         spark.createDataFrame(rows.asJava, schema)
-      def glob(p: String): Seq[org.apache.hadoop.fs.FileStatus] =
-        Option(fs.globStatus(new Path(p))).toSeq.flatten
       val replayed = batchId.map(id => new Path(s"$path/_commits/$id")).filter(fs.exists)
       replayed match {
         case Some(m) => metricsDf(StoreManifest.readMarker(fs, m).rows.map { f =>
@@ -108,11 +108,9 @@ object IndexedParquetSink {
         })
         case None =>
           val tag = batchId.fold(s"u${java.util.UUID.randomUUID()}")(id => s"b$id")
-          val roots = path +: isFailed.flatMap(_ => failedPath).toSeq
+          val roots = (path +: isFailed.flatMap(_ => failedPath).toSeq).map(new Path(_))
           val staging = new Path(s"$path/_staging/$tag")
-          fs.delete(staging, true)
-          roots.foreach(r => glob(s"$r/index=*/$tag-*")
-            .foreach(s => fs.delete(s.getPath, false)))
+          StoreManifest.scrub(fs, roots, tag)
           val tagged = batch.withColumn(Dest,
             isFailed.fold(lit(0))(c => when(c, 1).otherwise(0)))
           // a fresh observation per attempt: one can be completed once
@@ -129,18 +127,9 @@ object IndexedParquetSink {
               isFailed.map(_ => c.getLong(3)))
           }
           onStep("staged")
-          val stored = glob(s"$staging/$Dest=*/index=*/part-*").sortBy(_.getPath.toString)
-            .zipWithIndex.flatMap { case (s, k) =>
-              val idx = s.getPath.getParent
-              val dest = idx.getParent.getName.stripPrefix(s"$Dest=").toInt
-              val dir = new Path(roots(dest), idx.getName)
-              val name = s"$tag-$k.parquet"
-              fs.mkdirs(dir)
-              if (!fs.rename(s.getPath, new Path(dir, name)))
-                throw new IllegalStateException(s"commit move failed for ${s.getPath}")
-              onStep(s"move $k")
-              if (dest == 0) Some(StoreManifest.DataFile.of(s).copy(name = name)) else None
-            }
+          val stored = StoreManifest.moveStaged(fs, new Path(staging, s"$Dest=*/index=*/part-*"),
+              tag, onStep)(idx => roots(idx.getParent.getName.stripPrefix(s"$Dest=").toInt))
+            .collect { case (r, f) if r == roots.head => f }
           fs.delete(staging, true)
           onStep("moves-done")
           StoreManifest.writeMarker(fs,

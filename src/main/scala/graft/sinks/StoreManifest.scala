@@ -29,7 +29,15 @@ import scala.collection.mutable
   * The committed relation is the newest snapshot's files plus the files
   * of every marker that snapshot has not folded in. A batch joins it when
   * its marker is renamed into place, so a reader sees all of a batch or
-  * none of it, and never the orphans of a died attempt. */
+  * none of it, and never the orphans of a died attempt.
+  *
+  * Maintenance ([[Compaction]], [[Retention]]) changes the store in
+  * place: a new snapshot supersedes files, and only then are they
+  * deleted ([[settle]]). Only files that a snapshot or a folded marker
+  * named are ever deleted, so the files of a commit in flight, and of
+  * one whose marker landed after the run read the store, are never
+  * touched. One maintenance run at a time per store is assumed; commits
+  * may run beside it. */
 private[sinks] object StoreManifest {
 
   private val MarkerHeader = "graft-commit-marker"
@@ -45,6 +53,7 @@ private[sinks] object StoreManifest {
   final case class DataFile(index: String, name: String, bytes: Long) {
     def dir: String = "index=" +
       (if (index == null) DEFAULT_PARTITION_NAME else escapePathName(index))
+    def path(root: Path): Path = new Path(new Path(root, dir), name)
   }
 
   object DataFile {
@@ -91,14 +100,7 @@ private[sinks] object StoreManifest {
     * Spark writes). */
   def live(fs: FileSystem, root: Path): Option[Live] = {
     val marked = markers(fs, root)
-    val snap = latestSnapshot(fs, root).map { case (n, p) =>
-      (n, lines(fs, p) match {
-        case Seq(SnapshotHeader, v) +: rest if v == SnapshotVersion.toString =>
-          parse(SnapshotVersion, rest)
-        case _ => throw new IllegalStateException(
-          s"$p is not a store snapshot of version $SnapshotVersion")
-      })
-    }
+    val snap = snapshots(fs, root).headOption.map { case (n, p) => (n, snapshot(fs, p)) }
     val folded = snap.fold(Set.empty[String])(_._2.folded.toSet)
     val fresh = marked.filterNot(folded)
     val read = fresh.iterator.map(m => readMarker(fs, new Path(root, s"_commits/$m")))
@@ -109,24 +111,98 @@ private[sinks] object StoreManifest {
       Live(parts.flatMap(_.files), schema, snap.map(_._1), marked))
   }
 
+  /** The committed state a maintenance run starts from. It first
+    * finishes a run that crashed after its snapshot ([[settle]]) and
+    * scrubs the orphans of one that crashed before it (`c<n>-*`, `n` the
+    * next snapshot number). A store [[live]] cannot read is then adopted:
+    * a snapshot that changes no data file names its listed files and
+    * folds in its markers, listed first. A commit's file (`b<id>-`,
+    * `u<uuid>-`) is adopted only if its marker was listed. None when
+    * nothing is committed. */
+  def committed(spark: SparkSession, fs: FileSystem, root: Path): Option[Live] = {
+    settle(fs, root)
+    val next = snapshots(fs, root).headOption.fold(0L)(_._1 + 1)
+    scrub(fs, Seq(root), s"c$next")
+    live(fs, root).orElse {
+      val marked = markers(fs, root).toSet
+      val kept = glob(fs, new Path(root, "index=*/*.parquet")).map(DataFile.of)
+        .filter(f => Commit.findFirstMatchIn(f.name).forall(t => marked(t.group(1).stripPrefix("b"))))
+      if (kept.isEmpty) None
+      else {
+        writeSnapshot(fs, root, next, kept, StructType(
+          spark.read.parquet(root.toString).schema.filterNot(_.name == "index")),
+          marked.toSeq.sorted)
+        live(fs, root)
+      }
+    }
+  }
+
+  /** Finish the newest snapshot: delete every file that the snapshot
+    * before it, or a marker it folds in that one did not, names and it
+    * does not name; then drop the snapshots before that one. It is
+    * idempotent, so the next run finishes a run that crashed after
+    * writing its snapshot; the previous snapshot is kept for that. */
+  def settle(fs: FileSystem, root: Path): Unit = snapshots(fs, root) match {
+    case (_, newest) +: rest =>
+      val cur = snapshot(fs, newest)
+      val prev = rest.headOption.map(s => snapshot(fs, s._2))
+      val seen = prev.fold(Set.empty[String])(_.folded.toSet)
+      val keep = cur.files.map(_.path(root)).toSet
+      (prev.toSeq.flatMap(_.files) ++ cur.folded.filterNot(seen)
+        .flatMap(m => readMarker(fs, new Path(root, s"_commits/$m")).files))
+        .map(_.path(root)).filterNot(keep).foreach(fs.delete(_, false))
+      rest.drop(1).foreach(s => fs.delete(s._2, false))
+    case _ => ()
+  }
+
+  /** Delete what a died attempt tagged `tag` left: its staging dir
+    * `<first root>/_staging/<tag>` and its files under each root's
+    * `index=` dirs. */
+  def scrub(fs: FileSystem, roots: Seq[Path], tag: String): Unit = {
+    fs.delete(new Path(roots.head, s"_staging/$tag"), true)
+    roots.foreach(r => glob(fs, new Path(r, s"index=*/$tag-*")).foreach(s => fs.delete(s.getPath, false)))
+  }
+
+  /** Move each staged file `pattern` matches, in path order, to
+    * `<rootOf(its index dir)>/<its index dir's name>/<tag>-<k>.parquet`,
+    * calling `onStep("move <k>")` after each move; returns each moved
+    * file's root and entry. */
+  def moveStaged(fs: FileSystem, pattern: Path, tag: String, onStep: String => Unit)(
+      rootOf: Path => Path): Seq[(Path, DataFile)] =
+    glob(fs, pattern).sortBy(_.getPath.toString).zipWithIndex.map { case (s, k) =>
+      val idx = s.getPath.getParent
+      val root = rootOf(idx)
+      val f = DataFile.of(s).copy(name = s"$tag-$k.parquet")
+      fs.mkdirs(f.path(root).getParent)
+      if (!fs.rename(s.getPath, f.path(root)))
+        throw new IllegalStateException(s"commit move failed for ${s.getPath}")
+      onStep(s"move $k")
+      root -> f
+    }
+
   /** Names of the committed markers (in-flight `.tmp-` files and `.crc`
     * sidecars start with a dot). */
   def markers(fs: FileSystem, root: Path): Seq[String] =
     list(fs, new Path(root, "_commits")).map(_.getName).filterNot(_.startsWith("."))
 
-  /** The newest snapshot's number and path. */
-  def latestSnapshot(fs: FileSystem, root: Path): Option[(Long, Path)] =
+  /** The snapshots' numbers and paths, newest first. */
+  private def snapshots(fs: FileSystem, root: Path): Seq[(Long, Path)] =
     list(fs, new Path(root, "_snapshot"))
       .flatMap(p => p.getName.toLongOption.map(_ -> p))
-      .maxByOption(_._1)
+      .sortBy(-_._1)
 
-  /** The data files under `root`'s `index=` directories, by listing. */
-  def listed(fs: FileSystem, root: Path): Seq[DataFile] =
-    fs.listStatus(root).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("index="))
-      .flatMap(d => fs.listStatus(d.getPath).toSeq)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(DataFile.of)
+  private def snapshot(fs: FileSystem, p: Path): Manifest = lines(fs, p) match {
+    case Seq(SnapshotHeader, v) +: rest if v == SnapshotVersion.toString =>
+      parse(SnapshotVersion, rest)
+    case _ => throw new IllegalStateException(
+      s"$p is not a store snapshot of version $SnapshotVersion")
+  }
+
+  /** A commit's data file name; its tag is `b<batchId>` or `u<uuid>`. */
+  private val Commit = "^(b\\d+|u[0-9a-f-]{36})-\\d+\\.parquet$".r
+
+  private def glob(fs: FileSystem, p: Path): Seq[FileStatus] =
+    Option(fs.globStatus(p)).toSeq.flatten
 
   /** `live` as a DataFrame over exactly its files: a parquet relation
     * whose partition values Spark parses from the files' `index=`
@@ -137,10 +213,8 @@ private[sinks] object StoreManifest {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = fs.makeQualified(root)
     val block = fs.getDefaultBlockSize(base)
-    val index = new ManifestFileIndex(spark, base, live.files.map { f =>
-      new FileStatus(f.bytes, false, 1, block, 0L,
-        new Path(new Path(base, f.dir), f.name))
-    })
+    val index = new ManifestFileIndex(spark, base, live.files.map(f =>
+      new FileStatus(f.bytes, false, 1, block, 0L, f.path(base))))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
       DatasetBridge.asNullable(live.schema), None, new ParquetFileFormat,
       Map.empty)(spark))

@@ -689,8 +689,9 @@ object StreamedBatch {
 
   /** [[syncedStore]] plus the OPTIMIZE pass: after the stream drains,
     * the accumulated store is COMPACTED in place
-    * ([[graft.sinks.Compaction.compact]] — salted rewrite, atomic
-    * swap) and only THEN read back. The same oracle SQL anchors it:
+    * ([[graft.sinks.Compaction.compact]] — salted rewrite committed by a
+    * snapshot that supersedes the files it replaces) and only THEN read
+    * back. The same oracle SQL anchors it:
     * the maintenance pass must be content-preserving end to end (file
     * counts shrink, the relation doesn't change by a row). The tiny
     * targetBytes forces a real multi-file rewrite at test scale. */

@@ -38,11 +38,10 @@ object StreamingSyncDemo {
       s"$work/metrics", availableNow = true)
     q.awaitTermination(120000)
 
-    println("SINK_COUNT=" + spark.read.parquet(s"$work/sink").count())
+    val sink = graft.sinks.IndexedParquetSink.readIndexed(spark, s"$work/sink")
+    println("SINK_COUNT=" + sink.count())
     println("BATCH_EQUIVALENT=" + SyncPipeline(cfg)(msgs).count())
-    println("INDICES=" + new java.io.File(s"$work/sink").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("index="))
-      .length)
+    println("INDICES=" + sink.select("index").distinct().count())
     spark.read.parquet(s"$work/metrics")
       .orderBy(desc("written")).show(5, truncate = false)
     // prometheus.rs analog: counter snapshot after the run

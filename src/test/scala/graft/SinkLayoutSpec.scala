@@ -139,6 +139,27 @@ class SinkLayoutSpec extends SparkSpec {
     }
   }
 
+  test("a non-ASCII path is created as Hadoop's local filesystem creates it") {
+    // with no UTF-8 locale the JVM's file-name encoding is ASCII, and such
+    // a name has no NIO path: the mode is then set the way Hadoop sets it.
+    // (Hadoop itself cannot stat that path, so a Spark write of a
+    // non-ASCII partition needs a UTF-8 locale on any filesystem class.)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val created = Seq(new LocalFileSystem, new graft.sinks.ForklessLocalFileSystem).map { fs =>
+      val root = Files.createTempDirectory("graft-nonascii")
+      fs.initialize(root.toUri, hconf)
+      try {
+        val dir = new Path(root.toUri.toString, "index=ünïcødé")
+        assert(fs.mkdirs(dir))
+        fs.create(new Path(dir, "b0-0.parquet")).close()
+      } finally fs.close()
+      Files.walk(root).iterator.asScala.toSeq.filter(_ != root).map(p =>
+        (root.relativize(p).toString,
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))).sorted
+    }
+    assert(created.head.size == 3 && created.last == created.head, created)
+  }
+
   test("commit markers carry a version header; headerless ones still read") {
     val root = Files.createTempDirectory("graft-marker")
     def commit(batchId: Long) = IndexedParquetSink.commitBatch(docs(40),
