@@ -38,7 +38,7 @@ object SparkEntry {
     * Rides [[Tables.eventsTime]] (micros TIMESTAMP, schema-adaptive), so
     * on the timestamp layout a publish_time range predicate pushes to
     * the parquet scan; values match the legacy nanos-div-1000 read. */
-  private def messages(s: SparkSession, dir: String): DataFrame =
+  private[graft] def messages(s: SparkSession, dir: String): DataFrame =
     Tables.eventsTime(s, dir).select(
       col("event_id").as("msg_id"),
       col("event_type").as("topic"),

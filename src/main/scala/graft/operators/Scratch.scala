@@ -13,10 +13,10 @@ import java.nio.file.{Files, Path, Paths}
   * it at local SSD), else `/dev/shm` when writable AND it has enough
   * free space (tmpfs beats the ext4 `/tmp` for the many tiny
   * fsync-ordered files a streaming checkpoint writes per micro-batch),
-  * else `java.io.tmpdir`. r13 optimization; results are byte-identical
-  * — only the placement of temp I/O changes.
+  * else `java.io.tmpdir`. Results are byte-identical — only the
+  * placement of temp I/O changes.
   *
-  * Free-space guard (r14, verdict #6 / ADVICE): tmpfs is RAM — shuffle
+  * Free-space guard: tmpfs is RAM — shuffle
   * SPILL landing there defeats spill's memory-relief purpose, and a
   * larger-SF run could ENOSPC mid-job. `/dev/shm` is auto-chosen only
   * when its usable space is at least `SPARK_GRAFT_SCRATCH_MIN_FREE_GB`

@@ -58,28 +58,21 @@ object StreamedBatch {
   /** The twin's session: [[StreamingSync.session]] over the scratch dir
     * `dir`, so it keeps the caller's runtime confs, temp views and
     * functions and adds the streaming settings the sync owns (driver-side
-    * file listing, the forkless checkpoint log, a bounded stop), plus the
-    * state store right-sized to the bounded oracle input. The replay
+    * file listing, the forkless checkpoint log, a bounded stop), plus ONE
+    * shuffle partition, sized to the bounded oracle input. The replay
     * inputs are a few thousand rows, so per-micro-batch cost is
     * per-PARTITION state commit overhead, not compute: fewer partitions
     * is strictly cheaper until the corpus stops fitting one task (on a
     * 13-row replay subset at sf0.1, partitions 8 / 4 / 2 / 1 measured
-    * 115.9 / 96.8 / 69.9 / 60.6 s). `SPARK_GRAFT_TWIN_PARTITIONS`
-    * (default 1) sets it; a deployment replaying production volumes sets
-    * its real parallelism. The default rests on every stateful twin
-    * being partition-layout-INDEPENDENT (group iterators sorted by
-    * explicit keys, spec-proven; the oracle compare sorts) — a twin
-    * without that property must not be added under it. The PRODUCTION
+    * 115.9 / 96.8 / 69.9 / 60.6 s). The single partition rests on every
+    * stateful twin being partition-layout-INDEPENDENT (group iterators
+    * sorted by explicit keys, spec-proven; the oracle compare sorts) — a
+    * twin without that property must not be added. The PRODUCTION
     * operators keep the caller's partitioning; this clone only governs
     * the runner. */
   private[graft] def streamSession(s: SparkSession, dir: String): SparkSession = {
     val ss = StreamingSync.session(s, dir)
-    // validated here: a non-numeric value would otherwise fail deep
-    // inside Spark with an opaque error
-    val twinParts = sys.env.getOrElse("SPARK_GRAFT_TWIN_PARTITIONS", "1")
-    require(scala.util.Try(twinParts.trim.toInt).toOption.exists(_ > 0),
-      s"SPARK_GRAFT_TWIN_PARTITIONS must be a positive integer, got '$twinParts'")
-    ss.conf.set("spark.sql.shuffle.partitions", twinParts.trim)
+    ss.conf.set("spark.sql.shuffle.partitions", "1")
     ss
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{SyncConfigJson, SyncPipeline}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end demo of the streaming sync: stages the sf0.001
@@ -12,17 +12,8 @@ import org.apache.spark.sql.functions._
 object StreamingSyncDemo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft_stream_demo")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val msgs = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-      .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
-        timestamp_micros(expr("ts div 1000")).as("publish_time"),
-        col("props").as("data"))
+    val spark = GraftSession.local()
+    val msgs = SparkEntry.messages(spark, "/root/testdata/sf0.001")
     if (!new java.io.File(s"$work/src").exists())
       msgs.write.parquet(s"$work/src")
 

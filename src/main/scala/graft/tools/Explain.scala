@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Plan inspection + timing for a named SparkEntry query:
   * runMain graft.tools.Explain <query> [sfDir] [reps]
@@ -11,20 +11,9 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's scratch placement so timings are comparable (r13)
-      .config("spark.local.dir",
-        graft.operators.Scratch.tempDir("graft-spark-local"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // comma-separated names share one session (r13: plan surveys over
-    // many queries shouldn't pay a JVM+session start-up each)
+    val spark = GraftSession.local()
+    // comma-separated names share one session (a plan survey over many
+    // queries pays one JVM and session start-up)
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { nm =>
       println(s"===== $nm =====")
       val fn = graft.SparkEntry.queries(nm)
@@ -36,11 +25,7 @@ object Explain {
       // here vs 6.6 s in Bench until this tool was fixed to match
       // Bench's fn(...).count() semantics).
       (1 to reps).foreach { i =>
-        // dead materialization blocks from the previous query would
-        // distort the next timing (the Bench clearCache convention)
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        GraftSession.release(spark)
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         println(f"run $i: ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")

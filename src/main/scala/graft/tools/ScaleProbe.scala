@@ -1,10 +1,11 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
-/** Two-point scale probe (r6 verdict #7): the 100×-scaling claim should
+/** Two-point scale probe: the 100×-scaling claim should
   * not rest on plan shape alone, so this tool replicates the sf0.1
   * tables `replicas`× (ids remapped to stay unique, event times jittered
   * by the replica index in µs; text/vectors unchanged) and times a
@@ -24,13 +25,13 @@ object ScaleProbe {
   val probes: Seq[String] = Seq(
     "sync_pipeline", "q_sessionize", "q_events_anomaly", "q_time_window",
     "q_attribution", "sketch_hll_daily",
-    // sim_ivf_trained is the full-slice Lloyd AUDIT — since r11 it is
+    // sim_ivf_trained is the full-slice Lloyd AUDIT — it is
     // id-bounded by default (kmeansRefine maxTrainId=4096), so the ×8
     // replica corpus trains/refines the same-order slice as base and
-    // the historical 5.99 slope is gone BY CONSTRUCTION, not by tuning
+    // the unbounded trainer's 5.99 slope is gone BY CONSTRUCTION
     "sim_pq_residual", "sim_ivf_trained",
     // the sampled trainer: Lloyd over ONLY the exact-k sample, corpus
-    // pays one narrow assign — the PRODUCTION trainer since r11
+    // pays one narrow assign — the PRODUCTION trainer
     "sim_ivf_sampled",
     "shard_zorder", "lm_kn_model",
     // the id-level export chain: replicated docs duplicate WORDS but not
@@ -43,12 +44,12 @@ object ScaleProbe {
     // table; the power iteration is corpus-size-independent driver
     // work) — now measured, not just argued
     "emb_pca",
-    // r8 additions, each linear by design: the trigram KN table (one
+    // each linear by design: the trigram KN table (one
     // corpus scan + O(types) marginals), harmonic no-split packing
     // (per-class rank windows), and the three-layout prune audit
     // (three two-phase ranks over the replicated lineitem)
     "lm_kn_trigram", "pack_nosplit", "shard_zorder_prune",
-    // r8-continuation additions, each linear by design: CUSUM (daily
+    // each linear by design: CUSUM (daily
     // rollup + topic-keyed cumulative windows), the skyline staircase
     // (groupBy-x + bucketed prefix + broadcast-front join-back), the
     // Hilbert descent (16 narrow column steps + the two-phase rank),
@@ -56,19 +57,19 @@ object ScaleProbe {
     // the 3-arm session sweep (one scan, arm-keyed windows)
     "q_cusum", "q_skyline", "shard_hilbert", "q_funnel_steps",
     "sketch_cms_dot", "q_session_sweep",
-    // r10: the kNN graph is linear by design SINCE the projection-rank
+    // the kNN graph is linear by design through the projection-rank
     // window bound — each vector pairs with ≤ window rank-neighbors
     // regardless of bucket skew, so 8× vectors is 8× bounded pair work
-    // (the pre-r10 in-bucket self-join would have shown a super-linear
-    // slope here; dedup-family rows stay excluded for the data-structure
-    // reason above)
+    // (an in-bucket self-join would show a super-linear slope here;
+    // dedup-family rows stay excluded for the data-structure reason
+    // above)
     "sim_knn_graph",
-    // r10-continuation: line-boilerplate removal is the one dedup-family
+    // line-boilerplate removal is the one dedup-family
     // row WITHOUT pair structure (support counting + a set join — output
     // is per-doc, never per-pair), so replication multiplies line
     // support but not any candidate set: linear by design, measured
     "dedup_lines",
-    // r12: the PRODUCTION layout writer — sampled cut points (one
+    // the PRODUCTION layout writer — sampled cut points (one
     // top-k action) + narrow per-row assignment; the exact-rank audit
     // rows' range-shuffle-and-window cost (slope 4.8) never runs, so
     // this should sit near the scan slope
@@ -76,9 +77,8 @@ object ScaleProbe {
 
   /** Replicate the sf0.1 corpus `replicas`× into `scaledDir` (ids
     * remapped to stay unique, event times jittered by replica index in
-    * µs; text/vectors unchanged). Shared by the slope probe here and
-    * the core-count probe ([[CoreProbe]], r14 verdict #5). */
-  def replicateCorpus(spark: SparkSession, baseDir: String,
+    * µs; text/vectors unchanged). */
+  private def replicateCorpus(spark: SparkSession, baseDir: String,
       scaledDir: String, replicas: Int): Unit = {
     def rep(df: DataFrame): (DataFrame, org.apache.spark.sql.Column) = {
       val r = df.crossJoin(spark.range(replicas).select(col("id").as("__rep")))
@@ -87,12 +87,14 @@ object ScaleProbe {
     // events: unique event_id, µs-jittered ts (same schema → the
     // Tables.events seam normalizes the copy exactly like the source)
     locally {
+      // the ts physical layout has been both TIMESTAMP(NANOS), read as
+      // BIGINT nanos under nanosAsLong, and timestamp[us] (the
+      // Tables.events seam); jitter under whichever layout is present so
+      // the scaled copy keeps the source layout and the seam normalizes
+      // it identically
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$baseDir/events.parquet")
       val (e, r) = rep(raw)
-      // the ts physical layout has FLIPPED across driver rounds
-      // (BIGINT nanos ≤ r4, timestamp ≥ r5 — the Tables.events seam);
-      // jitter under whichever layout is present so the scaled copy
-      // keeps the source layout and the seam normalizes it identically
       val jittered = raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           e.withColumn("ts", col("ts") + r * 1000L) // nanos
@@ -135,18 +137,8 @@ object ScaleProbe {
     // partial probe never masquerades as the board
     val onlyProbes = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val baseDir = "/root/testdata/sf0.1"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", baseDir) // as Bench and CoreProbe
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local()
 
     val scaledDir = Files.createTempDirectory("graft-scale").toString
     replicateCorpus(spark, sfDir, scaledDir, replicas)
@@ -155,9 +147,7 @@ object ScaleProbe {
       val fn = graft.SparkEntry.queries(name)
       fn(spark, dir).count() // warm
       (1 to reps).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        GraftSession.release(spark)
         val t0 = System.nanoTime()
         fn(spark, dir).count()
         (System.nanoTime() - t0) / 1e9

@@ -1,11 +1,12 @@
 package graft.tools
 
 import graft.operators.{SyncConfig, SyncPipeline}
+import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
-/** Planted-skew stress of the sync surface (r6 verdict #5): the same
+/** Planted-skew stress of the sync surface: the same
   * replicated message volume run twice through the FULL pipeline
   * (filters → parse → enrich → rate-limit window → bulk batching →
   * per-(index, app) metrics agg) — once with the natural topic mix,
@@ -18,27 +19,18 @@ import java.nio.file.{Files, Paths}
   * a hot topic's rows split across all its time buckets instead of
   * pinning one task; the final metrics agg is map-side combined to
   * #groups rows before the shuffle. AQE handles residual imbalance.
+  * The messages are the events of `SPARK_GRAFT_SF_DIR` (default sf0.1).
   * Usage: runMain graft.tools.SkewStress [replicas]
   */
 object SkewStress {
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-skew-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local()
 
-    val base = graft.sources.Tables.events(spark, "/root/testdata/sf0.1")
+    val base = SparkEntry.messages(spark, sfDir)
       .crossJoin(spark.range(replicas).select(col("id").as("rep")))
-      .select((col("event_id") * replicas + col("rep")).as("msg_id"),
-        col("event_type").as("topic"),
-        timestamp_micros(expr("ts div 1000")).as("publish_time"),
-        col("props").as("data"))
+      .withColumn("msg_id", col("msg_id") * replicas + col("rep")).drop("rep")
     val uniform = base
     val skewed = base.withColumn("topic",
       when(pmod(col("msg_id"), lit(10)) < 9, lit("hot"))

@@ -98,11 +98,9 @@ class CommittedSnapshotSpec extends SparkSpec {
   }
 
   test("contract: index values that need path escaping, and a null index") {
-    // a JVM whose file-name encoding is ASCII (no UTF-8 locale) cannot
-    // create a non-ASCII path at all, through Spark or through this sink
-    val nonAscii = Seq("ünïcødé").filter(java.nio.charset.Charset
-      .forName(System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(_))
-    val values = Seq("a/b", "k=v", "50%", "with space", "tab\there", null) ++ nonAscii
+    // the non-ASCII value needs a UTF-8 file-name encoding, which the
+    // forked test JVM gets from its LC_ALL (build.sbt)
+    val values = Seq("a/b", "k=v", "50%", "with space", "tab\there", null, "ünïcødé")
     val root = Files.createTempDirectory("graft-snap-escape").toString
     IndexedParquetSink.commitBatch(docs(0, 140, i => values(i % values.size)), root,
       batchId = Some(0L))
@@ -112,7 +110,7 @@ class CommittedSnapshotSpec extends SparkSpec {
     assert(served.select("index").distinct().collect().map(_.getString(0)).toSet ==
       values.toSet)
     // pruning by an escaped value reads that index alone
-    assert(served.filter(col("index") === "a/b").count() == (if (nonAscii.isEmpty) 35 else 30))
+    assert(served.filter(col("index") === "a/b").count() == 30)
     // compaction plans by index value, so it keeps these indices' rows
     val before = rows(served)
     Compaction.compact(spark, root, targetBytes = 1L << 30)

@@ -140,10 +140,12 @@ class SinkLayoutSpec extends SparkSpec {
   }
 
   test("a non-ASCII path is created as Hadoop's local filesystem creates it") {
-    // with no UTF-8 locale the JVM's file-name encoding is ASCII, and such
-    // a name has no NIO path: the mode is then set the way Hadoop sets it.
-    // (Hadoop itself cannot stat that path, so a Spark write of a
-    // non-ASCII partition needs a UTF-8 locale on any filesystem class.)
+    // the forked test JVM runs under a UTF-8 locale (build.sbt), so here
+    // the name has an NIO path. With no UTF-8 locale the JVM's file-name
+    // encoding is ASCII, such a name has no NIO path, and the mode is then
+    // set the way Hadoop sets it. (Hadoop itself cannot stat that path, so
+    // a Spark write of a non-ASCII partition needs a UTF-8 locale on any
+    // filesystem class.)
     val hconf = spark.sparkContext.hadoopConfiguration
     val created = Seq(new LocalFileSystem, new graft.sinks.ForklessLocalFileSystem).map { fs =>
       val root = Files.createTempDirectory("graft-nonascii")
