@@ -187,26 +187,6 @@ object Bench {
         Files.writeString(Paths.get(s"BENCH_SF$sfTag.json"), line + "\n")
     }
     println(line)
-    // A reader that keeps a bounded stdout TAIL (~4 KB) truncates the
-    // ~7 KB full per-query line mid-object at 341 rows. Re-emit the per-query map as BOUNDED chunk
-    // lines — each a complete, independently parseable JSON object well
-    // under the tail window — ordered by ASCENDING per-query seconds so
-    // the lines nearest the tail carry the most expensive rows (the ones
-    // a perf comparison needs most; the cheap sub-second rows are the
-    // noise-dominated ones anyway). The compact totals line stays LAST —
-    // the tail-proof contract is unchanged, these lines are additive.
-    val byCost = results.sortBy(r => (r.secs, r.name))
-      .map(r => jstr(r.name) + ":" + fmt(r.secs))
-    val chunks = byCost.foldLeft(List.empty[List[String]]) { (acc, e) =>
-      acc match {
-        case h :: t if (h.map(_.length + 1).sum + e.length) <= 1500 =>
-          (e :: h) :: t
-        case _ => List(e) :: acc
-      }
-    }.map(_.reverse).reverse
-    chunks.zipWithIndex.foreach { case (es, i) =>
-      println(s"""{"metric":"queries_chunk","part":${i + 1},"of":${chunks.size},"queries":${es.mkString("{", ",", "}")},"sf":${jstr(sfDir)}}""")
-    }
     println(compact)
     spark.stop()
   }

@@ -28,7 +28,7 @@ object SparkEntry {
   /** The oracle-checked demo config for the sync pipeline: drop k=13
     * globally, drop error-topic messages with k in 90..99, re-route
     * click/view → web and purchase → commerce, flag k=4x as debug. */
-  private val demoCfg = SyncConfig(
+  private[graft] val demoCfg = SyncConfig(
     globalFilters = Seq("\"k\": 13\\}"),
     namespaceFilters = Map("error" -> Seq("\"k\": 9[0-9]\\}")),
     rewriteRules = Seq(("click", "web"), ("view", "web"), ("purchase", "commerce")),

@@ -35,12 +35,12 @@ final case class SyncConfig(
       * default 5000): the processing-time trigger of the streaming sync
       * (es.rs:275-308 ticks its buffer flush on this interval) */
     flushIntervalMs: Long = 5000,
-    // ---- client connection identity (r11, CLI-parity residue) ----
+    // ---- client connection identity ----
     // The six remaining args.rs knobs configure the network CLIENT the
-    // sandbox cannot run; they are carried VERBATIM to the connector
-    // seam ([[graft.sources.Connectors.Subscription]]) where an
-    // off-sandbox Pulsar binding consumes them — inert for the file
-    // stand-ins, asserted delivered in StreamingSyncSpec.
+    // sandbox cannot run. The connector seam
+    // ([[graft.sources.Connectors.MessageConnector.readStream]]) receives
+    // the whole config, so an off-sandbox Pulsar binding reads them there;
+    // the file stand-ins ignore them (StreamingSyncSpec asserts delivery).
     /** broker address (args.rs:73-75 --pulsar-addr) */
     pulsarAddr: String = "pulsar://127.0.0.1:6650",
     /** auth token (args.rs:77-79 --pulsar-token) */
@@ -166,14 +166,20 @@ object SyncPipeline {
       floor((row_number().over(w) - 1) / cfg.bufferSize))
   }
 
-  /** Full pipeline: subscribe → filters → parse → enrich → inject →
-    * rate limit (the reference's consume-loop order). */
-  def apply(cfg: SyncConfig)(df: DataFrame): DataFrame =
+  /** The per-message chain in the reference's consume-loop order:
+    * subscribe → global filter → parse → namespace filter → enrich →
+    * inject. Every stage is narrow, so the same plan runs on a batch
+    * frame and on a stream; the streaming sync applies it to its source
+    * and [[rateLimit]] per micro-batch. */
+  def transform(cfg: SyncConfig)(df: DataFrame): DataFrame =
     df.transform(subscribe(cfg))
       .transform(globalFilter(cfg))
       .transform(parseable)
       .transform(namespaceFilter(cfg))
       .transform(enrich(cfg))
       .transform(inject(cfg))
-      .transform(rateLimit(cfg))
+
+  /** Full batch pipeline: [[transform]], then rate limit. */
+  def apply(cfg: SyncConfig)(df: DataFrame): DataFrame =
+    transform(cfg)(df).transform(rateLimit(cfg))
 }

@@ -345,8 +345,8 @@ object ABlock {
     "sync_jsonl_source" -> ((s, dir) => {
       // the raw-FILE ingestion face of the consumer (A18, otherwise
       // spec-only): the message stream serialized topic-per-directory
-      // as JSON lines, re-read through JsonLines.read under a
-      // topic-regex subscription — directory→topic derivation, the
+      // as JSON lines, re-read through JsonLines.read under the
+      // pipeline's topic-regex subscription — directory→topic derivation, the
       // line's ts field→publish_time, raw-payload passthrough, all
       // under the driver oracle. The write is itself the plan the sink
       // side uses (partitionBy, one narrow projection); the temp store
@@ -365,8 +365,9 @@ object ABlock {
       // deleted before returning — repeated invocations (Bench runs
       // every query 2-3×) must not accumulate /tmp litter
       val out = graft.operators.Materialize(
-        graft.sources.JsonLines.read(s, s"$tmp/*/part-*",
-            topicRegex = Some("^topic=(click|purchase|signup)$"))
+        graft.sources.JsonLines.read(s, s"$tmp/*/part-*")
+          .transform(SyncPipeline.subscribe(
+            SyncConfig(topicRegex = Some("^topic=(click|purchase|signup)$"))))
           .select(col("topic"),
             get_json_object(col("data"), "$.id").cast("long").as("msg_id"),
             get_json_object(col("data"), "$.k").cast("long").as("k"),

@@ -1,64 +1,38 @@
 package graft.sources
 
+import graft.operators.SyncConfig
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Config-selected connector seams — the boundary where the sandbox
-  * stand-ins (file sources, the indexed parquet store) and real
-  * Pulsar/Elasticsearch bindings are interchangeable.
+/** Connector seams — the boundary where the sandbox stand-ins (file
+  * sources, the indexed parquet store) and real Pulsar/Elasticsearch
+  * bindings are interchangeable.
   *
   * The reference wires its endpoints from CLI config (args.rs: pulsar
-  * URL + topic regex in, ES URL out); this registry is the same idea at
-  * the DataFrame layer. Everything inside the seam — the message shape
-  * `(msg_id, topic, publish_time, data)`, the transform chain, bulk
-  * metrics `(index, app, written[, failed])` — is connector-agnostic, so
-  * an off-sandbox deployment registers a `pulsar` [[MessageConnector]]
-  * (spark-sql-pulsar / Kafka-compatible reader mapped to the message
-  * shape) and an `elasticsearch` [[BulkSinkConnector]]
-  * (elasticsearch-hadoop `es.resource.write = {index}`), and
-  * [[graft.streaming.StreamingSync]] runs unchanged — StreamingSyncSpec
-  * exercises the sync through these seams via the default providers. */
+  * URL + topic regex in, ES URL out). Everything inside the seam — the
+  * message shape `(msg_id, topic, publish_time, data)`, the transform
+  * chain, bulk metrics `(index, app, written[, failed])` — is
+  * connector-agnostic, so an off-sandbox deployment passes a Pulsar
+  * [[MessageConnector]] (spark-sql-pulsar / Kafka-compatible reader
+  * mapped to the message shape) and an Elasticsearch
+  * [[BulkSinkConnector]] (elasticsearch-hadoop `es.resource.write =
+  * {index}`) to [[graft.streaming.StreamingSync.start]], which runs
+  * unchanged; its defaults are the parquet stand-ins below. */
 object Connectors {
-
-  /** The full subscription descriptor a source connector receives —
-    * the seam where the reference's client connection-identity knobs
-    * (args.rs:73-123: --pulsar-addr, --pulsar-token, --consumer-name,
-    * --subscription-name, --channel-buffer-size) bind. The file
-    * stand-ins only consume `uri`/`maxBatch`; an off-sandbox Pulsar
-    * connector consumes all of them. Built from the pipeline config by
-    * [[subscriptionFor]] so the CLI surface maps 1:1 with no field
-    * dropped on the floor (StreamingSyncSpec asserts delivery). */
-  final case class Subscription(
-      uri: String,
-      maxBatch: Option[Int] = None,
-      pulsarAddr: String = "pulsar://127.0.0.1:6650",
-      pulsarToken: Option[String] = None,
-      consumerName: Option[String] = None,
-      subscriptionName: Option[String] = None,
-      channelBufferSize: Int = 2048)
-
-  /** [[Subscription]] from a [[graft.operators.SyncConfig]]: the knobs
-    * travel config → subscription → connector verbatim. */
-  def subscriptionFor(cfg: graft.operators.SyncConfig, uri: String,
-      maxBatch: Option[Int] = None): Subscription =
-    Subscription(uri, maxBatch, cfg.pulsarAddr, cfg.pulsarToken,
-      cfg.consumerName, cfg.subscriptionName, cfg.channelBufferSize)
 
   /** Source seam: a subscription yielding the canonical message stream
     * `(msg_id LONG, topic STRING, publish_time TIMESTAMP, data STRING)`.
-    * `maxBatch` is ingestion backpressure (consumer --batch-size,
-    * args.rs:101-103) in the connector's own unit — files per trigger
-    * here, messages per poll on a broker. */
+    * `readStream` receives the whole [[graft.operators.SyncConfig]], so
+    * every client connection-identity knob (args.rs:73-123:
+    * --pulsar-addr, --pulsar-token, --consumer-name, --subscription-name,
+    * --channel-buffer-size) reaches the connector; the file stand-ins
+    * ignore them, an off-sandbox Pulsar binding uses them. `maxBatch` is
+    * ingestion backpressure (consumer --batch-size, args.rs:101-103) in
+    * the connector's own unit — files per trigger here, messages per poll
+    * on a broker. */
   trait MessageConnector {
-    def name: String
-    def readStream(spark: SparkSession, uri: String,
-        maxBatch: Option[Int] = None): DataFrame
+    def readStream(spark: SparkSession, uri: String, cfg: SyncConfig,
+        maxBatch: Option[Int]): DataFrame
     def read(spark: SparkSession, uri: String): DataFrame
-    /** Open the stream from a FULL [[Subscription]] — the entry point
-      * the sync uses, so every connection-identity knob reaches the
-      * connector; the file stand-ins ignore the client fields by
-      * delegating here. */
-    def readStreamWith(spark: SparkSession, sub: Subscription): DataFrame =
-      readStream(spark, sub.uri, sub.maxBatch)
   }
 
   /** Sink seam: write one admitted micro-batch to the index target,
@@ -80,8 +54,7 @@ object Connectors {
   /** Parquet-file message stream (the driver-data stand-in for the
     * Pulsar subscription; one file = one consumer batch). */
   object ParquetMessages extends MessageConnector {
-    val name = "parquet"
-    def readStream(spark: SparkSession, uri: String,
+    def readStream(spark: SparkSession, uri: String, cfg: SyncConfig,
         maxBatch: Option[Int]): DataFrame = {
       val r = spark.readStream
         .schema(graft.streaming.StreamingSync.messageSchema)
@@ -96,8 +69,7 @@ object Connectors {
   /** JSON-lines message stream (raw byte-payload consumer analog —
     * pulsar.rs:63-69; directory name = topic). */
   object JsonLinesMessages extends MessageConnector {
-    val name = "jsonlines"
-    def readStream(spark: SparkSession, uri: String,
+    def readStream(spark: SparkSession, uri: String, cfg: SyncConfig,
         maxBatch: Option[Int]): DataFrame =
       JsonLines.readStream(spark, uri)
     def read(spark: SparkSession, uri: String): DataFrame =
@@ -115,18 +87,4 @@ object Connectors {
       graft.sinks.IndexedParquetSink.commitBatch(batch, target, isFailed,
         failedTarget, batchId)
   }
-
-  private val sources = Seq(ParquetMessages, JsonLinesMessages)
-    .map(c => c.name -> c).toMap
-  private val sinks = Seq(IndexedParquetBulk).map(c => c.name -> c).toMap
-
-  /** Resolve a source connector by config name. Off-sandbox bindings
-    * (e.g. "pulsar") register here; unknown names fail with the roster. */
-  def source(name: String): MessageConnector =
-    sources.getOrElse(name, throw new IllegalArgumentException(
-      s"unknown message connector '$name' (have: ${sources.keys.mkString(", ")})"))
-
-  def sink(name: String): BulkSinkConnector =
-    sinks.getOrElse(name, throw new IllegalArgumentException(
-      s"unknown bulk sink '$name' (have: ${sinks.keys.mkString(", ")})"))
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.streaming.StreamingSync
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -14,24 +13,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference's deserialize-error logging. */
 object JsonLines {
 
-  /** Batch read: one message per line. `topicRegex` is the reference's
-    * regex topic subscription (pulsar.rs:101-123): only messages whose
-    * derived topic matches are consumed. */
-  def read(spark: SparkSession, path: String,
-      topicRegex: Option[String] = None): DataFrame =
-    subscribe(shape(spark.read.text(path)
-      .withColumn("file", input_file_name())), topicRegex)
+  /** Batch read: one message per line. The topic subscription is
+    * [[graft.operators.SyncPipeline.subscribe]], as for every source. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    shape(spark.read.text(path).withColumn("file", input_file_name()))
 
-  /** Streaming read (file discovery = topic subscription; the regex keeps
-    * tracking NEW topic directories as they appear — the streaming analog
-    * of the reference's consumer re-discovery). */
-  def readStream(spark: SparkSession, path: String,
-      topicRegex: Option[String] = None): DataFrame =
-    subscribe(shape(spark.readStream.text(path)
-      .withColumn("file", input_file_name())), topicRegex)
-
-  private def subscribe(df: DataFrame, topicRegex: Option[String]): DataFrame =
-    topicRegex.fold(df)(p => df.filter(regexp_like(col("topic"), lit(p))))
+  /** Streaming read: file discovery picks up new topic directories as
+    * they appear (the streaming analog of the reference's consumer
+    * re-discovery). */
+  def readStream(spark: SparkSession, path: String): DataFrame =
+    shape(spark.readStream.text(path).withColumn("file", input_file_name()))
 
   private def shape(df: DataFrame): DataFrame =
     df.select(

@@ -20,8 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * es.rs sink_elasticsearch_loop) as Structured Streaming.
   *
   * Mapping: the Pulsar subscription is a streaming source over the message
-  * shape `(msg_id, topic, publish_time, data)`; the per-message transforms
-  * (filters, parse, enrich) run as narrow streaming projections; the
+  * shape `(msg_id, topic, publish_time, data)`; the per-message chain
+  * (subscribe, filters, parse, enrich, inject) is [[SyncPipeline.transform]],
+  * the plan the batch pipeline runs, as narrow streaming projections; the
   * reference's buffer_size/flush_interval buffering IS the micro-batch —
   * rate-limit admission and bulk batching are applied inside foreachBatch,
   * exactly where the reference applies them (at sink time, over the
@@ -36,17 +37,6 @@ object StreamingSync {
     StructField("publish_time", TimestampType),
     StructField("data", StringType)))
 
-  /** File-based streaming source of messages (the test stand-in for the
-    * Pulsar consumer; one file = one consumer batch). `batchFiles` bounds
-    * files per micro-batch — the analog of the reference's consumer
-    * --batch-size (args.rs:101-103), i.e. ingestion backpressure.
-    * Delegates to the [[graft.sources.Connectors]] seam: a deployment
-    * selects a different connector by config name instead of editing
-    * this file. */
-  def readMessageStream(spark: SparkSession, dir: String,
-      batchFiles: Option[Int] = None): DataFrame =
-    graft.sources.Connectors.ParquetMessages.readStream(spark, dir, batchFiles)
-
   /** Exactly-once message admission under redelivery: drop duplicate
     * msg_ids within the watermark horizon (the engine-side counterpart of
     * Pulsar's broker deduplication — the reference relies on
@@ -57,13 +47,10 @@ object StreamingSync {
     stream.withWatermark("publish_time", horizon)
       .dropDuplicates("msg_id", "publish_time")
 
-  /** The narrow transform chain shared verbatim with the batch pipeline —
-    * single source of truth for the sync semantics. */
+  /** The per-message chain, [[SyncPipeline.transform]]: the stream and
+    * the batch pipeline run the same stages in the same order. */
   def transform(cfg: SyncConfig)(stream: DataFrame): DataFrame =
-    stream.transform(SyncPipeline.globalFilter(cfg))
-      .transform(SyncPipeline.parseable)
-      .transform(SyncPipeline.namespaceFilter(cfg))
-      .transform(SyncPipeline.enrich(cfg))
+    SyncPipeline.transform(cfg)(stream)
 
   /** The session a graft streaming query runs in, checkpointed under
     * `checkpointRoot`: a clone of `spark`, so it keeps the caller's
@@ -112,7 +99,8 @@ object StreamingSync {
 
   /** Start the full sync: source → transforms → per-batch admission →
     * indexed sink. `availableNow` drains what's there and stops (tests);
-    * otherwise runs on a processing-time trigger = flush_interval. The
+    * otherwise runs on a processing-time trigger of `cfg.flushIntervalMs`
+    * (--flush-interval, args.rs:117-119). The
     * query runs in [[session]] over `<sinkPath>/_checkpoint`, so
     * `q.sparkSession` is that clone, not `spark`.
     *
@@ -127,9 +115,6 @@ object StreamingSync {
   def start(spark: SparkSession, cfg: SyncConfig, sourceDir: String,
       sinkPath: String, metricsPath: String,
       availableNow: Boolean = false,
-      // None → the config's --flush-interval (args.rs:117-119); Some(ms)
-      // remains for call sites that override per-run
-      flushIntervalMs: Option[Long] = None,
       batchFiles: Option[Int] = None,
       failedDocPattern: Option[String] = None,
       maxRetries: Int = 3,
@@ -137,13 +122,9 @@ object StreamingSync {
         graft.sources.Connectors.ParquetMessages,
       sink: graft.sources.Connectors.BulkSinkConnector =
         graft.sources.Connectors.IndexedParquetBulk): StreamingQuery = {
-    // the FULL subscription descriptor goes to the connector (r11):
-    // connection-identity knobs travel config → seam verbatim; the
-    // file stand-ins ignore the client fields, a Pulsar binding uses
-    // them
     val checkpoint = s"$sinkPath/_checkpoint"
-    val out = transform(cfg)(source.readStreamWith(session(spark, checkpoint),
-      graft.sources.Connectors.subscriptionFor(cfg, sourceDir, batchFiles)))
+    val out = SyncPipeline.transform(cfg)(
+      source.readStream(session(spark, checkpoint), sourceDir, cfg, batchFiles))
     val writer = out.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val admitted = SyncPipeline.rateLimit(cfg)(batch)
@@ -170,8 +151,7 @@ object StreamingSync {
       }
       .option("checkpointLocation", checkpoint)
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime(
-       flushIntervalMs.getOrElse(cfg.flushIntervalMs)))).start()
+     else writer.trigger(Trigger.ProcessingTime(cfg.flushIntervalMs))).start()
   }
 
   /** One batch's bulk metrics plus a `batch_id` column, written from the

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.operators.{SyncConfig, SyncPipeline}
+import graft.operators.SyncPipeline
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.functions._
 
@@ -17,12 +17,7 @@ object Throughput {
     val msgs = SparkEntry.messages(spark, sfDir)
       .crossJoin(spark.range(replicas).select(col("id").as("rep")))
       .withColumn("msg_id", col("msg_id") * replicas + col("rep")).drop("rep")
-    val cfg = SyncConfig(
-      globalFilters = Seq("\"k\": 13\\}"),
-      namespaceFilters = Map("error" -> Seq("\"k\": 9[0-9]\\}")),
-      rewriteRules = Seq(("click", "web"), ("view", "web"), ("purchase", "commerce")),
-      debugLogPatterns = Seq("\"k\": 4[0-9]\\}"))
-    val pipeline = SyncPipeline(cfg)(msgs)
+    val pipeline = SyncPipeline(SparkEntry.demoCfg)(msgs)
 
     val n = msgs.count() // warm-up + input size
     pipeline.count()     // warm-up full chain (codegen)

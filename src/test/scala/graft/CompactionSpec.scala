@@ -204,8 +204,8 @@ class CompactionSpec extends SparkSpec {
       .fold(0)(_.count(!_.startsWith(".")))
 
     feed()
-    val q = StreamingSync.start(spark, cfg, s"$tmp/src", s"$tmp/sink",
-      s"$tmp/metrics", flushIntervalMs = Some(100L), batchFiles = Some(1))
+    val q = StreamingSync.start(spark, cfg.copy(flushIntervalMs = 100L),
+      s"$tmp/src", s"$tmp/sink", s"$tmp/metrics", batchFiles = Some(1))
     @volatile var feeding = true
     val feeder = new Thread(() => while (feeding) { feed(); Thread.sleep(150) })
     // commits landed during each run; at least 3 runs, and more (up to 10)

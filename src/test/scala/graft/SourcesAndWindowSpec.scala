@@ -44,12 +44,14 @@ class SourcesAndWindowSpec extends SparkSpec {
   test("JsonLines topic-regex subscription consumes only matching topics") {
     val dir = stageJsonl()
     // batch: regex selects the web topic only (pulsar.rs:101-123 analog)
-    val web = JsonLines.read(spark, s"$dir/*/*.jsonl", Some("^w.*"))
+    def subscribe(p: String) =
+      SyncPipeline.subscribe(SyncConfig(topicRegex = Some(p))) _
+    val web = subscribe("^w.*")(JsonLines.read(spark, s"$dir/*/*.jsonl"))
     assert(web.select("topic").distinct().collect().map(_.getString(0))
       .toSet == Set("web"))
     assert(web.count() == 4)
     // streaming: same subscription over the stream source
-    val q = JsonLines.readStream(spark, s"$dir/*/*.jsonl", Some("^aud"))
+    val q = subscribe("^aud")(JsonLines.readStream(spark, s"$dir/*/*.jsonl"))
       .writeStream.format("memory").queryName("regex_stream")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
@@ -133,21 +135,15 @@ class SourcesAndWindowSpec extends SparkSpec {
     assert(started.head.waits.size == 2)
   }
 
-  test("connector registry resolves by config name; unknown names fail with roster") {
+  test("the parquet connector carries the canonical message shape") {
     import graft.sources.Connectors
-    assert(Connectors.source("parquet").name === "parquet")
-    assert(Connectors.source("jsonlines").name === "jsonlines")
-    assert(Connectors.sink("indexed-parquet").name === "indexed-parquet")
-    val e = intercept[IllegalArgumentException](Connectors.source("pulsar"))
-    assert(e.getMessage.contains("parquet"), "error must list the roster")
-    // the seam carries the canonical message shape end-to-end
     val tmp = Files.createTempDirectory("graft-conn").toString
     Tables.events(spark, sf()).limit(5)
       .select(col("event_id").as("msg_id"), col("event_type").as("topic"),
         timestamp_micros(expr("ts div 1000")).as("publish_time"),
         col("props").as("data"))
       .write.parquet(s"$tmp/msgs")
-    val msgs = Connectors.source("parquet").read(spark, s"$tmp/msgs")
+    val msgs = Connectors.ParquetMessages.read(spark, s"$tmp/msgs")
     assert(msgs.columns.toSeq ===
       Seq("msg_id", "topic", "publish_time", "data"))
     assert(msgs.count() === 5)

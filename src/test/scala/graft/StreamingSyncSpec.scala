@@ -55,6 +55,30 @@ class StreamingSyncSpec extends SparkSpec {
     // bulk metrics present and consistent with written doc count
     val metrics = spark.read.parquet(metricsDir)
     assert(metrics.agg(sum("written")).head.getLong(0) == streamed.count())
+
+    // every stage of the chain on: topic subscription over URI-shaped
+    // names, key injection under a custom name, injected namespaces
+    val chainCfg = cfg.copy(
+      topicRegex = Some("^(click|view|purchase)$"),
+      injectKey = true,
+      injectedKeyName = "__trace__",
+      injectedNamespaces = Seq("click"))
+    val uriMsgs = msgs.withColumn("topic",
+      concat(lit("persistent://t/ns/"), col("topic")))
+    uriMsgs.write.parquet(s"$tmp/uri_src")
+    StreamingSync.start(spark, chainCfg, s"$tmp/uri_src", s"$tmp/uri_sink",
+      s"$tmp/uri_metrics", availableNow = true).awaitTermination(120000)
+    def docs(df: org.apache.spark.sql.DataFrame) =
+      df.select("msg_id", "index", "app", "data").orderBy("msg_id")
+        .collect().toSeq
+    val stored = docs(graft.sinks.IndexedParquetSink.readIndexed(spark,
+      s"$tmp/uri_sink"))
+    assert(stored == docs(SyncPipeline(chainCfg)(uriMsgs)))
+    // not vacuous: the subscription dropped topics, every doc is injected
+    val indices = stored.map(_.getString(1).takeWhile(_ != '-')).toSet
+    assert(indices == Set("web", "purchase"), s"stored indices $indices")
+    assert(stored.nonEmpty &&
+      stored.forall(_.getString(3).contains("\"__trace__\": \"msg-")))
   }
 
   test("--flush-interval rides SyncConfig into the processing-time trigger") {
@@ -67,8 +91,7 @@ class StreamingSyncSpec extends SparkSpec {
         col("props").as("data"))
       .limit(50)
     msgs.write.parquet(s"$tmp/src")
-    // start WITHOUT the explicit flushIntervalMs override: the 100 ms
-    // cadence must come from the config field alone
+    // the 100 ms cadence comes from the config field alone
     val q = StreamingSync.start(spark, cfg.copy(flushIntervalMs = 100L),
       s"$tmp/src", s"$tmp/sink", s"$tmp/metrics")
     // pin the WIRING, not just "some trigger fired": the running
@@ -92,11 +115,10 @@ class StreamingSyncSpec extends SparkSpec {
   }
 
   test("connection-identity knobs travel SyncConfig → the connector seam verbatim") {
-    // r11 CLI-parity residue: the six args.rs client knobs the sandbox
-    // cannot exercise (--pulsar-addr/-token, --consumer-name,
-    // --subscription-name, --channel-buffer-size, --injected-logfile)
-    // are config fields that must REACH the provider seam, not sit
-    // inert in a struct nobody reads
+    // the six args.rs client knobs the sandbox cannot exercise
+    // (--pulsar-addr/-token, --consumer-name, --subscription-name,
+    // --channel-buffer-size, --injected-logfile) are config fields that
+    // must REACH the provider seam, not sit inert in a struct nobody reads
     import graft.sources.Connectors
     // defaults mirror args.rs:73-123 exactly
     assert(SyncConfig().pulsarAddr == "pulsar://127.0.0.1:6650")
@@ -112,27 +134,18 @@ class StreamingSyncSpec extends SparkSpec {
       subscriptionName = Some("graft-sub"),
       channelBufferSize = 4096,
       injectedLogfile = Some("/var/log/injected.log"))
-    // the builder maps config → subscription 1:1
-    assert(Connectors.subscriptionFor(idCfg, "/some/uri", Some(7)) ==
-      Connectors.Subscription("/some/uri", Some(7),
-        "pulsar://broker.example:6650", Some("tok-123"),
-        Some("graft-consumer"), Some("graft-sub"), 4096))
-    // and the RUNNING sync delivers the full descriptor to the
-    // connector: a recording wrapper around the parquet stand-in
-    var seen: Option[Connectors.Subscription] = None
+    // the RUNNING sync hands the connector its config: a recording
+    // wrapper around the parquet stand-in
+    var seen: Option[(String, SyncConfig, Option[Int])] = None
     object Recording extends Connectors.MessageConnector {
-      val name = "recording"
       def readStream(s: org.apache.spark.sql.SparkSession, uri: String,
-          maxBatch: Option[Int]): org.apache.spark.sql.DataFrame =
-        Connectors.ParquetMessages.readStream(s, uri, maxBatch)
+          c: SyncConfig, maxBatch: Option[Int]): org.apache.spark.sql.DataFrame = {
+        seen = Some((uri, c, maxBatch))
+        Connectors.ParquetMessages.readStream(s, uri, c, maxBatch)
+      }
       def read(s: org.apache.spark.sql.SparkSession,
           uri: String): org.apache.spark.sql.DataFrame =
         Connectors.ParquetMessages.read(s, uri)
-      override def readStreamWith(s: org.apache.spark.sql.SparkSession,
-          sub: Connectors.Subscription): org.apache.spark.sql.DataFrame = {
-        seen = Some(sub)
-        super.readStreamWith(s, sub)
-      }
     }
     val tmp = Files.createTempDirectory("graft-connid").toString
     Tables.events(spark, sf())
@@ -141,11 +154,11 @@ class StreamingSyncSpec extends SparkSpec {
         col("props").as("data"))
       .limit(20).write.parquet(s"$tmp/src")
     val q = StreamingSync.start(spark, idCfg, s"$tmp/src", s"$tmp/sink",
-      s"$tmp/metrics", availableNow = true, source = Recording)
+      s"$tmp/metrics", availableNow = true, batchFiles = Some(7),
+      source = Recording)
     q.awaitTermination(120000)
-    assert(seen.contains(
-      Connectors.subscriptionFor(idCfg, s"$tmp/src", None)),
-      s"connector saw $seen")
+    // the config itself, so all five client knobs, reaches the connector
+    assert(seen.contains((s"$tmp/src", idCfg, Some(7))), s"connector saw $seen")
   }
 
   test("bounded consumer batches (maxFilesPerTrigger) reach the same result") {
@@ -173,8 +186,8 @@ class StreamingSyncSpec extends SparkSpec {
         col("props").as("data")).limit(300)
     // simulate redelivery: every message delivered twice
     msgs.unionAll(msgs).write.parquet(s"$tmp/src")
-    val out = StreamingSync.dedupMessages()(
-      StreamingSync.readMessageStream(spark, s"$tmp/src"))
+    val out = StreamingSync.dedupMessages()(graft.sources.Connectors
+      .ParquetMessages.readStream(spark, s"$tmp/src", SyncConfig(), None))
     val q = out.writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
