@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -767,46 +767,36 @@ object StreamedBatch {
       })
   }
 
-  /** [[StreamingDedup.nearDupGate]] across REAL micro-batches: the
+  /** The text near-dup gate across REAL micro-batches: the
     * planted-arrival `batched` relation (doc_id, text, batch) replays
-    * one file per micro-batch, so per-bucket first-seen OWNERSHIP is
-    * decided by arrival order — first = min doc id within the bucket's
-    * EARLIEST batch, carried forward by the registry; every later
-    * (doc, bucket) pair collides. The oracle recomputes exactly that. */
+    * one file per micro-batch, each arrival keyed by its minhash band
+    * buckets ([[StreamingDedup.nearDupGate]]'s keying) into
+    * [[StreamingDedup.keyedFirstSeenGate]], so per-bucket first-seen
+    * OWNERSHIP is decided by arrival order — first = min doc id within
+    * the bucket's EARLIEST batch, carried forward by the gate's state;
+    * every later (doc, bucket) pair collides. The oracle recomputes
+    * exactly that.
+    *
+    * `registry` (bucket, first_doc) RESTARTS the gate from a flushed
+    * ownership registry: EMPTY state, each arriving (doc, bucket) pair
+    * carrying the bucket's stored first owner through the stream-static
+    * join — min per bucket first, so overlapping flushes collapse to the
+    * earliest owner — and ownership continues exactly where the flushed
+    * run stopped (`dedup_gate_evict` shares `dedup_gate_multibatch`'s SQL
+    * verbatim). `ttlMs` evicts idle buckets in-stream as the watermark
+    * advances; at ttl = nBatches − 2 batch intervals no recurrence gap
+    * can exceed ttl + one batch, so the `dedup_gate_ttl` oracle row
+    * shares `dedup_gate_multibatch`'s SQL verbatim too. */
   def nearDupCollisionsMulti(s: SparkSession, batched: DataFrame,
-      nBatches: Int): DataFrame = {
-    import s.implicits._
-    replay(s, "ndgm", Seq(perBatch(batched, nBatches, "doc_id", "text")))(
-      append { t =>
-        StreamingDedup.nearDupGate(t.stream.as[StreamingDedup.Doc])
-          .toDF().writeStream
-      })
-  }
-
-  /** [[nearDupCollisionsMulti]] RESTARTED from a flushed ownership
-    * registry — the bucket gate's state-eviction half (the line gate's
-    * lifecycle applied to the first-seen registry): the gate runs with
-    * EMPTY state, each arriving (doc, bucket) pair carries the bucket's
-    * STORED first owner via a stream-static left join against
-    * `registry` (bucket, first_doc) — min per bucket first, so
-    * overlapping flushes collapse to the earliest owner — and ownership
-    * continues exactly where the flushed run stopped
-    * (`dedup_gate_evict` shares `dedup_gate_multibatch`'s SQL
-    * verbatim). */
-  def nearDupCollisionsMultiFrom(s: SparkSession, batched: DataFrame,
-      nBatches: Int, registry: DataFrame): DataFrame =
-    replay(s, "ndgf", Seq(perBatch(batched, nBatches, "doc_id", "text")),
-      Seq(registry.select(col("bucket"), col("first_doc"))))(append { t =>
-      import t.ss.implicits._
-      val reg = t.statics.head
-        .groupBy(col("bucket")).agg(min(col("first_doc")).as("__first"))
-      val keyed = graft.operators.Dedup.minhashBuckets(t.stream)
-        .join(reg, Seq("bucket"), "left")
-        .select(col("doc_id"), col("bucket"),
-          coalesce(col("__first"), lit(Long.MaxValue)).as("first"))
-        .as[(Long, Long, Long)]
-      StreamingDedup.keyedFirstSeenGateFrom(keyed).toDF().writeStream
-    })
+      nBatches: Int, registry: Option[DataFrame] = None,
+      ttlMs: Option[Long] = None): DataFrame =
+    gateReplay(s, "ndgm", batched, nBatches, "bucket", StreamingDedup.NoOwner,
+      registry.map(_.groupBy(col("bucket"))
+        .agg(min(col("first_doc")).as("base"))), ttlMs)(
+      graft.operators.Dedup.minhashBuckets(_)) { rows =>
+      StreamingDedup.keyedFirstSeenGate(rows.withColumnRenamed("bucket", "key")
+        .as(Encoders.product[StreamingDedup.Keyed]), ttlMs)
+    }
 
   /** The LINE-BOILERPLATE gate at ingest across REAL micro-batches:
     * each arriving document splits into its fixed-window lines INSIDE
@@ -818,46 +808,62 @@ object StreamedBatch {
     * relation (doc_id, n_lines, line_id, line, kept); reassembly into
     * cleaned documents is the caller's stateless batch step — in
     * production the gated stream lands in a store and reassembly is
-    * the downstream job. */
-  def lineGatedMulti(s: SparkSession, batched: DataFrame,
-      nBatches: Int, lineLen: Int = 10, minSupport: Int = 3): DataFrame =
-    replay(s, "lng", Seq(perBatch(batched, nBatches, "doc_id", "text")))(
-      append { t =>
-        import t.ss.implicits._
-        StreamingDedup.lineSupportGate(
-          graft.operators.Dedup.docLines(t.stream, lineLen)
-            .as[StreamingDedup.LineRow],
-          minSupport).toDF().writeStream
-      })
+    * the downstream job.
+    *
+    * `registry` (line, sup) RESTARTS the gate from a flushed registry:
+    * EMPTY state, each arriving line carrying its stored support through
+    * the stream-static join (summed per line first, so a union of daily
+    * flushes is a valid input). Flush(phase-1 emissions) →
+    * restart(phase 2) replays EXACTLY like the never-flushed gate (the
+    * `dedup_lines_evict` oracle row shares `dedup_lines_stream`'s SQL
+    * verbatim) while the state store holds only phase-2 lines. `ttlMs`
+    * evicts idle lines in-stream as the watermark advances — during the
+    * replay itself, not at a flush boundary; at a ttl at or above the
+    * corpus's verdict-relevant recurrence window the emissions are
+    * unchanged (`dedup_lines_ttl`). */
+  def lineGatedMulti(s: SparkSession, batched: DataFrame, nBatches: Int,
+      registry: Option[DataFrame] = None, ttlMs: Option[Long] = None,
+      lineLen: Int = 10, minSupport: Int = 3): DataFrame =
+    gateReplay(s, "lng", batched, nBatches, "line", 0L,
+      registry.map(_.groupBy(col("line")).agg(sum(col("sup")).as("base"))),
+      ttlMs)(graft.operators.Dedup.docLines(_, lineLen)) { rows =>
+      StreamingDedup.lineSupportGate(
+        rows.as(Encoders.product[StreamingDedup.LineRow]), minSupport, ttlMs)
+    }
 
-  /** [[lineGatedMulti]] RESTARTED from a flushed registry — the state
-    * EVICTION half of the line gate's lifecycle: the gate runs with
-    * EMPTY state, each arriving line carries its stored support via a
-    * stream-static left join against `registry` (summed per line first,
-    * so a union of daily flushes is a valid input), and the verdict is
-    * stored + since-flush support
-    * ([[StreamingDedup.lineSupportGateFrom]]). Flush(phase-1 emissions)
-    * → restart(phase 2) must replay EXACTLY like the never-flushed gate
-    * (the `dedup_lines_evict` oracle row shares `dedup_lines_stream`'s
-    * SQL verbatim) while the state store holds only phase-2 lines. */
-  def lineGatedMultiFrom(s: SparkSession, batched: DataFrame,
-      nBatches: Int, registry: DataFrame, lineLen: Int = 10,
-      minSupport: Int = 3): DataFrame =
-    replay(s, "lngf", Seq(perBatch(batched, nBatches, "doc_id", "text")),
-      Seq(registry.select(col("line"), col("sup"))))(append { t =>
-      import t.ss.implicits._
-      val base = t.statics.head
-        .groupBy(col("line")).agg(sum(col("sup")).as("__base"))
-      val withBase = graft.operators.Dedup.docLines(t.stream, lineLen)
-        .join(base, Seq("line"), "left")
-        .select(col("doc_id"), col("n_lines"), col("line_id"),
-          col("line"), coalesce(col("__base"), lit(0L)).as("base"))
-        .as[StreamingDedup.LineRowBase]
-      StreamingDedup.lineSupportGateFrom(withBase, minSupport)
-        .toDF().writeStream
+  /** The dedup gates' replay: `batched` (doc_id, text, batch) replays
+    * one file per micro-batch — on the [[ttlTimeline]] when `ttlMs` is
+    * set — and `keyOf` turns each arriving (doc_id, text) batch into the
+    * gate's rows. Each row gains `ts`, its event time by doc id under a
+    * ttl ([[ttlTimes]]) and null without, and `base`: its `key`'s stored
+    * value in `registry` (key, base — one row per key, the replay's one
+    * static input) through a stream-static left join, `noBase` where the
+    * registry has none or there is no registry. The TTL sentinel's rows
+    * are dropped from `gate`'s output. */
+  private def gateReplay(s: SparkSession, name: String, batched: DataFrame,
+      nBatches: Int, key: String, noBase: Long, registry: Option[DataFrame],
+      ttlMs: Option[Long])(keyOf: DataFrame => DataFrame)(
+      gate: DataFrame => Dataset[_]): DataFrame = {
+    val src = if (ttlMs.isDefined) ttlTimeline(batched, nBatches)
+      else perBatch(batched, nBatches, "doc_id", "text")
+    replay(s, name, Seq(src), registry.toSeq)(append { t =>
+      val keyed = keyOf(t.stream.select(col("doc_id"), col("text")))
+      val timed = if (ttlMs.isDefined) keyed.join(ttlTimes(t), "doc_id")
+        else keyed.withColumn("ts", lit(null).cast("timestamp"))
+      val rows = t.statics.headOption.fold(
+          timed.withColumn("base", lit(noBase))) { reg =>
+        timed.join(reg, Seq(key), "left")
+          .withColumn("base", coalesce(col("base"), lit(noBase)))
+      }
+      val out = gate(rows).toDF()
+      (if (ttlMs.isDefined) out.filter(col("doc_id") >= 0) else out)
+        .writeStream
     })
+  }
 
-  private val ttlInterval = 60000L
+  /** The TTL replays' batch interval: data in batch b has event time
+    * (b + 1) · this many milliseconds. */
+  val batchIntervalMs = 60000L
 
   /** Event-time base + watermark-advancing SENTINEL shared by the TTL
     * replays: every data row gets ts = batch · 1 min, and ONE sentinel
@@ -877,11 +883,11 @@ object StreamedBatch {
         .select(lit(-1L).as("doc_id"), lit(sentinelText).as("text"),
           lit(nBatches.toLong).as("batch")))
       .withColumn("ts", expr(
-        s"timestamp_millis(CASE WHEN doc_id < 0 THEN ${3600L * ttlInterval} " +
+        s"timestamp_millis(CASE WHEN doc_id < 0 THEN ${3600L * batchIntervalMs} " +
           // batch + 1, NOT batch: the first batch must sit strictly
           // above the INITIAL watermark (0) — a ts equal to the
           // watermark is dropped as late by the stateful operator
-          s"ELSE (batch + 1) * $ttlInterval END)"))
+          s"ELSE (batch + 1) * $batchIntervalMs END)"))
     perBatch(timeline, nBatches + 1, "doc_id", "text", "ts")
   }
 
@@ -890,106 +896,6 @@ object StreamedBatch {
     * side is the same one-file-per-batch source directory. */
   private def ttlTimes(t: Twin): DataFrame =
     t.ss.read.parquet(t.srcDirs.head).select(col("doc_id"), col("ts"))
-
-  /** [[lineGatedMulti]] through the EventTimeTimeout gate
-    * ([[StreamingDedup.lineSupportGateTtl]], ttl = `ttlBatches` batch
-    * intervals): support rows leave the state store IN-STREAM as the
-    * watermark advances — during the replay itself, not at a flush
-    * boundary — and the sentinel batch drains the rest before
-    * termination. With a ttl at or above the corpus's verdict-relevant
-    * recurrence window the emissions are EXACTLY [[lineGatedMulti]]'s
-    * (the `dedup_lines_ttl` oracle row shares `dedup_lines_stream`'s
-    * SQL verbatim). */
-  def lineGatedTtlMulti(s: SparkSession, batched: DataFrame,
-      nBatches: Int, ttlBatches: Int, lineLen: Int = 10,
-      minSupport: Int = 3): DataFrame =
-    replay(s, "lngt", Seq(ttlTimeline(batched, nBatches)))(append { t =>
-      import t.ss.implicits._
-      val rows = graft.operators.Dedup.docLines(t.stream, lineLen)
-        .join(ttlTimes(t), "doc_id")
-        .select(col("doc_id"), col("n_lines"), col("line_id"),
-          col("line"), col("ts"))
-        .as[StreamingDedup.LineRowT]
-      StreamingDedup.lineSupportGateTtl(rows,
-          ttlMs = ttlBatches * ttlInterval, minSupport = minSupport)
-        .filter(col("doc_id") >= 0)
-        .toDF().writeStream
-    })
-
-  /** [[nearDupCollisionsMulti]] through the EventTimeTimeout gate
-    * ([[StreamingDedup.keyedFirstSeenGateTtl]], ttl = `ttlBatches`
-    * batch intervals). ttlBatches = nBatches − 2 is UNIVERSALLY
-    * ownership-invariant on an nBatches replay (no recurrence gap can
-    * exceed nBatches − 1 intervals ≤ ttl + 1 batch), so the
-    * `dedup_gate_ttl` oracle row shares `dedup_gate_multibatch`'s SQL
-    * verbatim while buckets idle past the ttl leave the store
-    * in-stream. */
-  def nearDupCollisionsTtlMulti(s: SparkSession, batched: DataFrame,
-      nBatches: Int, ttlBatches: Int): DataFrame =
-    replay(s, "ndgt", Seq(ttlTimeline(batched, nBatches)))(append { t =>
-      import t.ss.implicits._
-      val keyed = graft.operators.Dedup
-        .minhashBuckets(t.stream.select(col("doc_id"), col("text")))
-        .join(ttlTimes(t), "doc_id")
-        .select(col("doc_id"), col("bucket").as("key"), col("ts"))
-        .as[StreamingDedup.KeyedT]
-      StreamingDedup.keyedFirstSeenGateTtl(keyed,
-          ttlMs = ttlBatches * ttlInterval)
-        .filter(col("doc_id") >= 0)
-        .toDF().writeStream
-    })
-
-  /** The COMPOSED production lifecycle runner for the bucket gate:
-    * phase-2 replay through
-    * [[StreamingDedup.keyedFirstSeenGateTtlFrom]] — every arrival
-    * carries its stored owner from `registry` via the stream-static
-    * join AND idle keys evict in-stream as the watermark advances, so
-    * the store holds only ttl-active keys while evicted registry
-    * ownership re-seeds losslessly on the next arrival. */
-  def nearDupCollisionsTtlMultiFrom(s: SparkSession, batched: DataFrame,
-      nBatches: Int, registry: DataFrame, ttlMs: Long): DataFrame =
-    replay(s, "ndgtf", Seq(ttlTimeline(batched, nBatches)),
-      Seq(registry.select(col("bucket"), col("first_doc"))))(append { t =>
-      import t.ss.implicits._
-      val reg = t.statics.head
-        .groupBy(col("bucket")).agg(min(col("first_doc")).as("__first"))
-      val keyed = graft.operators.Dedup
-        .minhashBuckets(t.stream.select(col("doc_id"), col("text")))
-        .join(ttlTimes(t), "doc_id")
-        .join(reg, Seq("bucket"), "left")
-        .select(col("doc_id"), col("bucket").as("key"),
-          coalesce(col("__first"), lit(Long.MaxValue)).as("base"),
-          col("ts"))
-        .as[StreamingDedup.KeyedBT]
-      StreamingDedup.keyedFirstSeenGateTtlFrom(keyed, ttlMs)
-        .filter(col("doc_id") >= 0)
-        .toDF().writeStream
-    })
-
-  /** The COMPOSED production lifecycle runner for the line gate:
-    * phase-2 replay through [[StreamingDedup.lineSupportGateTtlFrom]] —
-    * stored support joins in as the verdict base AND idle lines evict
-    * in-stream, so the store is O(ttl-active lines) while long-horizon
-    * support lives in the registry. */
-  def lineGatedTtlMultiFrom(s: SparkSession, batched: DataFrame,
-      nBatches: Int, registry: DataFrame, ttlMs: Long, lineLen: Int = 10,
-      minSupport: Int = 3): DataFrame =
-    replay(s, "lngtf", Seq(ttlTimeline(batched, nBatches)),
-      Seq(registry.select(col("line"), col("sup"))))(append { t =>
-      import t.ss.implicits._
-      val base = t.statics.head
-        .groupBy(col("line")).agg(sum(col("sup")).as("__base"))
-      val rows = graft.operators.Dedup.docLines(t.stream, lineLen)
-        .join(ttlTimes(t), "doc_id")
-        .join(base, Seq("line"), "left")
-        .select(col("doc_id"), col("n_lines"), col("line_id"),
-          col("line"), coalesce(col("__base"), lit(0L)).as("base"),
-          col("ts"))
-        .as[StreamingDedup.LineRowBaseT]
-      StreamingDedup.lineSupportGateTtlFrom(rows, ttlMs, minSupport)
-        .filter(col("doc_id") >= 0)
-        .toDF().writeStream
-    })
 
   /** The image near-dup gate AT INGEST across REAL micro-batches:
     * doc ids replay one file per micro-batch (batch = id mod 3, an
@@ -1008,7 +914,7 @@ object StreamedBatch {
           val payload = graft.operators.Multimodal.synthesizeBmp(id % 97)
           val ph = graft.operators.Multimodal.perceptualHash(payload)
             .map(_._3).getOrElse(0L)
-          (id, ph)
+          StreamingDedup.Keyed(id, ph)
         })
       StreamingDedup.keyedFirstSeenGate(keyed).toDF().writeStream
     })
@@ -1020,15 +926,12 @@ object StreamedBatch {
     * arrives. Input `docs`: (doc_id, text, batch). */
   def templateCollisionsMulti(s: SparkSession, docs: DataFrame,
       nBatches: Int): DataFrame =
-    replay(s, "tmplg", Seq(perBatch(docs, nBatches, "doc_id", "text")))(
-      append { t =>
-        import t.ss.implicits._
-        val keyed = t.stream
-          .select(col("doc_id"), graft.plans.native.poly_hash(
-            regexp_replace(col("text"), "[0-9]+", "#")).as("k"))
-          .as[(Long, Long)]
-        StreamingDedup.keyedFirstSeenGate(keyed).toDF().writeStream
-      })
+    gateReplay(s, "tmplg", docs, nBatches, "key", StreamingDedup.NoOwner,
+      None, None)(_.select(col("doc_id"), graft.plans.native.poly_hash(
+        regexp_replace(col("text"), "[0-9]+", "#")).as("key"))) { rows =>
+      StreamingDedup.keyedFirstSeenGate(
+        rows.as(Encoders.product[StreamingDedup.Keyed]))
+    }
 
   /** [[StreamingDedup.nearDupGate]] fed `(doc_id, text)`: one
     * micro-batch + empty registry flags exactly the batch relation —

@@ -106,18 +106,21 @@ class StreamingDedupSpec extends SparkSpec {
       // a drop-everything threshold fails at plan-build time
       intercept[IllegalArgumentException](
         StreamingDedup.lineSupportGate(ms.toDS(), minSupport = 1))
+      // and so does a ttl that would evict state in its own batch
+      intercept[IllegalArgumentException](
+        StreamingDedup.lineSupportGate(ms.toDS(), ttlMs = Some(0L)))
     } finally q.stop()
   }
 
   test("keyed gate eviction: stored-owner restart — state shrinks, collisions identical") {
-    // r11: the first-seen registry's state is bounded the same way as
-    // the line gate's — persist the per-key replay owner (the stored
-    // bucket index), restart keyedFirstSeenGateFrom with empty state.
+    // the first-seen registry's state is bounded the same way as the
+    // line gate's — persist the per-key replay owner (the stored bucket
+    // index), restart keyedFirstSeenGate with empty state seeded by it.
     // Keys: 100 owned by doc 1 (batch 1), 200 owned by doc 4 (batch 2),
     // 300 first touched only in batch 3.
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import StreamingDedup.Collision
+    import StreamingDedup.{Collision, Keyed}
     val b1 = Seq((1L, 100L), (2L, 100L))
     val b2 = Seq((4L, 200L), (3L, 100L))
     // B3 leaves key 100 untouched, so the restarted store must be
@@ -125,12 +128,14 @@ class StreamingDedupSpec extends SparkSpec {
     val b3 = Seq((8L, 200L), (7L, 300L), (6L, 300L))
 
     // control: never-flushed gate over all three batches
-    val msC = MemoryStream[(Long, Long)]
+    def keyed(b: Seq[(Long, Long)]) = b.map { case (d, k) => Keyed(d, k) }
+    val msC = MemoryStream[Keyed]
     val qC = StreamingDedup.keyedFirstSeenGate(msC.toDS())
       .writeStream.format("memory").queryName("kfs_ctl")
       .outputMode("append").start()
     val ctl3 = try {
-      Seq(b1, b2, b3).foreach { b => msC.addData(b); qC.processAllAvailable() }
+      Seq(b1, b2, b3).foreach { b =>
+        msC.addData(keyed(b)); qC.processAllAvailable() }
       assert(stateRows(qC) == 3L, s"control state ${stateRows(qC)} != 3 keys ever")
       spark.table("kfs_ctl").as[Collision].collect()
         .filter(_.doc_id >= 6).toSet
@@ -140,22 +145,23 @@ class StreamingDedupSpec extends SparkSpec {
     // owner per key (computable from the inputs — owners are silent in
     // the emissions, so the index comes from the sink side, not the
     // collision stream); restart for B3 seeded by it
-    val ms1 = MemoryStream[(Long, Long)]
+    val ms1 = MemoryStream[Keyed]
     val q1 = StreamingDedup.keyedFirstSeenGate(ms1.toDS())
       .writeStream.format("memory").queryName("kfs_ph1")
       .outputMode("append").start()
     try {
-      Seq(b1, b2).foreach { b => ms1.addData(b); q1.processAllAvailable() }
+      Seq(b1, b2).foreach { b =>
+        ms1.addData(keyed(b)); q1.processAllAvailable() }
     } finally q1.stop()
     val owners = Map(100L -> 1L, 200L -> 4L) // min (batch, doc) per key
 
-    val ms2 = MemoryStream[(Long, Long, Long)]
-    val q2 = StreamingDedup.keyedFirstSeenGateFrom(ms2.toDS())
+    val ms2 = MemoryStream[Keyed]
+    val q2 = StreamingDedup.keyedFirstSeenGate(ms2.toDS())
       .writeStream.format("memory").queryName("kfs_ph2")
       .outputMode("append").start()
     try {
       ms2.addData(b3.map { case (d, k) =>
-        (d, k, owners.getOrElse(k, Long.MaxValue)) })
+        Keyed(d, k, owners.getOrElse(k, StreamingDedup.NoOwner)) })
       q2.processAllAvailable()
       val evicted = spark.table("kfs_ph2").as[Collision].collect().toSet
       assert(evicted == ctl3,
@@ -171,7 +177,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("line gate TTL: watermark-driven eviction — parity at safe ttl, flip at short ttl") {
-    // r12 (VERDICT #1): EventTimeTimeout evicts support rows IN-STREAM,
+    // EventTimeTimeout evicts support rows IN-STREAM,
     // deterministically (watermark-driven — no wall clock; timeouts
     // fire PROMPTLY in a no-data batch as soon as the committed
     // watermark passes them, so a key survives to its recurrence iff
@@ -180,13 +186,16 @@ class StreamingDedupSpec extends SparkSpec {
     // horizon and verdicts equal the NoTimeout gate's; at ttl = 1 the
     // eviction lands between "q q" crossing minSupport and its
     // recurrence, and the verdict FLIPS — the flip is the proof that
-    // state really left the store mid-query.
+    // state really left the store mid-query. A third run keeps the
+    // short ttl but gives "q q" a stored registry base of 3: its state
+    // still evicts, yet doc 9 stays dropped — the registry makes the
+    // eviction lossless.
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import StreamingDedup.{LineGated, LineRowT}
+    import StreamingDedup.{LineGated, LineRow}
     val B = 60000L
     def lr(d: Long, l: String, batch: Long) =
-      LineRowT(d, 1L, 0L, l, new java.sql.Timestamp(batch * B))
+      LineRow(d, 1L, 0L, l, ts = new java.sql.Timestamp(batch * B))
     val batches = Seq(
       Seq(lr(1, "q q", 1), lr(2, "q q", 1), lr(3, "q q", 1),
         lr(1, "u u", 1)),                      // q q crosses 3; u u unique
@@ -194,14 +203,18 @@ class StreamingDedupSpec extends SparkSpec {
       Seq(lr(5, "f2 f2", 3)),                  // ttl=1: q q evicts after
       Seq(lr(6, "f3 f3", 4)),                  //   this watermark commit
       Seq(lr(9, "q q", 5)))                    // recurrence after eviction
-    def run(ttlBatches: Long, name: String): (Map[Long, Boolean], Long) = {
-      val ms = MemoryStream[LineRowT]
-      val q = StreamingDedup.lineSupportGateTtl(ms.toDS(),
-          ttlMs = ttlBatches * B, minSupport = 3)
+    def run(ttlBatches: Long, name: String,
+        base: String => Long = _ => 0L): (Map[Long, Boolean], Long) = {
+      val ms = MemoryStream[LineRow]
+      val q = StreamingDedup.lineSupportGate(ms.toDS(), minSupport = 3,
+          ttlMs = Some(ttlBatches * B))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
-        batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+        batches.foreach { b =>
+          ms.addData(b.map(r => r.copy(base = base(r.line))))
+          q.processAllAvailable()
+        }
         val out = spark.table(name).as[LineGated].collect()
           .filter(_.line == "q q").map(g => g.doc_id -> g.kept).toMap
         val fin = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
@@ -210,29 +223,33 @@ class StreamingDedupSpec extends SparkSpec {
     }
     val (safe, finSafe) = run(3L, "lngt_safe")
     val (short, _) = run(1L, "lngt_short")
+    val (stored, _) = run(1L, "lngt_stored",
+      base = l => if (l == "q q") 3L else 0L)
     // batch-1 instances always pass (nothing seen before)
     assert(Seq(1L, 2L, 3L).forall(d => safe(d) && short(d)))
     // safe ttl ≡ NoTimeout semantics: support 3 survives to doc 9
     assert(!safe(9L), "safe-ttl gate forgot q q's support")
     // short ttl: the eviction between crossing and recurrence FLIPS it
     assert(short(9L), "short-ttl gate failed to evict q q mid-query")
+    // short ttl + registry: the stored support survives the eviction
+    assert(!stored(9L), "registry base did not survive q q's eviction")
     // and the safe run still evicted dead lines: by the last batch the
     // store holds fewer rows than the 5 distinct lines ever seen
     assert(finSafe < 5L, s"safe-ttl store never shrank: $finSafe rows")
   }
 
   test("keyed gate TTL: watermark-driven eviction — ownership parity at safe ttl, flip at short ttl") {
-    // r12 (VERDICT #1), first-seen registry face: ttl = 3 intervals is
+    // first-seen registry face: ttl = 3 intervals is
     // the UNIVERSAL n−2 bound for this 5-batch layout (no recurrence
     // gap exceeds ttl + 1 batch), so ownership equals the NoTimeout
     // gate's; ttl = 1 evicts key 100's owner before its recurrence and
     // doc 9 silently becomes the new owner (no collision emitted).
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import StreamingDedup.{Collision, KeyedT}
+    import StreamingDedup.{Collision, Keyed}
     val B = 60000L
     def kt(d: Long, k: Long, batch: Long) =
-      KeyedT(d, k, new java.sql.Timestamp(batch * B))
+      Keyed(d, k, ts = new java.sql.Timestamp(batch * B))
     val batches = Seq(
       Seq(kt(1, 100, 1), kt(2, 100, 1)),   // owner 1, collision (2,100,1)
       Seq(kt(4, 300, 2)),                  // fillers advance the watermark
@@ -242,9 +259,9 @@ class StreamingDedupSpec extends SparkSpec {
       Seq(kt(10, 303, 9)))                 // far-forward watermark jump:
                                            //   drains every idle key
     def run(ttlBatches: Long, name: String): (Set[(Long, Long)], Long) = {
-      val ms = MemoryStream[KeyedT]
-      val q = StreamingDedup.keyedFirstSeenGateTtl(ms.toDS(),
-          ttlMs = ttlBatches * B)
+      val ms = MemoryStream[Keyed]
+      val q = StreamingDedup.keyedFirstSeenGate(ms.toDS(),
+          ttlMs = Some(ttlBatches * B))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -267,7 +284,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("keyed gate TTL+registry: evicting a stored-owner key is lossless; removals measured") {
-    // r12, the COMPOSED lifecycle: key 100's owner lives in the stored
+    // the COMPOSED lifecycle: key 100's owner lives in the stored
     // registry (base = 1 joins in on every arrival), so evicting its
     // state row is harmless — the recurrence re-seeds owner 1 from
     // base and collides correctly, while the progress metrics prove
@@ -276,18 +293,18 @@ class StreamingDedupSpec extends SparkSpec {
     // in the plain TTL test.)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import StreamingDedup.{Collision, KeyedBT}
+    import StreamingDedup.{Collision, Keyed}
     val B = 60000L
     def kt(d: Long, k: Long, base: Long, batch: Long) =
-      KeyedBT(d, k, base, new java.sql.Timestamp(batch * B))
-    val MV = Long.MaxValue
+      Keyed(d, k, base, new java.sql.Timestamp(batch * B))
+    val MV = StreamingDedup.NoOwner
     val batches = Seq(
       Seq(kt(2, 100, 1, 1)),               // stored owner 1 → (2,100,1)
       Seq(kt(4, 300, MV, 2)),              // fillers advance the watermark
       Seq(kt(5, 301, MV, 3)),              // → key 100 evicts (ttl = 1)
       Seq(kt(9, 100, 1, 4)))               // re-seeds owner 1 from base
-    val ms = MemoryStream[KeyedBT]
-    val q = StreamingDedup.keyedFirstSeenGateTtlFrom(ms.toDS(), ttlMs = B)
+    val ms = MemoryStream[Keyed]
+    val q = StreamingDedup.keyedFirstSeenGate(ms.toDS(), ttlMs = Some(B))
       .writeStream.format("memory").queryName("kfst_reg")
       .outputMode("append").start()
     try {
@@ -304,7 +321,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("line gate eviction: flush to registry + restart — state shrinks, verdicts identical") {
-    // r11 (VERDICT #2): the gate's state is bounded by FLUSHING it into
+    // the gate's state is bounded by FLUSHING it into
     // the stored registry (registryFold of the emissions — C197 proves
     // fold ≡ batch lineSupport) and restarting the gate with EMPTY
     // state seeded by the registry. Replay batches B1, B2, B3 both ways:
@@ -313,7 +330,7 @@ class StreamingDedupSpec extends SparkSpec {
     // the never-flushed gate accumulated.
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import StreamingDedup.{LineGated, LineRow, LineRowBase}
+    import StreamingDedup.{LineGated, LineRow}
     def lr(d: Long, lid: Long, l: String) = LineRow(d, 1L, lid, l)
     val b1 = Seq(lr(1, 0, "h h"), lr(2, 0, "h h"), lr(3, 0, "h h"),
       lr(1, 1, "x y"), lr(2, 1, "a b"))
@@ -347,13 +364,12 @@ class StreamingDedupSpec extends SparkSpec {
     // the flushed registry is the exact batch support of B1 ∪ B2
     assert(reg == Map("h h" -> 4L, "x y" -> 2L, "a b" -> 1L), reg.toString)
 
-    val ms2 = MemoryStream[LineRowBase]
-    val q2 = StreamingDedup.lineSupportGateFrom(ms2.toDS(), minSupport = 3)
+    val ms2 = MemoryStream[LineRow]
+    val q2 = StreamingDedup.lineSupportGate(ms2.toDS(), minSupport = 3)
       .writeStream.format("memory").queryName("lng_ph2")
       .outputMode("append").start()
     try {
-      ms2.addData(b3.map(r => LineRowBase(r.doc_id, r.n_lines, r.line_id,
-        r.line, reg.getOrElse(r.line, 0L))))
+      ms2.addData(b3.map(r => r.copy(base = reg.getOrElse(r.line, 0L))))
       q2.processAllAvailable()
       val evicted = spark.table("lng_ph2").as[LineGated].collect()
         .map(g => (g.doc_id, g.line_id) -> g.kept).toMap

@@ -103,11 +103,11 @@ class StreamedBatchSpec extends SparkSpec {
     assert(out.count() == 2)
     assert(staticFiles.nonEmpty && staticFiles.forall(_.contains("-twin")))
     assert(staticFiles.forall(f => !new java.io.File(new java.net.URI(f)).exists()))
-    // the public *From twins go through the same path
+    // the public runners' registry path goes through the same copy
     val docs = Seq((1L, "a b c d e f g h i j k l", 0L),
       (2L, "a b c d e f g h i j k l", 1L)).toDF("doc_id", "text", "batch")
-    StreamedBatch.lineGatedMultiFrom(spark, docs, nBatches = 2,
-      registry = reg).collect()
+    StreamedBatch.lineGatedMulti(spark, docs, nBatches = 2,
+      registry = Some(reg)).collect()
     assert(scratchDirs() == dirs0)
   }
 
