@@ -1,17 +1,20 @@
 #!/bin/bash
-# Replay-row A/B of graft.Bench: alternates two checkouts, RUNS runs each,
-# every run restricted to the streaming-replay rows (the rows whose timed
-# run ticks StreamedBatch.replayRuns, as Bench classifies them). $ROOT holds
-# parent/ (git archive of the parent commit) and change/; each run appends
+# Bench A/B of two checkouts: alternates parent/ and change/ under $ROOT
+# (e.g. git archive of the parent commit and of the change), RUNS runs
+# each, every run restricted to the ROWS subset of Bench rows (default:
+# the streaming-replay rows, the rows whose timed run ticks
+# StreamedBatch.replayRuns, as Bench classifies them). Each run appends
 # one line {"side", "run", "result"} to $OUT, where result is Bench's full
-# JSON line (per-query medians over its sweeps, replay_total, ...). Odd runs
-# start with the parent, even runs with the change. Then prints the
-# replay_total median and quartiles per side. Bench's own knobs pass
-# through, e.g. SPARK_GRAFT_BENCH_SWEEPS=1 for one sweep per run; sbt
-# needs the offline SBT_OPTS of ROADMAP's tier-1 line. ROWS (comma-separated
-# Bench row names) restricts the runs to a subset; it defaults to every
-# replay row.
-#   ROOT=<dir> SF_DIR=<sf0.01 test data> [ROWS=a,b,...] plans/pr4/replay_ab.sh
+# JSON line (per-query medians over its sweeps, batch_total,
+# replay_total, ...). Odd runs start with the parent, even runs with the
+# change; the two lines of one run form a pair. Then prints, for
+# batch_total and for replay_total, the median and quartiles per side and
+# a paired summary: the median over pairs of (change - parent) and the
+# number of pairs the change won (ran faster). A row subset of batch rows
+# reads batch_total, a subset of replay rows replay_total. Bench's own
+# knobs pass through, e.g. SPARK_GRAFT_BENCH_SWEEPS=1 for one sweep per
+# run; sbt needs the offline SBT_OPTS of ROADMAP's tier-1 line.
+#   ROOT=<dir> SF_DIR=<sf0.01 test data> [ROWS=a,b,...] [RUNS=n] plans/pr4/replay_ab.sh
 OUT=${OUT:-replay_runs.jsonl}
 ROOT=$(cd "${ROOT:-..}" && pwd)
 RUNS=${RUNS:-3}
@@ -32,12 +35,24 @@ done
 python3 - "$OUT" <<'PY'
 import json, statistics, sys
 runs = [json.loads(l) for l in open(sys.argv[1])]
-for side in ("parent", "change"):
-    v = sorted(r["result"]["replay_total"] for r in runs
-               if r["side"] == side and r["result"])
-    if len(v) < 2:
-        print(side, v); continue
-    q = statistics.quantiles(v, n=4, method="inclusive")
-    print(f"{side}: replay_total median {statistics.median(v):.1f} s "
-          f"[{q[0]:.1f}-{q[2]:.1f}] over {len(v)} runs: {v}")
+# consecutive parent/change lines of the same run are one pair
+pairs = [(a, b) for a, b in zip(runs[::2], runs[1::2])
+         if a["run"] == b["run"] and {a["side"], b["side"]} == {"parent", "change"}
+         and a["result"] and b["result"]]
+for metric in ("batch_total", "replay_total"):
+    for side in ("parent", "change"):
+        v = sorted(r["result"][metric] for r in runs
+                   if r["side"] == side and r["result"])
+        if len(v) < 2:
+            print(metric, side, v); continue
+        q = statistics.quantiles(v, n=4, method="inclusive")
+        print(f"{side}: {metric} median {statistics.median(v):.2f} s "
+              f"[{q[0]:.2f}-{q[2]:.2f}] over {len(v)} runs: {v}")
+    d = [next(r for r in p if r["side"] == "change")["result"][metric]
+         - next(r for r in p if r["side"] == "parent")["result"][metric]
+         for p in pairs]
+    if d:
+        print(f"paired: {metric} median (change - parent) "
+              f"{statistics.median(d):+.2f} s over {len(d)} pairs; "
+              f"change won {sum(x < 0 for x in d)}/{len(d)}")
 PY

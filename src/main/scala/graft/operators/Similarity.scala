@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.Portable
 import graft.plans.HashOps
+import graft.plans.TopKAggregator.topK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -21,7 +22,7 @@ object Similarity {
 
   /** Deterministic PLANTED-CLUSTER embeddings derived from `vec_id` —
     * the honest-recall testbed the near-uniform synthetic embeddings
-    * can't be (they cap every ANN recall number; r6 verdict #3):
+    * can't be (they cap every ANN recall number):
     * cluster = vec_id mod 7 (coprime with the stride-32 centroid
     * sampling, so the sampled centroids cover every cluster), center
     * coordinates hash-seeded per (cluster, dim), perturbation ±1/32
@@ -48,44 +49,46 @@ object Similarity {
     * reference formula Portable.cosine is parity-tested against it). */
   def cosineCol(a: Column, b: Column): Column = graft.plans.native.cosine_sim(a, b)
 
+  /** The broadcast-probe brute-force scan: every probe (`probePred`)
+    * against every other corpus vector in one pass, as (key, id, score)
+    * rows with score = `score(probe_vec, cand_vec)`. Probes are
+    * broadcast; the corpus is never shuffled. */
+  private def probeScan(emb: DataFrame, probePred: Column, idCol: String,
+      vecCol: String)(score: (Column, Column) => Column): DataFrame = {
+    val probes = emb.filter(probePred)
+      .select(col(idCol).as("key"), col(vecCol).as("probe_vec"))
+    emb.select(col(idCol).as("id"), col(vecCol).as("cand_vec"))
+      .join(broadcast(probes), col("key") =!= col("id"))
+      .select(col("key"), col("id"),
+        score(col("probe_vec"), col("cand_vec")).as("score"))
+  }
+
+  /** (key, id, score) rows as (probe_id, cand_id, `out`). */
+  private def probeCand(df: DataFrame, out: Column): DataFrame =
+    df.select(col("key").as("probe_id"), col("id").as("cand_id"), out)
+
   /** Brute-force top-k neighbors for each probe vector. Probes are
     * broadcast; scores computed in one corpus scan. */
   def cosineTopK(emb: DataFrame, probePred: Column, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probes = emb.filter(probePred)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))
-    val corpus = emb.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("cand_id"))
-    corpus.join(broadcast(probes), col("probe_id") =!= col("cand_id"))
-      .withColumn("cos", cosineCol(col("probe_vec"), col("cand_vec")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("cand_id"), round(col("cos"), 6).as("cosine"))
+    val w = Window.partitionBy(col("key"))
+      .orderBy(col("score").desc, col("id"))
+    probeCand(probeScan(emb, probePred, idCol, vecCol)(cosineCol)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= k),
+      round(col("score"), 6).as("cosine"))
   }
 
   /** [[cosineTopK]] with the shuffle-light physical shape: per-probe
     * bounded heaps via [[graft.plans.TopKAggregator]] — map-side partial
     * heaps mean the shuffle carries ≤ k rows per (probe, partition)
     * instead of the whole scored corpus (the window formulation sorts
-    * every scored row). Identical output (TopKSpec + oracle). */
+    * every scored row). Identical output (TopKAndExtensionsSpec +
+    * oracle). */
   def cosineTopKAgg(emb: DataFrame, probePred: Column, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val probes = emb.filter(probePred)
-      .select(col(idCol).as("key"), col(vecCol).as("probe_vec"))
-    val scored = emb.select(col(idCol).as("id"), col(vecCol).as("cand_vec"))
-      .join(broadcast(probes), col("key") =!= col("id"))
-      .select(col("key"), col("id"),
-        cosineCol(col("probe_vec"), col("cand_vec")).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
-      .toDF("probe_id", "cand_id", "cos")
-      .select(col("probe_id"), col("cand_id"), round(col("cos"), 6).as("cosine"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    probeCand(topK(probeScan(emb, probePred, idCol, vecCol)(cosineCol), k),
+      round(col("score"), 6).as("cosine"))
 
   /** Maximum-inner-product top-k (MIPS — the retrieval mode of dual-
     * encoder rankers whose scores are unnormalized dot products; cosine
@@ -94,23 +97,10 @@ object Similarity {
     * [[cosineTopKAgg]]; the score is the native sequential-fold dot
     * product, so both engines fold in index order. */
   def mipsTopKAgg(emb: DataFrame, probePred: Column, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val probes = emb.filter(probePred)
-      .select(col(idCol).as("key"), col(vecCol).as("probe_vec"))
-    val scored = emb.select(col(idCol).as("id"), col(vecCol).as("cand_vec"))
-      .join(broadcast(probes), col("key") =!= col("id"))
-      .select(col("key"), col("id"),
-        graft.plans.native.dot_product(col("probe_vec"), col("cand_vec"))
-          .as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
-      .toDF("probe_id", "cand_id", "ip")
-      .select(col("probe_id"), col("cand_id"), round(col("ip"), 6).as("dot"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    probeCand(topK(probeScan(emb, probePred, idCol, vecCol)(
+        graft.plans.native.dot_product), k),
+      round(col("score"), 6).as("dot"))
 
   /** Euclidean nearest-k — completes the metric trio beside
     * [[cosineTopKAgg]] and [[mipsTopKAgg]]: the heap maximizes
@@ -119,24 +109,10 @@ object Similarity {
     * sequential-fold squared distance. Same broadcast-probe
     * single-scan + bounded-heap shape. */
   def l2TopKAgg(emb: DataFrame, probePred: Column, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val probes = emb.filter(probePred)
-      .select(col(idCol).as("key"), col(vecCol).as("probe_vec"))
-    val scored = emb.select(col(idCol).as("id"), col(vecCol).as("cand_vec"))
-      .join(broadcast(probes), col("key") =!= col("id"))
-      .select(col("key"), col("id"),
-        (-graft.plans.native.l2sq(col("probe_vec"), col("cand_vec")))
-          .as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
-      .toDF("probe_id", "cand_id", "nd")
-      .select(col("probe_id"), col("cand_id"),
-        round(-col("nd"), 6).as("l2sq"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    probeCand(topK(probeScan(emb, probePred, idCol, vecCol)(
+        (p, c) => -graft.plans.native.l2sq(p, c)), k),
+      round(-col("score"), 6).as("l2sq"))
 
   /** RADIUS (range) search — the other query mode next to top-k: ALL
     * vectors within cosine ≥ τ of each probe (dedup-audit "find every
@@ -145,15 +121,10 @@ object Similarity {
     * a narrow predicate, so the result streams straight out of the scan
     * with no aggregation at all. */
   def radiusSearch(emb: DataFrame, probePred: Column, tau: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probes = emb.filter(probePred)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))
-    emb.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
-      .join(broadcast(probes), col("probe_id") =!= col("cand_id"))
-      .withColumn("cos", cosineCol(col("probe_vec"), col("cand_vec")))
-      .filter(col("cos") >= tau)
-      .select(col("probe_id"), col("cand_id"), round(col("cos"), 6).as("cosine"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    probeCand(probeScan(emb, probePred, idCol, vecCol)(cosineCol)
+        .filter(col("score") >= tau),
+      round(col("score"), 6).as("cosine"))
 
   /** HARD-NEGATIVE MINING for contrastive training: per probe, the k
     * most-similar vectors with a DIFFERENT label — the canonical
@@ -165,8 +136,6 @@ object Similarity {
   def hardNegatives(emb: DataFrame, probePred: Column, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
     val probes = emb.filter(probePred)
       .select(col(idCol).as("key"), col(vecCol).as("probe_vec"),
         col(labelCol).as("probe_label"))
@@ -175,12 +144,8 @@ object Similarity {
       .join(broadcast(probes), col("cand_label") =!= col("probe_label"))
       .select(col("key"), col("id"),
         cosineCol(col("probe_vec"), col("cand_vec")).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
-      .toDF("probe_id", "neg_id", "cos")
-      .select(col("probe_id"), col("neg_id"), round(col("cos"), 6).as("cosine"))
+    topK(scored, k).select(col("key").as("probe_id"), col("id").as("neg_id"),
+      round(col("score"), 6).as("cosine"))
   }
 
   /** INT8 SCALAR QUANTIZATION distortion audit — the other standard
@@ -289,6 +254,13 @@ object Similarity {
       struct(l2sqCol(vec, typedlit(cv)).as("dist"), lit(cid).as("cent_id"))
     }: _*)
 
+  /** The ids of the `nprobe` centroids nearest to `vec`, one row each —
+    * the inverted lists a probe scans (sort the struct array, slice). */
+  private def probedLists(vec: Column, cents: Array[(Long, Seq[Double])],
+      nprobe: Int): Column =
+    explode(transform(slice(array_sort(centScored(vec, cents)), 1, nprobe),
+      x => x.getField("cent_id")))
+
   /** IVF coarse quantization: assign each vector to its nearest centroid
     * (argmin L2, ties → smaller centroid id). The centroid count is a
     * CONSTANT parameter — never a function of corpus size — and the
@@ -298,13 +270,10 @@ object Similarity {
     * nearest inverted lists. */
   def ivfAssign(emb: DataFrame, numCentroids: Int = 8,
       centroidStride: Int = 32, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val cents = ivfCentroids(emb, numCentroids, centroidStride, idCol, vecCol)
-    val best = array_min(centScored(col(vecCol), cents))
-    emb.select(col(idCol).as("vec_id"),
-      best.getField("cent_id").as("cent_id"),
-      round(best.getField("dist"), 6).as("dist"))
-  }
+      vecCol: String = "embedding"): DataFrame =
+    ivfAssignWith(emb,
+      ivfCentroids(emb, numCentroids, centroidStride, idCol, vecCol),
+      idCol, vecCol)
 
   /** IVF ANN search: for each probe, rank centroids by distance (same
     * inlined-literal argmin — sort the k-element struct array, slice
@@ -325,25 +294,16 @@ object Similarity {
   def ivfTopKWith(emb: DataFrame, probePred: Column, k: Int, nprobe: Int,
       cents: Array[(Long, Seq[Double])], idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
     val assigned = emb.select(col(idCol).as("id"), col(vecCol).as("cand_vec"),
       array_min(centScored(col(vecCol), cents)).getField("cent_id").as("cent_id"))
     val probeCents = emb.filter(probePred)
       .select(col(idCol).as("key"), col(vecCol).as("probe_vec"),
-        explode(transform(
-          slice(array_sort(centScored(col(vecCol), cents)), 1, nprobe),
-          x => x.getField("cent_id"))).as("cent_id"))
+        probedLists(col(vecCol), cents, nprobe).as("cent_id"))
     val scored = assigned.join(broadcast(probeCents), Seq("cent_id"))
       .filter(col("key") =!= col("id"))
       .select(col("key"), col("id"),
         cosineCol(col("probe_vec"), col("cand_vec")).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
-      .toDF("probe_id", "cand_id", "cos")
-      .select(col("probe_id"), col("cand_id"), round(col("cos"), 6).as("cosine"))
+    probeCand(topK(scored, k), round(col("score"), 6).as("cosine"))
   }
 
   /** One Lloyd refinement step for the IVF centroids — the k-means model
@@ -385,10 +345,10 @@ object Similarity {
         round(col("s").cast("double") / col("n_assigned"), 6).as("mean"))
   }
 
-  /** Iterated FULL-SLICE Lloyd training — DEMOTED to an id-bounded
-    * AUDIT of the trainer math (r11): each round rescans its input, so
-    * an unbounded corpus pays iters full passes — the one super-linear
-    * slope the r10 scale probe found (5.99 at data ×8). The PRODUCTION
+  /** Iterated FULL-SLICE Lloyd training — an id-bounded AUDIT of the
+    * trainer math: each round rescans its input, so an unbounded corpus
+    * pays iters full passes — the super-linear slope a scale probe
+    * measured (5.99 at data ×8). The PRODUCTION
     * trainer is [[sampledCentroids]] (Lloyd sees only the exact-k
     * sample; slope 0.95, recall within 0.1 — AnnRecallSpec); every
     * model consumer should train through it. This audit face therefore
@@ -412,7 +372,7 @@ object Similarity {
     // the id bound is an ABSOLUTE predicate: a corpus whose ids start
     // above it (offset/sharded id spaces) would otherwise train on an
     // empty slice and hand every consumer an empty model with no error
-    // (r12, ADVICE) — fail loudly and name the knob instead
+    // — fail loudly and name the knob instead
     require(!slice.isEmpty,
       s"trainedCentroids: no rows with $idCol < $maxTrainId — the corpus's " +
         "id space starts above the audit bound; raise maxTrainId or train " +
@@ -490,7 +450,7 @@ object Similarity {
     * `iters − 1` rounds, i.e. the per-(centroid, dimension) counts and
     * means AFTER `iters` total refinement steps. Like the trainer it
     * audits, it is id-bounded by default (`maxTrainId`) — the full
-    * trainer is an sf-bounded AUDIT since r11; production training is
+    * trainer is an sf-bounded AUDIT; production training is
     * [[sampledCentroids]]. */
   def kmeansRefine(emb: DataFrame, iters: Int, numCentroids: Int = 8,
       centroidStride: Int = 32, idCol: String = "vec_id",
@@ -529,12 +489,8 @@ object Similarity {
     val sub = dim / m
     val cents = ivfCentroids(emb, numCentroids, centroidStride, idCol, vecCol)
     val perSub = array((0 until m).map { s =>
-      array_min(array(cents.map { case (cid, cv) =>
-        struct(
-          l2sqCol(slice(col(vecCol), s * sub + 1, sub),
-            typedlit(cv.slice(s * sub, (s + 1) * sub))).as("dist"),
-          lit(cid).as("cent_id"))
-      }: _*))
+      array_min(centScored(subvec(col(vecCol), s, sub),
+        cents.map { case (cid, cv) => (cid, cv.slice(s * sub, (s + 1) * sub)) }))
     }: _*)
     emb.select(col(idCol).as("vec_id"), posexplode(perSub).as(Seq("subspace", "b")))
       .select(col("vec_id"), col("subspace").cast("long").as("subspace"),
@@ -542,15 +498,16 @@ object Similarity {
         round(col("b").getField("dist"), 6).as("err"))
   }
 
-  /** PQ codes as ordinal indices into the codebook — the compressed ANN
-    * index row: (vec_id, codes[m]). Same narrow argmin pass as
-    * [[pqAssign]]. */
+  /** Subspace `s` of a vector cut into `sub`-wide slices. */
+  private def subvec(v: Column, s: Int, sub: Int): Column =
+    slice(v, s * sub + 1, sub)
+
   /** The per-row PQ code array expression for an already-collected
-    * codebook (shared by [[pqCodes]] and [[pqTopK]] so the codebook is
-    * collected exactly once per query). */
+    * codebook (shared by [[pqCodesWith]] and [[ivfadcIndex]] so the
+    * codebook is collected exactly once per query). */
   private def pqCodesCol(cents: Array[(Long, Seq[Double])], m: Int,
       sub: Int, vecCol: String): Column =
-    pqCodesColBooks(booksFrom(cents, m, sub), sub, vecCol)
+    pqCodesColBooks(booksFrom(cents, m, sub), sub, col(vecCol))
 
   /** Per-subspace codebooks sliced from full-vector centroids — the
     * untrained default every PQ path starts from. */
@@ -558,16 +515,41 @@ object Similarity {
       sub: Int): Array[Array[Seq[Double]]] =
     Array.tabulate(m)(s => cents.map(_._2.slice(s * sub, (s + 1) * sub)))
 
+  /** Per-subspace argmin: the (dist, ord) struct of the codeword in
+    * `book` nearest to the subvector `sv` (struct order, so ties break
+    * to the smaller ordinal). */
+  private def nearestCode(sv: Column, book: Array[Seq[Double]]): Column =
+    array_min(array(book.zipWithIndex.map { case (cw, ord) =>
+      struct(l2sqCol(sv, typedlit(cw)).as("dist"), lit(ord).as("ord"))
+    }: _*))
+
+  /** The PQ code array of `vec` under per-subspace `books`. */
   private def pqCodesColBooks(books: Array[Array[Seq[Double]]], sub: Int,
-      vecCol: String): Column =
-    array(books.indices.map { s =>
-      array_min(array(books(s).zipWithIndex.map { case (cw, ord) =>
-        struct(
-          l2sqCol(slice(col(vecCol), s * sub + 1, sub), typedlit(cw))
-            .as("dist"),
-          lit(ord).as("ord"))
-      }: _*)).getField("ord")
-    }: _*)
+      vec: Column): Column =
+    array(books.indices.map(s =>
+      nearestCode(subvec(vec, s, sub), books(s)).getField("ord")): _*)
+
+  /** The ADC distance table of `vec` against per-subspace `books`:
+    * dt[s][c] = ‖vec_s − books(s)(c)‖², one constant-size
+    * array-of-arrays expression per row. */
+  private def distTable(vec: Column, books: Array[Array[Seq[Double]]],
+      sub: Int): Column =
+    array(books.indices.map(s =>
+      array(books(s).map(cw => l2sqCol(subvec(vec, s, sub), typedlit(cw))): _*)
+    ): _*)
+
+  /** Top-k of joined (key, id, dt, codes) rows by the smallest ADC
+    * distance: a candidate's m table lookups (row s of `dt` at
+    * `codes[s]`) summed in subspace order, the oracle-exact sequential
+    * fold. The distance is negated into the shared bounded heap, which
+    * keeps the LARGEST scores, and back out. */
+  private def adcTopK(joined: DataFrame, k: Int): DataFrame = {
+    val adc = aggregate(
+      zip_with(col("dt"), col("codes"), (row, c) => element_at(row, c + 1)),
+      lit(0.0), (a, x) => a + x)
+    probeCand(topK(joined.select(col("key"), col("id"), (-adc).as("score")), k),
+      round(-col("score"), 6).as("adc_dist"))
+  }
 
   /** TRUE per-subspace PQ training: independent k-means in every
     * subspace over the SUBVECTORS (not slices of full-vector centroids
@@ -621,12 +603,9 @@ object Similarity {
     var books = init
     for (_ <- 0 until iters) {
       val perSub = array(books.indices.map { s =>
+        val sv = subvec(col(vecColName), s, sub)
         struct(lit(s).as("s"),
-          array_min(array(books(s).zipWithIndex.map { case (cw, ord) =>
-            struct(l2sqCol(slice(col(vecColName), s * sub + 1, sub),
-              typedlit(cw)).as("dist"), lit(ord).as("ord"))
-          }: _*)).getField("ord").as("code"),
-          slice(col(vecColName), s * sub + 1, sub).as("sv"))
+          nearestCode(sv, books(s)).getField("ord").as("code"), sv.as("sv"))
       }: _*)
       val rows = frame.select(explode(perSub).as("e"))
         .select(col("e.s").as("s"), col("e.code").as("code"),
@@ -654,14 +633,15 @@ object Similarity {
     * assertion compares. One narrow pass + one 1-row agg. */
   def pqQuantizationError(emb: DataFrame, books: Array[Array[Seq[Double]]],
       sub: Int, vecCol: String = "embedding"): Double = {
-    val perSub = (0 until books.length).map { s =>
-      array_min(array(books(s).map { cw =>
-        l2sqCol(slice(col(vecCol), s * sub + 1, sub), typedlit(cw))
-      }: _*))
-    }.reduce(_ + _)
+    val perSub = books.indices.map(s =>
+      nearestCode(subvec(col(vecCol), s, sub), books(s)).getField("dist"))
+      .reduce(_ + _)
     emb.agg(sum(perSub)).head.getDouble(0)
   }
 
+  /** PQ codes as ordinal indices into the codebook — the compressed ANN
+    * index row: (vec_id, codes[m]). Same narrow argmin pass as
+    * [[pqAssign]]. */
   def pqCodes(emb: DataFrame, m: Int = 8, dim: Int = 64,
       numCentroids: Int = 8, centroidStride: Int = 32,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -698,32 +678,9 @@ object Similarity {
       dim: Int = 64, numCentroids: Int = 8, centroidStride: Int = 32,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, "dim must divide into m equal subspaces")
-    val s = emb.sparkSession
-    import s.implicits._
     val sub = dim / m
     val cents = ivfCentroids(emb, numCentroids, centroidStride, idCol, vecCol)
-    val codes = emb.select(col(idCol).as("id"),
-      pqCodesCol(cents, m, sub, vecCol).as("codes"))
-    val dt = array((0 until m).map { s =>
-      array(cents.map { case (_, cv) =>
-        l2sqCol(slice(col(vecCol), s * sub + 1, sub),
-          typedlit(cv.slice(s * sub, (s + 1) * sub)))
-      }: _*)
-    }: _*)
-    val probes = emb.filter(probePred)
-      .select(col(idCol).as("key"), dt.as("dt"))
-    val adc = aggregate(
-      zip_with(col("dt"), col("codes"), (row, c) => element_at(row, c + 1)),
-      lit(0.0), (a, x) => a + x)
-    val scored = codes.join(broadcast(probes), col("key") =!= col("id"))
-      // negate: the shared bounded heap keeps the LARGEST scores
-      .select(col("key"), col("id"), (-adc).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, -sc) } }
-      .toDF("probe_id", "cand_id", "adc")
-      .select(col("probe_id"), col("cand_id"), round(col("adc"), 6).as("adc_dist"))
+    pqTopKBooks(emb, probePred, k, booksFrom(cents, m, sub), sub, idCol, vecCol)
   }
 
   /** [[pqTopK]] against EXPLICIT per-subspace codebooks — the trained-
@@ -733,29 +690,11 @@ object Similarity {
   def pqTopKBooks(emb: DataFrame, probePred: Column, k: Int,
       books: Array[Array[Seq[Double]]], sub: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
     val codes = emb.select(col(idCol).as("id"),
-      pqCodesColBooks(books, sub, vecCol).as("codes"))
-    val dt = array(books.indices.map { ss =>
-      array(books(ss).map { cw =>
-        l2sqCol(slice(col(vecCol), ss * sub + 1, sub), typedlit(cw))
-      }: _*)
-    }: _*)
+      pqCodesColBooks(books, sub, col(vecCol)).as("codes"))
     val probes = emb.filter(probePred)
-      .select(col(idCol).as("key"), dt.as("dt"))
-    val adc = aggregate(
-      zip_with(col("dt"), col("codes"), (row, c) => element_at(row, c + 1)),
-      lit(0.0), (a, x) => a + x)
-    val scored = codes.join(broadcast(probes), col("key") =!= col("id"))
-      // negate: the shared bounded heap keeps the LARGEST scores
-      .select(col("key"), col("id"), (-adc).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, -sc) } }
-      .toDF("probe_id", "cand_id", "adc")
-      .select(col("probe_id"), col("cand_id"), round(col("adc"), 6).as("adc_dist"))
+      .select(col(idCol).as("key"), distTable(col(vecCol), books, sub).as("dt"))
+    adcTopK(codes.join(broadcast(probes), col("key") =!= col("id")), k)
   }
 
   /** IVFADC — the production ANN composition (coarse quantizer PRUNES,
@@ -779,8 +718,6 @@ object Similarity {
       centsOverride: Array[(Long, Seq[Double])] = null,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, "dim must divide into m equal subspaces")
-    val s = emb.sparkSession
-    import s.implicits._
     val sub = dim / m
     val cents = if (centsOverride != null) centsOverride
       else ivfCentroids(emb, numCentroids, centroidStride, idCol, vecCol)
@@ -804,32 +741,12 @@ object Similarity {
       cents: Array[(Long, Seq[Double])], k: Int, nprobe: Int, m: Int,
       sub: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val dt = array((0 until m).map { ss =>
-      array(cents.map { case (_, cv) =>
-        l2sqCol(slice(col(vecCol), ss * sub + 1, sub),
-          typedlit(cv.slice(ss * sub, (ss + 1) * sub)))
-      }: _*)
-    }: _*)
     val probes = emb.filter(probePred)
-      .select(col(idCol).as("key"), dt.as("dt"),
-        explode(transform(
-          slice(array_sort(centScored(col(vecCol), cents)), 1, nprobe),
-          x => x.getField("cent_id"))).as("cent_id"))
-    val adc = aggregate(
-      zip_with(col("dt"), col("codes"), (row, c) => element_at(row, c + 1)),
-      lit(0.0), (a, x) => a + x)
-    val scored = index.join(broadcast(probes), Seq("cent_id"))
-      .filter(col("key") =!= col("id"))
-      // negate: the shared bounded heap keeps the LARGEST scores
-      .select(col("key"), col("id"), (-adc).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, -sc) } }
-      .toDF("probe_id", "cand_id", "adc")
-      .select(col("probe_id"), col("cand_id"), round(col("adc"), 6).as("adc_dist"))
+      .select(col(idCol).as("key"),
+        distTable(col(vecCol), booksFrom(cents, m, sub), sub).as("dt"),
+        probedLists(col(vecCol), cents, nprobe).as("cent_id"))
+    adcTopK(index.join(broadcast(probes), Seq("cent_id"))
+      .filter(col("key") =!= col("id")), k)
   }
 
   /** A column holding THIS ROW's coarse-centroid vector, selected from
@@ -864,8 +781,6 @@ object Similarity {
       booksOverride: Array[Array[Seq[Double]]] = null,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, "dim must divide into m equal subspaces")
-    val s = emb.sparkSession
-    import s.implicits._
     val sub = dim / m
     val cents = if (centsOverride != null) centsOverride
       else ivfCentroids(emb, numCentroids, centroidStride, idCol, vecCol)
@@ -875,51 +790,26 @@ object Similarity {
       else booksFrom(cents, m, sub)
     def residual(vec: Column, centId: Column): Column =
       zip_with(toDouble(vec), centVecFor(centId, cents), (a, b) => a - b)
-    // residual codes: argmin per subspace of ||r_s − cb_s||² (an
-    // expression over the residual column, so it shares one assignment
-    // pass with the cent_id argmin)
-    def residualCodes(r: Column): Column =
-      array((0 until m).map { ss =>
-        array_min(array(books(ss).zipWithIndex.map { case (cw, ord) =>
-          struct(
-            l2sqCol(slice(r, ss * sub + 1, sub), typedlit(cw)).as("dist"),
-            lit(ord).as("ord"))
-        }: _*)).getField("ord")
-      }: _*)
     val index = emb
       .select(col(idCol).as("id"),
         array_min(centScored(col(vecCol), cents))
           .getField("cent_id").as("cent_id"),
         col(vecCol).as("__v"))
+      // residual codes: the argmin per subspace of ||r_s − cb_s||², an
+      // expression over the residual column, so it shares one assignment
+      // pass with the cent_id argmin
       .select(col("id"), col("cent_id"),
-        residualCodes(residual(col("__v"), col("cent_id"))).as("codes"))
+        pqCodesColBooks(books, sub, residual(col("__v"), col("cent_id")))
+          .as("codes"))
     // per probed list: the distance table of the probe's OWN residual
     // from that list's centroid (the table depends on (probe, list))
     val probes = emb.filter(probePred)
       .select(col(idCol).as("key"), col(vecCol).as("__q"),
-        explode(transform(
-          slice(array_sort(centScored(col(vecCol), cents)), 1, nprobe),
-          x => x.getField("cent_id"))).as("cent_id"))
+        probedLists(col(vecCol), cents, nprobe).as("cent_id"))
       .select(col("key"), col("cent_id"),
-        array((0 until m).map { ss =>
-          array(books(ss).map { cw =>
-            l2sqCol(slice(residual(col("__q"), col("cent_id")), ss * sub + 1, sub),
-              typedlit(cw))
-          }: _*)
-        }: _*).as("dt"))
-    val adc = aggregate(
-      zip_with(col("dt"), col("codes"), (row, c) => element_at(row, c + 1)),
-      lit(0.0), (a, x) => a + x)
-    val scored = index.join(broadcast(probes), Seq("cent_id"))
-      .filter(col("key") =!= col("id"))
-      // negate: the shared bounded heap keeps the LARGEST scores
-      .select(col("key"), col("id"), (-adc).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, -sc) } }
-      .toDF("probe_id", "cand_id", "adc")
-      .select(col("probe_id"), col("cand_id"), round(col("adc"), 6).as("adc_dist"))
+        distTable(residual(col("__q"), col("cent_id")), books, sub).as("dt"))
+    adcTopK(index.join(broadcast(probes), Seq("cent_id"))
+      .filter(col("key") =!= col("id")), k)
   }
 
   /** ANN via LSH: top-k among candidates in the probe's bucket, plus —
@@ -931,8 +821,6 @@ object Similarity {
   def annTopK(emb: DataFrame, probePred: Column, k: Int, nPlanes: Int = 8,
       dim: Int = 64, multiProbe: Boolean = true, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
     val bucketed = emb.withColumn("bucket", lshBucket(col(vecCol), nPlanes, dim))
     val probeBuckets =
       if (multiProbe) array((col("probe_bucket") +: (0 until nPlanes).map(p =>
@@ -952,12 +840,7 @@ object Similarity {
       .filter(col("probe_id") =!= col("id"))
       .select(col("probe_id").as("key"), col("id"),
         cosineCol(col("probe_vec"), col("cand_vec")).as("score"))
-      .as[graft.plans.Scored]
-    scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
-      .toDF("probe_id", "cand_id", "cos")
-      .select(col("probe_id"), col("cand_id"), round(col("cos"), 6).as("cosine"))
+    probeCand(topK(scored, k), round(col("score"), 6).as("cosine"))
   }
 
   /** Integer-lattice projection of a vector onto pseudo-random plane
@@ -973,8 +856,8 @@ object Similarity {
         (((i.cast("long") * graft.plans.HashOps.aK(p) +
           graft.plans.HashOps.bK(p)) % graft.plans.HashOps.M) * 2 -
           graft.plans.HashOps.M))
-    // the safe per-component bound DERIVED from dim (r11, was a
-    // hardcoded 67 that only covered dim ≤ 64): each term is at most
+    // the safe per-component bound DERIVED from dim (a hardcoded 67
+    // would cover only dim ≤ 64): each term is at most
     // (|v_i|·1e6 + 1)·M, so dim terms stay inside int64 iff
     // |v_i| ≤ (Long.MaxValue/(dim·M) − 1)/1e6 — 67 at dim=64, 33 at
     // dim=128. Past that Spark would wrap SILENTLY (reordering ranks
@@ -1065,13 +948,9 @@ object Similarity {
       .unionAll(armed
         .select((col("id_b") * nArms + col("arm")).as("key"),
           col("id_a").as("id"), col("score")))
-      .as[graft.plans.Scored]
-    val dec = Materialize(scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, _) => (key, id) } }
-      .toDF("keyed", "dst")
-      .select(expr(s"keyed % $nArms").as("arm"),
-        expr(s"keyed div $nArms").as("src"), col("dst")))
+    val dec = Materialize(topK(scored, k)
+      .select(expr(s"key % $nArms").as("arm"),
+        expr(s"key div $nArms").as("src"), col("id").as("dst")))
     val perArm = dec.groupBy(col("arm")).agg(count(lit(1)).as("n_edges"))
     val mutual = dec.join(dec.select(col("arm").as("m_arm"),
         col("src").as("m_dst"), col("dst").as("m_src")),
@@ -1082,6 +961,23 @@ object Similarity {
       .join(mutual, Seq("arm"), "left_outer")
       .select(col("win"), coalesce(col("n_edges"), lit(0L)).as("n_edges"),
         coalesce(col("n_mutual"), lit(0L)).as("n_mutual"))
+  }
+
+  /** The directed kNN edge set (src, dst) the graph audit is built on —
+    * split out so AnnRecallSpec can compare the windowed edge set
+    * against the unbounded-window (all-pairs-in-bucket) reference. */
+  private[graft] def knnEdges(emb: DataFrame, k: Int, nPlanes: Int,
+      dim: Int, window: Int, idCol: String, vecCol: String): DataFrame = {
+    // materialized so both orientations genuinely ride ONE scored row
+    // per unordered pair (an unmaterialized unionAll would rebuild the
+    // window-explode join and re-score every cosine twice)
+    val pairs = Materialize(
+      knnCandidatePairs(emb, nPlanes, dim, window, idCol, vecCol))
+    val scored = pairs
+      .select(col("id_a").as("key"), col("id_b").as("id"), col("score"))
+      .unionAll(pairs
+        .select(col("id_b").as("key"), col("id_a").as("id"), col("score")))
+    Materialize(topK(scored, k).select(col("key").as("src"), col("id").as("dst")))
   }
 
   /** Mutual-kNN graph audit over LSH buckets — the semantic-clustering
@@ -1104,29 +1000,6 @@ object Similarity {
     * vector per partition on the shuffle). The k-bounded edge set is
     * materialized once; the degree/mutuality passes are map-side-
     * combined aggs and one self-join on O(n·k) rows. */
-  /** The directed kNN edge set (src, dst) the graph audit is built on —
-    * split out so AnnRecallSpec can compare the windowed edge set
-    * against the unbounded-window (all-pairs-in-bucket) reference. */
-  private[graft] def knnEdges(emb: DataFrame, k: Int, nPlanes: Int,
-      dim: Int, window: Int, idCol: String, vecCol: String): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    // materialized so both orientations genuinely ride ONE scored row
-    // per unordered pair (an unmaterialized unionAll would rebuild the
-    // window-explode join and re-score every cosine twice)
-    val pairs = Materialize(
-      knnCandidatePairs(emb, nPlanes, dim, window, idCol, vecCol))
-    val scored = pairs
-      .select(col("id_a").as("key"), col("id_b").as("id"), col("score"))
-      .unionAll(pairs
-        .select(col("id_b").as("key"), col("id_a").as("id"), col("score")))
-      .as[graft.plans.Scored]
-    Materialize(scored.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, _) => (key, id) } }
-      .toDF("src", "dst"))
-  }
-
   def knnGraph(emb: DataFrame, k: Int, nPlanes: Int = 8, dim: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding",
       window: Int = 16): DataFrame = {
@@ -1248,8 +1121,6 @@ object Similarity {
   def projectRerankTopK(emb: DataFrame, probePred: Column, k: Int,
       shortlist: Int = 100, outDims: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
     val proj = Materialize(randomProject(emb, outDims, idCol, vecCol)
       .select(col(idCol).as("id"), col("proj")))
     val probes = proj
@@ -1260,57 +1131,17 @@ object Similarity {
         (-aggregate(
           zip_with(col("p_proj"), col("proj"), (a, b) => (a - b) * (a - b)),
           lit(0.0), (a, v) => a + v)).as("score"))
-      .as[graft.plans.Scored]
-    val short = coarse.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(shortlist).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, _) => (key, id) } }
-      .toDF("probe_id", "cand_id")
+    val short = topK(coarse, shortlist)
+      .select(col("key").as("probe_id"), col("id").as("cand_id"))
     val cand = emb.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
     val pvec = emb.filter(probePred)
       .select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))
     val rer = short.join(cand, "cand_id").join(broadcast(pvec), "probe_id")
       .select(col("probe_id").as("key"), col("cand_id").as("id"),
         cosineCol(col("probe_vec"), col("cand_vec")).as("score"))
-      .as[graft.plans.Scored]
-    rer.groupByKey(_.key)
-      .agg(new graft.plans.TopKAggregator(k).toColumn.name("topk"))
-      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
-      .toDF("probe_id", "cand_id", "cos")
-      .select(col("probe_id"), col("cand_id"),
-        round(col("cos"), 6).as("cosine"))
+    probeCand(topK(rer, k), round(col("score"), 6).as("cosine"))
   }
 
-  /** Top principal direction of the embedding corpus by INTEGER power
-    * iteration — uncentered PCA (the dominant eigenvector of the
-    * second-moment/Gram matrix Σ x·xᵀ), the whitening / projection-axis
-    * audit a pipeline reads before picking [[randomProject]] dims or an
-    * SQ quantization range.
-    *
-    * Exactness: float matrix-vector products are order-dependent, so the
-    * whole computation runs on the [[graft.operators.Dedup.clusterMedoids]]
-    * integer lattice — q = floor(x·10⁶) per (vec, dim); Gram entries are
-    * BIGINT sums Σ q_i·q_j rescaled by an integer div; each iteration is
-    * v' = sign(u)·(|u| div (max|u| div 10⁶)) with u = G·v — every step
-    * order-free integer arithmetic, so the 64 output components are
-    * bit-identical in any engine. Bounds at the defaults (scale=10⁶,
-    * |x| ≤ 1, gramDiv=10⁷): |q| ≤ 10⁶ so each Gram sum grows ≤ 10¹²
-    * per vector — the BIGINT sum stays inside long range only up to
-    * ~9·10⁶ vectors, and the driver product Σⱼ g·vⱼ (|v| ≤ scale,
-    * D = 64 terms) needs |g| ≤ Long.Max/(2·scale·D) ≈ 7·10¹⁰, i.e.
-    * corpus ≲ 10⁶ vectors AT THE DEFAULT gramDiv. Larger corpora must
-    * raise `gramDiv` proportionally (it only rescales the eigenvector's
-    * fixed-point resolution, not its direction); both bounds are
-    * ENFORCED — the corpus count rides the Gram aggregation for free
-    * and the collected matrix is checked before iterating, so an
-    * out-of-range corpus fails loudly instead of wrapping silently.
-    *
-    * Scale: NO wide edge — the Gram aggregation is a NARROW scan
-    * folding each vector's outer product into a flat D×D partition
-    * buffer ([[graft.plans.GramAggregator]]); the shuffle carries one
-    * ~32 KB partial per partition. The D×D Gram table is MODEL STATE
-    * (4096 cells at D = 64, like the IVF centroids) so the power
-    * iteration itself runs on the collected matrix — O(iters·D²)
-    * driver work, independent of corpus size. */
   /** Collect the rescaled integer Gram matrix (None for an empty
     * corpus), enforcing the long-range bounds the scaladoc documents —
     * the BIGINT Gram sum wraps silently past Long.Max in non-ANSI
@@ -1379,6 +1210,37 @@ object Similarity {
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
+  /** Top principal direction of the embedding corpus by INTEGER power
+    * iteration — uncentered PCA (the dominant eigenvector of the
+    * second-moment/Gram matrix Σ x·xᵀ), the whitening / projection-axis
+    * audit a pipeline reads before picking [[randomProject]] dims or an
+    * SQ quantization range.
+    *
+    * Exactness: float matrix-vector products are order-dependent, so the
+    * whole computation runs on the [[graft.operators.Dedup.clusterMedoids]]
+    * integer lattice — q = floor(x·10⁶) per (vec, dim); Gram entries are
+    * BIGINT sums Σ q_i·q_j rescaled by an integer div; each iteration is
+    * v' = sign(u)·(|u| div (max|u| div 10⁶)) with u = G·v — every step
+    * order-free integer arithmetic, so the 64 output components are
+    * bit-identical in any engine. Bounds at the defaults (scale=10⁶,
+    * |x| ≤ 1, gramDiv=10⁷): |q| ≤ 10⁶ so each Gram sum grows ≤ 10¹²
+    * per vector — the BIGINT sum stays inside long range only up to
+    * ~9·10⁶ vectors, and the driver product Σⱼ g·vⱼ (|v| ≤ scale,
+    * D = 64 terms) needs |g| ≤ Long.Max/(2·scale·D) ≈ 7·10¹⁰, i.e.
+    * corpus ≲ 10⁶ vectors AT THE DEFAULT gramDiv. Larger corpora must
+    * raise `gramDiv` proportionally (it only rescales the eigenvector's
+    * fixed-point resolution, not its direction); both bounds are
+    * ENFORCED — the corpus count rides the Gram aggregation for free
+    * and the collected matrix is checked before iterating, so an
+    * out-of-range corpus fails loudly instead of wrapping silently.
+    *
+    * Scale: NO wide edge — the Gram aggregation is a NARROW scan
+    * folding each vector's outer product into a flat D×D partition
+    * buffer ([[graft.plans.GramAggregator]]); the shuffle carries one
+    * ~32 KB partial per partition. The D×D Gram table is MODEL STATE
+    * (4096 cells at D = 64, like the IVF centroids) so the power
+    * iteration itself runs on the collected matrix — O(iters·D²)
+    * driver work, independent of corpus size. */
   def pcaPower(emb: DataFrame, iters: Int = 3, scale: Long = 1000000L,
       gramDiv: Long = 10000000L, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
@@ -1457,14 +1319,6 @@ object Similarity {
     }
   }
 
-  /** Project every vector onto [[pcaPower]]'s top principal direction —
-    * the 1-d feature a pipeline reads for PCA-based ordering, outlier
-    * screens, or SQ range selection. Exact: the projection is the
-    * integer dot product Σ q_d·v_d of the lattice quantization against
-    * the lattice eigenvector (|q|·|v|·D ≤ 10⁶·10⁶·64 — inside long
-    * range), bucketed by a sign/abs integer division. Scale: the
-    * 64-row direction broadcasts; one corpus scan, one map-side
-    * per-vector sum — no wide edge beyond pcaPower's own Gram agg. */
   /** WHITENED top-2 projections — the decorrelate-and-equalize step a
     * PCA embedding pipeline ships (projections divided by their own
     * standard deviation, so both axes carry unit variance): per vector
@@ -1527,6 +1381,14 @@ object Similarity {
           "* ((abs(pb) * 1000) div greatest(sd, 1))").as("w"))
   }
 
+  /** Project every vector onto [[pcaPower]]'s top principal direction —
+    * the 1-d feature a pipeline reads for PCA-based ordering, outlier
+    * screens, or SQ range selection. Exact: the projection is the
+    * integer dot product Σ q_d·v_d of the lattice quantization against
+    * the lattice eigenvector (|q|·|v|·D ≤ 10⁶·10⁶·64 — inside long
+    * range), bucketed by a sign/abs integer division. Scale: the
+    * 64-row direction broadcasts; one corpus scan, one map-side
+    * per-vector sum — no wide edge beyond pcaPower's own Gram agg. */
   def pcaProject(emb: DataFrame, iters: Int = 3, scale: Long = 1000000L,
       gramDiv: Long = 10000000L, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import scala.collection.mutable
 
@@ -13,12 +13,13 @@ final case class Scored(key: Long, id: Long, score: Double)
   * shuffle carries ONLY k entries per (key, partition) instead of every
   * scored row, and merge combines heaps. Total order (score desc, id asc)
   * makes the result identical to the window formulation (asserted in
-  * TopKSpec and by the sim_cosine_topk oracle).
+  * TopKAndExtensionsSpec and by the sim_cosine_topk oracle).
   *
   * Chosen over a custom LogicalPlan/SparkStrategy deliberately: Spark's
   * partial-aggregation machinery already gives the map-side-combine +
   * single-shuffle physical shape, so an Aggregator (preference (b) in the
-  * extension ladder) expresses it without new plan nodes. */
+  * extension ladder) expresses it without new plan nodes. Callers go
+  * through [[TopKAggregator.topK]]. */
 final class TopKAggregator(k: Int)
     extends Aggregator[Scored, mutable.PriorityQueue[(Double, Long)], Seq[(Long, Double)]] {
 
@@ -60,4 +61,18 @@ final class TopKAggregator(k: Int)
     Encoders.kryo[mutable.PriorityQueue[(Double, Long)]]
   override def outputEncoder: Encoder[Seq[(Long, Double)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+}
+
+object TopKAggregator {
+  /** Per-key top-k of `scored`'s (key: long, id: long, score: double)
+    * rows through the bounded heap: the same three columns back, at most
+    * k rows per key, kept by score descending, then the smaller id. */
+  def topK(scored: DataFrame, k: Int): DataFrame = {
+    val s = scored.sparkSession
+    import s.implicits._
+    scored.as[Scored].groupByKey(_.key)
+      .agg(new TopKAggregator(k).toColumn.name("topk"))
+      .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
+      .toDF("key", "id", "score")
+  }
 }

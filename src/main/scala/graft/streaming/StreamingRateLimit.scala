@@ -15,9 +15,12 @@ import java.sql.Timestamp
   * admission counters in streaming state keyed by app, so the limit holds
   * across micro-batches exactly.
   *
-  * Scale: state is O(apps × retained windows) — apps with no configured
-  * limit bypass the stateful path entirely (no shuffle for them), and
-  * counters older than `stateHorizonWindows` are pruned every trigger.
+  * Scale: state is O(apps × retained windows). With no limit configured
+  * at all the stream passes through untouched; otherwise EVERY message,
+  * also those of apps with no configured limit, is shuffled on the app
+  * key into the stateful stage, where an unlimited app's cap is
+  * `Long.MaxValue` and its counters are kept like any other app's.
+  * Counters older than `stateHorizonWindows` are pruned every trigger.
   * The shuffle is on the app key only, same as the batch window. */
 object StreamingRateLimit {
 

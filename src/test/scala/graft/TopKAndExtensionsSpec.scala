@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import graft.plans.{GraftExtensions, Scored, TopKAggregator, native}
+import graft.plans.{GraftExtensions, TopKAggregator, native}
 import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class TopKAndExtensionsSpec extends SparkSpec {
 
   test("TopKAggregator == window row_number top-k") {
-    import spark.implicits._
     val emb = Tables.embeddings(spark, sf())
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("key"), col("embedding").as("pv"))
@@ -22,11 +21,7 @@ class TopKAndExtensionsSpec extends SparkSpec {
       .select(col("key"), col("id"),
         native.cosine_sim(col("pv"), col("cv")).as("score"))
 
-    val viaAgg = scored.as[Scored]
-      .groupByKey(_.key)
-      .agg(new TopKAggregator(5).toColumn.name("topk"))
-      .flatMap { case (k, tk) => tk.map { case (id, s) => (k, id, s) } }
-      .toDF("key", "id", "score")
+    val viaAgg = TopKAggregator.topK(scored, 5)
       .orderBy("key", "id").collect().toSeq
 
     val w = org.apache.spark.sql.expressions.Window
@@ -36,6 +31,41 @@ class TopKAndExtensionsSpec extends SparkSpec {
       .orderBy("key", "id").collect().toSeq
 
     assert(viaAgg == viaWindow)
+  }
+
+  /** `topK` over hand-built (key, id, score) rows, spread over 3
+    * partitions so the partial heaps are merged; rows sorted by key,
+    * then score descending, then id. */
+  private def topKOf(rows: Seq[(Long, Long, Double)], k: Int)
+      : Seq[(Long, Long, Double)] = {
+    import spark.implicits._
+    TopKAggregator.topK(rows.toDF("key", "id", "score").repartition(3), k)
+      .as[(Long, Long, Double)].collect().toSeq
+      .sortBy { case (key, id, sc) => (key, -sc, id) }
+  }
+
+  test("TopKAggregator.topK: tied scores keep the smaller ids") {
+    val rows = Seq(9L, 3L, 7L, 1L, 5L, 8L).map(id => (1L, id, 0.5)) :+
+      ((1L, 6L, 0.75))
+    assert(topKOf(rows, 3) == Seq((1L, 6L, 0.75), (1L, 1L, 0.5), (1L, 3L, 0.5)))
+    // a tie at the cut across partitions: every id ties
+    assert(topKOf(rows.map { case (k, id, _) => (k, id, 0.25) }, 2) ==
+      Seq((1L, 1L, 0.25), (1L, 3L, 0.25)))
+  }
+
+  test("TopKAggregator.topK: a key with fewer than k candidates returns all of them") {
+    val rows = Seq((1L, 10L, 0.1), (1L, 11L, 0.2), (1L, 12L, 0.3),
+      (1L, 13L, 0.4), (2L, 20L, 0.9), (2L, 21L, 0.8))
+    assert(topKOf(rows, 3) == Seq((1L, 13L, 0.4), (1L, 12L, 0.3),
+      (1L, 11L, 0.2), (2L, 20L, 0.9), (2L, 21L, 0.8)))
+    assert(topKOf(Seq((3L, 30L, 1.0)), 5) == Seq((3L, 30L, 1.0)))
+  }
+
+  test("TopKAggregator.topK: all-negative scores keep the largest") {
+    // the L2 and PQ searches negate their distances into the heap
+    val rows = Seq((1L, 1L, -3.0), (1L, 2L, -0.5), (1L, 3L, -2.0),
+      (1L, 4L, -1.0), (1L, 5L, -4.5), (1L, 6L, -1.0))
+    assert(topKOf(rows, 3) == Seq((1L, 2L, -0.5), (1L, 4L, -1.0), (1L, 6L, -1.0)))
   }
 
   test("IVF search: deterministic, candidates come from probed lists only") {
