@@ -8,17 +8,16 @@
 # outside a comment (// line comments and nested /* */ blocks; string and
 # char literals are skipped so a "//" inside a string is code), so deleting
 # comments never moves the count. Prints one line per revision and the
-# delta.
+# delta, then one line per file whose count moved: its delta and both
+# counts (largest drop first; 0 for a file absent at that revision).
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
 parent=${1:-HEAD~1}
 change=${2:-HEAD}
 
-count() {
-  python3 - "$1" <<'PY'
+python3 - "$parent" "$change" <<'PY'
 import subprocess, sys
-rev = sys.argv[1]
-def files():
+def files(rev):
     if rev == "WORKTREE":
         out = subprocess.run(["git", "ls-files", "-co", "--exclude-standard",
                               "src/main/scala"], capture_output=True, text=True,
@@ -70,11 +69,14 @@ def code_lines(src):
         i += 1
     return n + code
 
-print(sum(code_lines(s) for _, s in files()))
+parent, change = sys.argv[1], sys.argv[2]
+p = {f: code_lines(s) for f, s in files(parent)}
+c = {f: code_lines(s) for f, s in files(change)}
+print(f"parent {parent}: {sum(p.values())}")
+print(f"change {change}: {sum(c.values())}")
+print(f"delta: {sum(c.values()) - sum(p.values())}")
+moved = [(c.get(f, 0) - p.get(f, 0), f) for f in set(p) | set(c)
+         if c.get(f, 0) != p.get(f, 0)]
+for d, f in sorted(moved):
+    print(f"{d:+6d} {f} ({p.get(f, 0)} -> {c.get(f, 0)})")
 PY
-}
-
-p=$(count "$parent"); c=$(count "$change")
-echo "parent $parent: $p"
-echo "change $change: $c"
-echo "delta: $((c - p))"

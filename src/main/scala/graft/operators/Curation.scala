@@ -90,6 +90,25 @@ object Curation {
     * are per-stream. The explode fan-out is bounded: a doc spans at most
     * n_tok/seqLen + 1 sequences, so the exploded row count is
     * O(total_tokens / seqLen + n_docs). */
+  def packSequences(docs: DataFrame, seqLen: Int,
+      streamCol: String = "source", idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame = {
+    val w = Window.partitionBy(col(streamCol)).orderBy(col(idCol))
+    docs
+      .withColumn("n_tok", native.token_count(col(textCol)))
+      .filter(col("n_tok") > 0)
+      .withColumn("tok_end", sum(col("n_tok")).over(w))
+      .withColumn("tok_start", col("tok_end") - col("n_tok"))
+      .withColumn("seq_id", explode(sequence(
+        floor(col("tok_start") / seqLen),
+        floor((col("tok_end") - 1) / seqLen))))
+      .groupBy(col(streamCol), col("seq_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(least(col("tok_end"), (col("seq_id") + 1) * seqLen)
+          - greatest(col("tok_start"), col("seq_id") * seqLen))
+          .as("n_tokens"))
+  }
+
   /** Packing-efficiency audit over [[packSequences]]'s layout — the
     * numbers a training team reads before a run: per stream, the doc and
     * sequence counts, total tokens, the fill rate (tokens / (n_seqs ×
@@ -123,29 +142,10 @@ object Curation {
         round(col("total_tokens") / (col("n_seqs") * seqLen), 6))
   }
 
-  def packSequences(docs: DataFrame, seqLen: Int,
-      streamCol: String = "source", idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(col(streamCol)).orderBy(col(idCol))
-    docs
-      .withColumn("n_tok", native.token_count(col(textCol)))
-      .filter(col("n_tok") > 0)
-      .withColumn("tok_end", sum(col("n_tok")).over(w))
-      .withColumn("tok_start", col("tok_end") - col("n_tok"))
-      .withColumn("seq_id", explode(sequence(
-        floor(col("tok_start") / seqLen),
-        floor((col("tok_end") - 1) / seqLen))))
-      .groupBy(col(streamCol), col("seq_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(least(col("tok_end"), (col("seq_id") + 1) * seqLen)
-          - greatest(col("tok_start"), col("seq_id") * seqLen))
-          .as("n_tokens"))
-  }
-
   /** Unigram-LM quality proxy (the CCNet/KenLM-filter shape with a
     * corpus-trained unigram model): per doc, the average corpus frequency
     * of its tokens and the count of rare tokens (frequency below the
-    * corpus mean — an integer comparison, `cnt * n_words < n_total`, so
+    * corpus mean — an integer comparison, `cnt * n_types < n_total`, so
     * the flag is engine-exact). Low avg_freq / high n_rare = gibberish.
     *
     * Scale: word counts are a map-side-combined agg on a Zipf-spread key;
@@ -162,21 +162,8 @@ object Curation {
     * evaluated twice (count pass + score pass) — a cheap split, not worth
     * materializing O(corpus) tokens to avoid. */
   def lmUnigramScore(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val words = docs.select(col(idCol),
-      explode(Portable.tokens(col(textCol))).as("word"))
-    val counts = words.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    val totals = counts.agg(count(lit(1)).as("n_words"),
-      sum(col("cnt")).as("n_total"))
-    words.join(counts, "word")
-      .crossJoin(broadcast(totals))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tok"),
-        sum(col("cnt")).as("freq_sum"),
-        sum(when(col("cnt") * col("n_words") < col("n_total"), 1L)
-          .otherwise(0L)).as("n_rare"))
-      .withColumn("avg_freq", col("freq_sum") / col("n_tok"))
-  }
+      textCol: String = "text"): DataFrame =
+    freqScore(docs, 1, gramCounts(docs, 1, textCol), "n_tok", idCol, textCol)
 
   /** Bigram-LM quality proxy — one order up from [[lmUnigramScore]]
     * (closer to the KenLM-style filters, which condition on context):
@@ -190,24 +177,58 @@ object Curation {
     * must be MATERIALIZED (stored artifact) for AQE's skew-join split to
     * apply to the score join (see the caveat on [[lmUnigramScore]]). */
   def lmBigramScore(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    // native single-pass bigram expression: the HOF formulation
-    // (element_at(tokens(text), i) per element) re-tokenizes the doc for
-    // every bigram — O(n²·len) per row, measured 10× slower
-    val bigrams = docs.select(col(idCol),
-      explode(native.word_bigrams(col(textCol))).as("bigram"))
-    val counts = bigrams.groupBy(col("bigram")).agg(count(lit(1)).as("cnt"))
-    val totals = counts.agg(count(lit(1)).as("n_types"),
+      textCol: String = "text"): DataFrame =
+    freqScore(docs, 2, gramCounts(docs, 2, textCol), "n_bigrams", idCol,
+      textCol)
+
+  /** The body of every frequency scorer: joins each doc's order-`n`
+    * grams to a (gram, cnt) table (the corpus counts, or a stored vocab)
+    * and aggregates per doc the gram count (`nCol`), the frequency sum,
+    * the rare grams (`cnt * n_types < n_total`, integer-exact, with
+    * n_types and n_total the table's type and occurrence totals,
+    * broadcast) and `avg_freq`. Grams absent from the table drop out of
+    * the inner join. */
+  private def freqScore(docs: DataFrame, n: Int, counts: DataFrame,
+      nCol: String, idCol: String, textCol: String): DataFrame = {
+    val table = counts.select(col(gramName(n)), col("cnt"))
+    val totals = table.agg(count(lit(1)).as("n_types"),
       sum(col("cnt")).as("n_total"))
-    bigrams.join(counts, "bigram")
+    docGrams(docs, n, idCol, textCol).join(table, gramName(n))
       .crossJoin(broadcast(totals))
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
+      .agg(count(lit(1)).as(nCol),
         sum(col("cnt")).as("freq_sum"),
         sum(when(col("cnt") * col("n_types") < col("n_total"), 1L)
           .otherwise(0L)).as("n_rare"))
-      .withColumn("avg_freq", col("freq_sum") / col("n_bigrams"))
+      .withColumn("avg_freq", col("freq_sum") / col(nCol))
   }
+
+  /** The column of `text`'s token n-grams of order `n` (1 to 3): the
+    * tokens, or the native single-pass bigram / trigram expression (the
+    * HOF spelling, `element_at(tokens(text), i)` per element, re-tokenizes
+    * the doc for every gram — O(n²·len) per row, measured 10× slower). */
+  private def grams(text: Column, n: Int): Column = n match {
+    case 1 => Portable.tokens(text)
+    case 2 => native.word_bigrams(text)
+    case 3 => native.word_trigrams(text)
+  }
+
+  /** The gram column's name for order `n`: word, bigram or trigram. */
+  private def gramName(n: Int): String = Seq("word", "bigram", "trigram")(n - 1)
+
+  /** Every doc's order-`n` grams, one (idCol, gram) row each. */
+  private def docGrams(docs: DataFrame, n: Int, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol), explode(grams(col(textCol), n)).as(gramName(n)))
+
+  /** The (gram, `cnt`) corpus count table of order-`n` grams — one
+    * map-side-combined agg on the gram key. Every count table in this
+    * object (the inline LM scorers, the vocab artifacts, the KN tables)
+    * is this one. */
+  private def gramCounts(docs: DataFrame, n: Int, textCol: String,
+      cnt: String = "cnt"): DataFrame =
+    docs.select(explode(grams(col(textCol), n)).as(gramName(n)))
+      .groupBy(col(gramName(n))).agg(count(lit(1)).as(cnt))
 
   /** INTERPOLATED bigram⊕unigram LM score on the milli-probability
     * lattice — the Jelinek–Mercer mixture (λ=0.7) that backs off where
@@ -222,14 +243,12 @@ object Curation {
     * (materialize + AQE skew-split caveat applies); totals broadcast. */
   def lmInterpScore(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val words = docs.select(explode(Portable.tokens(col(textCol))).as("word"))
-    val uni = words.groupBy(col("word")).agg(count(lit(1)).as("ucnt"))
+    val uni = gramCounts(docs, 1, textCol, "ucnt")
     val tot = uni.agg(sum(col("ucnt")).as("n_total"))
-    val bigrams = docs.select(col(idCol),
-        explode(native.word_bigrams(col(textCol))).as("bigram"))
+    val bigrams = docGrams(docs, 2, idCol, textCol)
       .withColumn("w1", split(col("bigram"), " ").getItem(0))
       .withColumn("w2", split(col("bigram"), " ").getItem(1))
-    val bi = bigrams.groupBy(col("bigram")).agg(count(lit(1)).as("bcnt"))
+    val bi = gramCounts(docs, 2, textCol, "bcnt")
     bigrams.join(bi, "bigram")
       .join(uni.select(col("word").as("w1"), col("ucnt").as("c1")), "w1")
       .join(uni.select(col("word").as("w2"), col("ucnt").as("c2")), "w2")
@@ -255,21 +274,34 @@ object Curation {
     * Scale: explode fan-out is n_tok/w per doc; ONE shuffle on the
     * well-spread span hash with map-side partial aggregation. */
   def repeatedSpans(docs: DataFrame, w: Int = 16, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = Portable.tokens(col(textCol))
-    // guard against the descending sequence(0, -1) for docs shorter
-    // than one chunk
-    val chunks = when(size(toks) < w, array().cast("array<bigint>"))
-      .otherwise(transform(
-        sequence(lit(0), floor(size(toks) / w).cast("int") - 1),
-        j => native.poly_hash(concat_ws(" ", slice(toks, j * w + 1, lit(w))))))
-    val spans = docs.select(col(idCol), explode(chunks).as("span_hash"))
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    hotSpans(spanHashes(docs, w, w, idCol, textCol), minDocs, idCol)
+
+  /** Poly-hashes of the full `w`-token chunks of `toks` that start every
+    * `stride` tokens (starts 0, stride, … ≤ size − w). A doc shorter than
+    * one chunk yields none: the guard keeps `sequence` from running
+    * backwards to a negative start. */
+  private def spanChunks(toks: Column, w: Int, stride: Int): Column =
+    when(size(toks) < w, array().cast("array<bigint>"))
+      .otherwise(transform(sequence(lit(0), size(toks) - w, lit(stride)),
+        st => native.poly_hash(concat_ws(" ", slice(toks, st + 1, lit(w))))))
+
+  /** One (idCol, span_hash) row per chunk of every doc. */
+  private def spanHashes(docs: DataFrame, w: Int, stride: Int, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol),
+      explode(spanChunks(Portable.tokens(col(textCol)), w, stride))
+        .as("span_hash"))
+
+  /** Chunk hashes seen in ≥ `minDocs` distinct docs, with their doc count,
+    * occurrence count and smallest doc id. */
+  private def hotSpans(spans: DataFrame, minDocs: Int,
+      idCol: String): DataFrame =
     spans.groupBy(col("span_hash"))
       .agg(countDistinct(col(idCol)).as("n_docs"),
         count(lit(1)).as("n_occ"),
         min(col(idCol)).as("min_doc"))
       .filter(col("n_docs") >= minDocs)
-  }
 
   /** [[repeatedSpans]] with a HALF-CHUNK STRIDE — the boundary-gap
     * closer: chunks start every w/2 tokens instead of every w, so a
@@ -284,24 +316,13 @@ object Curation {
     * fan-out of the aligned pass — still n_tok·2/w rows per doc — and
     * the same single map-side-combined shuffle on the span hash. */
   def repeatedSpansOverlap(docs: DataFrame, w: Int = 16, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val stride = math.max(w / 2, 1)
-    val toks = Portable.tokens(col(textCol))
-    val chunks = when(size(toks) < w, array().cast("array<bigint>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - w, lit(stride)),
-        st => native.poly_hash(concat_ws(" ", slice(toks, st + 1, lit(w))))))
-    docs.select(col(idCol), explode(chunks).as("span_hash"))
-      .groupBy(col("span_hash"))
-      .agg(countDistinct(col(idCol)).as("n_docs"),
-        count(lit(1)).as("n_occ"),
-        min(col(idCol)).as("min_doc"))
-      .filter(col("n_docs") >= minDocs)
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    hotSpans(spanHashes(docs, w, math.max(w / 2, 1), idCol, textCol),
+      minDocs, idCol)
 
   /** EXACT repeated-span pass with TRUE boundaries — the verify-extend
     * stage above the [[repeatedSpans]]/[[repeatedSpansOverlap]] chunk
-    * screens (r12, verdict #2; the Lee et al. '22 exact-substring
+    * screens (the Lee et al. '22 exact-substring
     * semantics in relational form): a `w`-token window slides at EVERY
     * token position (stride 1), a position is MARKED when its window's
     * exact text occurs in ≥ `minDocs` distinct documents, and each
@@ -332,7 +353,7 @@ object Curation {
     * candidate join — are [[Materialize]]d so each scan runs ONCE;
     * without it the differing exchanges (partial-agg child vs raw
     * child) defeat ReuseExchange and the corpus is tokenized + hashed
-    * twice (r12 verdict, perf-weak). */
+    * twice. */
   def repeatedSpansExact(docs: DataFrame, w: Int = 16, minDocs: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(w > 0 && minDocs > 1, s"need w > 0, minDocs > 1; got $w, $minDocs")
@@ -374,7 +395,7 @@ object Curation {
         col("n_wins"))
   }
 
-  /** The 100 TB POSTURE of [[repeatedSpansExact]] (r12): the cheap
+  /** The 100 TB POSTURE of [[repeatedSpansExact]]: the cheap
     * half-stride chunk screen nominates CANDIDATE DOCUMENTS (any doc
     * holding a stride-grid chunk shared by ≥ `minDocs` docs), and the
     * exact stride-1 verify-extend pass runs only over that slice — true
@@ -387,20 +408,12 @@ object Curation {
     * candidate-bounded work. The screen's chunk explode `ch` is
     * consumed by both the hot-hash groupBy and the candidate join, so
     * it is [[Materialize]]d — the half-stride tokenize + hash of the
-    * whole corpus runs once (r12 verdict nit). */
+    * whole corpus runs once. */
   def repeatedSpansCascade(docs: DataFrame, w: Int = 16, minDocs: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val stride = math.max(w / 2, 1)
-    val toks = Portable.tokens(col(textCol))
-    val chunks = when(size(toks) < w, array().cast("array<bigint>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - w, lit(stride)),
-        st => native.poly_hash(concat_ws(" ", slice(toks, st + 1, lit(w))))))
-    val ch = Materialize(docs.select(col(idCol), explode(chunks).as("span_hash")))
-    val hot = ch.groupBy(col("span_hash"))
-      .agg(countDistinct(col(idCol)).as("nd"))
-      .filter(col("nd") >= minDocs)
-      .select(col("span_hash"))
+    val ch = Materialize(
+      spanHashes(docs, w, math.max(w / 2, 1), idCol, textCol))
+    val hot = hotSpans(ch, minDocs, idCol).select(col("span_hash"))
     val cand = ch.join(hot, "span_hash").select(col(idCol)).distinct()
     repeatedSpansExact(docs.join(cand, idCol), w, minDocs, idCol, textCol)
   }
@@ -416,21 +429,8 @@ object Curation {
     * corpus; tokens absent from the vocab drop out of the scoring join
     * (inner join — the stored-artifact contract). */
   def lmUnigramScoreVocab(docs: DataFrame, vocab: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val words = docs.select(col(idCol),
-      explode(Portable.tokens(col(textCol))).as("word"))
-    val counts = vocab.select(col("word"), col("cnt"))
-    val totals = counts.agg(count(lit(1)).as("n_words"),
-      sum(col("cnt")).as("n_total"))
-    words.join(counts, "word")
-      .crossJoin(broadcast(totals))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tok"),
-        sum(col("cnt")).as("freq_sum"),
-        sum(when(col("cnt") * col("n_words") < col("n_total"), 1L)
-          .otherwise(0L)).as("n_rare"))
-      .withColumn("avg_freq", col("freq_sum") / col("n_tok"))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    freqScore(docs, 1, vocab, "n_tok", idCol, textCol)
 
   /** [[lmBigramScore]] against the STORED [[bigramVocabBuild]] artifact —
     * the same web-scale wiring as [[lmUnigramScoreVocab]]: the bigram
@@ -439,21 +439,8 @@ object Curation {
     * the Zipf head. Scores ≡ the inline formulation for a minCount = 1
     * vocab over the same corpus. */
   def lmBigramScoreVocab(docs: DataFrame, vocab: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val bigrams = docs.select(col(idCol),
-      explode(native.word_bigrams(col(textCol))).as("bigram"))
-    val counts = vocab.select(col("bigram"), col("cnt"))
-    val totals = counts.agg(count(lit(1)).as("n_types"),
-      sum(col("cnt")).as("n_total"))
-    bigrams.join(counts, "bigram")
-      .crossJoin(broadcast(totals))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("cnt")).as("freq_sum"),
-        sum(when(col("cnt") * col("n_types") < col("n_total"), 1L)
-          .otherwise(0L)).as("n_rare"))
-      .withColumn("avg_freq", col("freq_sum") / col("n_bigrams"))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    freqScore(docs, 2, vocab, "n_bigrams", idCol, textCol)
 
   /** Epoch-style source upsampling — the data-mixture counterpart of
     * temperature DOWNsampling: each source gets a repeat factor r (its
@@ -497,16 +484,13 @@ object Curation {
     * driver-adjacent bottleneck in the pipeline; here no task ever sorts
     * more than its range slice. */
   def vocabBuild(docs: DataFrame, minCount: Long = 1,
-      textCol: String = "text"): DataFrame = {
-    val counts = vocabCounts(docs, textCol).filter(col("cnt") >= minCount)
-    globalRank(counts, Seq(col("cnt").desc, col("word")), "vocab_id")
-  }
+      textCol: String = "text"): DataFrame =
+    rankedVocab(docs, 1, minCount, textCol)
 
   /** The UNRANKED (word, cnt) table behind [[vocabBuild]] — the partial
     * artifact an incremental ingest stores per batch. */
   def vocabCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(explode(Portable.tokens(col(textCol))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+    gramCounts(docs, 1, textCol)
 
   /** INCREMENTAL vocab maintenance: merge stored per-batch count
     * artifacts (plain commutative sums), apply minCount on the MERGED
@@ -531,13 +515,15 @@ object Curation {
     * in practice, O(vocab²) in theory), which is exactly why the rank
     * must never hit a single partition. */
   def bigramVocabBuild(docs: DataFrame, minCount: Long = 1,
-      textCol: String = "text"): DataFrame = {
-    val counts = docs
-      .select(explode(native.word_bigrams(col(textCol))).as("bigram"))
-      .groupBy(col("bigram")).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount)
-    globalRank(counts, Seq(col("cnt").desc, col("bigram")), "vocab_id")
-  }
+      textCol: String = "text"): DataFrame =
+    rankedVocab(docs, 2, minCount, textCol)
+
+  /** The order-`n` vocab artifact: (gram, cnt, vocab_id) for grams seen
+    * ≥ `minCount` times, ids dense in (cnt desc, gram) order. */
+  private def rankedVocab(docs: DataFrame, n: Int, minCount: Long,
+      textCol: String): DataFrame =
+    globalRank(gramCounts(docs, n, textCol).filter(col("cnt") >= minCount),
+      Seq(col("cnt").desc, col(gramName(n))), "vocab_id")
 
   /** Two-phase global dense rank over a TOTAL order with no
     * single-partition window: `repartitionByRange` on the order puts
@@ -572,7 +558,7 @@ object Curation {
   }
 
   /** SAMPLED file cut points over a sort key — the production layout
-    * writer's boundary pass (r12, verdict #4; the RangePartitioner
+    * writer's boundary pass (the RangePartitioner
     * shape, made deterministic): a fixed-size uniform sample (bottom-`m`
     * rows under the C99 affine sample priority of `idCol` — a
     * distributed top-k, NO global sort or rank) is collected, sorted by
@@ -817,7 +803,7 @@ object Curation {
       .withColumn("score", native.hashed_linear_score(col(textCol), halfRange))
       .withColumn("pred", col("score") > 0)
 
-  /** Per-source robust CALIBRATION of the classifier score (r11 — the
+  /** Per-source robust CALIBRATION of the classifier score (the
     * cross-source normalization step before a single global threshold:
     * raw scores are not comparable across sources whose length/register
     * distributions differ, so each source is centered by its MEDIAN and
@@ -862,7 +848,7 @@ object Curation {
     docs.withColumn("shard",
       native.poly_hash(col(idCol).cast("string")) % nShards)
 
-  /** Per-shard export CHECKSUMS (r11) — the integrity audit a consumer
+  /** Per-shard export CHECKSUMS — the integrity audit a consumer
     * runs after copying a shard: row count, token total, and an
     * ORDER-INSENSITIVE content hash (XOR of each doc's poly hash over
     * id:text — a dropped, duplicated, or altered row flips it; XOR
@@ -1049,25 +1035,6 @@ object Curation {
         round(col("n_dups") / col("n_docs"), 6))
   }
 
-  /** Prefix-containment duplicate pairs: (shorter, longer) where the
-    * shorter doc is a strict prefix of the longer (truncation/re-crawl
-    * duplicates that exact dedup misses). Blocked self-join on (hash of
-    * the first `prefixLen` characters, LENGTH BAND of the shorter side) —
-    * containment implies the prefix keys match, so recall is exact for
-    * docs ≥ prefixLen chars.
-    *
-    * Scale / skew: the prefix hash alone collapses boilerplate-heavy
-    * corpora (every page starts "<!DOCTYPE html>") into one giant block
-    * with a quadratic within-block join. Folding a log2 length band of
-    * the SHORTER side into the key splits such blocks by size: the short
-    * side emits one key (its own band), the longer side explodes over the
-    * bands ≤ its own — a bounded ×log2(maxLen) fan-out (≤ ~40 keys for
-    * any realistic document) — and a prefix-sharing block now subdivides
-    * into per-band cells whose sizes follow the corpus length
-    * distribution instead of one hot key. Containment needs
-    * len_in ≤ len_out, i.e. band_in ≤ band_out, so recall stays exact
-    * (CurationSpec asserts parity against the unbanded join on a
-    * single-prefix corpus). */
   /** DSIR importance weights (Xie et al. '23, "Data Selection for
     * Language Models via Importance Resampling"): score every raw
     * document by how much more likely its hashed-unigram bag is under a
@@ -1176,6 +1143,25 @@ object Curation {
           .as("alloc_tokens"))
   }
 
+  /** Prefix-containment duplicate pairs: (shorter, longer) where the
+    * shorter doc is a strict prefix of the longer (truncation/re-crawl
+    * duplicates that exact dedup misses). Blocked self-join on (hash of
+    * the first `prefixLen` characters, LENGTH BAND of the shorter side) —
+    * containment implies the prefix keys match, so recall is exact for
+    * docs ≥ prefixLen chars.
+    *
+    * Scale / skew: the prefix hash alone collapses boilerplate-heavy
+    * corpora (every page starts "<!DOCTYPE html>") into one giant block
+    * with a quadratic within-block join. Folding a log2 length band of
+    * the SHORTER side into the key splits such blocks by size: the short
+    * side emits one key (its own band), the longer side explodes over the
+    * bands ≤ its own — a bounded ×log2(maxLen) fan-out (≤ ~40 keys for
+    * any realistic document) — and a prefix-sharing block now subdivides
+    * into per-band cells whose sizes follow the corpus length
+    * distribution instead of one hot key. Containment needs
+    * len_in ≤ len_out, i.e. band_in ≤ band_out, so recall stays exact
+    * (CurationSpec asserts parity against the unbanded join on a
+    * single-prefix corpus). */
   def containedPairs(docs: DataFrame, prefixLen: Int = 16,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val keyed = docs.select(col(idCol), col(textCol))
@@ -1217,6 +1203,11 @@ object Curation {
       .select(col(idCol), col(domainCol), col("n_chars"), col("rk"))
   }
 
+  /** The FULL KN probability table over every seen bigram — the stored
+    * model artifact [[knModel]] tops and [[knScore]] scores against. */
+  def knTable(docs: DataFrame, textCol: String = "text"): DataFrame =
+    knTableOf(docs, 2, textCol)
+
   /** Interpolated Kneser–Ney bigram model (the smoothing KenLM-style
     * quality filters train; absolute discount d = 3/4): for every SEEN
     * bigram (c12 ≥ 1 > d, so the discounted numerator needs no max),
@@ -1240,99 +1231,9 @@ object Curation {
     * downstream score join); the three marginal tables are projections of
     * the O(types) count table, joined back on word keys; B broadcasts.
     * Top-k is a TakeOrdered (k-bounded), never a full sort. */
-  /** The FULL KN probability table over every seen bigram — the stored
-    * model artifact [[knModel]] tops and [[knScore]] scores against. */
-  def knTable(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    // the O(types) count table is materialized ONCE — the marginals (l,
-    // r, B) and the final join all derive from it, so the corpus-sized
-    // bigram explode+agg runs a single time, not four (the dsir_select
-    // share-the-scan pattern)
-    val bi = Materialize(docs
-      .select(explode(native.word_bigrams(col(textCol))).as("bigram"))
-      .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
-      .select(split(col("bigram"), " ").getItem(0).as("w1"),
-        split(col("bigram"), " ").getItem(1).as("w2"), col("c12")))
-    val left = bi.groupBy(col("w1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p_fwd"))
-    val right = bi.groupBy(col("w2")).agg(count(lit(1)).as("n1p_bwd"))
-    val types = bi.agg(count(lit(1)).as("b_types"))
-    bi.join(left, "w1").join(right, "w2").crossJoin(broadcast(types))
-      .select(col("w1"), col("w2"), col("c12"), col("c1"),
-        col("n1p_fwd"), col("n1p_bwd"), col("b_types"),
-        round((col("c12").cast("double") - lit(0.75d))
-            / col("c1").cast("double")
-          + lit(0.75d) * col("n1p_fwd").cast("double")
-            / col("c1").cast("double")
-            * (col("n1p_bwd").cast("double") / col("b_types").cast("double")),
-          6).as("p_kn"))
-  }
-
   def knModel(docs: DataFrame, k: Int = 200,
       textCol: String = "text"): DataFrame =
-    knTable(docs, textCol)
-      .orderBy(col("c12").desc, col("w1"), col("w2"))
-      .limit(k)
-
-  /** [[knTable]] one smoothing order up: the absolute-discounted trigram
-    * probability P(w3 | w1 w2) with a continuation-count backoff —
-    * p = (c123 − 0.75)/c12 + 0.75·N1+(w1 w2 •)/c12 · N1+(• • w3)/T.
-    * Same exactness argument as the bigram table: every factor is one
-    * exact-integer-to-double conversion and one IEEE op, so the 6-dp
-    * round agrees bit-for-bit across engines.
-    *
-    * Scale: one corpus scan → trigram type counts (map-side combined);
-    * the context/continuation marginals are projections of the O(types)
-    * count table joined back on their keys; T broadcasts. */
-  def knTable3(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val tri = Materialize(docs
-      .select(explode(native.word_trigrams(col(textCol))).as("trigram"))
-      .groupBy(col("trigram")).agg(count(lit(1)).as("c123"))
-      .select(split(col("trigram"), " ").getItem(0).as("w1"),
-        split(col("trigram"), " ").getItem(1).as("w2"),
-        split(col("trigram"), " ").getItem(2).as("w3"), col("c123")))
-    val ctx = tri.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("c123")).as("c12"), count(lit(1)).as("n1p_fwd"))
-    val cont = tri.groupBy(col("w3")).agg(count(lit(1)).as("n1p_bwd"))
-    val types = tri.agg(count(lit(1)).as("t_types"))
-    tri.join(ctx, Seq("w1", "w2")).join(cont, "w3")
-      .crossJoin(broadcast(types))
-      .select(col("w1"), col("w2"), col("w3"), col("c123"), col("c12"),
-        col("n1p_fwd"), col("n1p_bwd"), col("t_types"),
-        round((col("c123").cast("double") - lit(0.75d))
-            / col("c12").cast("double")
-          + lit(0.75d) * col("n1p_fwd").cast("double")
-            / col("c12").cast("double")
-            * (col("n1p_bwd").cast("double") / col("t_types").cast("double")),
-          6).as("p_kn"))
-  }
-
-  def knModel3(docs: DataFrame, k: Int = 200,
-      textCol: String = "text"): DataFrame =
-    knTable3(docs, textCol)
-      .orderBy(col("c123").desc, col("w1"), col("w2"), col("w3"))
-      .limit(k)
-
-  /** [[knScore]] one smoothing order up: per-doc improbable-TRANSITION
-    * density against the trigram KN table — the longer-context
-    * gibberish gate (a doc can pass every bigram check while its
-    * trigrams are improbable, e.g. shuffled clauses). Docs with < 3
-    * tokens have no trigrams and drop. Same scale posture as the
-    * bigram scorer: O(types) model (materialized inside [[knTable3]]),
-    * Zipf-keyed score join. */
-  def knScore3(docs: DataFrame, tau: Double = 0.02,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val model = knTable3(docs, textCol)
-      .select(concat_ws(" ", col("w1"), col("w2"), col("w3")).as("trigram"),
-        col("p_kn"))
-    docs
-      .select(col(idCol),
-        explode(native.word_trigrams(col(textCol))).as("trigram"))
-      .join(model, "trigram")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(when(col("p_kn") < tau, 1L).otherwise(0L)).as("n_improbable"),
-        round(min(col("p_kn")), 6).as("min_p"))
-  }
+    knTop(knTable(docs, textCol), 2, k)
 
   /** Score documents against the KN model (the KenLM-filter gate one
     * smoothing order up from [[lmBigramScore]]): per doc, the bigram
@@ -1346,6 +1247,105 @@ object Curation {
     * is O(types) (materialized inside [[knTable]]); the score join keys
     * on the Zipf bigram — the AQE skew-split caveat on [[lmUnigramScore]]
     * applies. */
+  def knScore(docs: DataFrame, tau: Double = 0.01,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    knScoreOf(docs, 2, tau, idCol, textCol)
+
+  /** [[knTable]] one smoothing order up: the absolute-discounted trigram
+    * probability P(w3 | w1 w2) with a continuation-count backoff —
+    * p = (c123 − 0.75)/c12 + 0.75·N1+(w1 w2 •)/c12 · N1+(• • w3)/T.
+    * Same exactness argument as the bigram table: every factor is one
+    * exact-integer-to-double conversion and one IEEE op, so the 6-dp
+    * round agrees bit-for-bit across engines.
+    *
+    * Scale: one corpus scan → trigram type counts (map-side combined);
+    * the context/continuation marginals are projections of the O(types)
+    * count table joined back on their keys; T broadcasts. */
+  def knTable3(docs: DataFrame, textCol: String = "text"): DataFrame =
+    knTableOf(docs, 3, textCol)
+
+  /** [[knModel]] one order up: the top `k` trigrams by (c123 desc, w1,
+    * w2, w3) of [[knTable3]]. */
+  def knModel3(docs: DataFrame, k: Int = 200,
+      textCol: String = "text"): DataFrame =
+    knTop(knTable3(docs, textCol), 3, k)
+
+  /** [[knScore]] one smoothing order up: per-doc improbable-TRANSITION
+    * density against the trigram KN table — the longer-context
+    * gibberish gate (a doc can pass every bigram check while its
+    * trigrams are improbable, e.g. shuffled clauses). Docs with < 3
+    * tokens have no trigrams and drop. Same scale posture as the
+    * bigram scorer: O(types) model (materialized inside [[knTable3]]),
+    * Zipf-keyed score join. */
+  def knScore3(docs: DataFrame, tau: Double = 0.02,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    knScoreOf(docs, 3, tau, idCol, textCol)
+
+  /** The KN table of order `n` (2 or 3): columns w1 … wn, the gram count
+    * (c12 / c123), its context's count (c1 / c12) and distinct
+    * continuations (n1p_fwd), the last word's distinct left contexts
+    * (n1p_bwd), the gram-type total (b_types / t_types) and p_kn. The
+    * O(types) count table is materialized ONCE: the marginals and the
+    * final join all derive from it, so the corpus-sized gram explode+agg
+    * runs a single time, not four (the dsir_select share-the-scan
+    * pattern). */
+  private def knTableOf(docs: DataFrame, n: Int, textCol: String): DataFrame = {
+    val ws = knWords(n)
+    val (cGram, cCtx) = (knCount(n), knCount(n - 1))
+    val types = Seq("b_types", "t_types")(n - 2)
+    val words = split(col(gramName(n)), " ")
+    val g = Materialize(gramCounts(docs, n, textCol, cGram)
+      .select(ws.indices.map(i => words.getItem(i).as(ws(i))) :+ col(cGram): _*))
+    val ctx = g.groupBy(ws.init.map(col): _*)
+      .agg(sum(col(cGram)).as(cCtx), count(lit(1)).as("n1p_fwd"))
+    val cont = g.groupBy(col(ws.last)).agg(count(lit(1)).as("n1p_bwd"))
+    val nTypes = g.agg(count(lit(1)).as(types))
+    g.join(ctx, ws.init).join(cont, ws.last).crossJoin(broadcast(nTypes))
+      .select((ws ++ Seq(cGram, cCtx, "n1p_fwd", "n1p_bwd", types)).map(col)
+        :+ round((col(cGram).cast("double") - lit(0.75d))
+            / col(cCtx).cast("double")
+          + lit(0.75d) * col("n1p_fwd").cast("double")
+            / col(cCtx).cast("double")
+            * (col("n1p_bwd").cast("double") / col(types).cast("double")),
+          6).as("p_kn"): _*)
+  }
+
+  /** w1 … wn: the word columns of an order-`n` KN table. */
+  private def knWords(n: Int): Seq[String] = (1 to n).map(i => s"w$i")
+
+  /** The count column of an order-`n` gram in a KN table: c1, c12, c123. */
+  private def knCount(n: Int): String = "c" + (1 to n).mkString
+
+  /** The model artifact: the top `k` rows of an order-`n` KN table by
+    * (count desc, w1 … wn) — a TakeOrdered, never a full sort. */
+  private def knTop(table: DataFrame, n: Int, k: Int): DataFrame =
+    table.orderBy(col(knCount(n)).desc +: knWords(n).map(col): _*).limit(k)
+
+  /** Per doc, against the order-`n` KN table: the gram count
+    * (n_bigrams / n_trigrams), the grams with p_kn < `tau` and the
+    * smallest p_kn. Grams are joined on their space-joined text. */
+  private def knScoreOf(docs: DataFrame, n: Int, tau: Double, idCol: String,
+      textCol: String): DataFrame = {
+    val model = knTableOf(docs, n, textCol)
+      .select(concat_ws(" ", knWords(n).map(col): _*).as(gramName(n)),
+        col("p_kn"))
+    docGrams(docs, n, idCol, textCol)
+      .join(model, gramName(n))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as(s"n_${gramName(n)}s"),
+        sum(when(col("p_kn") < tau, 1L).otherwise(0L)).as("n_improbable"),
+        round(min(col("p_kn")), 6).as("min_p"))
+  }
+
+  /** The deterministic draw priority both exact-k samplers (and the
+    * streaming twin) share: the affine-rehashed poly hash of the id —
+    * a pure function of the id, identical on any engine/arrival
+    * order. */
+  def samplePriority(id: Column): Column =
+    (native.poly_hash(concat(lit("sample:"), id.cast("string")))
+      * graft.plans.HashOps.aK(0) + graft.plans.HashOps.bK(0)) %
+      graft.plans.HashOps.M
+
   /** Deterministic EXACT-k per-stratum subsample (the fixed-size eval/
     * holdout draw — Bernoulli sampling gives a RANDOM size; this gives
     * exactly k): priority = the affine-rehashed hash of the doc id (the
@@ -1359,15 +1359,6 @@ object Curation {
     * exchange (posture-asserted) — each map task ships only its local
     * top-k, so the shuffle carries O(k · tasks) rows per stratum, never
     * the stratum. */
-  /** The deterministic draw priority both exact-k samplers (and the
-    * streaming twin) share: the affine-rehashed poly hash of the id —
-    * a pure function of the id, identical on any engine/arrival
-    * order. */
-  def samplePriority(id: Column): Column =
-    (native.poly_hash(concat(lit("sample:"), id.cast("string")))
-      * graft.plans.HashOps.aK(0) + graft.plans.HashOps.bK(0)) %
-      graft.plans.HashOps.M
-
   def sampleExactK(docs: DataFrame, k: Int, strataCol: String = "source",
       idCol: String = "doc_id"): DataFrame = {
     val u = samplePriority(col(idCol))
@@ -1376,6 +1367,16 @@ object Curation {
       .withColumn("sample_rank", row_number().over(w).cast("long"))
       .filter(col("sample_rank") <= k)
       .select(col(idCol), col(strataCol), col("sample_rank"))
+  }
+
+  /** The WEIGHTED draw priority shared by [[sampleWeightedK]] and the
+    * streaming twin: (u·10⁶) div max(w, 1) in exact long arithmetic
+    * (u − u mod w over w — the quotient is an exactly-representable
+    * integer, so the double division is exact). */
+  def weightedSamplePriority(id: Column, weight: Column): Column = {
+    val u = samplePriority(id) * 1000000L
+    val w = greatest(weight.cast("long"), lit(1L))
+    ((u - pmod(u, w)) / w).cast("long")
   }
 
   /** WEIGHTED deterministic exact-k per-stratum sample: like
@@ -1391,16 +1392,6 @@ object Curation {
     * stratum. Same bottom-k shape as sampleExactK, so the same
     * WindowGroupLimit partial-top-k and the same shard-merge theorem
     * apply (bottom-k under ANY fixed total order merges). */
-  /** The WEIGHTED draw priority shared by [[sampleWeightedK]] and the
-    * streaming twin: (u·10⁶) div max(w, 1) in exact long arithmetic
-    * (u − u mod w over w — the quotient is an exactly-representable
-    * integer, so the double division is exact). */
-  def weightedSamplePriority(id: Column, weight: Column): Column = {
-    val u = samplePriority(id) * 1000000L
-    val w = greatest(weight.cast("long"), lit(1L))
-    ((u - pmod(u, w)) / w).cast("long")
-  }
-
   def sampleWeightedK(docs: DataFrame, k: Int, weight: Column,
       strataCol: String = "source", idCol: String = "doc_id"): DataFrame = {
     val w = Window.partitionBy(col(strataCol)).orderBy(col("__p"), col(idCol))
@@ -1409,19 +1400,5 @@ object Curation {
       .filter(col("sample_rank") <= k)
       .select(col(idCol), col(strataCol), col("__p").as("priority"),
         col("sample_rank"))
-  }
-
-  def knScore(docs: DataFrame, tau: Double = 0.01,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val model = knTable(docs, textCol)
-      .select(concat_ws(" ", col("w1"), col("w2")).as("bigram"), col("p_kn"))
-    docs
-      .select(col(idCol),
-        explode(native.word_bigrams(col(textCol))).as("bigram"))
-      .join(model, "bigram")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(when(col("p_kn") < tau, 1L).otherwise(0L)).as("n_improbable"),
-        round(min(col("p_kn")), 6).as("min_p"))
   }
 }

@@ -48,6 +48,17 @@ object Dedup {
       .select(col("doc_a"), col("doc_b")).distinct()
   }
 
+  /** The per-(source, slot) union-signature table behind
+    * [[sourceMinhashOverlap]] — the MERGEABLE per-batch artifact: two
+    * batches' tables combine by slot-wise min (spec-proven ≡ the
+    * full-corpus table). */
+  def sourceMinhashSlots(docs: DataFrame, k: Int = 16, shingleN: Int = 3,
+      srcCol: String = "source", textCol: String = "text"): DataFrame =
+    docs.select(col(srcCol).as("src"),
+        posexplode(native.minhash_sig(col(textCol), k, shingleN))
+          .as(Seq("slot", "h")))
+      .groupBy(col("src"), col("slot")).agg(min(col("h")).as("mh"))
+
   /** Cross-source overlap ESTIMATED from minhash-union sketches — the
     * O(sources·k) alternative to [[Curation.sourceOverlap]]'s exact
     * gram self-join: the minhash of a set UNION is the slot-wise MIN of
@@ -63,17 +74,6 @@ object Dedup {
     * The sketch is MERGEABLE (min is associative-commutative): per-batch
     * sketches stored daily combine by slot-wise min, no corpus rescan —
     * the vocabMerge property for set overlap. */
-  /** The per-(source, slot) union-signature table behind
-    * [[sourceMinhashOverlap]] — the MERGEABLE per-batch artifact: two
-    * batches' tables combine by slot-wise min (spec-proven ≡ the
-    * full-corpus table). */
-  def sourceMinhashSlots(docs: DataFrame, k: Int = 16, shingleN: Int = 3,
-      srcCol: String = "source", textCol: String = "text"): DataFrame =
-    docs.select(col(srcCol).as("src"),
-        posexplode(native.minhash_sig(col(textCol), k, shingleN))
-          .as(Seq("slot", "h")))
-      .groupBy(col("src"), col("slot")).agg(min(col("h")).as("mh"))
-
   def sourceMinhashOverlap(docs: DataFrame, k: Int = 16, shingleN: Int = 3,
       srcCol: String = "source", textCol: String = "text"): DataFrame = {
     val slots = sourceMinhashSlots(docs, k, shingleN, srcCol, textCol)
@@ -483,9 +483,7 @@ object Dedup {
     * contaminated docs. */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val benchGrams = benchmark
-      .select(explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
-      .distinct()
+    val benchGrams = gramsOf(benchmark, n, textCol).distinct()
     corpus
       .select(col(idCol).as("doc_id"),
         explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
@@ -513,28 +511,49 @@ object Dedup {
       mBits: Int = 4096, kHashes: Int = 3, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     require(mBits % 64 == 0, "mBits must be a multiple of 64")
-    def positions(g: Column): Seq[Column] =
-      (0 until kHashes).map(j => Portable.rehash(g, j) % mBits)
-    val bloom = benchmark
-      .select(explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
-      .select(explode(array(positions(col("gram")): _*)).as("pos"))
-      .distinct()
-      .agg(collect_list(col("pos")).as("ps"))
-      .select(native.positions_to_bitset(col("ps"), mBits / 64).as("bloom"))
-    val withPos = corpus
+    val bloom = bloomBitset(
+      bloomSetPositions(gramsOf(benchmark, n, textCol), mBits, kHashes), mBits)
+    corpus
       .select(col(idCol).as("doc_id"),
         explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
       .crossJoin(broadcast(bloom))
-    val tested = positions(col("gram")).zipWithIndex
-      .foldLeft(withPos) { case (df, (p, j)) => df.withColumn(s"__p$j", p) }
-    val allSet = (0 until kHashes)
-      .map(j => expr(s"(element_at(bloom, cast(__p$j div 64 as int) + 1) & " +
-        s"shiftleft(1L, cast(__p$j % 64 as int))) != 0"))
-      .reduce(_ && _)
-    tested.filter(allSet)
+      .filter(bloomHit(col("gram"), col("bloom"), mBits, kHashes))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_maybe_shared"))
   }
+
+  /** The one-column (gram) relation of every doc's distinct char-n-gram
+    * hashes. */
+  private def gramsOf(docs: DataFrame, n: Int, textCol: String): DataFrame =
+    docs.select(explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
+
+  /** The `kHashes` Bloom positions of gram hash `g`: affine re-hashes of
+    * the portable hash, each in [0, mBits). */
+  private def bloomPositions(g: Column, mBits: Int, kHashes: Int): Seq[Column] =
+    (0 until kHashes).map(j => Portable.rehash(g, j) % mBits)
+
+  /** The distinct Bloom positions (`pos`) that a (gram) relation sets. */
+  private def bloomSetPositions(grams: DataFrame, mBits: Int,
+      kHashes: Int): DataFrame =
+    grams.select(explode(array(bloomPositions(col("gram"), mBits, kHashes): _*))
+        .as("pos"))
+      .distinct()
+
+  /** The one-row `bloom` bitset (mBits/64 longs) over distinct positions. */
+  private def bloomBitset(positions: DataFrame, mBits: Int): DataFrame =
+    positions.agg(collect_list(col("pos")).as("ps"))
+      .select(native.positions_to_bitset(col("ps"), mBits / 64).as("bloom"))
+
+  /** Whether all `kHashes` Bloom positions of gram `g` are set in the
+    * bitset column `bloom`. Positions are ≥ 0, so shiftright(p, 6) is
+    * p div 64 and p & 63 is p % 64. */
+  private def bloomHit(g: Column, bloom: Column, mBits: Int,
+      kHashes: Int): Column =
+    bloomPositions(g, mBits, kHashes).map { p =>
+      element_at(bloom, shiftright(p, 6).cast("int") + 1)
+        .bitwiseAND(call_function("shiftleft", lit(1L),
+          p.bitwiseAND(63).cast("int"))) =!= 0
+    }.reduce(_ && _)
 
   /** The Bloom bitset COLLECTED as frozen model state (mBits/64 longs —
     * 512 B at the default): what a deployment trains OFFLINE from the
@@ -544,26 +563,13 @@ object Dedup {
   def bloomBits(benchmark: DataFrame, n: Int = 8, mBits: Int = 4096,
       kHashes: Int = 3, textCol: String = "text"): Array[Long] = {
     require(mBits % 64 == 0, "mBits must be a multiple of 64")
-    def positions(g: Column): Seq[Column] =
-      (0 until kHashes).map(j => Portable.rehash(g, j) % mBits)
-    val rows = benchmark
-      .select(explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
-      .select(explode(array(positions(col("gram")): _*)).as("pos"))
-      .distinct()
-      .agg(collect_list(col("pos")).as("ps"))
-      .select(native.positions_to_bitset(col("ps"), mBits / 64).as("bloom"))
+    val rows = bloomBitset(
+      bloomSetPositions(gramsOf(benchmark, n, textCol), mBits, kHashes), mBits)
       .collect()
     if (rows.isEmpty) Array.fill(mBits / 64)(0L)
     else rows(0).getSeq[Long](0).toArray
   }
 
-  /** [[decontaminateBloom]] against FROZEN bits as ONE narrow per-doc
-    * expression — count the doc's distinct n-grams whose kHashes
-    * positions are all set, bits inlined as a 512 B literal: no
-    * explode-shuffle, no join, no state — streaming-safe, the
-    * offline-trained/online-applied pattern (C61/C137). Emits only
-    * flagged docs, the batch gate's exact relation (spec-proven;
-    * `decontaminate_stream` shares `decontaminate_bloom`'s oracle). */
   /** The per-row COLUMN face of the frozen-bits gate — count of the
     * text's distinct n-grams whose kHashes positions are all set —
     * split out so wider ingest projections compose it next to the
@@ -575,17 +581,17 @@ object Dedup {
     require(bits.length == mBits / 64,
       s"bits length ${bits.length} != mBits/64 = ${mBits / 64}")
     val bloom = typedlit(bits.toSeq)
-    def hit(g: Column): Column = (0 until kHashes).map { j =>
-      val p = Portable.rehash(g, j) % mBits
-      // p ≥ 0, so shiftright(p,6) = p div 64 and p & 63 = p % 64 —
-      // the batch gate's exact bit arithmetic
-      element_at(bloom, shiftright(p, 6).cast("int") + 1)
-        .bitwiseAND(call_function("shiftleft", lit(1L),
-          p.bitwiseAND(63).cast("int"))) =!= 0
-    }.reduce(_ && _)
-    size(filter(native.ngram_hash_set(text, n), g => hit(g))).cast("long")
+    size(filter(native.ngram_hash_set(text, n),
+      g => bloomHit(g, bloom, mBits, kHashes))).cast("long")
   }
 
+  /** [[decontaminateBloom]] against FROZEN bits as ONE narrow per-doc
+    * expression — count the doc's distinct n-grams whose kHashes
+    * positions are all set, bits inlined as a 512 B literal: no
+    * explode-shuffle, no join, no state — streaming-safe, the
+    * offline-trained/online-applied pattern (C61/C137). Emits only
+    * flagged docs, the batch gate's exact relation (spec-proven;
+    * `decontaminate_stream` shares `decontaminate_bloom`'s oracle). */
   def bloomGateWith(docs: DataFrame, bits: Array[Long], n: Int = 8,
       mBits: Int = 4096, kHashes: Int = 3, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame =
@@ -607,30 +613,17 @@ object Dedup {
       mBits: Int = 4096, kHashes: Int = 3, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     require(mBits % 64 == 0, "mBits must be a multiple of 64")
-    def positions(g: Column): Seq[Column] =
-      (0 until kHashes).map(j => Portable.rehash(g, j) % mBits)
-    val bgrams = Materialize(benchmark
-      .select(explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
-      .distinct())
-    val bpos = Materialize(bgrams
-      .select(explode(array(positions(col("gram")): _*)).as("pos"))
-      .distinct())
-    val bloom = bpos.agg(collect_list(col("pos")).as("ps"))
-      .select(native.positions_to_bitset(col("ps"), mBits / 64).as("bloom"))
+    val bgrams = Materialize(gramsOf(benchmark, n, textCol).distinct())
+    val bpos = Materialize(bloomSetPositions(bgrams, mBits, kHashes))
+    val bloom = bloomBitset(bpos, mBits)
     val bitsSet = bpos.agg(count(lit(1)).as("bits_set"))
-    val cgrams = corpus
-      .select(explode(native.ngram_hash_set(col(textCol), n)).as("gram"))
+    gramsOf(corpus, n, textCol)
       .distinct()
       .join(bgrams.withColumn("in_bench", lit(true)), Seq("gram"), "left")
       .withColumn("in_bench", coalesce(col("in_bench"), lit(false)))
       .crossJoin(broadcast(bloom))
-    val tested = positions(col("gram")).zipWithIndex
-      .foldLeft(cgrams) { case (df, (p, j)) => df.withColumn(s"__p$j", p) }
-    val allSet = (0 until kHashes)
-      .map(j => expr(s"(element_at(bloom, cast(__p$j div 64 as int) + 1) & " +
-        s"shiftleft(1L, cast(__p$j % 64 as int))) != 0"))
-      .reduce(_ && _)
-    tested.withColumn("pos_hit", allSet)
+      .withColumn("pos_hit",
+        bloomHit(col("gram"), col("bloom"), mBits, kHashes))
       .agg(sum(when(!col("in_bench"), 1L).otherwise(0L)).as("n_tested"),
         sum(when(!col("in_bench") && col("pos_hit"), 1L).otherwise(0L))
           .as("n_false_pos"),
@@ -882,8 +875,8 @@ object Dedup {
     *
     * Returns (doc_id, n_lines, n_kept, text_clean); a fully-boilerplate
     * document survives with n_kept = 0 and empty text (dropping it is
-    * the caller's policy, not the operator's). CONTRACT EDGE (r11,
-    * ADVICE): a TOKEN-LESS document (null/empty/whitespace-only text)
+    * the caller's policy, not the operator's). CONTRACT EDGE: a
+    * TOKEN-LESS document (null/empty/whitespace-only text)
     * produces no lines and is therefore ABSENT from the output — and
     * from any downstream join ([[docLines]] is where the drop happens;
     * the oracle mirrors it). Callers that must preserve such docs
@@ -906,18 +899,8 @@ object Dedup {
     * Reassembly is one groupBy(doc); the final sort/filter/concat runs
     * inside one collect_list aggregate per document. */
   def lineDedup(docs: DataFrame, lineLen: Int = 10, minSupport: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(minSupport > 1,
-      s"minSupport must be > 1 (1 would drop every line), got $minSupport")
-    // materialized ONCE: the line relation feeds BOTH join sides (the
-    // corpus side and the support aggregate) — unmaterialized, the
-    // tokenize+explode would re-scan the corpus twice
-    val lines = Materialize(docLines(docs, lineLen, idCol, textCol))
-    val boiler = lineSupport(lines)
-      .filter(col("sup") >= minSupport)
-      .select(col("line"), lit(true).as("__bp"))
-    reassembleLines(lines.join(boiler, Seq("line"), "left"))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    lineGate(docs, None, lineLen, minSupport, idCol, textCol)
 
   /** INCREMENTAL line dedup — the production loop ([[lineDedup]]'s
     * analog of the stored minhash index): clean a NEW batch of
@@ -934,15 +917,31 @@ object Dedup {
     * pass. */
   def lineDedupIncremental(newDocs: DataFrame, stored: DataFrame,
       lineLen: Int = 10, minSupport: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    lineGate(newDocs, Some(stored), lineLen, minSupport, idCol, textCol)
+
+  /** The corpus line gate behind [[lineDedup]] and
+    * [[lineDedupIncremental]]: a line is boilerplate when its support in
+    * `docs`, plus its summed support in the `stored` registry if one is
+    * given, reaches `minSupport`. With no registry there is no registry
+    * join. */
+  private def lineGate(docs: DataFrame, stored: Option[DataFrame],
+      lineLen: Int, minSupport: Int, idCol: String,
+      textCol: String): DataFrame = {
     require(minSupport > 1,
       s"minSupport must be > 1 (1 would drop every line), got $minSupport")
-    val lines = Materialize(docLines(newDocs, lineLen, idCol, textCol))
-    val storedByLine = stored.groupBy(col("line"))
-      .agg(sum(col("sup")).as("__old"))
-    val boiler = lineSupport(lines)
-      .join(storedByLine, Seq("line"), "left")
-      .filter(col("sup") + coalesce(col("__old"), lit(0L)) >= minSupport)
+    // materialized ONCE: the line relation feeds BOTH join sides (the
+    // corpus side and the support aggregate) — unmaterialized, the
+    // tokenize+explode would re-scan the corpus twice
+    val lines = Materialize(docLines(docs, lineLen, idCol, textCol))
+    val support = stored.fold(lineSupport(lines)) { reg =>
+      lineSupport(lines)
+        .join(reg.groupBy(col("line")).agg(sum(col("sup")).as("__old")),
+          Seq("line"), "left")
+        .withColumn("sup", col("sup") + coalesce(col("__old"), lit(0L)))
+    }
+    val boiler = support
+      .filter(col("sup") >= minSupport)
       .select(col("line"), lit(true).as("__bp"))
     reassembleLines(lines.join(boiler, Seq("line"), "left"))
   }

@@ -36,7 +36,7 @@ final case class SyncConfig(
       * (es.rs:275-308 ticks its buffer flush on this interval) */
     flushIntervalMs: Long = 5000,
     // ---- client connection identity ----
-    // The six remaining args.rs knobs configure the network CLIENT the
+    // The five remaining args.rs knobs configure the network CLIENT the
     // sandbox cannot run. The connector seam
     // ([[graft.sources.Connectors.MessageConnector.readStream]]) receives
     // the whole config, so an off-sandbox Pulsar binding reads them there;
@@ -51,12 +51,7 @@ final case class SyncConfig(
     subscriptionName: Option[String] = None,
     /** client-side receive channel capacity (args.rs:121-123
       * --channel-buffer-size, default 2048) */
-    channelBufferSize: Int = 2048,
-    /** debug filename for injected payloads (args.rs:141-143
-      * --injected-logfile): the physical file target of the inject
-      * side channel whose CONTENT the `is_logged` flag of
-      * [[SyncPipeline.inject]] already carries */
-    injectedLogfile: Option[String] = None)
+    channelBufferSize: Int = 2048)
 
 /** The reference's consume→transform→route→buffer pipeline (pulsar.rs
   * consume_loop + es.rs sink_elasticsearch_loop) re-expressed as a

@@ -138,6 +138,40 @@ class CurationSpec extends SparkSpec {
       graft.plans.HashOps.polyHashStr(span))
   }
 
+  test("chunk passes: a doc of w-1 tokens has no chunk; w and 2w tokens chunk fully") {
+    import spark.implicits._
+    val w = 4
+    def toks(p: String, n: Int) = (1 to n).map(i => s"$p$i")
+    val tiny = Seq(
+      (0L, toks("a", w - 1).mkString(" ")),
+      (1L, toks("b", w).mkString(" ")),
+      (2L, toks("c", 2 * w).mkString(" "))
+    ).toDF("doc_id", "text")
+    def chunks(t: Seq[String], starts: Seq[Int]) =
+      starts.map(s => graft.plans.HashOps.polyHashStr(t.slice(s, s + w).mkString(" ")))
+    def byDoc(df: DataFrame) = df.collect()
+      .groupBy(_.getAs[Long]("min_doc"))
+      .map { case (d, rs) => d -> rs.map(_.getAs[Long]("span_hash")).toSet }
+    // minDocs = 1 reports every chunk, so the rows are the chunks
+    assert(byDoc(Curation.repeatedSpans(tiny, w = w, minDocs = 1)) === Map(
+      1L -> chunks(toks("b", w), Seq(0)).toSet,
+      2L -> chunks(toks("c", 2 * w), Seq(0, w)).toSet))
+    // half stride: starts 0, w/2, w for the 2w-token doc
+    assert(byDoc(Curation.repeatedSpansOverlap(tiny, w = w, minDocs = 1)) === Map(
+      1L -> chunks(toks("b", w), Seq(0)).toSet,
+      2L -> chunks(toks("c", 2 * w), Seq(0, w / 2, w)).toSet))
+  }
+
+  test("lmBigramScoreVocab over bigramVocabBuild equals lmBigramScore") {
+    val inline = Curation.lmBigramScore(docs)
+    val stored = Curation.lmBigramScoreVocab(docs,
+      Curation.bigramVocabBuild(docs, minCount = 1))
+    assert(stored.columns.toSeq === inline.columns.toSeq)
+    val a = inline.collect().map(_.toSeq).toSet
+    assert(a.nonEmpty)
+    assert(stored.collect().map(_.toSeq).toSet === a)
+  }
+
   test("repeatedSpansOverlap: catches the boundary-straddling duplicate the aligned pass misses") {
     import spark.implicits._
     val span = (1 to 16).map(i => s"s$i").mkString(" ")

@@ -115,9 +115,9 @@ class StreamingSyncSpec extends SparkSpec {
   }
 
   test("connection-identity knobs travel SyncConfig → the connector seam verbatim") {
-    // the six args.rs client knobs the sandbox cannot exercise
+    // the five args.rs client knobs the sandbox cannot exercise
     // (--pulsar-addr/-token, --consumer-name, --subscription-name,
-    // --channel-buffer-size, --injected-logfile) are config fields that
+    // --channel-buffer-size) are config fields that
     // must REACH the provider seam, not sit inert in a struct nobody reads
     import graft.sources.Connectors
     // defaults mirror args.rs:73-123 exactly
@@ -126,14 +126,12 @@ class StreamingSyncSpec extends SparkSpec {
       SyncConfig().consumerName.isEmpty &&
       SyncConfig().subscriptionName.isEmpty)
     assert(SyncConfig().channelBufferSize == 2048)
-    assert(SyncConfig().injectedLogfile.isEmpty)
     val idCfg = cfg.copy(
       pulsarAddr = "pulsar://broker.example:6650",
       pulsarToken = Some("tok-123"),
       consumerName = Some("graft-consumer"),
       subscriptionName = Some("graft-sub"),
-      channelBufferSize = 4096,
-      injectedLogfile = Some("/var/log/injected.log"))
+      channelBufferSize = 4096)
     // the RUNNING sync hands the connector its config: a recording
     // wrapper around the parquet stand-in
     var seen: Option[(String, SyncConfig, Option[Int])] = None
