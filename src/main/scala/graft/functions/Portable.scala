@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.HashOps.{M, aK, bK}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,16 +17,10 @@ import org.apache.spark.sql.functions._
   * These column builders are the *reference formulas* (Spark higher-order
   * functions). Hot paths use the native Catalyst expressions in
   * [[graft.plans]], which compute the same arithmetic in a single pass and
-  * are cross-checked against these in ScalaTest.
+  * are cross-checked against these in ScalaTest. Both read `M`, `a_k` and
+  * `b_k` from [[graft.plans.HashOps]], their one definition.
   */
 object Portable {
-  /** Modulus: the Mersenne prime 2^31 - 1. */
-  val M: Long = 2147483647L
-
-  /** Multiplier / offset of the k-th affine re-hash (k is 0-based). */
-  def aK(k: Int): Long = ((k + 1).toLong * 2654435761L) % M
-  def bK(k: Int): Long = ((k + 1).toLong * 40503L) % M
-
   /** Characters of a string as an array column (empties removed — Spark's
     * `split` on an empty regex yields a trailing "" that DuckDB's
     * `string_split(s, '')` does not). */
@@ -99,13 +94,6 @@ object Portable {
         (s, h) => s + when(pmod(shiftright(h, j), lit(2)) === 1, lit(1L)).otherwise(lit(-1L)))
       acc + when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
     }
-  }
-
-  /** Hamming distance between two int64 bit-patterns (lower 32 bits). */
-  def hamming32(a: Column, b: Column): Column = {
-    val x = a.bitwiseXOR(b)
-    (0 until 32).map(j => pmod(shiftright(x, j), lit(2)).cast("long"))
-      .reduce(_ + _)
   }
 
   /** Z-order (Morton) key: interleave the low `bits` bits of two

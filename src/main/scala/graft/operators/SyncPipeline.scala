@@ -10,6 +10,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * rules re-route indices; rate limits admit N docs per app per second. */
 final case class SyncConfig(
     globalFilters: Seq[String] = Nil,
+    /** topic → regex patterns that drop its messages. A key matches the
+      * whole topic name as it arrives (`persistent://acme/prod/audit`),
+      * not the collapsed `topicPart` that enrich and inject read. */
     namespaceFilters: Map[String, Seq[String]] = Map.empty,
     rewriteRules: Seq[(String, String)] = Nil,
     timeKey: Option[String] = None,
@@ -103,7 +106,8 @@ object SyncPipeline {
   }
 
   /** Drop messages matching their topic's namespace filter set
-    * (pulsar.rs:264-275). */
+    * (pulsar.rs:264-275). A filter key is compared with the whole topic
+    * name (`persistent://acme/prod/audit`), not with `topicPart`. */
   def namespaceFilter(cfg: SyncConfig)(df: DataFrame): DataFrame =
     cfg.namespaceFilters.foldLeft(df) { case (acc, (ns, pats)) =>
       acc.filter(col("topic") =!= ns || !matchesAny(col("data"), pats))

@@ -13,19 +13,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * functions is asserted in PortableParitySpec.
   */
 object HashOps {
+  /** Modulus of every portable hash: the Mersenne prime 2^31 - 1. The one
+    * definition, read by the kernels here and by the reference formulas
+    * in [[graft.functions.Portable]]. */
   val M: Long = 2147483647L
 
+  /** Multiplier / offset of the k-th affine re-hash (k is 0-based). */
   def aK(k: Int): Long = ((k + 1).toLong * 2654435761L) % M
   def bK(k: Int): Long = ((k + 1).toLong * 40503L) % M
 
-  /** poly rolling hash over UTF-16 code units (== code points for BMP,
-    * == `unicode()` in DuckDB for the ASCII/BMP corpus). */
-  def polyHashStr(s: String): Long = {
+  /** poly rolling hash over UTF-16 code units `from until to` (== code
+    * points for BMP, == `unicode()` in DuckDB for the ASCII/BMP corpus). */
+  private def polyHashRange(s: String, from: Int, to: Int): Long = {
     var acc = 0L
-    var i = 0
-    while (i < s.length) { acc = (acc * 31 + s.charAt(i)) % M; i += 1 }
+    var i = from
+    while (i < to) { acc = (acc * 31 + s.charAt(i)) % M; i += 1 }
     acc
   }
+
+  def polyHashStr(s: String): Long = polyHashRange(s, 0, s.length)
 
   def polyHash(s: UTF8String): Long = polyHashStr(s.toString)
 
@@ -56,6 +62,67 @@ object HashOps {
   private def tokensOf(s: String): Array[String] =
     s.split(" ", -1).filter(_.nonEmpty)
 
+  /** polyHash of each whitespace token, in order. */
+  private def tokenHashes(s: UTF8String): Array[Long] =
+    tokensOf(s.toString).map(polyHashStr)
+
+  /** Tokens `i until i + n` joined by single spaces. */
+  private def wordNgram(w: Array[String], i: Int, n: Int): String = {
+    val sb = new java.lang.StringBuilder(w(i))
+    var j = 1
+    while (j < n) { sb.append(' ').append(w(i + j)); j += 1 }
+    sb.toString
+  }
+
+  /** The character-n-gram hash sequence of `s` has this many terms: one
+    * per length-n window, and one (the whole text) when shorter than n. */
+  private def charNgramCount(s: String, n: Int): Int =
+    math.max(s.length - n + 1, 1)
+
+  /** Term i of the character-n-gram hash sequence: polyHash of
+    * `s[i, i + n)`, clipped to the text, so the lone term of a text
+    * shorter than n is `polyHash(s)` (mirrors the oracle's CASE). */
+  private def charNgramHash(s: String, i: Int, n: Int): Long =
+    polyHashRange(s, i, math.min(i + n, s.length))
+
+  private def charNgramHashes(s: String, n: Int): Array[Long] = {
+    val hs = new Array[Long](charNgramCount(s, n))
+    var i = 0
+    while (i < hs.length) { hs(i) = charNgramHash(s, i, n); i += 1 }
+    hs
+  }
+
+  /** Sorts `hs` and drops repeats in place: the sorted distinct set the
+    * jaccard kernels and the prefix-filtered join read. */
+  private def sortedDistinct(hs: Array[Long]): ArrayData = {
+    java.util.Arrays.sort(hs)
+    var w = 0
+    var i = 0
+    while (i < hs.length) {
+      if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
+      i += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(hs, w))
+  }
+
+  /** Bit j of the result is 1 iff more hashes have bit j set than clear,
+    * for j < bits (the SimHash vote). */
+  private def simhashVotes(hs: Array[Long], bits: Int): Long = {
+    var out = 0L
+    var j = 0
+    while (j < bits) {
+      var sum = 0L
+      var i = 0
+      while (i < hs.length) {
+        sum += (if (((hs(i) >> j) & 1L) == 1L) 1L else -1L)
+        i += 1
+      }
+      if (sum > 0) out |= (1L << j)
+      j += 1
+    }
+    out
+  }
+
   /** Whitespace token count (split on ' ', empties dropped) — the codegen
     * twin of `size(Portable.tokens(c))`, which as a higher-order function
     * would break the projection out of whole-stage codegen. */
@@ -79,14 +146,11 @@ object HashOps {
     * sum plumbing is the real part; a trained model would broadcast a
     * weight array indexed by the same hash. */
   def hashedLinearScore(s: UTF8String, halfRange: Int): Long = {
-    val toks = tokensOf(s.toString)
+    val hs = tokenHashes(s)
     val mod = 2L * halfRange + 1
     var acc = 0L
     var i = 0
-    while (i < toks.length) {
-      acc += polyHashStr(toks(i)) % mod - halfRange
-      i += 1
-    }
+    while (i < hs.length) { acc += hs(i) % mod - halfRange; i += 1 }
     acc
   }
 
@@ -95,35 +159,22 @@ object HashOps {
     * per-element `element_at(tokens(text), i)` re-tokenizes the whole
     * document for every bigram (O(n²·len) per row — measured 10× on the
     * bigram-LM scorer). Empty for docs with < 2 tokens. */
-  def wordBigrams(s: UTF8String): ArrayData = {
-    val w = tokensOf(s.toString)
-    if (w.length < 2) new GenericArrayData(new Array[Any](0))
-    else {
-      val out = new Array[Any](w.length - 1)
-      var i = 0
-      while (i < w.length - 1) {
-        out(i) = UTF8String.fromString(w(i) + " " + w(i + 1))
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-  }
+  def wordBigrams(s: UTF8String): ArrayData = wordNgrams(s, 2)
 
   /** Adjacent word trigrams ("a b c") in one pass — [[wordBigrams]] one
     * order up (same rationale: the `transform(sequence(...))` spelling
     * re-tokenizes per element). Empty for docs with < 3 tokens. */
-  def wordTrigrams(s: UTF8String): ArrayData = {
+  def wordTrigrams(s: UTF8String): ArrayData = wordNgrams(s, 3)
+
+  private def wordNgrams(s: UTF8String, n: Int): ArrayData = {
     val w = tokensOf(s.toString)
-    if (w.length < 3) new GenericArrayData(new Array[Any](0))
-    else {
-      val out = new Array[Any](w.length - 2)
-      var i = 0
-      while (i < w.length - 2) {
-        out(i) = UTF8String.fromString(w(i) + " " + w(i + 1) + " " + w(i + 2))
-        i += 1
-      }
-      new GenericArrayData(out)
+    val out = new Array[Any](math.max(w.length - n + 1, 0))
+    var i = 0
+    while (i < out.length) {
+      out(i) = UTF8String.fromString(wordNgram(w, i, n))
+      i += 1
     }
+    new GenericArrayData(out)
   }
 
   /** Hashes of word-n-shingles; the whole text is the lone shingle when
@@ -134,13 +185,7 @@ object HashOps {
     else {
       val out = new Array[Long](w.length - n + 1)
       var i = 0
-      while (i < out.length) {
-        val sb = new java.lang.StringBuilder(w(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(w(i + j)); j += 1 }
-        out(i) = polyHashStr(sb.toString)
-        i += 1
-      }
+      while (i < out.length) { out(i) = polyHashStr(wordNgram(w, i, n)); i += 1 }
       out
     }
   }
@@ -149,17 +194,8 @@ object HashOps {
     * prefix-filtered similarity join consumes. One tokenize pass per row
     * (the higher-order-function formulation re-tokenizes the document
     * for every element_at — measured 4.5 s of a 6 s pipeline at sf0.1). */
-  def shingleHashSet(s: UTF8String, n: Int): ArrayData = {
-    val hs = shingleHashes(s.toString, n)
-    java.util.Arrays.sort(hs)
-    var w = 0
-    var i = 0
-    while (i < hs.length) {
-      if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
-      i += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(hs, w))
-  }
+  def shingleHashSet(s: UTF8String, n: Int): ArrayData =
+    sortedDistinct(shingleHashes(s.toString, n))
 
   /** MinHash signature: k affine minima over the word-n-shingle hashes. */
   def minhashSig(s: UTF8String, k: Int, shingleN: Int): ArrayData = {
@@ -182,25 +218,7 @@ object HashOps {
   }
 
   /** 32-bit SimHash over whitespace-token hashes. */
-  def simhash32(s: UTF8String): Long = {
-    val w = tokensOf(s.toString)
-    val hs = new Array[Long](w.length)
-    var i = 0
-    while (i < w.length) { hs(i) = polyHashStr(w(i)); i += 1 }
-    var out = 0L
-    var j = 0
-    while (j < 32) {
-      var sum = 0L
-      i = 0
-      while (i < hs.length) {
-        sum += (if (((hs(i) >> j) & 1L) == 1L) 1L else -1L)
-        i += 1
-      }
-      if (sum > 0) out |= (1L << j)
-      j += 1
-    }
-    out
-  }
+  def simhash32(s: UTF8String): Long = simhashVotes(tokenHashes(s), 32)
 
   /** 62-bit SimHash over whitespace tokens: per token, lo = polyHash(t)
     * votes bits 0-30 (identical votes to [[simhash32]]'s live bits — the
@@ -210,57 +228,20 @@ object HashOps {
     * keys (vs the byte band's 256) so hamming ≤ 3 blocking stays
     * skew-free on large corpora. */
   def simhash64(s: UTF8String): Long = {
-    val w = tokensOf(s.toString)
-    val hs = new Array[Long](w.length)
+    val hs = tokenHashes(s)
     var i = 0
-    while (i < w.length) {
-      val lo = polyHashStr(w(i))
-      val hi = (lo * aK(32) + bK(32)) % M
-      hs(i) = lo | (hi << 31)
+    while (i < hs.length) {
+      hs(i) |= ((hs(i) * aK(32) + bK(32)) % M) << 31
       i += 1
     }
-    var out = 0L
-    var j = 0
-    while (j < 62) {
-      var sum = 0L
-      i = 0
-      while (i < hs.length) {
-        sum += (if (((hs(i) >> j) & 1L) == 1L) 1L else -1L)
-        i += 1
-      }
-      if (sum > 0) out |= (1L << j)
-      j += 1
-    }
-    out
+    simhashVotes(hs, 62)
   }
 
   /** Sorted distinct poly-hashes of the character n-grams — the set
     * representation for fast pairwise jaccard ([[sortedJaccard]]).
     * `[polyHash(s)]` when shorter than n (mirrors the oracle's CASE). */
-  def ngramHashSet(s: UTF8String, n: Int): ArrayData = {
-    val str = s.toString
-    if (str.length < n) new GenericArrayData(Array(polyHashStr(str)))
-    else {
-      val hs = new Array[Long](str.length - n + 1)
-      var i = 0
-      while (i + n <= str.length) {
-        var acc = 0L
-        var j = i
-        while (j < i + n) { acc = (acc * 31 + str.charAt(j)) % M; j += 1 }
-        hs(i) = acc
-        i += 1
-      }
-      java.util.Arrays.sort(hs)
-      // dedup in place
-      var w = 0
-      i = 0
-      while (i < hs.length) {
-        if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
-        i += 1
-      }
-      new GenericArrayData(java.util.Arrays.copyOf(hs, w))
-    }
-  }
+  def ngramHashSet(s: UTF8String, n: Int): ArrayData =
+    sortedDistinct(charNgramHashes(s.toString, n))
 
   /** Jaccard of two sorted distinct long arrays via a single merge pass —
     * no per-pair hash-set allocation; this is what makes the exact
@@ -395,58 +376,34 @@ object HashOps {
     * yields a shared fingerprint. `[polyHash(s)]` for texts shorter than
     * n (and the whole-sequence min when shorter than one window). */
   def winnowSet(s: UTF8String, n: Int, w: Int): ArrayData = {
-    val str = s.toString
-    if (str.length < n) return new GenericArrayData(Array(polyHashStr(str)))
-    val m = str.length - n + 1
-    val hs = new Array[Long](m)
+    val hs = charNgramHashes(s.toString, n)
+    // one window per start, or one clipped window when fewer than w hashes
+    val mins = new Array[Long](math.max(hs.length - w + 1, 1))
     var i = 0
-    while (i < m) {
-      var acc = 0L
+    while (i < mins.length) {
+      val end = math.min(i + w, hs.length)
+      var mn = Long.MaxValue
       var j = i
-      while (j < i + n) { acc = (acc * 31 + str.charAt(j)) % M; j += 1 }
-      hs(i) = acc
+      while (j < end) { if (hs(j) < mn) mn = hs(j); j += 1 }
+      mins(i) = mn
       i += 1
     }
-    val out = new java.util.TreeSet[java.lang.Long]()
-    if (m <= w) {
-      var mn = Long.MaxValue
-      i = 0
-      while (i < m) { if (hs(i) < mn) mn = hs(i); i += 1 }
-      out.add(mn)
-    } else {
-      i = 0
-      while (i + w <= m) {
-        var mn = Long.MaxValue
-        var j = i
-        while (j < i + w) { if (hs(j) < mn) mn = hs(j); j += 1 }
-        out.add(mn)
-        i += 1
-      }
-    }
-    val arr = new Array[Long](out.size)
-    val it = out.iterator()
-    i = 0
-    while (it.hasNext) { arr(i) = it.next(); i += 1 }
-    new GenericArrayData(arr)
+    sortedDistinct(mins)
   }
 
   /** Minimum poly-hash over the character n-grams (winnowing-lite
     * fingerprint); the whole-text hash when shorter than n. */
   def minCharNgramHash(s: UTF8String, n: Int): Long = {
     val str = s.toString
-    if (str.length < n) polyHashStr(str)
-    else {
-      var mn = Long.MaxValue
-      var i = 0
-      while (i + n <= str.length) {
-        var acc = 0L
-        var j = i
-        while (j < i + n) { acc = (acc * 31 + str.charAt(j)) % M; j += 1 }
-        if (acc < mn) mn = acc
-        i += 1
-      }
-      mn
+    val m = charNgramCount(str, n)
+    var mn = Long.MaxValue
+    var i = 0
+    while (i < m) {
+      val h = charNgramHash(str, i, n)
+      if (h < mn) mn = h
+      i += 1
     }
+    mn
   }
 
   /** Hilbert xy2d bit descent (the public-domain formulation): the

@@ -2,9 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge.InputType
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the portable hash arithmetic: the hot
@@ -13,292 +14,259 @@ import org.apache.spark.unsafe.types.UTF8String
   * the per-string work is a tight JVM loop — versus the higher-order
   * function formulation in [[graft.functions.Portable]], which evaluates an
   * expression tree per character/shingle. Parity between the two (and the
-  * DuckDB oracle) is asserted in PortableParitySpec.
+  * DuckDB oracle) is asserted in PortableParitySpec; CodegenParitySpec
+  * asserts that the generated call returns what the eval returns.
+  *
+  * What such an expression shares: null in gives null out, and its
+  * generated code is `graft.plans.HashOps.<method>(<children>, <args>)`.
+  * An expression declares its `dataType`, its eval, the `method` and the
+  * literal `args`; [[HashOpsUnary]] and [[HashOpsBinary]] supply the rest.
   */
-case class PolyHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
+trait HashOpsCall extends Expression {
+  /** The [[HashOps]] method the generated code calls. */
+  protected def method: String
+  /** Literal arguments after the children's values (Int or Boolean). */
+  protected def args: Seq[Any] = Nil
   override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashOps.polyHash(input.asInstanceOf[UTF8String])
+  protected def javaCall(children: String*): String =
+    (children ++ args.map(_.toString))
+      .mkString(s"graft.plans.HashOps.$method(", ", ", ")")
+  /** Whether an array child holds floats (the vector kernels read
+    * doubles otherwise). */
+  protected def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+  protected def str(v: Any): UTF8String = v.asInstanceOf[UTF8String]
+  protected def arr(v: Any): ArrayData = v.asInstanceOf[ArrayData]
+}
+
+trait HashOpsUnary extends UnaryExpression with HashOpsCall {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.polyHash($c)")
+    defineCodeGen(ctx, ev, c => javaCall(c))
+}
+
+trait HashOpsBinary extends BinaryExpression with HashOpsCall {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => javaCall(a, b))
+}
+
+case class PolyHashExpr(child: Expression) extends HashOpsUnary {
+  override def dataType: DataType = LongType
+  override protected def nullSafeEval(input: Any): Any = HashOps.polyHash(str(input))
+  override protected def method = "polyHash"
   override protected def withNewChildInternal(newChild: Expression): PolyHashExpr =
     copy(child = newChild)
 }
 
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression
+case class NfcNormalizeExpr(child: Expression) extends HashOpsUnary
     with ExpectsInputTypes {
   // analysis-time type check: a non-string child would otherwise compile
-  // and throw ClassCastException at execution (r12 ADVICE)
+  // and throw ClassCastException at execution
   override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashOps.nfc(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.nfc($c)")
+  override protected def nullSafeEval(input: Any): Any = HashOps.nfc(str(input))
+  override protected def method = "nfc"
   override protected def withNewChildInternal(
       newChild: Expression): NfcNormalizeExpr = copy(child = newChild)
 }
 
 case class MinHashSigExpr(child: Expression, k: Int, shingleN: Int)
-    extends UnaryExpression {
+    extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.minhashSig(input.asInstanceOf[UTF8String], k, shingleN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.minhashSig($c, $k, $shingleN)")
+    HashOps.minhashSig(str(input), k, shingleN)
+  override protected def method = "minhashSig"
+  override protected def args: Seq[Any] = Seq(k, shingleN)
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
 }
 
-case class SimHash32Expr(child: Expression) extends UnaryExpression {
+case class SimHash32Expr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashOps.simhash32(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.simhash32($c)")
+  override protected def nullSafeEval(input: Any): Any = HashOps.simhash32(str(input))
+  override protected def method = "simhash32"
   override protected def withNewChildInternal(newChild: Expression): SimHash32Expr =
     copy(child = newChild)
 }
 
-case class WordBigramsExpr(child: Expression) extends UnaryExpression {
+case class WordBigramsExpr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashOps.wordBigrams(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.wordBigrams($c)")
+  override protected def nullSafeEval(input: Any): Any = HashOps.wordBigrams(str(input))
+  override protected def method = "wordBigrams"
   override protected def withNewChildInternal(newChild: Expression): WordBigramsExpr =
     copy(child = newChild)
 }
 
-case class WordTrigramsExpr(child: Expression) extends UnaryExpression {
+case class WordTrigramsExpr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashOps.wordTrigrams(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.wordTrigrams($c)")
+  override protected def nullSafeEval(input: Any): Any = HashOps.wordTrigrams(str(input))
+  override protected def method = "wordTrigrams"
   override protected def withNewChildInternal(newChild: Expression): WordTrigramsExpr =
     copy(child = newChild)
 }
 
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
+case class SimHash64Expr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashOps.simhash64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.simhash64($c)")
+  override protected def nullSafeEval(input: Any): Any = HashOps.simhash64(str(input))
+  override protected def method = "simhash64"
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
     copy(child = newChild)
 }
 
-case class TokenCountExpr(child: Expression) extends UnaryExpression {
+case class TokenCountExpr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashOps.tokenCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.tokenCount($c)")
+  override protected def nullSafeEval(input: Any): Any = HashOps.tokenCount(str(input))
+  override protected def method = "tokenCount"
   override protected def withNewChildInternal(
       newChild: Expression): TokenCountExpr =
     copy(child = newChild)
 }
 
 case class HashedLinearScoreExpr(child: Expression, halfRange: Int)
-    extends UnaryExpression {
+    extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.hashedLinearScore(input.asInstanceOf[UTF8String], halfRange)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HashOps.hashedLinearScore($c, $halfRange)")
+    HashOps.hashedLinearScore(str(input), halfRange)
+  override protected def method = "hashedLinearScore"
+  override protected def args: Seq[Any] = Seq(halfRange)
   override protected def withNewChildInternal(
       newChild: Expression): HashedLinearScoreExpr =
     copy(child = newChild)
 }
 
 case class MinCharNgramHashExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.minCharNgramHash(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.minCharNgramHash($c, $n)")
+    HashOps.minCharNgramHash(str(input), n)
+  override protected def method = "minCharNgramHash"
+  override protected def args: Seq[Any] = Seq(n)
   override protected def withNewChildInternal(newChild: Expression): MinCharNgramHashExpr =
     copy(child = newChild)
 }
 
-case class NgramHashSetExpr(child: Expression, n: Int) extends UnaryExpression {
+case class NgramHashSetExpr(child: Expression, n: Int) extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.ngramHashSet(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.ngramHashSet($c, $n)")
+    HashOps.ngramHashSet(str(input), n)
+  override protected def method = "ngramHashSet"
+  override protected def args: Seq[Any] = Seq(n)
   override protected def withNewChildInternal(newChild: Expression): NgramHashSetExpr =
     copy(child = newChild)
 }
 
 case class ShingleHashSetExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.shingleHashSet(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.shingleHashSet($c, $n)")
+    HashOps.shingleHashSet(str(input), n)
+  override protected def method = "shingleHashSet"
+  override protected def args: Seq[Any] = Seq(n)
   override protected def withNewChildInternal(newChild: Expression): ShingleHashSetExpr =
     copy(child = newChild)
 }
 
 case class SortedJaccardExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullIntolerant: Boolean = true
+    extends HashOpsBinary {
+  override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.sortedJaccard(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.HashOps.sortedJaccard($a, $b)")
+    HashOps.sortedJaccard(arr(a), arr(b))
+  override protected def method = "sortedJaccard"
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): SortedJaccardExpr =
     copy(left = newLeft, right = newRight)
 }
 
 case class HilbertKeyExpr(left: Expression, right: Expression, bits: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends HashOpsBinary {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(a: Any, b: Any): Any =
     HashOps.hilbertKey(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.HashOps.hilbertKey($a, $b, $bits)")
+  override protected def method = "hilbertKey"
+  override protected def args: Seq[Any] = Seq(bits)
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): HilbertKeyExpr =
     copy(left = newLeft, right = newRight)
 }
 
 case class CosineSimExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullIntolerant: Boolean = true
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
-  }
+    extends HashOpsBinary {
+  override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.cosine(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      isFloat(left), isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.HashOps.cosine($a, $b, ${isFloat(left)}, ${isFloat(right)})")
+    HashOps.cosine(arr(a), arr(b), isFloat(left), isFloat(right))
+  override protected def method = "cosine"
+  override protected def args: Seq[Any] = Seq(isFloat(left), isFloat(right))
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): CosineSimExpr = copy(left = newLeft, right = newRight)
 }
 
 case class DotProductExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullIntolerant: Boolean = true
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
-  }
+    extends HashOpsBinary {
+  override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.dot(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      isFloat(left), isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.HashOps.dot($a, $b, ${isFloat(left)}, ${isFloat(right)})")
+    HashOps.dot(arr(a), arr(b), isFloat(left), isFloat(right))
+  override protected def method = "dot"
+  override protected def args: Seq[Any] = Seq(isFloat(left), isFloat(right))
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): DotProductExpr = copy(left = newLeft, right = newRight)
 }
 
 case class L2SqExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullIntolerant: Boolean = true
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
-  }
+    extends HashOpsBinary {
+  override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.l2sq(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      isFloat(left), isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.HashOps.l2sq($a, $b, ${isFloat(left)}, ${isFloat(right)})")
+    HashOps.l2sq(arr(a), arr(b), isFloat(left), isFloat(right))
+  override protected def method = "l2sq"
+  override protected def args: Seq[Any] = Seq(isFloat(left), isFloat(right))
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): L2SqExpr = copy(left = newLeft, right = newRight)
 }
 
-case class LshBucketExpr(child: Expression, nPlanes: Int) extends UnaryExpression {
+case class LshBucketExpr(child: Expression, nPlanes: Int) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
-  }
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.lshBucket(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      nPlanes, isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.lshBucket($c, $nPlanes, $isFloat)")
+    HashOps.lshBucket(arr(input), nPlanes, isFloat(child))
+  override protected def method = "lshBucket"
+  override protected def args: Seq[Any] = Seq(nPlanes, isFloat(child))
   override protected def withNewChildInternal(newChild: Expression): LshBucketExpr =
     copy(child = newChild)
 }
 
 case class WinnowSetExpr(child: Expression, n: Int, w: Int)
-    extends UnaryExpression {
+    extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.winnowSet(input.asInstanceOf[UTF8String], n, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.winnowSet($c, $n, $w)")
+    HashOps.winnowSet(str(input), n, w)
+  override protected def method = "winnowSet"
+  override protected def args: Seq[Any] = Seq(n, w)
   override protected def withNewChildInternal(newChild: Expression): WinnowSetExpr =
     copy(child = newChild)
 }
 
 case class PositionsToBitsetExpr(child: Expression, words: Int)
-    extends UnaryExpression {
+    extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.positionsToBitset(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], words)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.HashOps.positionsToBitset($c, $words)")
+    HashOps.positionsToBitset(arr(input), words)
+  override protected def method = "positionsToBitset"
+  override protected def args: Seq[Any] = Seq(words)
   override protected def withNewChildInternal(newChild: Expression): PositionsToBitsetExpr =
     copy(child = newChild)
 }
 
 case class BitsetJaccardExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullIntolerant: Boolean = true
+    extends HashOpsBinary {
+  override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.bitsetJaccard(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.HashOps.bitsetJaccard($a, $b)")
+    HashOps.bitsetJaccard(arr(a), arr(b))
+  override protected def method = "bitsetJaccard"
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): BitsetJaccardExpr =
     copy(left = newLeft, right = newRight)
 }
 
-/** Frozen-artifact BPE encoder (r11): the whole model — ordered merge
+/** Frozen-artifact BPE encoder: the whole model — ordered merge
   * list + sym→id map — rides ONE [[BpeModel]] reference object instead
   * of an unrolled per-merge HOF chain + map literal, so the expression
   * tree (and the generated code) is the same size at 3 merges or 30k
@@ -321,7 +289,7 @@ case class BpeEncodeExpr(child: Expression, merges: Seq[(String, String)],
 
 /** Count of sorted boundaries ≤ the key — the range-partition file
   * assignment against [[graft.operators.Curation.sampledRangeBounds]]
-  * cut points (r12, verdict #4). The boundary array rides the
+  * cut points. The boundary array rides the
   * CONSTRUCTOR as one reference object and codegen emits a single
   * binary-search call, so the key child is evaluated exactly once per
   * row — the HOF spelling captured the key expression inside the
@@ -333,7 +301,7 @@ case class BoundsFileIdExpr(child: Expression, bounds: IndexedSeq[Long])
   // equals/hashCode — and with them semanticEquals, plan
   // canonicalization, and common-subexpression elimination — compare
   // CONTENTS; an Array field compares by reference and two identical
-  // cut-point expressions would never dedup (r12 ADVICE). The eval and
+  // cut-point expressions would never dedup. The eval and
   // codegen paths still run over a primitive long[].
   override def inputTypes: Seq[InputType] = Seq(LongType)
   override def dataType: DataType = LongType

@@ -1389,7 +1389,7 @@ object CBlock {
 
     "sketch_kmv_stream" -> ((s, dir) => {
       // C108's k-min sets maintained as LIVE streaming aggregation
-      // state (BottomKDistinctAggregator — the bottom-k-of-a-union
+      // state (BottomKAggregator — the bottom-k-of-a-union
       // monoid, O(k) per key): the drained sketch equals the batch
       // sketch, so the estimate readout lands on sketch_kmv's oracle
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

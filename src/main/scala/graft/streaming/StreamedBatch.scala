@@ -372,8 +372,8 @@ object StreamedBatch {
           .writeStream
       })
 
-  /** [[graft.plans.BottomKDistinctAggregator]] as a LIVE complete-mode
-    * streaming aggregation: the KMV k-min sets accumulate per key in
+  /** [[graft.plans.BottomKAggregator]] over the hashes as a LIVE
+    * complete-mode streaming aggregation: the KMV k-min sets accumulate per key in
     * O(k) aggregation state (the bottom-k-of-a-union monoid), so the
     * drained sketch equals the batch sketch exactly. Input `obs`:
     * (key, h) — the portable re-hashed values. */
@@ -384,7 +384,8 @@ object StreamedBatch {
       import t.ss.implicits._
       t.stream.as[graft.plans.KmvObs]
         .groupByKey(_.key)
-        .agg(new graft.plans.BottomKDistinctAggregator(k).toColumn.name("hs"))
+        .agg(new graft.plans.BottomKAggregator[graft.plans.KmvObs, Long](k, _.h)
+          .toColumn.name("hs"))
         .toDF("key", "hs")
         .writeStream
     })
@@ -406,8 +407,8 @@ object StreamedBatch {
     })
   }
 
-  /** [[graft.plans.BottomKPairsAggregator]] as a LIVE complete-mode
-    * streaming aggregation — the exact-k per-stratum HOLDOUT maintained
+  /** [[graft.plans.BottomKAggregator]] over (priority, id) pairs as a
+    * LIVE complete-mode streaming aggregation — the exact-k per-stratum HOLDOUT maintained
     * at ingest: the bottom-k (priority, id) pairs accumulate per
     * stratum in O(k) state (the bottom-k-of-a-union monoid), so the
     * drained sample equals the batch rank-window draw exactly —
@@ -421,7 +422,8 @@ object StreamedBatch {
       import t.ss.implicits._
       t.stream.as[graft.plans.PairObs]
         .groupByKey(_.key)
-        .agg(new graft.plans.BottomKPairsAggregator(k).toColumn.name("ps"))
+        .agg(new graft.plans.BottomKAggregator[graft.plans.PairObs, (Long, Long)](
+          k, o => (o.u, o.id)).toColumn.name("ps"))
         .toDF("key", "ps")
         .writeStream
     })

@@ -89,6 +89,14 @@ class HashPropertiesSpec extends AnyFunSuite {
     }
   }
 
+  test("simhash64: low 31 bits are simhash32, bits 62-63 are zero") {
+    forAll(raggedText) { s =>
+      val h64 = HashOps.simhash64(u(s))
+      assert((h64 & ((1L << 31) - 1)) == HashOps.simhash32(u(s)))
+      assert((h64 >>> 62) == 0L)
+    }
+  }
+
   test("winnow fingerprints are a subset of the ngram hashes") {
     forAll(text) { s =>
       whenever(s.length >= 8) {

@@ -37,11 +37,13 @@ class PortableParitySpec extends SparkSpec {
     assert(n == 0)
   }
 
+  private def charNgramHashesHof(n: Int) =
+    transform(Portable.charNgrams(col("text"), n), g => Portable.polyHash(g))
+
   test("min_char_ngram_hash native == min over Portable charNgrams hashes") {
-    val hofMin = array_min(transform(Portable.charNgrams(col("text"), 8),
-      g => Portable.polyHash(g)))
     val n = docs.select(
-        native.min_char_ngram_hash(col("text"), 8).as("a"), hofMin.as("b"))
+        native.min_char_ngram_hash(col("text"), 8).as("a"),
+        array_min(charNgramHashesHof(8)).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(n == 0)
   }
@@ -92,19 +94,48 @@ class PortableParitySpec extends SparkSpec {
     assert(n == 0)
   }
 
-  test("winnow_set native == HOF windowed-minima formula") {
-    val n = 8; val w = 4
+  private def winnowHof(n: Int, w: Int) = {
     val hs = transform(sequence(lit(1), length(col("text")) - (n - 1)),
       i => Portable.polyHash(col("text").substr(i, lit(n))))
-    val hof = when(length(col("text")) < n, array(Portable.polyHash(col("text"))))
+    when(length(col("text")) < n, array(Portable.polyHash(col("text"))))
       .when(size(hs) <= w, array(array_min(hs)))
       .otherwise(array_sort(array_distinct(
         transform(sequence(lit(1), size(hs) - (w - 1)),
           i => array_min(slice(hs, i, lit(w)))))))
-    val bad = docs.select(native.winnow_set(col("text"), n, w).as("a"),
-        hof.as("b"))
+  }
+
+  test("winnow_set native == HOF windowed-minima formula") {
+    val bad = docs.select(native.winnow_set(col("text"), 8, 4).as("a"),
+        winnowHof(8, 4).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(bad == 0)
+  }
+
+  /** Adjacent word n-grams as a join of `Portable.tokens`; empty below n
+    * tokens. */
+  private def wordNgramsHof(n: Int) = {
+    val w = Portable.tokens(col("text"))
+    when(size(w) >= n, transform(sequence(lit(1), size(w) - (n - 1)),
+        i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j)): _*)))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  test("word_bigrams / word_trigrams native == Portable.tokens join") {
+    import spark.implicits._
+    val short = Seq("", "one", "one two", "  one   two ", "x y z", "a b c d")
+      .toDF("text")
+    Seq(docs.select(col("text")), short).foreach { df =>
+      val bad = df.select(
+          native.word_bigrams(col("text")).as("a2"), wordNgramsHof(2).as("b2"),
+          native.word_trigrams(col("text")).as("a3"), wordNgramsHof(3).as("b3"))
+        .filter(col("a2") =!= col("b2") || col("a3") =!= col("b3")).count()
+      assert(bad == 0)
+    }
+    // the short docs really are below 2 and 3 tokens
+    assert(short.select(native.word_bigrams(col("text")).as("g"))
+      .filter(size(col("g")) === 0).count() == 2)
+    assert(short.select(native.word_trigrams(col("text")).as("g"))
+      .filter(size(col("g")) === 0).count() == 4)
   }
 
   test("short/degenerate strings: fewer tokens than shingle width") {
@@ -115,5 +146,25 @@ class PortableParitySpec extends SparkSpec {
         Portable.minhashSignature(col("text"), 4, 3).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(bad == 0)
+    // word-shingle sets below, at and above the width, and on the corpus
+    val badSets = df.unionByName(docs.select(col("text")))
+      .select(native.shingle_hash_set(col("text"), 3).as("a"),
+        array_sort(array_distinct(Portable.shingleHashes(col("text"), 3))).as("b"))
+      .filter(col("a") =!= col("b")).count()
+    assert(badSets == 0)
+    // character n-gram kernels on texts of length 0, n - 1, n and n + 1
+    for (n <- Seq(3, 8)) {
+      val texts = Seq(0, n - 1, n, n + 1).map(l => "abcdefghij".take(l))
+        .toDF("text")
+      val badGrams = texts.select(
+          native.ngram_hash_set(col("text"), n).as("a1"),
+          array_sort(array_distinct(charNgramHashesHof(n))).as("b1"),
+          native.winnow_set(col("text"), n, 4).as("a2"), winnowHof(n, 4).as("b2"),
+          native.min_char_ngram_hash(col("text"), n).as("a3"),
+          array_min(charNgramHashesHof(n)).as("b3"))
+        .filter(col("a1") =!= col("b1") || col("a2") =!= col("b2") ||
+          col("a3") =!= col("b3")).count()
+      assert(badGrams == 0, s"n = $n")
+    }
   }
 }

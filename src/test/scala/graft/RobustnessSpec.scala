@@ -249,7 +249,7 @@ class RobustnessSpec extends SparkSpec {
       Pareto.skyline2d(pts, "x", "y", bucketWidth = 0L)
     }
     intercept[IllegalArgumentException] {
-      new graft.plans.BottomKDistinctAggregator(0)
+      new graft.plans.BottomKAggregator[graft.plans.KmvObs, Long](0, _.h)
     }
     // empty stopword list: the whole doc is one phrase, not a crash
     val docs = Seq((1L, "alpha beta alpha")).toDF("doc_id", "text")

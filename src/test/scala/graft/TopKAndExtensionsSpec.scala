@@ -132,8 +132,8 @@ class TopKAndExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("BottomKPairsAggregator: arrival-order invariant, redelivery collapses") {
-    // r11 (sample_exact_k_stream): the streamed holdout's two claims —
+  test("BottomKAggregator over pairs: arrival-order invariant, redelivery collapses") {
+    // sample_exact_k_stream: the streamed holdout's two claims —
     // ANY batch split of the corpus drains to the batch draw, and a
     // redelivered id cannot occupy two sample slots
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -159,7 +159,8 @@ class TopKAndExtensionsSpec extends SparkSpec {
       rev.drop(250) ++ obs.take(40))
     val ms = MemoryStream[graft.plans.PairObs]
     val q = ms.toDS().groupByKey(_.key)
-      .agg(new graft.plans.BottomKPairsAggregator(5).toColumn.name("ps"))
+      .agg(new graft.plans.BottomKAggregator[graft.plans.PairObs, (Long, Long)](
+        5, o => (o.u, o.id)).toColumn.name("ps"))
       .toDF("key", "ps")
       .writeStream.format("memory").queryName("smpk_spec")
       .outputMode("complete").start()
