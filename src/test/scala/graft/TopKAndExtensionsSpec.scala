@@ -132,7 +132,8 @@ class TopKAndExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("BottomKAggregator over pairs: arrival-order invariant, redelivery collapses") {
+  test("BottomKPairsAggregator: arrival-order invariant, redelivery collapses") {
+    // BottomKAggregator over (u, id) pairs, the aggregator behind
     // sample_exact_k_stream: the streamed holdout's two claims —
     // ANY batch split of the corpus drains to the batch draw, and a
     // redelivered id cannot occupy two sample slots
