@@ -146,11 +146,14 @@ object HashOps {
     * sum plumbing is the real part; a trained model would broadcast a
     * weight array indexed by the same hash. */
   def hashedLinearScore(s: UTF8String, halfRange: Int): Long = {
-    val hs = tokenHashes(s)
+    val toks = tokensOf(s.toString)
     val mod = 2L * halfRange + 1
     var acc = 0L
     var i = 0
-    while (i < hs.length) { acc += hs(i) % mod - halfRange; i += 1 }
+    while (i < toks.length) {
+      acc += polyHashStr(toks(i)) % mod - halfRange
+      i += 1
+    }
     acc
   }
 

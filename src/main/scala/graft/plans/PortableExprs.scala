@@ -37,8 +37,6 @@ trait HashOpsCall extends Expression {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
-  protected def str(v: Any): UTF8String = v.asInstanceOf[UTF8String]
-  protected def arr(v: Any): ArrayData = v.asInstanceOf[ArrayData]
 }
 
 trait HashOpsUnary extends UnaryExpression with HashOpsCall {
@@ -53,7 +51,8 @@ trait HashOpsBinary extends BinaryExpression with HashOpsCall {
 
 case class PolyHashExpr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any = HashOps.polyHash(str(input))
+  override protected def nullSafeEval(input: Any): Any =
+    HashOps.polyHash(input.asInstanceOf[UTF8String])
   override protected def method = "polyHash"
   override protected def withNewChildInternal(newChild: Expression): PolyHashExpr =
     copy(child = newChild)
@@ -65,7 +64,8 @@ case class NfcNormalizeExpr(child: Expression) extends HashOpsUnary
   // and throw ClassCastException at execution
   override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any = HashOps.nfc(str(input))
+  override protected def nullSafeEval(input: Any): Any =
+    HashOps.nfc(input.asInstanceOf[UTF8String])
   override protected def method = "nfc"
   override protected def withNewChildInternal(
       newChild: Expression): NfcNormalizeExpr = copy(child = newChild)
@@ -75,7 +75,7 @@ case class MinHashSigExpr(child: Expression, k: Int, shingleN: Int)
     extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.minhashSig(str(input), k, shingleN)
+    HashOps.minhashSig(input.asInstanceOf[UTF8String], k, shingleN)
   override protected def method = "minhashSig"
   override protected def args: Seq[Any] = Seq(k, shingleN)
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
@@ -84,7 +84,8 @@ case class MinHashSigExpr(child: Expression, k: Int, shingleN: Int)
 
 case class SimHash32Expr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any = HashOps.simhash32(str(input))
+  override protected def nullSafeEval(input: Any): Any =
+    HashOps.simhash32(input.asInstanceOf[UTF8String])
   override protected def method = "simhash32"
   override protected def withNewChildInternal(newChild: Expression): SimHash32Expr =
     copy(child = newChild)
@@ -92,7 +93,8 @@ case class SimHash32Expr(child: Expression) extends HashOpsUnary {
 
 case class WordBigramsExpr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any = HashOps.wordBigrams(str(input))
+  override protected def nullSafeEval(input: Any): Any =
+    HashOps.wordBigrams(input.asInstanceOf[UTF8String])
   override protected def method = "wordBigrams"
   override protected def withNewChildInternal(newChild: Expression): WordBigramsExpr =
     copy(child = newChild)
@@ -100,7 +102,8 @@ case class WordBigramsExpr(child: Expression) extends HashOpsUnary {
 
 case class WordTrigramsExpr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any = HashOps.wordTrigrams(str(input))
+  override protected def nullSafeEval(input: Any): Any =
+    HashOps.wordTrigrams(input.asInstanceOf[UTF8String])
   override protected def method = "wordTrigrams"
   override protected def withNewChildInternal(newChild: Expression): WordTrigramsExpr =
     copy(child = newChild)
@@ -108,7 +111,8 @@ case class WordTrigramsExpr(child: Expression) extends HashOpsUnary {
 
 case class SimHash64Expr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any = HashOps.simhash64(str(input))
+  override protected def nullSafeEval(input: Any): Any =
+    HashOps.simhash64(input.asInstanceOf[UTF8String])
   override protected def method = "simhash64"
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
     copy(child = newChild)
@@ -116,7 +120,8 @@ case class SimHash64Expr(child: Expression) extends HashOpsUnary {
 
 case class TokenCountExpr(child: Expression) extends HashOpsUnary {
   override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any = HashOps.tokenCount(str(input))
+  override protected def nullSafeEval(input: Any): Any =
+    HashOps.tokenCount(input.asInstanceOf[UTF8String])
   override protected def method = "tokenCount"
   override protected def withNewChildInternal(
       newChild: Expression): TokenCountExpr =
@@ -127,7 +132,7 @@ case class HashedLinearScoreExpr(child: Expression, halfRange: Int)
     extends HashOpsUnary {
   override def dataType: DataType = LongType
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.hashedLinearScore(str(input), halfRange)
+    HashOps.hashedLinearScore(input.asInstanceOf[UTF8String], halfRange)
   override protected def method = "hashedLinearScore"
   override protected def args: Seq[Any] = Seq(halfRange)
   override protected def withNewChildInternal(
@@ -139,7 +144,7 @@ case class MinCharNgramHashExpr(child: Expression, n: Int)
     extends HashOpsUnary {
   override def dataType: DataType = LongType
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.minCharNgramHash(str(input), n)
+    HashOps.minCharNgramHash(input.asInstanceOf[UTF8String], n)
   override protected def method = "minCharNgramHash"
   override protected def args: Seq[Any] = Seq(n)
   override protected def withNewChildInternal(newChild: Expression): MinCharNgramHashExpr =
@@ -149,7 +154,7 @@ case class MinCharNgramHashExpr(child: Expression, n: Int)
 case class NgramHashSetExpr(child: Expression, n: Int) extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.ngramHashSet(str(input), n)
+    HashOps.ngramHashSet(input.asInstanceOf[UTF8String], n)
   override protected def method = "ngramHashSet"
   override protected def args: Seq[Any] = Seq(n)
   override protected def withNewChildInternal(newChild: Expression): NgramHashSetExpr =
@@ -160,7 +165,7 @@ case class ShingleHashSetExpr(child: Expression, n: Int)
     extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.shingleHashSet(str(input), n)
+    HashOps.shingleHashSet(input.asInstanceOf[UTF8String], n)
   override protected def method = "shingleHashSet"
   override protected def args: Seq[Any] = Seq(n)
   override protected def withNewChildInternal(newChild: Expression): ShingleHashSetExpr =
@@ -171,7 +176,7 @@ case class SortedJaccardExpr(left: Expression, right: Expression)
     extends HashOpsBinary {
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.sortedJaccard(arr(a), arr(b))
+    HashOps.sortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def method = "sortedJaccard"
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): SortedJaccardExpr =
@@ -194,7 +199,8 @@ case class CosineSimExpr(left: Expression, right: Expression)
     extends HashOpsBinary {
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.cosine(arr(a), arr(b), isFloat(left), isFloat(right))
+    HashOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      isFloat(left), isFloat(right))
   override protected def method = "cosine"
   override protected def args: Seq[Any] = Seq(isFloat(left), isFloat(right))
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -205,7 +211,8 @@ case class DotProductExpr(left: Expression, right: Expression)
     extends HashOpsBinary {
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.dot(arr(a), arr(b), isFloat(left), isFloat(right))
+    HashOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      isFloat(left), isFloat(right))
   override protected def method = "dot"
   override protected def args: Seq[Any] = Seq(isFloat(left), isFloat(right))
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -216,7 +223,8 @@ case class L2SqExpr(left: Expression, right: Expression)
     extends HashOpsBinary {
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.l2sq(arr(a), arr(b), isFloat(left), isFloat(right))
+    HashOps.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      isFloat(left), isFloat(right))
   override protected def method = "l2sq"
   override protected def args: Seq[Any] = Seq(isFloat(left), isFloat(right))
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -226,7 +234,7 @@ case class L2SqExpr(left: Expression, right: Expression)
 case class LshBucketExpr(child: Expression, nPlanes: Int) extends HashOpsUnary {
   override def dataType: DataType = LongType
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.lshBucket(arr(input), nPlanes, isFloat(child))
+    HashOps.lshBucket(input.asInstanceOf[ArrayData], nPlanes, isFloat(child))
   override protected def method = "lshBucket"
   override protected def args: Seq[Any] = Seq(nPlanes, isFloat(child))
   override protected def withNewChildInternal(newChild: Expression): LshBucketExpr =
@@ -237,7 +245,7 @@ case class WinnowSetExpr(child: Expression, n: Int, w: Int)
     extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.winnowSet(str(input), n, w)
+    HashOps.winnowSet(input.asInstanceOf[UTF8String], n, w)
   override protected def method = "winnowSet"
   override protected def args: Seq[Any] = Seq(n, w)
   override protected def withNewChildInternal(newChild: Expression): WinnowSetExpr =
@@ -248,7 +256,7 @@ case class PositionsToBitsetExpr(child: Expression, words: Int)
     extends HashOpsUnary {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
-    HashOps.positionsToBitset(arr(input), words)
+    HashOps.positionsToBitset(input.asInstanceOf[ArrayData], words)
   override protected def method = "positionsToBitset"
   override protected def args: Seq[Any] = Seq(words)
   override protected def withNewChildInternal(newChild: Expression): PositionsToBitsetExpr =
@@ -259,7 +267,7 @@ case class BitsetJaccardExpr(left: Expression, right: Expression)
     extends HashOpsBinary {
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashOps.bitsetJaccard(arr(a), arr(b))
+    HashOps.bitsetJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def method = "bitsetJaccard"
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): BitsetJaccardExpr =
