@@ -100,6 +100,59 @@ object CBlock {
         .otherwise(col("text")))
   }
 
+  /** A planted near-dup copy: every `stride`-th document again under id
+    * + `offset`, its text rewritten by `variant` on the Spark side and by
+    * `variantSql`, the same rewrite written apart in DuckDB SQL, on the
+    * oracle side. `truth` pairs each original with its copy. */
+  private case class Plant(stride: Int, offset: Long, variant: Column,
+      variantSql: String) {
+    private def picked(docs: DataFrame) =
+      docs.filter(pmod(col("doc_id"), lit(stride)) === 0)
+    def rows(docs: DataFrame): DataFrame = picked(docs)
+      .select((col("doc_id") + offset).as("doc_id"), variant.as("text"))
+    def truth(docs: DataFrame): DataFrame = picked(docs)
+      .select(col("doc_id").as("doc_a"), (col("doc_id") + offset).as("doc_b"))
+    def rowsSql: String =
+      s"""SELECT doc_id + $offset AS doc_id, $variantSql AS text
+         |FROM documents WHERE doc_id % $stride = 0""".stripMargin
+    def truthSql: String =
+      s"""SELECT doc_id AS doc_a, doc_id + $offset AS doc_b
+         |FROM documents WHERE doc_id % $stride = 0""".stripMargin
+  }
+
+  /** The dedup eval's two twin strengths over every 7th doc: 'tail'
+    * appends 3 words (jaccard ≈ 1), 'half' keeps the first half
+    * (jaccard ≈ 0.5, where 4-row bands can genuinely miss). */
+  private val tailPlant = Plant(7, 10000000L,
+    concat(col("text"), lit(" zq1 zq2 zq3")), "text || ' zq1 zq2 zq3'")
+  private val halfPlant = Plant(7, 10000000L, expr(
+    "substring(text, 1, greatest(CAST(floor(length(text) / 2) AS INT), 1))"),
+    "substr(text, 1, greatest(len(text) // 2, 1))")
+
+  /** Recall of candidate pairs `cand(doc_a, doc_b)` against a plant's
+    * `truth`: `label`, then n_truth, n_caught, n_other and recall. */
+  private def plantedRecall(label: Column, cand: DataFrame,
+      truth: DataFrame): DataFrame =
+    cand.join(truth.withColumn("is_truth", lit(1L)),
+        Seq("doc_a", "doc_b"), "left")
+      .agg(sum(coalesce(col("is_truth"), lit(0L))).as("n_caught"),
+        sum(when(col("is_truth").isNull, 1L).otherwise(0L)).as("n_other"))
+      .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
+      .select(label, col("n_truth"), col("n_caught"), col("n_other"),
+        round(col("n_caught") / col("n_truth"), 6).as("recall"))
+
+  /** Confusion matrix of `pred(doc_id, pred_lang)` against the
+    * ground-truth `lang` of `docs`: n per (lang, pred_lang) and its share
+    * of the lang's scored docs. */
+  private def langConfusion(pred: DataFrame, docs: DataFrame): DataFrame =
+    pred.join(docs.select(col("doc_id"), col("lang")), "doc_id")
+      .groupBy(col("lang"), col("pred_lang"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("share", round(col("n") /
+        sum(col("n")).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("lang"))), 6))
+      .orderBy(col("lang"), col("pred_lang"))
+
   private val stopwords = Seq("the", "a")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -134,35 +187,15 @@ object CBlock {
     "dedup_eval" -> ((s, dir) => {
       // measured dedup QUALITY against planted ground truth (the ANN
       // recall-floor idea applied to LSH dedup): every 7th doc gets a
-      // perturbed near-dup twin at two strengths — 'tail' (3 words
-      // appended, jaccard ≈ 1) and 'half' (first half kept, jaccard
-      // ≈ 0.5, where 4-row bands can genuinely miss) — and each row
-      // reports how many planted pairs the 16-perm/4-band pipeline
-      // caught plus the non-planted candidate count: the deterministic,
-      // engine-exact operating curve of the dedup config
+      // perturbed near-dup twin at two strengths (tailPlant, halfPlant)
+      // and each row reports how many planted pairs the 16-perm/4-band
+      // pipeline caught plus the non-planted candidate count: the
+      // deterministic, engine-exact operating curve of the dedup config
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      def eval(level: String, variant: Column): DataFrame = {
-        val planted = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"),
-            variant.as("text"))
-        val cand = Dedup.minhashCandidates(docs.unionByName(planted),
-          k = 16, bands = 4)
-        val truth = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-          .select(col("doc_id").as("doc_a"),
-            (col("doc_id") + 10000000L).as("doc_b"))
-        cand.join(truth.withColumn("is_truth", lit(1L)),
-            Seq("doc_a", "doc_b"), "left")
-          .agg(sum(coalesce(col("is_truth"), lit(0L))).as("n_caught"),
-            sum(when(col("is_truth").isNull, 1L).otherwise(0L)).as("n_other"))
-          .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-          .select(lit(level).as("level"), col("n_truth"), col("n_caught"),
-            col("n_other"),
-            round(col("n_caught") / col("n_truth"), 6).as("recall"))
-      }
-      eval("tail", concat(col("text"), lit(" zq1 zq2 zq3")))
-        .unionByName(eval("half", expr(
-          "substring(text, 1, greatest(CAST(floor(length(text) / 2) AS INT), 1))")))
-        .orderBy(col("level"))
+      Seq("tail" -> tailPlant, "half" -> halfPlant).map { case (level, p) =>
+        plantedRecall(lit(level).as("level"), Dedup.minhashCandidates(
+          docs.unionByName(p.rows(docs)), k = 16, bands = 4), p.truth(docs))
+      }.reduce(_.unionByName(_)).orderBy(col("level"))
     }),
 
     "dedup_eval_bands" -> ((s, dir) => {
@@ -172,24 +205,11 @@ object CBlock {
       // this query publishes the measured curve the config is picked
       // from; each point reuses the SAME banding plan
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val planted = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), expr(
-          "substring(text, 1, greatest(CAST(floor(length(text) / 2) AS INT), 1))")
-          .as("text"))
-      val corpus = docs.unionByName(planted)
-      val truth = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select(col("doc_id").as("doc_a"),
-          (col("doc_id") + 10000000L).as("doc_b"))
+      val corpus = docs.unionByName(halfPlant.rows(docs))
+      val truth = halfPlant.truth(docs)
       Seq(2, 4, 8).map { b =>
-        Dedup.minhashCandidates(corpus, k = 16, bands = b)
-          .join(truth.withColumn("is_truth", lit(1L)),
-            Seq("doc_a", "doc_b"), "left")
-          .agg(sum(coalesce(col("is_truth"), lit(0L))).as("n_caught"),
-            sum(when(col("is_truth").isNull, 1L).otherwise(0L)).as("n_other"))
-          .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-          .select(lit(b.toLong).as("bands"), col("n_truth"), col("n_caught"),
-            col("n_other"),
-            round(col("n_caught") / col("n_truth"), 6).as("recall"))
+        plantedRecall(lit(b.toLong).as("bands"),
+          Dedup.minhashCandidates(corpus, k = 16, bands = b), truth)
       }.reduce(_.unionByName(_)).orderBy(col("bands"))
     }),
 
@@ -676,15 +696,8 @@ object CBlock {
       // data; one join (pred side is a projection of the same scan)
       // and one agg, the share via a lang-partitioned window
       val docs = Tables.documents(s, dir)
-      TextAnalysis.langId(docs, langMarkers)
-        .select(col("doc_id"), col("pred_lang"))
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("share", round(col("n") /
-          sum(col("n")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("lang"))), 6))
-        .orderBy(col("lang"), col("pred_lang"))
+      langConfusion(TextAnalysis.langId(docs, langMarkers)
+        .select(col("doc_id"), col("pred_lang")), docs)
     }),
 
     "text_langid_profile" -> ((s, dir) => {
@@ -703,15 +716,8 @@ object CBlock {
       // baseline over the UNSEEDED corpus stays on the board as
       // text_langid_eval — same readout, no signal, the control.
       val docs = langPlantedDocs(Tables.documents(s, dir))
-      TextAnalysis.langId(docs, langEvalMarkers)
-        .select(col("doc_id"), col("pred_lang"))
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("share", round(col("n") /
-          sum(col("n")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("lang"))), 6))
-        .orderBy(col("lang"), col("pred_lang"))
+      langConfusion(TextAnalysis.langId(docs, langEvalMarkers)
+        .select(col("doc_id"), col("pred_lang")), docs)
     }),
 
     "text_langid_profile_planted" -> ((s, dir) => {
@@ -724,14 +730,7 @@ object CBlock {
       // Docs with no profile-gram hit drop from the scored relation
       // (langIdProfile's inner join) — the oracle mirrors that.
       val docs = langPlantedDocs(Tables.documents(s, dir))
-      TextAnalysis.langIdProfile(docs)
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("share", round(col("n") /
-          sum(col("n")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("lang"))), 6))
-        .orderBy(col("lang"), col("pred_lang"))
+      langConfusion(TextAnalysis.langIdProfile(docs), docs)
     }),
 
     "text_langid_profile_holdout" -> ((s, dir) => {
@@ -746,14 +745,7 @@ object CBlock {
       // burst — langHoldoutDocs) so the matrix has real error mass:
       // without them even out-of-sample scoring is a perfect diagonal.
       val docs = langHoldoutDocs(Tables.documents(s, dir))
-      TextAnalysis.langIdProfileHoldout(docs)
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("share", round(col("n") /
-          sum(col("n")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("lang"))), 6))
-        .orderBy(col("lang"), col("pred_lang"))
+      langConfusion(TextAnalysis.langIdProfileHoldout(docs), docs)
     }),
 
     "text_quality" -> ((s, dir) => {
@@ -3722,60 +3714,66 @@ object CBlock {
        |LEFT JOIN ex e ON p.word = e.word
        |GROUP BY p.word ORDER BY p.word""".stripMargin
 
-  /** sketch_hll's oracle (shared verbatim with the streaming-maintained
-    * register twin). */
-  private lazy val hllOracleSql: String = {
+  /** HyperLogLog (64 registers, ranks 1..26) of the user ids of `from`
+    * per `keys`, the columns that `select` projects next to the hash:
+    * `h`, the bucket/word split `b`, register ranks `r`, occupancy and
+    * the sum of 2^(26-rank) in `agg`, and in `est` the estimate with the
+    * small-range (linear counting) correction, `hll_est`. */
+  private def hllCtes(keys: String, select: String = "",
+      from: String = "events"): String = {
     val rhoCase = (0 until 25)
       .map(i => s"WHEN w >= ${1L << (24 - i)} THEN ${i + 1}")
       .mkString(" ")
     val termCase = (1 to 26)
       .map(m => s"WHEN $m THEN ${1L << (26 - m)}")
       .mkString(" ")
-    s"""WITH h AS (
-       |  SELECT event_type,
+    val n = keys.split(",").length
+    def ords(k: Int) = (1 to k).mkString(", ")
+    s"""h AS (
+       |  SELECT ${if (select.isEmpty) keys else select},
        |    (${ph("'hll:' || CAST(user_id AS VARCHAR)")}
        |      * ((1 * 2654435761) % 2147483647)
        |      + (1 * 40503) % 2147483647) % 2147483647 AS h
-       |  FROM events
+       |  FROM $from
        |), b AS (
-       |  SELECT event_type, h % 64 AS bucket, h // 64 AS w FROM h
+       |  SELECT $keys, h % 64 AS bucket, h // 64 AS w FROM h
        |), r AS (
-       |  SELECT event_type, bucket,
+       |  SELECT $keys, bucket,
        |    max(CASE $rhoCase ELSE 26 END) AS m_j
-       |  FROM b GROUP BY 1, 2
+       |  FROM b GROUP BY ${ords(n + 1)}
        |), agg AS (
-       |  SELECT event_type, count(*) AS occupied,
+       |  SELECT $keys, count(*) AS occupied,
        |    SUM(CASE m_j $termCase END) AS s_present
-       |  FROM r GROUP BY 1
+       |  FROM r GROUP BY ${ords(n)}
        |), est AS (
-       |  SELECT event_type, occupied,
-       |    CAST(0.709 AS DOUBLE) * 64 * 64 * 67108864.0
-       |      / (s_present + (64 - occupied) * 67108864) AS e_raw
-       |  FROM agg
-       |), ex AS (
+       |  SELECT $keys, occupied,
+       |    CASE WHEN e_raw <= 160 AND occupied < 64
+       |         THEN ROUND(64.0 * ln(64.0 / (64 - occupied)), 4)
+       |         ELSE ROUND(e_raw, 4) END AS hll_est
+       |  FROM (SELECT *, CAST(0.709 AS DOUBLE) * 64 * 64 * 67108864.0
+       |      / (s_present + (64 - occupied) * 67108864) AS e_raw FROM agg)
+       |)""".stripMargin
+  }
+
+  /** sketch_hll's oracle (shared verbatim with the streaming-maintained
+    * register twin). */
+  private lazy val hllOracleSql: String =
+    s"""WITH ${hllCtes("event_type")},
+       |ex AS (
        |  SELECT event_type, count(DISTINCT user_id) AS exact
        |  FROM events GROUP BY 1
        |)
-       |SELECT est.event_type, ex.exact, CAST(occupied AS BIGINT) AS occupied,
-       |  CASE WHEN e_raw <= 160 AND occupied < 64
-       |       THEN ROUND(64.0 * ln(64.0 / (64 - occupied)), 4)
-       |       ELSE ROUND(e_raw, 4) END AS hll_est
+       |SELECT est.event_type, ex.exact,
+       |  CAST(occupied AS BIGINT) AS occupied, hll_est
        |FROM est JOIN ex ON est.event_type = ex.event_type
        |ORDER BY est.event_type""".stripMargin
-  }
 
   /** sketch_hll_sliding's oracle: the window estimate computed DIRECTLY
     * from each day's trailing-7-calendar-day event set (dense day
     * domain per topic), so the hash match proves the register-store
     * route (daily registers max-merged across the sliding window)
     * equals direct estimation. */
-  private lazy val hllSlidingOracleSql: String = {
-    val rhoCase = (0 until 25)
-      .map(i => s"WHEN w >= ${1L << (24 - i)} THEN ${i + 1}")
-      .mkString(" ")
-    val termCase = (1 to 26)
-      .map(m => s"WHEN $m THEN ${1L << (26 - m)}")
-      .mkString(" ")
+  private lazy val hllSlidingOracleSql: String =
     s"""WITH e AS (
        |  SELECT event_type, user_id,
        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
@@ -3791,40 +3789,16 @@ object CBlock {
        |  SELECT d.event_type, d.day, e.user_id
        |  FROM days d JOIN e ON e.event_type = d.event_type
        |    AND e.day BETWEEN d.day - 6 AND d.day
-       |), h AS (
-       |  SELECT event_type, day,
-       |    (${ph("'hll:' || CAST(user_id AS VARCHAR)")}
-       |      * ((1 * 2654435761) % 2147483647)
-       |      + (1 * 40503) % 2147483647) % 2147483647 AS h
-       |  FROM wins
-       |), b AS (
-       |  SELECT event_type, day, h % 64 AS bucket, h // 64 AS w FROM h
-       |), r AS (
-       |  SELECT event_type, day, bucket,
-       |    max(CASE $rhoCase ELSE 26 END) AS m_j
-       |  FROM b GROUP BY 1, 2, 3
-       |), agg AS (
-       |  SELECT event_type, day, count(*) AS occupied,
-       |    SUM(CASE m_j $termCase END) AS s_present
-       |  FROM r GROUP BY 1, 2
-       |), est AS (
-       |  SELECT event_type, day, occupied,
-       |    CAST(0.709 AS DOUBLE) * 64 * 64 * 67108864.0
-       |      / (s_present + (64 - occupied) * 67108864) AS e_raw
-       |  FROM agg
-       |), ex AS (
+       |), ${hllCtes("event_type, day", from = "wins")},
+       |ex AS (
        |  SELECT event_type, day, count(DISTINCT user_id) AS exact7
        |  FROM wins GROUP BY 1, 2
        |)
        |SELECT est.event_type, est.day, ex.exact7,
-       |  CAST(est.occupied AS BIGINT) AS occupied,
-       |  CASE WHEN e_raw <= 160 AND est.occupied < 64
-       |       THEN ROUND(64.0 * ln(64.0 / (64 - est.occupied)), 4)
-       |       ELSE ROUND(e_raw, 4) END AS hll_est
+       |  CAST(est.occupied AS BIGINT) AS occupied, hll_est
        |FROM est JOIN ex ON est.event_type = ex.event_type
        |  AND est.day = ex.day
        |ORDER BY est.event_type, est.day""".stripMargin
-  }
 
   /** emb_pca's oracle: the 3-step integer power iteration unrolled as
     * CTEs over a `(vec_id, embedding)` relation (shared with the
@@ -4012,15 +3986,12 @@ object CBlock {
 
   /** sim_probe_sweep's oracle body (shared with the planted twin). */
   private val probeSweepOracle: String =
-    """WITH cents AS (
+    s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cent_vec
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), d AS (
         |  SELECT e.vec_id, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cent_vec[i] AS DOUBLE))
-        |         * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cent_vec[i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cent_vec"), 64)} AS dist
         |  FROM embeddings e, cents c
         |), assign AS (
         |  SELECT vec_id, cent_id FROM d
@@ -4039,12 +4010,7 @@ object CBlock {
         |  WHERE a.vec_id <> pc.probe_id
         |), sc AS (
         |  SELECT cd.nprobe, cd.probe_id, cd.cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS cos
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM cand cd
         |  JOIN embeddings p ON p.vec_id = cd.probe_id
         |  JOIN embeddings c ON c.vec_id = cd.cand_id
@@ -4054,12 +4020,7 @@ object CBlock {
         |    ORDER BY cos DESC, cand_id) <= 5
         |), bcos AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS cos
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM embeddings p JOIN embeddings c ON p.vec_id <> c.vec_id
         |  WHERE p.vec_id < 20
         |), brute AS (
@@ -4073,12 +4034,6 @@ object CBlock {
         |GROUP BY 1 ORDER BY nprobe""".stripMargin
 
 
-  /** Deterministic case/punctuation-variant DUPLICATES for the
-    * normalization queries (the text_pii planting pattern): every
-    * doc_id % 13 == 0 doc gets a byte-different copy (upper-cased,
-    * trailing bangs, offset id) that normalizes back to the original —
-    * so `dedup_normalized` provably finds groups at every scale factor
-    * while byte-exact hashing cannot pair them. */
   /** Multi-script plant markers (r12, verdict #5): the A marker is
     * precomposed lowercase (é, Cyrillic бета, Greek ω); the B marker is
     * the same text DECOMPOSED (e + U+0301) and UPPER-cased — NFC + the
@@ -4105,56 +4060,39 @@ object CBlock {
 
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
 
-  private def noisyDocs(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text")).unionAll(
-      docs.filter(pmod(col("doc_id"), lit(13)) === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"),
-          concat(upper(col("text")), lit("  !!")).as("text")))
-      // non-ASCII planted duplicates (r12): for every 17th doc, copy A
-      // appends the precomposed multi-script marker; copy B is the
-      // UPPER-cased FULL-WIDTH text plus the DECOMPOSED upper marker —
-      // the two normalize to the same string only if NFC, the width
-      // fold, and the Unicode case fold all land
-      .unionAll(docs.filter(pmod(col("doc_id"), lit(17)) === 0)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat(col("text"), lit(markerA)).as("text")))
-      .unionAll(docs.filter(pmod(col("doc_id"), lit(17)) === 0)
-        .select((col("doc_id") + 30000000L).as("doc_id"),
-          concat(translate(upper(col("text")), fwFrom, fwTo),
-            lit(markerB)).as("text")))
-      // locale-fold planted duplicates (r13): same base text, one copy
-      // carrying the lowercase Turkish/German/Greek marker, the other
-      // its uppercase spelling — they co-normalize only through the
-      // explicit İ/ı/Σ/ς fold table + ß → ss
-      .unionAll(docs.filter(pmod(col("doc_id"), lit(19)) === 0)
-        .select((col("doc_id") + 40000000L).as("doc_id"),
-          concat(col("text"), lit(markerC)).as("text")))
-      .unionAll(docs.filter(pmod(col("doc_id"), lit(19)) === 0)
-        .select((col("doc_id") + 50000000L).as("doc_id"),
-          concat(col("text"), lit(markerD)).as("text")))
+  /** The normalizer's planted duplicates (the text_pii planting
+    * pattern), byte-different copies that normalize back to the
+    * original, so `dedup_normalized` provably finds groups at every scale
+    * factor while byte-exact hashing cannot pair them. Every 13th doc is
+    * copied upper-cased with trailing bangs. Every 17th is copied twice with non-ASCII
+    * markers: copy A appends the precomposed multi-script marker, copy B
+    * is the UPPER-cased FULL-WIDTH text plus the DECOMPOSED upper marker;
+    * the two normalize to the same string only if NFC, the width fold
+    * and the Unicode case fold all land. Every 19th is copied twice with
+    * the same base text, one copy carrying the lowercase
+    * Turkish/German/Greek marker and the other its uppercase spelling;
+    * they co-normalize only through the explicit İ/ı/Σ/ς fold table +
+    * ß → ss. */
+  private val noisyPlants = Seq(
+    Plant(13, 10000000L, concat(upper(col("text")), lit("  !!")),
+      "upper(text) || '  !!'"),
+    Plant(17, 20000000L, concat(col("text"), lit(markerA)),
+      s"text || ${sqlLit(markerA)}"),
+    Plant(17, 30000000L, concat(translate(upper(col("text")), fwFrom, fwTo),
+      lit(markerB)),
+      s"translate(upper(text), ${sqlLit(fwFrom)}, ${sqlLit(fwTo)}) || ${sqlLit(markerB)}"),
+    Plant(19, 40000000L, concat(col("text"), lit(markerC)),
+      s"text || ${sqlLit(markerC)}"),
+    Plant(19, 50000000L, concat(col("text"), lit(markerD)),
+      s"text || ${sqlLit(markerD)}"))
 
-  private val noisySql =
-    s"""SELECT doc_id, text FROM documents
-       |UNION ALL
-       |SELECT doc_id + 10000000 AS doc_id, upper(text) || '  !!' AS text
-       |FROM documents WHERE doc_id % 13 = 0
-       |UNION ALL
-       |SELECT doc_id + 20000000 AS doc_id,
-       |  text || ${sqlLit(markerA)} AS text
-       |FROM documents WHERE doc_id % 17 = 0
-       |UNION ALL
-       |SELECT doc_id + 30000000 AS doc_id,
-       |  translate(upper(text), ${sqlLit(fwFrom)}, ${sqlLit(fwTo)}) ||
-       |    ${sqlLit(markerB)} AS text
-       |FROM documents WHERE doc_id % 17 = 0
-       |UNION ALL
-       |SELECT doc_id + 40000000 AS doc_id,
-       |  text || ${sqlLit(markerC)} AS text
-       |FROM documents WHERE doc_id % 19 = 0
-       |UNION ALL
-       |SELECT doc_id + 50000000 AS doc_id,
-       |  text || ${sqlLit(markerD)} AS text
-       |FROM documents WHERE doc_id % 19 = 0""".stripMargin
+  private def noisyDocs(docs: DataFrame): DataFrame =
+    noisyPlants.foldLeft(docs.select(col("doc_id"), col("text"))) {
+      (acc, p) => acc.unionAll(p.rows(docs))
+    }
+
+  private val noisySql = noisyPlants.map(_.rowsSql)
+    .mkString("SELECT doc_id, text FROM documents\nUNION ALL\n", "\nUNION ALL\n", "")
 
   /** The Unicode normalizer's oracle twin (r12, locale fold r13): NFC →
     * full-width + locale-exception fold (the identical translate
@@ -4368,6 +4306,84 @@ object CBlock {
        |)""".stripMargin
   }
 
+  /** Σ `term` over the index list `idx` (bound to `i`), left-folded
+    * from 0.0 in DOUBLE: the summation order of the native vector
+    * kernels, so the float sums match to the last bit. */
+  private def foldSql(idx: String, term: String): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform($idx, i -> $term)), (a, x) -> a + x)"
+  private def dims(d: Int): String = s"range(1, ${d + 1})"
+  /** Element i of vector `v` as DOUBLE. */
+  private def dbl(v: String): String = s"CAST($v[i] AS DOUBLE)"
+  /** Dot product of the `d`-dim vectors `x` and `y`. */
+  private def dotSql(x: String, y: String, d: Int): String =
+    foldSql(dims(d), s"${dbl(x)} * ${dbl(y)}")
+  /** Euclidean norm of the `d`-dim vector `x`. */
+  private def vecNormSql(x: String, d: Int): String = s"sqrt(${dotSql(x, x, d)})"
+  private def cosSql(x: String, y: String, d: Int): String =
+    s"${dotSql(x, y, d)}\n      / (${vecNormSql(x, d)} * ${vecNormSql(y, d)})"
+  /** Squared L2 distance over i = 1..`d` of the element expressions `xi`
+    * and `yi` (DOUBLE, written in terms of `i`). */
+  private def l2sqSql(xi: String, yi: String, d: Int): String =
+    foldSql(dims(d), s"($xi - $yi) * ($xi - $yi)")
+
+  /** Squared distance of `embedding` to its label's centroid, the
+    * per-dim sums `sxs` over `n_label` members. */
+  private val centroidSqSql: String = foldSql("range(1, len(embedding) + 1)",
+    "(CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label) * (CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label)")
+
+  /** TextAnalysis.quality's score of a token list `w` with the
+    * stopwords 'the' and 'a', rounded to 6 places. */
+  private val qualitySql: String =
+    "ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))" +
+      " + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))" +
+      " + 0.2 * least(len(w) / 100.0, 1.0), 6)"
+
+  /** Connected components of the undirected pairs `from(a, b)`: `e`
+    * holds both directions, `reach(src, dst)` its transitive closure and
+    * `labels(ldoc, cl)` each node's smallest reachable id, its component
+    * label. Needs `WITH RECURSIVE`. */
+  private def componentsCtes(from: String = "pairs", a: String = "doc_a",
+      b: String = "doc_b"): String =
+    s"""e AS (
+       |  SELECT $a AS a, $b AS b FROM $from
+       |  UNION SELECT $b AS a, $a AS b FROM $from
+       |), reach(src, dst) AS (
+       |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
+       |  UNION
+       |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
+       |), labels AS (
+       |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
+       |)""".stripMargin
+
+  /** One arm of a planted-recall eval: the plant's copies unioned into
+    * the corpus, its 16-perm minhash pairs at `bands`, and `label`
+    * followed by n_truth, n_caught, n_other and recall against the
+    * plant's truth pairs (the SQL twin of `plantedRecall`). */
+  private def plantedEvalSql(p: Plant, label: String, bands: Int = 4): String =
+    s"""SELECT * FROM (
+       |WITH corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  ${p.rowsSql}
+       |),
+       |${minhashPairsCte(from = "corpus", bands = bands)},
+       |truth AS (
+       |  ${p.truthSql}
+       |),
+       |j AS (
+       |  SELECT p.doc_a, p.doc_b,
+       |    CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_truth
+       |  FROM pairs p
+       |  LEFT JOIN truth t ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b
+       |)
+       |SELECT $label,
+       |  (SELECT count(*) FROM truth) AS n_truth,
+       |  CAST(SUM(is_truth) AS BIGINT) AS n_caught,
+       |  CAST(SUM(1 - is_truth) AS BIGINT) AS n_other,
+       |  ROUND(SUM(is_truth) * 1.0 / (SELECT count(*) FROM truth), 6)
+       |    AS recall
+       |FROM j)""".stripMargin
+
   /** Fixed-point PageRank iteration chain (the SQL twin of
     * Graph.pageRankFixed): expects CTEs `ed(src, dst, w)` and
     * `nodes(node)` upstream; emits `ow`, `nn`, `r0` … `r{iters}` with
@@ -4401,20 +4417,9 @@ object CBlock {
   private lazy val baseOracle: Map[String, String] = Map(
     "curate_corpus" ->
       s"""WITH RECURSIVE ${minhashPairsCte()},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
-         |), q AS (
+         |${componentsCtes()}, q AS (
          |  SELECT doc_id, lang, source,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |        + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |        + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM (SELECT doc_id, lang, source, $toksSql AS w FROM documents)
          |), kept AS (
          |  SELECT q.* FROM q LEFT JOIN labels l ON q.doc_id = l.ldoc
@@ -4439,88 +4444,25 @@ object CBlock {
          |SELECT doc_a, doc_b FROM pairs ORDER BY 1, 2""".stripMargin,
 
     "dedup_eval" ->
-      Seq("tail" -> "text || ' zq1 zq2 zq3'",
-          "half" -> "substr(text, 1, greatest(len(text) // 2, 1))")
-        .map { case (level, variant) =>
-          s"""SELECT * FROM (
-             |WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 10000000 AS doc_id, $variant AS text
-             |  FROM documents WHERE doc_id % 7 = 0
-             |),
-             |${minhashPairsCte(from = "corpus")},
-             |truth AS (
-             |  SELECT doc_id AS doc_a, doc_id + 10000000 AS doc_b
-             |  FROM documents WHERE doc_id % 7 = 0
-             |),
-             |j AS (
-             |  SELECT p.doc_a, p.doc_b,
-             |    CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_truth
-             |  FROM pairs p
-             |  LEFT JOIN truth t ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b
-             |)
-             |SELECT '$level' AS level,
-             |  (SELECT count(*) FROM truth) AS n_truth,
-             |  CAST(SUM(is_truth) AS BIGINT) AS n_caught,
-             |  CAST(SUM(1 - is_truth) AS BIGINT) AS n_other,
-             |  ROUND(SUM(is_truth) * 1.0 / (SELECT count(*) FROM truth), 6)
-             |    AS recall
-             |FROM j)""".stripMargin
-        }.mkString("", "\nUNION ALL\n", "\nORDER BY level"),
+      Seq("tail" -> tailPlant, "half" -> halfPlant).map { case (level, p) =>
+        plantedEvalSql(p, s"'$level' AS level")
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY level"),
 
     "dedup_eval_bands" ->
       Seq(2, 4, 8).map { b =>
-        s"""SELECT * FROM (
-           |WITH corpus AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 10000000 AS doc_id,
-           |    substr(text, 1, greatest(len(text) // 2, 1)) AS text
-           |  FROM documents WHERE doc_id % 7 = 0
-           |),
-           |${minhashPairsCte(from = "corpus", bands = b)},
-           |truth AS (
-           |  SELECT doc_id AS doc_a, doc_id + 10000000 AS doc_b
-           |  FROM documents WHERE doc_id % 7 = 0
-           |),
-           |j AS (
-           |  SELECT p.doc_a, p.doc_b,
-           |    CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS is_truth
-           |  FROM pairs p
-           |  LEFT JOIN truth t ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b
-           |)
-           |SELECT CAST($b AS BIGINT) AS bands,
-           |  (SELECT count(*) FROM truth) AS n_truth,
-           |  CAST(SUM(is_truth) AS BIGINT) AS n_caught,
-           |  CAST(SUM(1 - is_truth) AS BIGINT) AS n_other,
-           |  ROUND(SUM(is_truth) * 1.0 / (SELECT count(*) FROM truth), 6)
-           |    AS recall
-           |FROM j)""".stripMargin
+        plantedEvalSql(halfPlant, s"CAST($b AS BIGINT) AS bands", bands = b)
       }.mkString("", "\nUNION ALL\n", "\nORDER BY bands"),
 
     "curate_semantic" ->
       s"""WITH RECURSIVE cos AS (
          |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-         |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-         |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-         |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-         |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-         |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS c
+         |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
          |  FROM embeddings a JOIN embeddings b
          |    ON a.label = b.label AND a.vec_id < b.vec_id
-         |), pe AS (
-         |  SELECT id_a AS a, id_b AS b FROM cos WHERE c >= 0.35
-         |  UNION SELECT id_b AS a, id_a AS b FROM cos WHERE c >= 0.35
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM pe)
-         |  UNION
-         |  SELECT r.src, pe.b FROM reach r JOIN pe ON r.dst = pe.a
-         |), lab AS (
-         |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
-         |), kept AS (
-         |  SELECT v.* FROM embeddings v LEFT JOIN lab l ON v.vec_id = l.ldoc
+         |), p AS (
+         |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
+         |), ${componentsCtes("p", "id_a", "id_b")}, kept AS (
+         |  SELECT v.* FROM embeddings v LEFT JOIN labels l ON v.vec_id = l.ldoc
          |  WHERE l.ldoc IS NULL OR l.cl = v.vec_id
          |), c0 AS (
          |  SELECT label, generate_subscripts(embedding, 1) AS dim,
@@ -4536,11 +4478,7 @@ object CBlock {
          |  FROM comps GROUP BY 1
          |), dist AS (
          |  SELECT vec_id, e.label,
-         |    CAST(ROUND(sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, len(embedding) + 1),
-         |        i -> (CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label)
-         |           * (CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label))),
-         |      (a, v) -> a + v)), 6) AS DECIMAL(16,6)) AS d
+         |    CAST(ROUND(sqrt($centroidSqSql), 6) AS DECIMAL(16,6)) AS d
          |  FROM kept e JOIN cen USING (label)
          |), ds AS (
          |  SELECT label, SUM(d) AS sum_d, count(*) AS n_d FROM dist GROUP BY 1
@@ -4740,7 +4678,7 @@ object CBlock {
          |ORDER BY np.t_match""".stripMargin,
 
     "sim_knn_graph" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT vec_id, embedding,
         |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 8), p ->
         |      CASE WHEN list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65), i ->
@@ -4761,12 +4699,7 @@ object CBlock {
         |  FROM b
         |), pr AS (
         |  SELECT p.vec_id AS ia, c.vec_id AS ib,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS cos
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM r p JOIN r c ON p.bucket = c.bucket
         |    AND c.rk > p.rk AND c.rk <= p.rk + 16
         |), cos AS (
@@ -4797,7 +4730,7 @@ object CBlock {
     // pair carries its rank gap, each arm keeps gap <= arm, per-(arm,
     // src) top-5 by cosine, then per-arm edge/mutual counts
     "sim_knn_window_sweep" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT vec_id, embedding,
         |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 8), p ->
         |      CASE WHEN list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65), i ->
@@ -4818,12 +4751,7 @@ object CBlock {
         |  FROM b
         |), pr AS (
         |  SELECT p.vec_id AS ia, c.vec_id AS ib, c.rk - p.rk AS gap,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS cos
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM r p JOIN r c ON p.bucket = c.bucket
         |    AND c.rk > p.rk AND c.rk <= p.rk + 16
         |), arms AS (
@@ -4851,56 +4779,28 @@ object CBlock {
 
     "dedup_clusters" ->
       s"""WITH RECURSIVE ${minhashPairsCte()},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |)
-         |SELECT src AS doc_id, min(dst) AS cluster,
-         |  src = min(dst) AS is_keeper
-         |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
+         |${componentsCtes()}
+         |SELECT ldoc AS doc_id, cl AS cluster, ldoc = cl AS is_keeper
+         |FROM labels ORDER BY doc_id""".stripMargin,
 
     "dedup_keeper_quality" ->
       s"""WITH RECURSIVE ${minhashPairsCte()},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS doc_id, min(dst) AS cluster FROM reach GROUP BY src
-         |), q AS (
+         |${componentsCtes()}, q AS (
          |  SELECT doc_id,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |      + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |      + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM (SELECT doc_id, $toksSql AS w FROM documents)
          |), j AS (
-         |  SELECT l.doc_id, l.cluster, q.quality,
-         |    row_number() OVER (PARTITION BY l.cluster
-         |      ORDER BY q.quality DESC NULLS LAST, l.doc_id) AS rk
-         |  FROM labels l JOIN q USING (doc_id)
+         |  SELECT l.ldoc AS doc_id, l.cl AS cluster, q.quality,
+         |    row_number() OVER (PARTITION BY l.cl
+         |      ORDER BY q.quality DESC NULLS LAST, l.ldoc) AS rk
+         |  FROM labels l JOIN q ON q.doc_id = l.ldoc
          |)
          |SELECT doc_id, cluster, quality, CAST(rk = 1 AS INT) AS is_keeper
          |FROM j ORDER BY doc_id""".stripMargin,
 
     "dedup_apply" ->
       s"""WITH RECURSIVE ${minhashPairsCte()},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
-         |)
+         |${componentsCtes()}
          |SELECT d.lang, count(*) AS n_docs,
          |  CAST(SUM(CASE WHEN l.ldoc IS NULL OR l.cl = d.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
          |  CAST(SUM(CASE WHEN l.ldoc IS NOT NULL AND l.cl <> d.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
@@ -4993,14 +4893,9 @@ object CBlock {
     "dedup_ngram_jaccard_merge" -> ngramJaccardOracleSql,
 
     "dedup_embedding" ->
-      """WITH cos AS (
+      s"""WITH cos AS (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS c
+        |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id < b.vec_id
         |)
@@ -5008,50 +4903,28 @@ object CBlock {
         |FROM cos WHERE c >= 0.35 ORDER BY id_a, id_b""".stripMargin,
 
     "dedup_embedding_clusters" ->
-      """WITH RECURSIVE cos AS (
+      s"""WITH RECURSIVE cos AS (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS c
+        |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id < b.vec_id
         |), p AS (
-        |  SELECT id_a AS a, id_b AS b FROM cos WHERE c >= 0.35
-        |), e AS (
-        |  SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p
-        |), reach(src, dst) AS (
-        |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-        |  UNION
-        |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-        |)
-        |SELECT src AS doc_id, min(dst) AS cluster, src = min(dst) AS is_keeper
-        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
+        |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
+        |), ${componentsCtes("p", "id_a", "id_b")}
+        |SELECT ldoc AS doc_id, cl AS cluster, ldoc = cl AS is_keeper
+        |FROM labels ORDER BY doc_id""".stripMargin,
 
     "dedup_medoid" ->
-      """WITH RECURSIVE cos AS (
+      s"""WITH RECURSIVE cos AS (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS c
+        |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
         |  FROM embeddings a JOIN embeddings b
         |    ON a.label = b.label AND a.vec_id < b.vec_id
         |), p AS (
-        |  SELECT id_a AS a, id_b AS b FROM cos WHERE c >= 0.35
-        |), e AS (
-        |  SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p
-        |), reach(src, dst) AS (
-        |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-        |  UNION
-        |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-        |), cl AS (
-        |  SELECT src AS doc_id, min(dst) AS cluster FROM reach GROUP BY src
-        |), q AS (
+        |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
+        |), ${componentsCtes("p", "id_a", "id_b")},
+        |cl AS (SELECT ldoc AS doc_id, cl AS cluster FROM labels),
+        |q AS (
         |  SELECT cl.cluster, em.vec_id, t.i AS dim,
         |    CAST(floor(CAST(em.embedding[t.i] AS DOUBLE) * 1000000) AS BIGINT) AS qv
         |  FROM embeddings em JOIN cl ON em.vec_id = cl.doc_id, range(1, 65) t(i)
@@ -5074,15 +4947,10 @@ object CBlock {
         |) WHERE rk = 1 ORDER BY cluster""".stripMargin,
 
     "sim_cosine_topk" ->
-      """WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
+      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
         |cos AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS cos
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM probes p JOIN embeddings c ON p.vec_id <> c.vec_id
         |)
         |SELECT probe_id, cand_id, ROUND(cos, 6) AS cosine
@@ -5091,15 +4959,12 @@ object CBlock {
         |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin,
 
     "sim_ivf" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cent_vec
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), d AS (
         |  SELECT e.vec_id, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cent_vec[i] AS DOUBLE))
-        |         * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cent_vec[i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cent_vec"), 64)} AS dist
         |  FROM embeddings e, cents c
         |)
         |SELECT vec_id, cent_id, ROUND(dist, 6) AS dist
@@ -5131,10 +4996,7 @@ object CBlock {
          |  ORDER BY vec_id LIMIT 8
          |), d1 AS (
          |  SELECT e.vec_id, e.embedding, c.cent_id,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-         |      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE))
-         |         * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE)))),
-         |      (a, x) -> a + x) AS dist
+         |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
          |  FROM semb e, cents0 c
          |), a1 AS (
          |  SELECT vec_id, embedding, cent_id FROM d1
@@ -5156,10 +5018,7 @@ object CBlock {
          |  ) GROUP BY cent_id
          |), d2 AS (
          |  SELECT e.vec_id, c.cent_id,
-         |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-         |      i -> (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])
-         |         * (CAST(e.embedding[i] AS DOUBLE) - c.cv[i]))),
-         |      (a, x) -> a + x) AS dist
+         |    ${l2sqSql(dbl("e.embedding"), "c.cv[i]", 64)} AS dist
          |  FROM embeddings e, c1 c
          |)
          |SELECT vec_id, cent_id, ROUND(dist, 6) AS dist
@@ -5177,15 +5036,12 @@ object CBlock {
           .replaceAll("\\bembeddings\\b", "pemb")),
 
     "sim_ivf_refined" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cent_vec
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), d AS (
         |  SELECT e.vec_id, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cent_vec[i] AS DOUBLE))
-        |         * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cent_vec[i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cent_vec"), 64)} AS dist
         |  FROM embeddings e, cents c
         |), a AS (
         |  SELECT vec_id, cent_id FROM d
@@ -5359,9 +5215,7 @@ object CBlock {
          |  ROUND(len(list_distinct(w)) * 1.0 / len(w), 6) AS uniq_ratio,
          |  ROUND(len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w), 6) AS stop_ratio,
          |  ROUND(list_sum(list_transform(w, t -> len(t))) * 1.0 / len(w), 6) AS avg_wlen,
-         |  ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |      + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |      + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |  $qualitySql AS quality
          |FROM t ORDER BY doc_id""".stripMargin,
 
     "text_tokens" ->
@@ -5394,20 +5248,9 @@ object CBlock {
 
     "curate_funnel" ->
       s"""WITH RECURSIVE ${minhashPairsCte("WHERE lang IN ('en','es','fr')")},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
-         |), q AS (
+         |${componentsCtes()}, q AS (
          |  SELECT doc_id,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |        + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |        + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM (SELECT doc_id, $toksSql AS w FROM documents
          |        WHERE lang IN ('en','es','fr'))
          |), g AS (
@@ -5445,20 +5288,9 @@ object CBlock {
 
     "curate_configured" ->
       s"""WITH RECURSIVE ${minhashPairsCte("WHERE lang IN ('en','es','fr')")},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
-         |), q AS (
+         |${componentsCtes()}, q AS (
          |  SELECT doc_id,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |        + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |        + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM (SELECT doc_id, $toksSql AS w FROM documents
          |        WHERE lang IN ('en','es','fr'))
          |), g AS (
@@ -5492,20 +5324,9 @@ object CBlock {
 
     "curate_split" ->
       s"""WITH RECURSIVE ${minhashPairsCte("WHERE lang IN ('en','es','fr')")},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
-         |), q AS (
+         |${componentsCtes()}, q AS (
          |  SELECT doc_id,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |        + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |        + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM (SELECT doc_id, $toksSql AS w FROM documents
          |        WHERE lang IN ('en','es','fr'))
          |), g AS (
@@ -5781,45 +5602,15 @@ object CBlock {
     // direct WEEKLY estimate over events — the Spark side rolls day
     // registers into weeks, so the hash match proves merge ≡ direct
     "sketch_hll_weekly" -> {
-      val rhoCase = (0 until 25)
-        .map(i => s"WHEN w >= ${1L << (24 - i)} THEN ${i + 1}")
-        .mkString(" ")
-      val termCase = (1 to 26)
-        .map(m => s"WHEN $m THEN ${1L << (26 - m)}")
-        .mkString(" ")
-      s"""WITH h AS (
-         |  SELECT event_type,
-         |    CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS week,
-         |    (${ph("'hll:' || CAST(user_id AS VARCHAR)")}
-         |      * ((1 * 2654435761) % 2147483647)
-         |      + (1 * 40503) % 2147483647) % 2147483647 AS h
-         |  FROM events
-         |), b AS (
-         |  SELECT event_type, week, h % 64 AS bucket, h // 64 AS w FROM h
-         |), r AS (
-         |  SELECT event_type, week, bucket,
-         |    max(CASE $rhoCase ELSE 26 END) AS m_j
-         |  FROM b GROUP BY 1, 2, 3
-         |), agg AS (
-         |  SELECT event_type, week, count(*) AS occupied,
-         |    SUM(CASE m_j $termCase END) AS s_present
-         |  FROM r GROUP BY 1, 2
-         |), est AS (
-         |  SELECT event_type, week, occupied,
-         |    CAST(0.709 AS DOUBLE) * 64 * 64 * 67108864.0
-         |      / (s_present + (64 - occupied) * 67108864) AS e_raw
-         |  FROM agg
-         |), ex AS (
-         |  SELECT event_type,
-         |    CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS week,
+      val week = "CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE)"
+      s"""WITH ${hllCtes("event_type, week", s"event_type, $week AS week")},
+         |ex AS (
+         |  SELECT event_type, $week AS week,
          |    count(DISTINCT user_id) AS exact
          |  FROM events GROUP BY 1, 2
          |)
          |SELECT est.event_type, est.week, ex.exact,
-         |  CAST(occupied AS BIGINT) AS occupied,
-         |  CASE WHEN e_raw <= 160 AND occupied < 64
-         |       THEN ROUND(64.0 * ln(64.0 / (64 - occupied)), 4)
-         |       ELSE ROUND(e_raw, 4) END AS hll_est
+         |  CAST(occupied AS BIGINT) AS occupied, hll_est
          |FROM est JOIN ex ON est.event_type = ex.event_type AND est.week = ex.week
          |ORDER BY est.event_type, est.week""".stripMargin
     },
@@ -5827,43 +5618,15 @@ object CBlock {
     "sketch_hll_sliding" -> hllSlidingOracleSql,
 
     "sketch_hll_daily" -> {
-      val rhoCase = (0 until 25)
-        .map(i => s"WHEN w >= ${1L << (24 - i)} THEN ${i + 1}")
-        .mkString(" ")
-      val termCase = (1 to 26)
-        .map(m => s"WHEN $m THEN ${1L << (26 - m)}")
-        .mkString(" ")
-      s"""WITH h AS (
-         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-         |    (${ph("'hll:' || CAST(user_id AS VARCHAR)")}
-         |      * ((1 * 2654435761) % 2147483647)
-         |      + (1 * 40503) % 2147483647) % 2147483647 AS h
-         |  FROM events
-         |), b AS (
-         |  SELECT event_type, day, h % 64 AS bucket, h // 64 AS w FROM h
-         |), r AS (
-         |  SELECT event_type, day, bucket,
-         |    max(CASE $rhoCase ELSE 26 END) AS m_j
-         |  FROM b GROUP BY 1, 2, 3
-         |), agg AS (
-         |  SELECT event_type, day, count(*) AS occupied,
-         |    SUM(CASE m_j $termCase END) AS s_present
-         |  FROM r GROUP BY 1, 2
-         |), est AS (
-         |  SELECT event_type, day, occupied,
-         |    CAST(0.709 AS DOUBLE) * 64 * 64 * 67108864.0
-         |      / (s_present + (64 - occupied) * 67108864) AS e_raw
-         |  FROM agg
-         |), ex AS (
-         |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      val day = "CAST(CAST(ts AS TIMESTAMP) AS DATE)"
+      s"""WITH ${hllCtes("event_type, day", s"event_type, $day AS day")},
+         |ex AS (
+         |  SELECT event_type, $day AS day,
          |    count(DISTINCT user_id) AS exact
          |  FROM events GROUP BY 1, 2
          |)
          |SELECT est.event_type, est.day, ex.exact,
-         |  CAST(occupied AS BIGINT) AS occupied,
-         |  CASE WHEN e_raw <= 160 AND occupied < 64
-         |       THEN ROUND(64.0 * ln(64.0 / (64 - occupied)), 4)
-         |       ELSE ROUND(e_raw, 4) END AS hll_est
+         |  CAST(occupied AS BIGINT) AS occupied, hll_est
          |FROM est JOIN ex ON est.event_type = ex.event_type AND est.day = ex.day
          |ORDER BY est.event_type, est.day""".stripMargin
     },
@@ -5899,40 +5662,10 @@ object CBlock {
         |  CAST(s2 // n - (s1 // n) * (s1 // n) AS BIGINT) AS var_milli2
         |FROM a ORDER BY event_type""".stripMargin,
 
-    "sketch_hll_merge" -> {
-      val rhoCase = (0 until 25)
-        .map(i => s"WHEN w >= ${1L << (24 - i)} THEN ${i + 1}")
-        .mkString(" ")
-      val termCase = (1 to 26)
-        .map(m => s"WHEN $m THEN ${1L << (26 - m)}")
-        .mkString(" ")
-      s"""WITH h AS (
-         |  SELECT event_type,
-         |    (${ph("'hll:' || CAST(user_id AS VARCHAR)")}
-         |      * ((1 * 2654435761) % 2147483647)
-         |      + (1 * 40503) % 2147483647) % 2147483647 AS h
-         |  FROM events
-         |), b AS (
-         |  SELECT event_type, h % 64 AS bucket, h // 64 AS w FROM h
-         |), r AS (
-         |  SELECT event_type, bucket,
-         |    max(CASE $rhoCase ELSE 26 END) AS m_j
-         |  FROM b GROUP BY 1, 2
-         |), agg AS (
-         |  SELECT event_type, count(*) AS occupied,
-         |    SUM(CASE m_j $termCase END) AS s_present
-         |  FROM r GROUP BY 1
-         |)
-         |SELECT event_type, CAST(occupied AS BIGINT) AS occupied,
-         |  CASE WHEN CAST(0.709 AS DOUBLE) * 64 * 64 * 67108864.0
-         |         / (s_present + (64 - occupied) * 67108864) <= 160
-         |       AND occupied < 64
-         |       THEN ROUND(64.0 * ln(64.0 / (64 - occupied)), 4)
-         |       ELSE ROUND(CAST(0.709 AS DOUBLE) * 64 * 64 * 67108864.0
-         |         / (s_present + (64 - occupied) * 67108864), 4) END AS hll_est
-         |FROM agg
-         |ORDER BY event_type""".stripMargin
-    },
+    "sketch_hll_merge" ->
+      s"""WITH ${hllCtes("event_type")}
+         |SELECT event_type, CAST(occupied AS BIGINT) AS occupied, hll_est
+         |FROM est ORDER BY event_type""".stripMargin,
 
     "sketch_kmv" -> kmvOracleSql,
 
@@ -6429,9 +6162,7 @@ object CBlock {
       s"""WITH t AS (SELECT doc_id, $toksSql AS w FROM documents),
          |q AS (
          |  SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |      + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |      + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM t
          |), tot AS (
          |  SELECT count(*) AS all_docs, CAST(SUM(n_tokens) AS BIGINT) AS all_toks
@@ -6719,16 +6450,13 @@ object CBlock {
          |ORDER BY span_len""".stripMargin,
 
     "sim_pq" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cv
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |d AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9),
-        |      i -> (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE))
-        |         * (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
         |  FROM embeddings e, ss, cents c
         |)
         |SELECT vec_id, CAST(s AS BIGINT) AS subspace, cent_id AS code,
@@ -6738,16 +6466,13 @@ object CBlock {
         |ORDER BY vec_id, subspace""".stripMargin,
 
     "sim_pq_stream" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cv
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |d AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9),
-        |      i -> (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE))
-        |         * (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
         |  FROM embeddings e, ss, cents c
         |)
         |SELECT vec_id, CAST(s AS BIGINT) AS subspace, cent_id AS code
@@ -6756,7 +6481,7 @@ object CBlock {
         |ORDER BY vec_id, subspace""".stripMargin,
 
     "sim_pq_books" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cv,
         |    CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ord
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
@@ -6764,10 +6489,7 @@ object CBlock {
         |pp AS (SELECT unnest(range(0, 8)) AS pos),
         |d AS (
         |  SELECT e.vec_id, ss.s, c.ord,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9),
-        |      i -> (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE))
-        |         * (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
         |  FROM embeddings e, ss, cents c
         |), a AS (
         |  SELECT vec_id, s, ord FROM d
@@ -6790,16 +6512,13 @@ object CBlock {
         |ORDER BY subspace, code, pos""".stripMargin,
 
     "sim_pq_topk" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cv
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |subdist AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9),
-        |      i -> (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE))
-        |         * (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
         |  FROM embeddings e, ss, cents c
         |), codes AS (
         |  SELECT vec_id, s, cent_id AS code FROM subdist
@@ -6818,15 +6537,12 @@ object CBlock {
         |ORDER BY probe_id, adc_dist, cand_id""".stripMargin,
 
     "sim_pq_ivf" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cv
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), fulld AS (
         |  SELECT e.vec_id, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE))
-        |         * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
         |  FROM embeddings e, cents c
         |), assigned AS (
         |  SELECT vec_id, cent_id FROM fulld
@@ -6837,10 +6553,7 @@ object CBlock {
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |subdist AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9),
-        |      i -> (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE))
-        |         * (CAST(e.embedding[ss.s*8+i] AS DOUBLE) - CAST(c.cv[ss.s*8+i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
         |  FROM embeddings e, ss, cents c
         |), codes AS (
         |  SELECT vec_id, s, cent_id AS code FROM subdist
@@ -6863,15 +6576,12 @@ object CBlock {
         |ORDER BY probe_id, adc_dist, cand_id""".stripMargin,
 
     "sim_pq_residual" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cent_id, embedding AS cv
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), fulld AS (
         |  SELECT e.vec_id, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE))
-        |         * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
         |  FROM embeddings e, cents c
         |), assigned AS (
         |  SELECT vec_id, cent_id FROM fulld
@@ -6890,10 +6600,7 @@ object CBlock {
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |rsub AS (
         |  SELECT res.vec_id, ss.s, c.cent_id AS cb,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9),
-        |      i -> (res.r[CAST(ss.s*8+i AS INT)] - CAST(c.cv[CAST(ss.s*8+i AS INT)] AS DOUBLE))
-        |         * (res.r[CAST(ss.s*8+i AS INT)] - CAST(c.cv[CAST(ss.s*8+i AS INT)] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql("res.r[CAST(ss.s*8+i AS INT)]", "CAST(c.cv[CAST(ss.s*8+i AS INT)] AS DOUBLE)", 8)} AS dist
         |  FROM res, ss, cents c
         |), codes AS (
         |  SELECT vec_id, s, cb AS code FROM rsub
@@ -6908,10 +6615,7 @@ object CBlock {
         |  JOIN cents c ON c.cent_id = pl.cent_id
         |), pdt AS (
         |  SELECT p.probe_id, p.cent_id, ss.s, c.cent_id AS cb,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9),
-        |      i -> (p.r[CAST(ss.s*8+i AS INT)] - CAST(c.cv[CAST(ss.s*8+i AS INT)] AS DOUBLE))
-        |         * (p.r[CAST(ss.s*8+i AS INT)] - CAST(c.cv[CAST(ss.s*8+i AS INT)] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql("p.r[CAST(ss.s*8+i AS INT)]", "CAST(c.cv[CAST(ss.s*8+i AS INT)] AS DOUBLE)", 8)} AS dist
         |  FROM pres p, ss, cents c
         |), adc AS (
         |  SELECT t.probe_id, v.vec_id AS cand_id,
@@ -6929,15 +6633,12 @@ object CBlock {
         |ORDER BY probe_id, adc_dist, cand_id""".stripMargin,
 
     "sim_ivf_trained" ->
-      """WITH cents0 AS (
+      s"""WITH cents0 AS (
         |  SELECT vec_id AS cent_id, embedding AS cv
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
         |), d1 AS (
         |  SELECT e.vec_id, e.embedding, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE))
-        |         * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.cv[i] AS DOUBLE)))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
         |  FROM embeddings e, cents0 c
         |), a1 AS (
         |  SELECT vec_id, embedding, cent_id FROM d1
@@ -6959,10 +6660,7 @@ object CBlock {
         |  ) GROUP BY cent_id
         |), d2 AS (
         |  SELECT e.vec_id, e.embedding, c.cent_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])
-        |         * (CAST(e.embedding[i] AS DOUBLE) - c.cv[i]))),
-        |      (a, x) -> a + x) AS dist
+        |    ${l2sqSql(dbl("e.embedding"), "c.cv[i]", 64)} AS dist
         |  FROM embeddings e, c1 c
         |), a2 AS (
         |  SELECT vec_id, embedding, cent_id FROM d2
@@ -7033,20 +6731,9 @@ object CBlock {
 
     "train_export" ->
       s"""WITH RECURSIVE ${minhashPairsCte()},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
-         |), q AS (
+         |${componentsCtes()}, q AS (
          |  SELECT doc_id,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |        + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |        + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM (SELECT doc_id, $toksSql AS w FROM documents)
          |), kept AS (
          |  SELECT q.doc_id FROM q LEFT JOIN labels l ON q.doc_id = l.ldoc
@@ -7262,9 +6949,7 @@ object CBlock {
       s"""WITH t AS (SELECT doc_id, $toksSql AS w FROM documents),
          |q AS (
          |  SELECT doc_id,
-         |    CAST(round(ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |      + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |      + 0.2 * least(len(w) / 100.0, 1.0), 6) * 1000000) AS BIGINT)
+         |    CAST(round($qualitySql * 1000000) AS BIGINT)
          |      AS q_micro,
          |    CAST(len(w) AS BIGINT) AS n_tokens
          |  FROM t WHERE len(w) > 0
@@ -7454,9 +7139,7 @@ object CBlock {
       s"""WITH t AS (SELECT doc_id, $toksSql AS w FROM documents),
          |q AS (
          |  SELECT doc_id,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |        + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |        + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM t WHERE len(w) > 0
          |)
          |SELECT doc_id, quality,
@@ -7470,7 +7153,7 @@ object CBlock {
     "sketch_heavy_hitters_stream" -> heavyHittersOracleSql,
 
     "emb_centroid" ->
-      """WITH c0 AS (
+      s"""WITH c0 AS (
         |  SELECT label, generate_subscripts(embedding, 1) AS dim,
         |    unnest(embedding) AS x
         |  FROM embeddings
@@ -7484,11 +7167,7 @@ object CBlock {
         |  FROM comps GROUP BY 1
         |)
         |SELECT vec_id, e.label, n_label,
-        |  ROUND(sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(range(1, len(embedding) + 1),
-        |      i -> (CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label)
-        |         * (CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label))),
-        |    (a, v) -> a + v)), 6) AS centroid_dist
+        |  ROUND(sqrt($centroidSqSql), 6) AS centroid_dist
         |FROM embeddings e JOIN cen USING (label)
         |ORDER BY vec_id""".stripMargin,
 
@@ -7650,9 +7329,7 @@ object CBlock {
       s"""q AS (
          |  SELECT doc_id, source, text FROM (
          |    SELECT doc_id, source, text,
-         |      ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |          + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |          + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |      $qualitySql AS quality
          |    FROM (SELECT doc_id, source, text, $toksSql AS w FROM documents)
          |  ) WHERE quality >= 0.62
          |),
@@ -7732,13 +7409,10 @@ object CBlock {
          |FROM p ORDER BY vec_id""".stripMargin,
 
     "sim_l2_topk" ->
-      """WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
+      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
         |ds AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> (CAST(p.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |         * (CAST(p.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))),
-        |      (a,x) -> a + x) AS d
+        |    ${l2sqSql(dbl("p.embedding"), dbl("c.embedding"), 64)} AS d
         |  FROM probes p JOIN embeddings c ON p.vec_id <> c.vec_id
         |)
         |SELECT probe_id, cand_id, ROUND(d, 6) AS l2sq
@@ -7747,11 +7421,10 @@ object CBlock {
         |ORDER BY probe_id, l2sq, cand_id""".stripMargin,
 
     "sim_mips" ->
-      """WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
+      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
         |ips AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x) AS ip
+        |    ${dotSql("p.embedding", "c.embedding", 64)} AS ip
         |  FROM probes p JOIN embeddings c ON p.vec_id <> c.vec_id
         |)
         |SELECT probe_id, cand_id, ROUND(ip, 6) AS dot
@@ -7840,9 +7513,7 @@ object CBlock {
          |  SELECT source, $toksSql AS w FROM documents
          |), q AS (
          |  SELECT source, CAST(len(w) AS BIGINT) AS n_tok,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |      + 0.3 * (1.0 - len(list_filter(w, x -> list_contains(['the','a'], x))) * 1.0 / len(w))
-         |      + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM t WHERE len(w) > 0
          |), sc AS (
          |  SELECT source, count(*) AS n_scored,
@@ -8305,7 +7976,7 @@ object CBlock {
          |FROM g GROUP BY doc_id, n_lines ORDER BY doc_id""".stripMargin,
 
     "sim_project_rerank" ->
-      """WITH pr AS (
+      s"""WITH pr AS (
         |  SELECT vec_id AS id,
         |    list_transform(range(0, 16), j ->
         |      round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
@@ -8320,10 +7991,7 @@ object CBlock {
         |  FROM embeddings
         |), coarse AS (
         |  SELECT p.id AS probe_id, c.id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |      list_transform(range(1, 17), i ->
-        |        (p.proj[i] - c.proj[i]) * (p.proj[i] - c.proj[i]))),
-        |      (a, v) -> a + v) AS pdist
+        |    ${l2sqSql("p.proj[i]", "c.proj[i]", 16)} AS pdist
         |  FROM pr p JOIN pr c ON p.id < 10 AND c.id <> p.id
         |), short AS (
         |  SELECT probe_id, cand_id FROM coarse
@@ -8331,12 +7999,7 @@ object CBlock {
         |    ORDER BY pdist, cand_id) <= 100
         |), cs AS (
         |  SELECT s.probe_id, s.cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS cos
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM short s JOIN embeddings p ON p.vec_id = s.probe_id
         |               JOIN embeddings c ON c.vec_id = s.cand_id
         |)
@@ -8364,16 +8027,7 @@ object CBlock {
 
     "dedup_cluster_stats" ->
       s"""WITH RECURSIVE ${minhashPairsCte()},
-         |e AS (
-         |  SELECT doc_a AS a, doc_b AS b FROM pairs
-         |  UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-         |), reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
-         |), labels AS (
-         |  SELECT src AS doc_id, min(dst) AS cl FROM reach GROUP BY src
-         |), sizes AS (
+         |${componentsCtes()}, sizes AS (
          |  SELECT cl, count(*) AS sz FROM labels GROUP BY cl
          |)
          |SELECT sz AS cluster_size, count(*) AS n_clusters,
@@ -8381,16 +8035,11 @@ object CBlock {
          |FROM sizes GROUP BY 1 ORDER BY cluster_size""".stripMargin,
 
     "sim_radius" ->
-      """WITH probes AS (
+      s"""WITH probes AS (
         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10
         |), cos AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS c
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS c
         |  FROM probes p JOIN embeddings c ON p.vec_id <> c.vec_id
         |)
         |SELECT probe_id, cand_id, ROUND(c, 6) AS cosine
@@ -8469,16 +8118,11 @@ object CBlock {
          |ORDER BY doc_id, rank""".stripMargin,
 
     "sim_hard_negatives" ->
-      """WITH probes AS (
+      s"""WITH probes AS (
         |  SELECT vec_id, embedding, label FROM embeddings WHERE vec_id < 20
         |), cos AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS neg_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |      i -> CAST(p.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(p.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE))), (a,x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65),
-        |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (a,x) -> a + x))) AS cos
+        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM probes p JOIN embeddings c ON p.label <> c.label
         |)
         |SELECT probe_id, neg_id, ROUND(cos, 6) AS cosine
@@ -8565,9 +8209,7 @@ object CBlock {
       s"""WITH t AS (SELECT doc_id, $toksSql AS w FROM documents),
          |q AS (
          |  SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-         |    ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))
-         |        + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))
-         |        + 0.2 * least(len(w) / 100.0, 1.0), 6) AS quality
+         |    $qualitySql AS quality
          |  FROM t WHERE len(w) > 0
          |), c AS (
          |  SELECT doc_id, quality, n_tokens,
