@@ -25,7 +25,8 @@ DEFAULT = ["src/main/scala/graft/queries/CBlock.scala",
 
 # family -> (line regex, name of the builder that may hold the copy)
 FAMILIES = {
-    "planted corpus (id + 10000000)": (r"10000000", "Plant"),
+    "planted copy (doc_id + <8-digit literal offset>)":
+        (r'col\("doc_id"\) \+ \d{8,}L|doc_id \+ \d{8,}\b', "Plant"),
     "components chain (reach(src, dst))": (r"reach\(src, dst\)", "componentsCtes"),
     "dot/norm fold (list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1,":
         (r"list_prepend\(CAST\(0\.0 AS DOUBLE\), list_transform\(range\(1,", "foldSql"),
@@ -49,12 +50,13 @@ def norm(line):
 
 
 def enclosing_defs(lines):
-    """Name of the innermost `def`/`val`/row key opening at or above each line."""
+    """Name of the object member (def, val, case class) or query row
+    (`"name" ->`) that each line belongs to."""
     names, cur = [], ""
     for l in lines:
-        m = re.match(r"\s*(?:private\s+)?(?:lazy\s+)?(?:def|val|case class)\s+(\w+)", l) \
-            or re.match(r'\s*"(\w+)" ->', l)
-        if m and not l.startswith(" " * 8):
+        m = re.match(r"  (?:private )?(?:lazy )?(?:def|val|case class) (\w+)", l) \
+            or re.match(r'    "(\w+)" ->', l)
+        if m:
             cur = m.group(1)
         names.append(cur)
     return names

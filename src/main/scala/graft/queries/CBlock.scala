@@ -3986,14 +3986,7 @@ object CBlock {
 
   /** sim_probe_sweep's oracle body (shared with the planted twin). */
   private val probeSweepOracle: String =
-    s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cent_vec
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), d AS (
-        |  SELECT e.vec_id, c.cent_id,
-        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cent_vec"), 64)} AS dist
-        |  FROM embeddings e, cents c
-        |), assign AS (
+    s"""WITH $ivfDistCtes, assign AS (
         |  SELECT vec_id, cent_id FROM d
         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
         |), prnk AS (
@@ -4328,12 +4321,71 @@ object CBlock {
 
   /** Squared distance of `embedding` to its label's centroid, the
     * per-dim sums `sxs` over `n_label` members. */
-  private val centroidSqSql: String = foldSql("range(1, len(embedding) + 1)",
+  private def centroidSqSql: String = foldSql("range(1, len(embedding) + 1)",
     "(CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label) * (CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label)")
+
+  /** The 8-plane random-hyperplane LSH bucket of `embedding`: bit p is
+    * set when the dot with plane p (hash-derived coefficients in
+    * [-1, 1]) is positive. */
+  private def lshBucketSql: String =
+    "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 8), p ->\n" +
+      "  CASE WHEN " + foldSql(dims(64), "CAST(embedding[i] AS DOUBLE) *" +
+        " (CAST((i * (((p+1) * 2654435761) % 2147483647)" +
+        " + ((p+1) * 40503) % 2147483647) % 2147483647 AS DOUBLE) / 2147483647 * 2 - 1)") +
+      " > 0\n  THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)), (a, x) -> a + x)"
+
+  /** `b(vec_id, embedding, bucket, prj)`, each vector's LSH bucket and
+    * its integer projection on a ninth plane, and `r`, the rank `rk` of
+    * `prj` within the bucket: the candidate windows of the kNN graph. */
+  private def lshRankCtes: String =
+    s"""b AS (
+       |  SELECT vec_id, embedding, $lshBucketSql AS bucket,
+       |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, 65), i ->
+       |      CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) *
+       |      (((i * (((8+1) * 2654435761) % 2147483647)
+       |         + ((8+1) * 40503) % 2147483647) % 2147483647) * 2 - 2147483647)
+       |    )), (a, x) -> a + x) AS prj
+       |  FROM embeddings
+       |), r AS (
+       |  SELECT vec_id, embedding, bucket,
+       |    row_number() OVER (PARTITION BY bucket ORDER BY prj, vec_id) AS rk
+       |  FROM b
+       |)""".stripMargin
+
+  /** `cents(cent_id, cent_vec)`, the 8 IVF centroids (every 32nd of the
+    * first 256 vectors), and `d(vec_id, cent_id, dist)`, each vector's
+    * squared L2 distance to each centroid. */
+  private def ivfDistCtes: String =
+    s"""cents AS (
+       |  SELECT vec_id AS cent_id, embedding AS cent_vec
+       |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
+       |), d AS (
+       |  SELECT e.vec_id, c.cent_id,
+       |    ${l2sqSql(dbl("e.embedding"), dbl("c.cent_vec"), 64)} AS dist
+       |  FROM embeddings e, cents c
+       |)""".stripMargin
+
+  /** Semantic near-dup components: `cos(id_a, id_b, c)`, the cosine of
+    * every same-label pair of embeddings, `p`, the pairs at c >= 0.35,
+    * and [[componentsCtes]] over `p`. Needs `WITH RECURSIVE`. */
+  private def semanticComponentsCtes: String =
+    s"""cos AS (
+       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
+       |  FROM embeddings a JOIN embeddings b
+       |    ON a.label = b.label AND a.vec_id < b.vec_id
+       |), p AS (
+       |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
+       |), ${componentsCtes("p", "id_a", "id_b")}""".stripMargin
+
+  /** Squared L2 distance of subvector `ss.s` (8 dims) of `e.embedding`
+    * to that of centroid `c.cv`: the PQ subspace distance. */
+  private def pqSubDistSql: String = l2sqSql(
+    "CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)
 
   /** TextAnalysis.quality's score of a token list `w` with the
     * stopwords 'the' and 'a', rounded to 6 places. */
-  private val qualitySql: String =
+  private def qualitySql: String =
     "ROUND(0.5 * (len(list_distinct(w)) * 1.0 / len(w))" +
       " + 0.3 * (1.0 - len(list_filter(w, t -> list_contains(['the','a'], t))) * 1.0 / len(w))" +
       " + 0.2 * least(len(w) / 100.0, 1.0), 6)"
@@ -4454,14 +4506,7 @@ object CBlock {
       }.mkString("", "\nUNION ALL\n", "\nORDER BY bands"),
 
     "curate_semantic" ->
-      s"""WITH RECURSIVE cos AS (
-         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.label = b.label AND a.vec_id < b.vec_id
-         |), p AS (
-         |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
-         |), ${componentsCtes("p", "id_a", "id_b")}, kept AS (
+      s"""WITH RECURSIVE $semanticComponentsCtes, kept AS (
          |  SELECT v.* FROM embeddings v LEFT JOIN labels l ON v.vec_id = l.ldoc
          |  WHERE l.ldoc IS NULL OR l.cl = v.vec_id
          |), c0 AS (
@@ -4678,26 +4723,7 @@ object CBlock {
          |ORDER BY np.t_match""".stripMargin,
 
     "sim_knn_graph" ->
-      s"""WITH b AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 8), p ->
-        |      CASE WHEN list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65), i ->
-        |          CAST(embedding[i] AS DOUBLE) *
-        |          (CAST((i * (((p+1) * 2654435761) % 2147483647)
-        |             + ((p+1) * 40503) % 2147483647) % 2147483647 AS DOUBLE) / 2147483647 * 2 - 1)
-        |        )), (a, x) -> a + x) > 0
-        |      THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)), (a, x) -> a + x) AS bucket,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, 65), i ->
-        |      CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) *
-        |      (((i * (((8+1) * 2654435761) % 2147483647)
-        |         + ((8+1) * 40503) % 2147483647) % 2147483647) * 2 - 2147483647)
-        |    )), (a, x) -> a + x) AS prj
-        |  FROM embeddings
-        |), r AS (
-        |  SELECT vec_id, embedding, bucket,
-        |    row_number() OVER (PARTITION BY bucket ORDER BY prj, vec_id) AS rk
-        |  FROM b
-        |), pr AS (
+      s"""WITH $lshRankCtes, pr AS (
         |  SELECT p.vec_id AS ia, c.vec_id AS ib,
         |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM r p JOIN r c ON p.bucket = c.bucket
@@ -4730,26 +4756,7 @@ object CBlock {
     // pair carries its rank gap, each arm keeps gap <= arm, per-(arm,
     // src) top-5 by cosine, then per-arm edge/mutual counts
     "sim_knn_window_sweep" ->
-      s"""WITH b AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 8), p ->
-        |      CASE WHEN list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65), i ->
-        |          CAST(embedding[i] AS DOUBLE) *
-        |          (CAST((i * (((p+1) * 2654435761) % 2147483647)
-        |             + ((p+1) * 40503) % 2147483647) % 2147483647 AS DOUBLE) / 2147483647 * 2 - 1)
-        |        )), (a, x) -> a + x) > 0
-        |      THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)), (a, x) -> a + x) AS bucket,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, 65), i ->
-        |      CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) *
-        |      (((i * (((8+1) * 2654435761) % 2147483647)
-        |         + ((8+1) * 40503) % 2147483647) % 2147483647) * 2 - 2147483647)
-        |    )), (a, x) -> a + x) AS prj
-        |  FROM embeddings
-        |), r AS (
-        |  SELECT vec_id, embedding, bucket,
-        |    row_number() OVER (PARTITION BY bucket ORDER BY prj, vec_id) AS rk
-        |  FROM b
-        |), pr AS (
+      s"""WITH $lshRankCtes, pr AS (
         |  SELECT p.vec_id AS ia, c.vec_id AS ib, c.rk - p.rk AS gap,
         |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
         |  FROM r p JOIN r c ON p.bucket = c.bucket
@@ -4903,26 +4910,12 @@ object CBlock {
         |FROM cos WHERE c >= 0.35 ORDER BY id_a, id_b""".stripMargin,
 
     "dedup_embedding_clusters" ->
-      s"""WITH RECURSIVE cos AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |), p AS (
-        |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
-        |), ${componentsCtes("p", "id_a", "id_b")}
+      s"""WITH RECURSIVE $semanticComponentsCtes
         |SELECT ldoc AS doc_id, cl AS cluster, ldoc = cl AS is_keeper
         |FROM labels ORDER BY doc_id""".stripMargin,
 
     "dedup_medoid" ->
-      s"""WITH RECURSIVE cos AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    ${cosSql("a.embedding", "b.embedding", 64)} AS c
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |), p AS (
-        |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
-        |), ${componentsCtes("p", "id_a", "id_b")},
+      s"""WITH RECURSIVE $semanticComponentsCtes,
         |cl AS (SELECT ldoc AS doc_id, cl AS cluster FROM labels),
         |q AS (
         |  SELECT cl.cluster, em.vec_id, t.i AS dim,
@@ -4959,14 +4952,7 @@ object CBlock {
         |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin,
 
     "sim_ivf" ->
-      s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cent_vec
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), d AS (
-        |  SELECT e.vec_id, c.cent_id,
-        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cent_vec"), 64)} AS dist
-        |  FROM embeddings e, cents c
-        |)
+      s"""WITH $ivfDistCtes
         |SELECT vec_id, cent_id, ROUND(dist, 6) AS dist
         |FROM d
         |QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
@@ -5036,14 +5022,7 @@ object CBlock {
           .replaceAll("\\bembeddings\\b", "pemb")),
 
     "sim_ivf_refined" ->
-      s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cent_vec
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), d AS (
-        |  SELECT e.vec_id, c.cent_id,
-        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cent_vec"), 64)} AS dist
-        |  FROM embeddings e, cents c
-        |), a AS (
+      s"""WITH $ivfDistCtes, a AS (
         |  SELECT vec_id, cent_id FROM d
         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
         |), x AS (
@@ -5059,15 +5038,8 @@ object CBlock {
         |FROM x GROUP BY 1, 2 ORDER BY cent_id, pos""".stripMargin,
 
     "sim_ann_lsh" ->
-      """WITH b AS (
-        |  SELECT vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 8), p ->
-        |      CASE WHEN list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 65), i ->
-        |          CAST(embedding[i] AS DOUBLE) *
-        |          (CAST((i * (((p+1) * 2654435761) % 2147483647)
-        |             + ((p+1) * 40503) % 2147483647) % 2147483647 AS DOUBLE) / 2147483647 * 2 - 1)
-        |        )), (a, x) -> a + x) > 0
-        |      THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)), (a, x) -> a + x) AS bucket
+      s"""WITH b AS (
+        |  SELECT vec_id, $lshBucketSql AS bucket
         |  FROM embeddings
         |)
         |SELECT bucket, count(*) AS n_vectors, min(vec_id) AS min_vec
@@ -6456,7 +6428,7 @@ object CBlock {
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |d AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
+        |    $pqSubDistSql AS dist
         |  FROM embeddings e, ss, cents c
         |)
         |SELECT vec_id, CAST(s AS BIGINT) AS subspace, cent_id AS code,
@@ -6472,7 +6444,7 @@ object CBlock {
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |d AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
+        |    $pqSubDistSql AS dist
         |  FROM embeddings e, ss, cents c
         |)
         |SELECT vec_id, CAST(s AS BIGINT) AS subspace, cent_id AS code
@@ -6489,7 +6461,7 @@ object CBlock {
         |pp AS (SELECT unnest(range(0, 8)) AS pos),
         |d AS (
         |  SELECT e.vec_id, ss.s, c.ord,
-        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
+        |    $pqSubDistSql AS dist
         |  FROM embeddings e, ss, cents c
         |), a AS (
         |  SELECT vec_id, s, ord FROM d
@@ -6518,7 +6490,7 @@ object CBlock {
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |subdist AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
+        |    $pqSubDistSql AS dist
         |  FROM embeddings e, ss, cents c
         |), codes AS (
         |  SELECT vec_id, s, cent_id AS code FROM subdist
@@ -6553,7 +6525,7 @@ object CBlock {
         |), ss AS (SELECT unnest(range(0, 8)) AS s),
         |subdist AS (
         |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    ${l2sqSql("CAST(e.embedding[ss.s*8+i] AS DOUBLE)", "CAST(c.cv[ss.s*8+i] AS DOUBLE)", 8)} AS dist
+        |    $pqSubDistSql AS dist
         |  FROM embeddings e, ss, cents c
         |), codes AS (
         |  SELECT vec_id, s, cent_id AS code FROM subdist
