@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.Portable
 import graft.plans.HashOps
-import graft.plans.TopKAggregator.topK
+import graft.plans.TopKAggregator.{topK, topKIds}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -1131,7 +1131,7 @@ object Similarity {
         (-aggregate(
           zip_with(col("p_proj"), col("proj"), (a, b) => (a - b) * (a - b)),
           lit(0.0), (a, v) => a + v)).as("score"))
-    val short = topK(coarse, shortlist)
+    val short = topKIds(coarse, shortlist)
       .select(col("key").as("probe_id"), col("id").as("cand_id"))
     val cand = emb.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
     val pvec = emb.filter(probePred)

@@ -25,14 +25,20 @@ final case class SyncConfig(
     /** regex topic subscription (args.rs --topic-regex, default ".*") */
     topicRegex: Option[String] = None,
     /** topics whose raw messages are flagged for debug output
-      * (args.rs --debug-topics, comma-separated) */
+      * (args.rs --debug-topics, comma-separated). Read only by the batch
+      * function [[SyncPipeline.debugTopicFlag]], which is not a stage of
+      * `SyncPipeline.transform`: the streaming sync ignores it and its
+      * store keeps no debug flag. */
     debugTopics: Seq[String] = Nil,
     /** inject a trace key into every message (args.rs --inject-key) */
     injectKey: Boolean = false,
     /** injected key name (args.rs --injected-key-name) */
     injectedKeyName: String = "__INJECTED_DATA__",
     /** namespaces whose injected payloads are logged to the per-namespace
-      * debug logfile (args.rs --injected-namespaces, comma-separated) */
+      * debug logfile (args.rs --injected-namespaces, comma-separated).
+      * Read only by the `injected_logged` column of
+      * [[SyncPipeline.inject]]; the streaming sync's store does not keep
+      * that column, so a streaming run stores nothing of this flag. */
     injectedNamespaces: Seq[String] = Nil,
     /** sink flush cadence in ms (args.rs:117-119 --flush-interval,
       * default 5000): the processing-time trigger of the streaming sync

@@ -84,9 +84,9 @@ case class GroupTopKExec(groupExprs: Seq[Expression], order: Seq[SortOrder],
 }
 
 /** User API: `GroupTopK.topK(df, Seq($"g"), 3, $"score".desc, $"id")` ≡
-  * the window row_number filter, executed as bounded heaps. Registered via
-  * GraftExtensions; also self-registers on the session's experimental
-  * strategies so it works on sessions built without the extension conf. */
+  * the window row_number filter, executed as bounded heaps. Registers
+  * `GroupTopKStrategy` on the session's experimental strategies itself,
+  * so any session can call it. */
 object GroupTopK {
   def topK(df: DataFrame, groupCols: Seq[Column], k: Int,
       orderCols: Column*): DataFrame = {

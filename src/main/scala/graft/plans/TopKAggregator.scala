@@ -70,9 +70,26 @@ object TopKAggregator {
   def topK(scored: DataFrame, k: Int): DataFrame = {
     val s = scored.sparkSession
     import s.implicits._
-    scored.as[Scored].groupByKey(_.key)
-      .agg(new TopKAggregator(k).toColumn.name("topk"))
+    heaps(scored, k)
       .flatMap { case (key, tk) => tk.map { case (id, sc) => (key, id, sc) } }
       .toDF("key", "id", "score")
+  }
+
+  /** [[topK]] without the score column: (key, id), for a caller that
+    * ranks by the score and then drops it, so the rows after the heap
+    * do not carry it. */
+  def topKIds(scored: DataFrame, k: Int): DataFrame = {
+    val s = scored.sparkSession
+    import s.implicits._
+    heaps(scored, k)
+      .flatMap { case (key, tk) => tk.map { case (id, _) => (key, id) } }
+      .toDF("key", "id")
+  }
+
+  private def heaps(scored: DataFrame, k: Int) = {
+    val s = scored.sparkSession
+    import s.implicits._
+    scored.as[Scored].groupByKey(_.key)
+      .agg(new TopKAggregator(k).toColumn.name("topk"))
   }
 }

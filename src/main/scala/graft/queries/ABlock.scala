@@ -572,8 +572,8 @@ object ABlock {
     }),
 
     "sync_metrics_scrape" -> ((s, dir) => {
-      // the /metrics ENDPOINT under the oracle (r12, verdict #7 —
-      // promotes A25 from spec-only): a deterministic bulk-accounting
+      // the /metrics ENDPOINT under the oracle (promotes A25 from
+      // spec-only): a deterministic bulk-accounting
       // relation (the A9 app plant ⊕ the A20 poison classification)
       // populates the REAL counter registry through recordBulk, the
       // REAL JDK HttpServer serves /metrics on an ephemeral port, and
@@ -619,8 +619,8 @@ object ABlock {
     }),
 
     "sync_watchdog" -> ((s, dir) => {
-      // the topic watchdog under the oracle (r13, verdict #6 — promotes
-      // A24 from spec-only, the A48 pattern: REAL component in the
+      // the topic watchdog under the oracle (promotes A24 from
+      // spec-only, the A48 pattern: REAL component in the
       // loop, deterministic relation out): the first six days' "hot"
       // topic sets (count strictly above the uniform day share — a set
       // that provably changes day to day at every SF) drive a replay
@@ -647,7 +647,7 @@ object ABlock {
       val days = daily.select(col("day")).distinct().orderBy(col("day"))
         .collect().map(_.getString(0))
       // scratch (incl. six per-generation checkpoints) on the twin
-      // scratch base — tmpfs when available (r13)
+      // scratch base — tmpfs when available
       val base = new java.io.File(
         graft.streaming.StreamedBatch.twinTempDir("graft_watchdog_"))
       val root = new java.io.File(base, "topics")

@@ -811,7 +811,7 @@ object BBlock {
       // cross-engine), then the classic segment rules on the scores
       // four consumers (three rank passes + the final join spine):
       // materialize the per-customer aggregate once instead of
-      // re-scanning + re-aggregating orders per consumer (r13)
+      // re-scanning + re-aggregating orders per consumer
       val base = graft.operators.Materialize(
         Tables.orders(s, dir).groupBy(col("o_custkey"))
           .agg(max(datediff(col("o_orderdate"),
@@ -981,7 +981,7 @@ object BBlock {
         round(col("o_totalprice") * 100).cast("long").as("price_c"),
         datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
           .cast("long").as("day_n"))
-      // materialize the per-shard fronts before the global merge (r13):
+      // materialize the per-shard fronts before the global merge:
       // skyline2d consumes its input twice (per-x agg + join back), so
       // without this the GLOBAL call re-executes the entire per-shard
       // staircase tree — 18 orders scans in one plan; the front is tiny

@@ -17,8 +17,7 @@ object CBlock {
     "fr" -> Seq("join", "merge", "filter"),
     "zh" -> Seq("spark", "query", "batch"))
 
-  /** REAL function-word markers for the planted langid eval (r12,
-    * verdict #6): unlike [[langMarkers]] (arbitrary tech words over an
+  /** REAL function-word markers for the planted langid eval: unlike [[langMarkers]] (arbitrary tech words over an
     * English-ish corpus — the honest chance-level baseline C159 keeps),
     * these are the words the planted corpus actually seeds per
     * ground-truth language. */
@@ -55,7 +54,7 @@ object CBlock {
       when(pmod(col("doc_id"), lit(2)) === 0, nzCol)))
   }
 
-  /** The HOLDOUT eval corpus (r13, verdict #2): [[langPlantedDocs]]
+  /** The HOLDOUT eval corpus: [[langPlantedDocs]]
     * plus genuinely ambiguous TEST documents — odd ids (the held-out
     * half) divisible by 5 get the alphabetically-next language's full
     * marker string twice, the mixed-language docs every real corpus
@@ -80,12 +79,12 @@ object CBlock {
         pmod(col("doc_id"), lit(5)) === 0, nxCol)))
   }
 
-  /** The exact-span plant (r12, C212): a 20-token verbatim copy in
+  /** The exact-span plant (C212): a 20-token verbatim copy in
     * every 13th doc at token offset doc_id % 7 + 3 — BELOW the
     * half-stride screen's guarantee (1.5w−1 = 23) at offsets only
     * sometimes congruent with the stride grid, so the screen catches a
     * measurable fraction and misses the rest; shared by
-    * dedup_spans_exact and the r13 dedup_spans_recall measurement. */
+    * dedup_spans_exact and the dedup_spans_recall measurement. */
   private def spanPlantedDocs(docs: DataFrame): DataFrame = {
     val toks = graft.functions.Portable.tokens(col("text"))
     val plant = (1 to 20).map(i => "zq" + i).mkString(" ")
@@ -706,7 +705,7 @@ object CBlock {
     }),
 
     "text_langid_planted" -> ((s, dir) => {
-      // the langid eval WITH SIGNAL (r12, verdict #6): the corpus is
+      // the langid eval WITH SIGNAL: the corpus is
       // seeded with real per-language function-word distributions
       // conditioned on the ground-truth lang column (2-3 true-marker
       // repetitions per doc, a confuser token from the next language on
@@ -722,8 +721,7 @@ object CBlock {
 
     "text_langid_profile_planted" -> ((s, dir) => {
       // the n-gram-PROFILE classifier evaluated on the marker-planted
-      // corpus (r12 — the C213 signal applied to the second langid
-      // face): profiles train per ground-truth language on the planted
+      // corpus (the C213 signal applied to the second langid face): profiles train per ground-truth language on the planted
       // text (the markers' char trigrams give each language's profile
       // real lift), then the confusion matrix over scored docs measures
       // the classifier the same way C213 measures the marker heuristic.
@@ -734,7 +732,7 @@ object CBlock {
     }),
 
     "text_langid_profile_holdout" -> ((s, dir) => {
-      // the profile classifier's REAL eval (r13, verdict #2): trigram
+      // the profile classifier's REAL eval: trigram
       // profiles train on the even-doc_id half of the planted corpus
       // and score only the odd half, so the confusion matrix measures
       // generalization to documents the profiles never saw — the
@@ -1442,7 +1440,7 @@ object CBlock {
     }),
 
     "curate_ingest_stream" -> ((s, dir) => {
-      // the INGEST-SIDE curation capstone (r11): quality score +
+      // the INGEST-SIDE curation capstone: quality score +
       // admission verdict + shard route + benchmark-contamination
       // count computed per arriving doc in ONE streaming projection —
       // every column a stateless narrow expression over frozen
@@ -1460,7 +1458,7 @@ object CBlock {
     }),
 
     "decontaminate_stream" -> ((s, dir) => {
-      // benchmark decontamination AT INGEST (r11): the Bloom bits are
+      // benchmark decontamination AT INGEST: the Bloom bits are
       // trained OFFLINE from the benchmark split (512 B of model
       // state), then every arriving doc is gated inside a REAL
       // streaming projection — the bits ride the expression as a
@@ -1752,8 +1750,8 @@ object CBlock {
     }),
 
     "dedup_spans_cascade" -> ((s, dir) => {
-      // the composed 100 TB shape (r12 — closes the §12 "screen then
-      // exact" residual in-round): the half-stride chunk screen
+      // the composed 100 TB shape (closes the §12 "screen then exact"
+      // residual): the half-stride chunk screen
       // nominates candidate docs over the PLAIN corpus, the exact
       // stride-1 pass reports true boundaries only inside that slice.
       // Recall is the screen's by construction (the planted sub-1.5w
@@ -1765,8 +1763,8 @@ object CBlock {
     }),
 
     "dedup_spans_exact" -> ((s, dir) => {
-      // the verify-extend stage over the chunk screens (r12, verdict
-      // #2 — the Lee et al. '22 gap): a 20-token verbatim plant lands
+      // the verify-extend stage over the chunk screens (the Lee et al.
+      // '22 gap): a 20-token verbatim plant lands
       // in every 13th doc at token offset doc_id % 7 + 3 — lengths
       // BELOW the half-stride guarantee (1.5w−1 = 23) at offsets NOT
       // congruent mod the stride, so both chunk passes provably miss
@@ -1779,7 +1777,7 @@ object CBlock {
     }),
 
     "dedup_spans_recall" -> ((s, dir) => {
-      // QUANTIFY the cascade's recall trade (r13, verdict #3): both
+      // QUANTIFY the cascade's recall trade: both
       // faces run over the SAME planted corpus, an exact span counts
       // as caught when the cascade reports ANY overlapping span in the
       // same doc, and the row is the per-length histogram of exact
@@ -1790,7 +1788,7 @@ object CBlock {
       // window [8, 23] sits inside the plant only for k ∈ [4, 8], so
       // docs with doc_id % 7 ∈ {0, 6} are provably invisible to the
       // screen and must appear in the missed mass (spec-pinned).
-      // NOTE (r13): materializing `planted` for the two faces was
+      // NOTE: materializing `planted` for the two faces was
       // measured SLOWER (2.4-3.2 s -> 3.1-3.8 s at sf0.1): the plant is
       // one narrow projection over a pruned parquet scan, cheaper to
       // recompute than to round-trip full text blobs through the block
@@ -1860,8 +1858,8 @@ object CBlock {
     }),
 
     "sim_pq_stream" -> ((s, dir) => {
-      // C61's streaming PQ code assignment promoted to an oracle row
-      // (r11): the codebook is collected OFFLINE, the codes are
+      // C61's streaming PQ code assignment promoted to an oracle row:
+      // the codebook is collected OFFLINE, the codes are
       // assigned inside a REAL streaming projection (file source →
       // narrow argmin → memory sink) — index-at-ingest, no state, no
       // shuffle — and the emitted relation must land on the batch
@@ -1873,7 +1871,7 @@ object CBlock {
     }),
 
     "sim_pq_books" -> ((s, dir) => {
-      // C64's per-subspace PQ TRAINING promoted to an oracle row (r11):
+      // C64's per-subspace PQ TRAINING promoted to an oracle row:
       // one Lloyd round of independent per-subspace k-means over the
       // SUBVECTORS (decimal-exact means, ties to the smaller ordinal,
       // empty codewords keep their init coordinates) — the trained
@@ -1930,7 +1928,7 @@ object CBlock {
       // the k-means TRAINING loop, oracle-exact: the second Lloyd step —
       // refine against centroids already refined once (decimal-exact
       // means rounded to 6 decimals make the iterated model
-      // engine-reproducible). Since r11 this is an sf-bounded AUDIT of
+      // engine-reproducible). This is an sf-bounded AUDIT of
       // the trainer math (kmeansRefine caps its slice at 4096 ids —
       // inert at every test SF, constant-cost at any corpus size); the
       // production trainer is the sampled row below
@@ -1958,7 +1956,7 @@ object CBlock {
     }),
 
     "quality_calibrate" -> ((s, dir) => {
-      // per-source robust calibration (r11): median/MAD z-scores make
+      // per-source robust calibration: median/MAD z-scores make
       // classifier scores comparable ACROSS sources before one global
       // threshold — the cross-source normalization step a mixed-corpus
       // quality gate needs (raw thresholds over-cut terse sources)
@@ -2008,7 +2006,7 @@ object CBlock {
     }),
 
     "shard_checksums" -> ((s, dir) => {
-      // per-shard export INTEGRITY audit (r11): doc count + token total
+      // per-shard export INTEGRITY audit: doc count + token total
       // + an order-insensitive XOR content hash — the three numbers a
       // consumer recomputes on a copied shard to verify the transfer
       // (any dropped/duplicated/altered row flips the XOR; partial
@@ -2073,8 +2071,8 @@ object CBlock {
     }),
 
     "shard_zorder_sampled" -> ((s, dir) => {
-      // the PRODUCTION write path for the z-ordered layout (r12,
-      // verdict #4): file cut points come from a deterministic 1024-row
+      // the PRODUCTION write path for the z-ordered layout: file cut
+      // points come from a deterministic 1024-row
       // sample's within-sample quantiles (Curation.sampledRangeBounds —
       // a distributed top-k action, model-state to the driver) and every
       // row assigns to its file by a narrow 31-comparison expression —
@@ -2105,7 +2103,7 @@ object CBlock {
 
     "shard_hilbert_sampled" -> ((s, dir) => {
       // the sampled write path under the HILBERT key — shard_zorder_
-      // sampled's sibling (r12, verdict #4): cut points from the same
+      // sampled's sibling: cut points from the same
       // deterministic 1024-row sample's quantiles, assignment by the
       // same native binary search, the exact-rank shard_hilbert row
       // kept as the audit. The two sampled writers share every seam,
@@ -2537,7 +2535,7 @@ object CBlock {
       // is dominated by the spread of the 7 hash-seeded centers, so the
       // operator must recover planted structure — where the near-
       // uniform corpus's direction is noise-flat, this one concentrates
-      // loading mass (the honest-signal pattern of r6 verdict #3)
+      // loading mass (the honest-signal pattern)
       Similarity.pcaPower(
           Similarity.plantedEmbeddings(Tables.embeddings(s, dir)), iters = 3)
         .orderBy(col("dim"))
@@ -2646,8 +2644,7 @@ object CBlock {
     }),
 
     "quota_gate_stream" -> ((s, dir) => {
-      // C96's stateful streaming gate promoted to an oracle row (the
-      // r6-verdict #8 pattern): the REAL FlatMapGroupsWithState quota
+      // C96's stateful streaming gate promoted to an oracle row: the REAL FlatMapGroupsWithState quota
       // (file source → per-domain admission state → memory sink, one
       // micro-batch) must admit exactly the batch window relation —
       // the IDENTICAL DuckDB SQL as quota_gate anchors both
@@ -2697,7 +2694,7 @@ object CBlock {
     }),
 
     "sample_exact_k_stream" -> ((s, dir) => {
-      // the exact-k holdout MAINTAINED AT INGEST (r11): the bottom-k
+      // the exact-k holdout MAINTAINED AT INGEST: the bottom-k
       // (priority, id) pairs ride complete-mode streaming aggregation
       // as the monoid they are (O(k) state per stratum; a redelivered
       // doc collapses instead of double-occupying a slot), and the
@@ -2728,7 +2725,7 @@ object CBlock {
     }),
 
     "sample_weighted_k_stream" -> ((s, dir) => {
-      // the WEIGHTED holdout maintained at ingest (r11): identical
+      // the WEIGHTED holdout maintained at ingest: identical
       // monoid machinery as sample_exact_k_stream — only the priority
       // changes (the shared weightedSamplePriority seam), so the
       // drained sample lands on sample_weighted_k's SQL verbatim
@@ -2936,8 +2933,8 @@ object CBlock {
     }),
 
     "dedup_lines_intra" -> ((s, dir) => {
-      // WITHIN-doc repetition removal (r11 — the C4 "repeated lines
-      // inside a page" rule, the intra half the corpus-support gate
+      // WITHIN-doc repetition removal (the C4 "repeated lines inside a
+      // page" rule, the intra half the corpus-support gate
       // C191 deliberately does not cover): a line repeating inside ONE
       // document keeps its first occurrence, no corpus statistics
       // involved. Plant: every 3rd doc carries the chrome header TWICE
@@ -4027,14 +4024,14 @@ object CBlock {
         |GROUP BY 1 ORDER BY nprobe""".stripMargin
 
 
-  /** Multi-script plant markers (r12, verdict #5): the A marker is
+  /** Multi-script plant markers: the A marker is
     * precomposed lowercase (é, Cyrillic бета, Greek ω); the B marker is
     * the same text DECOMPOSED (e + U+0301) and UPPER-cased — NFC + the
     * Unicode case fold must land both on one normal form. */
   private val markerA = " caf\u00e9 \u0431\u0435\u0442\u0430 \u03c9"
   private val markerB = " CAFE\u0301 \u0411\u0415\u0422\u0410 \u03a9"
 
-  /** Locale-fold plant pair (r13, verdict #4): lowercase Turkish /
+  /** Locale-fold plant pair: lowercase Turkish /
     * German / Greek forms vs their uppercase spellings \u2014 the pair
     * normalizes to one string only if the explicit \u0130/\u0131/\u03a3/\u03c2 table and
     * the \u00df \u2192 ss replace land identically on both engines (both sides
@@ -4087,7 +4084,7 @@ object CBlock {
   private val noisySql = noisyPlants.map(_.rowsSql)
     .mkString("SELECT doc_id, text FROM documents\nUNION ALL\n", "\nUNION ALL\n", "")
 
-  /** The Unicode normalizer's oracle twin (r12, locale fold r13): NFC →
+  /** The Unicode normalizer's oracle twin: NFC →
     * full-width + locale-exception fold (the identical translate
     * tables, embedded) → Unicode lower → ß → ss → category strip
     * (\p{L}/\p{N} in RE2 ≡ Java regex) → collapse. */
@@ -4212,7 +4209,7 @@ object CBlock {
     * chained CTEs h0..h16 (final key = h16.d); p.-qualified references
     * pin every x/y/d to the PREVIOUS step (no lateral-alias
     * ambiguity). `carry` columns ride along unchanged. */
-  /** The sampled layout writers' shared SQL pieces (r12): the affine
+  /** The sampled layout writers' shared SQL pieces: the affine
     * sample priority over the (orderkey, linenumber) row key, and the
     * tail CTE chain (deterministic 1024-row bottom-k sample →
     * within-sample quantile boundaries → count-of-bounds-≤-key file
@@ -4405,6 +4402,34 @@ object CBlock {
        |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a
        |), labels AS (
        |  SELECT src AS ldoc, min(dst) AS cl FROM reach GROUP BY src
+       |)""".stripMargin
+
+  /** The stages of the configured curation over the en/es/fr documents:
+    * minhash [[componentsCtes]] (`labels`), the quality score `q(doc_id,
+    * quality)`, and the decontamination screen, in which `g` holds each
+    * doc's 8-char gram hashes, `bg` the grams of the benchmark split
+    * (doc_id % 97 = 0) with df <= 2, and `cont` the other docs sharing
+    * one of them. Needs `WITH RECURSIVE`. */
+  private def curationCtes: String =
+    s"""${minhashPairsCte("WHERE lang IN ('en','es','fr')")},
+       |${componentsCtes()}, q AS (
+       |  SELECT doc_id, $qualitySql AS quality
+       |  FROM (SELECT doc_id, $toksSql AS w FROM documents
+       |        WHERE lang IN ('en','es','fr'))
+       |), g AS (
+       |  SELECT doc_id,
+       |    unnest(list_distinct(CASE WHEN len(text) >= 8
+       |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
+       |      ELSE [${ph("text")}] END)) AS gram
+       |  FROM documents WHERE lang IN ('en','es','fr')
+       |), gdf AS (
+       |  SELECT gram, count(*) AS df FROM g GROUP BY 1
+       |), bg AS (
+       |  SELECT DISTINCT gram FROM g JOIN gdf USING (gram)
+       |  WHERE doc_id % 97 = 0 AND df <= 2
+       |), cont AS (
+       |  SELECT DISTINCT doc_id FROM g JOIN bg USING (gram)
+       |  WHERE doc_id % 97 <> 0
        |)""".stripMargin
 
   /** One arm of a planted-recall eval: the plant's copies unioned into
@@ -5219,27 +5244,7 @@ object CBlock {
          |FROM r ORDER BY doc_id""".stripMargin,
 
     "curate_funnel" ->
-      s"""WITH RECURSIVE ${minhashPairsCte("WHERE lang IN ('en','es','fr')")},
-         |${componentsCtes()}, q AS (
-         |  SELECT doc_id,
-         |    $qualitySql AS quality
-         |  FROM (SELECT doc_id, $toksSql AS w FROM documents
-         |        WHERE lang IN ('en','es','fr'))
-         |), g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents WHERE lang IN ('en','es','fr')
-         |), gdf AS (
-         |  SELECT gram, count(*) AS df FROM g GROUP BY 1
-         |), bg AS (
-         |  SELECT DISTINCT gram FROM g JOIN gdf USING (gram)
-         |  WHERE doc_id % 97 = 0 AND df <= 2
-         |), cont AS (
-         |  SELECT DISTINCT doc_id FROM g JOIN bg USING (gram)
-         |  WHERE doc_id % 97 <> 0
-         |), ded AS (
+      s"""WITH RECURSIVE $curationCtes, ded AS (
          |  SELECT d.doc_id FROM documents d
          |  LEFT JOIN labels l ON d.doc_id = l.ldoc
          |  WHERE d.lang IN ('en','es','fr')
@@ -5259,27 +5264,7 @@ object CBlock {
          |) ORDER BY stage""".stripMargin,
 
     "curate_configured" ->
-      s"""WITH RECURSIVE ${minhashPairsCte("WHERE lang IN ('en','es','fr')")},
-         |${componentsCtes()}, q AS (
-         |  SELECT doc_id,
-         |    $qualitySql AS quality
-         |  FROM (SELECT doc_id, $toksSql AS w FROM documents
-         |        WHERE lang IN ('en','es','fr'))
-         |), g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents WHERE lang IN ('en','es','fr')
-         |), gdf AS (
-         |  SELECT gram, count(*) AS df FROM g GROUP BY 1
-         |), bg AS (
-         |  SELECT DISTINCT gram FROM g JOIN gdf USING (gram)
-         |  WHERE doc_id % 97 = 0 AND df <= 2
-         |), cont AS (
-         |  SELECT DISTINCT doc_id FROM g JOIN bg USING (gram)
-         |  WHERE doc_id % 97 <> 0
-         |), clean AS (
+      s"""WITH RECURSIVE $curationCtes, clean AS (
          |  SELECT d.doc_id, ${ph("CAST(d.doc_id AS VARCHAR)")} % 8 AS shard,
          |    len($toksSql) AS n_tok
          |  FROM documents d
@@ -5295,27 +5280,7 @@ object CBlock {
          |FROM clean GROUP BY 1 ORDER BY shard""".stripMargin,
 
     "curate_split" ->
-      s"""WITH RECURSIVE ${minhashPairsCte("WHERE lang IN ('en','es','fr')")},
-         |${componentsCtes()}, q AS (
-         |  SELECT doc_id,
-         |    $qualitySql AS quality
-         |  FROM (SELECT doc_id, $toksSql AS w FROM documents
-         |        WHERE lang IN ('en','es','fr'))
-         |), g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents WHERE lang IN ('en','es','fr')
-         |), gdf AS (
-         |  SELECT gram, count(*) AS df FROM g GROUP BY 1
-         |), bg AS (
-         |  SELECT DISTINCT gram FROM g JOIN gdf USING (gram)
-         |  WHERE doc_id % 97 = 0 AND df <= 2
-         |), cont AS (
-         |  SELECT DISTINCT doc_id FROM g JOIN bg USING (gram)
-         |  WHERE doc_id % 97 <> 0
-         |), clean AS (
+      s"""WITH RECURSIVE $curationCtes, clean AS (
          |  SELECT d.doc_id, ${ph("CAST(d.doc_id AS VARCHAR)")} % 8 AS shard,
          |    len($toksSql) AS n_tok,
          |    CAST((${ph("'split:' || CAST(d.doc_id AS VARCHAR)")}

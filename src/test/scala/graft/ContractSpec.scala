@@ -93,4 +93,27 @@ class ContractSpec extends SparkSpec {
       }
     }
   }
+
+  test("oracle SQL has no literal ${ and balanced parentheses outside string literals") {
+    // a builder call spliced into a string that lost its `s` interpolator
+    // leaves `${call(...)}` or `$name` in the SQL text (DuckDB's own `$`
+    // appears only inside literals, as in '$.k'); a dropped or doubled
+    // closer in a spliced fragment unbalances the parentheses
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      assert(!sql.contains("${"), s"$name: literal $${ in its oracle SQL")
+      var depth = 0
+      var inLiteral = false
+      sql.foreach {
+        case '\'' => inLiteral = !inLiteral
+        case '$' if !inLiteral => fail(s"$name: '$$' outside a string literal")
+        case '(' if !inLiteral => depth += 1
+        case ')' if !inLiteral =>
+          depth -= 1
+          assert(depth >= 0, s"$name: ')' without a matching '('")
+        case _ =>
+      }
+      assert(!inLiteral, s"$name: unterminated string literal")
+      assert(depth == 0, s"$name: $depth unclosed '('")
+    }
+  }
 }

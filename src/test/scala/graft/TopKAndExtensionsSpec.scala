@@ -1,14 +1,12 @@
 package graft
 
 import graft.operators.Similarity
-import graft.plans.{GraftExtensions, TopKAggregator, native}
+import graft.plans.{TopKAggregator, native}
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The typed top-k aggregator must equal the window formulation row for
-  * row, and the injected optimizer rule must add the jaccard size prune
-  * to naive user filters. */
+  * row. */
 class TopKAndExtensionsSpec extends SparkSpec {
 
   test("TopKAggregator == window row_number top-k") {
@@ -80,55 +78,6 @@ class TopKAndExtensionsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     r1.foreach { row =>
       assert(row.getDouble(2) <= brute(row.getLong(0)) + 1e-9)
-    }
-  }
-
-  test("JaccardSizePruneRule injects size bounds into naive filters") {
-    // getOrCreate returns the active session (ignoring extensions), so
-    // detach it first; the new session shares the SparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val docs = Tables.documents(ext, sf()).limit(50)
-      val g = docs.select(col("doc_id"), col("lang"),
-        native.ngram_hash_set(col("text"), 3).as("ng"))
-      val a = g.select(col("lang"), col("doc_id").as("da"), col("ng").as("na"))
-      val b = g.select(col("lang").as("lang_b"), col("doc_id").as("db"),
-        col("ng").as("nb"))
-      // naive user query: no manual size prune
-      val naive = a.join(b, col("lang") === col("lang_b") && col("da") < col("db"))
-        .filter(native.sorted_jaccard(col("na"), col("nb")) >= 0.8)
-      val optimized = naive.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("size("),
-        s"size prune not injected:\n$optimized")
-      // and the rule must not change results
-      assert(naive.count() ==
-        a.join(b, col("lang") === col("lang_b") && col("da") < col("db"))
-          .withColumn("j", native.sorted_jaccard(col("na"), col("nb")))
-          .filter(col("j") >= 0.8).count())
-      // a threshold under OR is NOT implied by the whole condition: the
-      // rule must not fire (injected bounds would drop rows that survive
-      // via the other branch)
-      val orQ = a.join(b, col("lang") === col("lang_b") && col("da") < col("db"))
-        .filter(col("da") === 1 ||
-          native.sorted_jaccard(col("na"), col("nb")) >= 0.8)
-      val orPlan = orQ.queryExecution.optimizedPlan.toString
-      assert(!orPlan.contains("size("),
-        s"size prune wrongly injected under OR:\n$orPlan")
-      assert(orQ.count() ==
-        a.join(b, col("lang") === col("lang_b") && col("da") < col("db"))
-          .withColumn("j", native.sorted_jaccard(col("na"), col("nb")))
-          .filter(col("da") === 1 || col("j") >= 0.8).count())
-    } finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
     }
   }
 
