@@ -4309,6 +4309,7 @@ object CBlock {
     foldSql(dims(d), s"${dbl(x)} * ${dbl(y)}")
   /** Euclidean norm of the `d`-dim vector `x`. */
   private def vecNormSql(x: String, d: Int): String = s"sqrt(${dotSql(x, x, d)})"
+  /** Cosine of the `d`-dim vectors `x` and `y`. */
   private def cosSql(x: String, y: String, d: Int): String =
     s"${dotSql(x, y, d)}\n      / (${vecNormSql(x, d)} * ${vecNormSql(y, d)})"
   /** Squared L2 distance over i = 1..`d` of the element expressions `xi`
