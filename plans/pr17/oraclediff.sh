@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Row-by-row diff of the oracle SQL of two trees.
 #
-#   plans/pr17/oraclediff.sh <parent tree> <change tree> [sf dir] [out dir]
+#   plans/pr17/oraclediff.sh <parent tree> <change tree> <sf dir> [out dir]
 #
 # In each tree, `sbt "runMain graft.Verify <sf dir> <out>/<side> <name>"`
 # with a name that matches no row: Verify then runs no query but writes
@@ -14,12 +14,13 @@
 # columns, in result order). SKIP=<row,row,...> leaves rows out of the
 # RUN step (the text diff still lists them).
 #
-# sf dir defaults to /root/testdata/sf0.001, out dir to a new temp dir.
+# out dir defaults to a new temp dir; a side whose
+# <out>/<side>/oracle_sql.json exists is not run again.
 # Needs the offline SBT_OPTS of the verify recipe when run offline.
 set -euo pipefail
 parent=$(cd "$1" && pwd)
 change=$(cd "$2" && pwd)
-sf=${3:-/root/testdata/sf0.001}
+sf=${3:?give the scale-factor directory}
 out=${4:-$(mktemp -d)}
 mkdir -p "$out"
 for side in parent change; do

@@ -17,10 +17,10 @@ object CBlock {
     "fr" -> Seq("join", "merge", "filter"),
     "zh" -> Seq("spark", "query", "batch"))
 
-  /** REAL function-word markers for the planted langid eval: unlike [[langMarkers]] (arbitrary tech words over an
-    * English-ish corpus — the honest chance-level baseline C159 keeps),
-    * these are the words the planted corpus actually seeds per
-    * ground-truth language. */
+  /** REAL function-word markers for the planted langid eval: unlike
+    * [[langMarkers]] (arbitrary tech words over an English-ish corpus —
+    * the honest chance-level baseline C159 keeps), these are the words
+    * the planted corpus actually seeds per ground-truth language. */
   private val langEvalMarkers: Seq[(String, Seq[String])] = Seq(
     "de" -> Seq("der", "und", "nicht"),
     "en" -> Seq("the", "and", "not"),
@@ -721,9 +721,10 @@ object CBlock {
 
     "text_langid_profile_planted" -> ((s, dir) => {
       // the n-gram-PROFILE classifier evaluated on the marker-planted
-      // corpus (the C213 signal applied to the second langid face): profiles train per ground-truth language on the planted
-      // text (the markers' char trigrams give each language's profile
-      // real lift), then the confusion matrix over scored docs measures
+      // corpus (the C213 signal applied to the second langid face):
+      // profiles train per ground-truth language on the planted text
+      // (the markers' char trigrams give each language's profile real
+      // lift), then the confusion matrix over scored docs measures
       // the classifier the same way C213 measures the marker heuristic.
       // Docs with no profile-gram hit drop from the scored relation
       // (langIdProfile's inner join) — the oracle mirrors that.
