@@ -28,8 +28,10 @@ FAMILIES = {
     "planted copy (doc_id + <8-digit literal offset>)":
         (r'col\("doc_id"\) \+ \d{8,}L|doc_id \+ \d{8,}\b', "Plant"),
     "components chain (reach(src, dst))": (r"reach\(src, dst\)", "componentsCtes"),
-    "dot/norm fold (list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1,":
-        (r"list_prepend\(CAST\(0\.0 AS DOUBLE\), list_transform\(range\(1,", "foldSql"),
+    # every DOUBLE sum fold except the ordered sums of an aggregated
+    # `list(... ORDER BY ...)`, which transform nothing
+    "double sum fold (list_prepend(CAST(0.0 AS DOUBLE), not over list(":
+        (r"list_prepend\(CAST\(0\.0 AS DOUBLE\),(?! list\()", "foldSql"),
     "quality score (0.5 * (len(list_distinct":
         (r"0\.5 \* \(len\(list_distinct", "qualitySql"),
     "HLL CASE chains (WHEN w >= / rhoCase)": (r"WHEN w >= \$\{|val rhoCase", "hllCtes"),

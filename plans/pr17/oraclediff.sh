@@ -11,8 +11,7 @@
 # summary line with the changed row names. With RUN=1 it also executes
 # both SQL texts of every changed row in DuckDB over the sf dir's
 # parquet tables and prints `same` or `DIFFERENT` per row (all rows and
-# columns, in result order). SKIP=<row,row,...> leaves rows out of the
-# RUN step (the text diff still lists them).
+# columns, in result order).
 #
 # out dir defaults to a new temp dir; a side whose
 # <out>/<side>/oracle_sql.json exists is not run again.
@@ -51,7 +50,6 @@ print(f"{len(changed)} of {len(set(p) & set(c))} rows changed: {' '.join(changed
 if os.environ.get("RUN") != "1":
     sys.exit(0)
 import duckdb
-skip = set(filter(None, os.environ.get("SKIP", "").split(",")))
 con = duckdb.connect()
 con.execute("SET threads = 2")
 con.execute("SET memory_limit = '2GB'")
@@ -62,9 +60,6 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{f}')")
 bad = 0
 for name in changed:
-    if name in skip:
-        print(f"skipped {name}")
-        continue
     try:
         a = con.execute(p[name])
         cols_a, rows_a = [d[0] for d in a.description], a.fetchall()

@@ -4303,6 +4303,8 @@ object CBlock {
   private def foldSql(idx: String, term: String): String =
     s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform($idx, i -> $term)), (a, x) -> a + x)"
   private def dims(d: Int): String = s"range(1, ${d + 1})"
+  /** Every index of `embedding`, 1-based. */
+  private val embDims = "range(1, len(embedding) + 1)"
   /** Element i of vector `v` as DOUBLE. */
   private def dbl(v: String): String = s"CAST($v[i] AS DOUBLE)"
   /** Dot product of the `d`-dim vectors `x` and `y`. */
@@ -4320,8 +4322,18 @@ object CBlock {
 
   /** Squared distance of `embedding` to its label's centroid, the
     * per-dim sums `sxs` over `n_label` members. */
-  private def centroidSqSql: String = foldSql("range(1, len(embedding) + 1)",
+  private def centroidSqSql: String = foldSql(embDims,
     "(CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label) * (CAST(embedding[i] AS DOUBLE) - sxs[i] / n_label)")
+
+  /** Coordinate `j` (0-based) of the sign projection of `embedding`,
+    * rounded to 6 places: the dot with the ±1 row whose sign hashes
+    * (i+1, j+1). */
+  private def signProjSql(j: String): String = "round(" +
+    foldSql("range(0, len(embedding))", "CAST(embedding[i+1] AS DOUBLE) *\n" +
+      s"  (CASE WHEN (((i+1) * ((($j+1) * 2654435761) % 2147483647))\n" +
+      s"              + ((($j+1) * 40503) % 2147483647))\n" +
+      "             % 2147483647 % 2 = 0\n" +
+      "        THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)") + ", 6)"
 
   /** The 8-plane random-hyperplane LSH bucket of `embedding`: bit p is
     * set when the dot with plane p (hash-derived coefficients in
@@ -5628,10 +5640,9 @@ object CBlock {
          |ORDER BY sk.event_type""".stripMargin,
 
     "vec_norms" ->
-      """SELECT vec_id, label,
-        |  ROUND(sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-        |    (a, x) -> a + x)), 6) AS l2_norm,
+      s"""SELECT vec_id, label,
+        |  ROUND(sqrt(${foldSql(embDims, "CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)")}),
+        |    6) AS l2_norm,
         |  len(embedding) AS dim
         |FROM embeddings ORDER BY vec_id""".stripMargin,
 
@@ -7287,8 +7298,12 @@ object CBlock {
          |SELECT doc_id, n_chars, n_symbols
          |FROM nch JOIN nsy USING (doc_id) ORDER BY doc_id""".stripMargin,
 
-    "emb_quantize_sq" ->
-      """WITH s AS (
+    "emb_quantize_sq" -> {
+      val x = dbl("embedding")
+      // the cell centre of x in its dim's 256-cell [min, max] grid
+      val q = s"(mns[i] + ((CASE WHEN mxs[i] > mns[i] THEN least(greatest(floor(($x - mns[i])" +
+        " / (mxs[i] - mns[i]) * 256), 0), 255) ELSE 0 END) + 0.5) * (mxs[i] - mns[i]) / 256)"
+      s"""WITH s AS (
         |  SELECT dim, CAST(min(x) AS DOUBLE) AS mn, CAST(max(x) AS DOUBLE) AS mx
         |  FROM (SELECT unnest(embedding) AS x,
         |        generate_subscripts(embedding, 1) AS dim FROM embeddings)
@@ -7297,32 +7312,14 @@ object CBlock {
         |  SELECT list(mn ORDER BY dim) AS mns, list(mx ORDER BY dim) AS mxs FROM s
         |)
         |SELECT vec_id, label,
-        |  ROUND(sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(range(1, len(embedding) + 1), i ->
-        |      (CAST(embedding[i] AS DOUBLE)
-        |        - (mns[i] + ((CASE WHEN mxs[i] > mns[i]
-        |             THEN least(greatest(floor((CAST(embedding[i] AS DOUBLE) - mns[i])
-        |               / (mxs[i] - mns[i]) * 256), 0), 255) ELSE 0 END) + 0.5)
-        |            * (mxs[i] - mns[i]) / 256))
-        |      * (CAST(embedding[i] AS DOUBLE)
-        |        - (mns[i] + ((CASE WHEN mxs[i] > mns[i]
-        |             THEN least(greatest(floor((CAST(embedding[i] AS DOUBLE) - mns[i])
-        |               / (mxs[i] - mns[i]) * 256), 0), 255) ELSE 0 END) + 0.5)
-        |            * (mxs[i] - mns[i]) / 256)))),
-        |    (a, t) -> a + t)), 6) AS sq_distortion
+        |  ROUND(sqrt(${foldSql(embDims, s"($x - $q) * ($x - $q)")}), 6) AS sq_distortion
         |FROM embeddings, sl
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin
+    },
 
     "emb_project" ->
-      """SELECT vec_id, label, j AS dim,
-        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(range(0, len(embedding)), i ->
-        |      CAST(embedding[i+1] AS DOUBLE) *
-        |        (CASE WHEN (((i+1) * (((j+1) * 2654435761) % 2147483647))
-        |                    + (((j+1) * 40503) % 2147483647))
-        |                   % 2147483647 % 2 = 0
-        |              THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END))),
-        |    (a, v) -> a + v), 6) AS val
+      s"""SELECT vec_id, label, j AS dim,
+        |  ${signProjSql("j")} AS val
         |FROM embeddings, (SELECT unnest(range(0, 16)) AS j)
         |ORDER BY vec_id, dim""".stripMargin,
 
@@ -7917,16 +7914,7 @@ object CBlock {
     "sim_project_rerank" ->
       s"""WITH pr AS (
         |  SELECT vec_id AS id,
-        |    list_transform(range(0, 16), j ->
-        |      round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |        list_transform(range(0, len(embedding)), i ->
-        |          CAST(embedding[i+1] AS DOUBLE) *
-        |            (CASE WHEN (((i+1) * (((j+1) * 2654435761) % 2147483647))
-        |                        + (((j+1) * 40503) % 2147483647))
-        |                       % 2147483647 % 2 = 0
-        |                  THEN CAST(1.0 AS DOUBLE)
-        |                  ELSE CAST(-1.0 AS DOUBLE) END))),
-        |        (a, v) -> a + v), 6)) AS proj
+        |    list_transform(range(0, 16), j -> ${signProjSql("j")}) AS proj
         |  FROM embeddings
         |), coarse AS (
         |  SELECT p.id AS probe_id, c.id AS cand_id,
@@ -8126,7 +8114,7 @@ object CBlock {
          |ORDER BY d.doc_id, d.phash""".stripMargin,
 
     "text_entropy" ->
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT doc_id, list_filter(string_split(text, ''), ch -> ch <> '') AS cs
         |  FROM documents
         |), d AS (
@@ -8136,11 +8124,8 @@ object CBlock {
         |  CAST(len(cs) AS BIGINT) AS n_chars,
         |  CAST(len(ds) AS BIGINT) AS n_distinct,
         |  CASE WHEN len(cs) > 0 THEN
-        |    ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |      list_transform(ds, c ->
-        |        -(len(list_filter(cs, x -> x = c)) * 1.0 / len(cs))
-        |          * ln(len(list_filter(cs, x -> x = c)) * 1.0 / len(cs)))),
-        |      (a, t) -> a + t), 6)
+        |    ROUND(${foldSql("ds", "-(len(list_filter(cs, x -> x = i)) * 1.0 / len(cs))" +
+        " * ln(len(list_filter(cs, x -> x = i)) * 1.0 / len(cs))")}, 6)
         |  END AS entropy
         |FROM d ORDER BY doc_id""".stripMargin,
 
