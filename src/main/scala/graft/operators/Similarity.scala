@@ -948,7 +948,7 @@ object Similarity {
       .unionAll(armed
         .select((col("id_b") * nArms + col("arm")).as("key"),
           col("id_a").as("id"), col("score")))
-    val dec = Materialize(topK(scored, k)
+    val dec = Materialize(topKIds(scored, k)
       .select(expr(s"key % $nArms").as("arm"),
         expr(s"key div $nArms").as("src"), col("id").as("dst")))
     val perArm = dec.groupBy(col("arm")).agg(count(lit(1)).as("n_edges"))
@@ -977,7 +977,7 @@ object Similarity {
       .select(col("id_a").as("key"), col("id_b").as("id"), col("score"))
       .unionAll(pairs
         .select(col("id_b").as("key"), col("id_a").as("id"), col("score")))
-    Materialize(topK(scored, k).select(col("key").as("src"), col("id").as("dst")))
+    Materialize(topKIds(scored, k).select(col("key").as("src"), col("id").as("dst")))
   }
 
   /** Mutual-kNN graph audit over LSH buckets — the semantic-clustering

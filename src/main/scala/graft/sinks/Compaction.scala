@@ -80,7 +80,7 @@ object Compaction {
             pmod(xxhash64(struct(df.columns.map(df(_)): _*)), col("__nf")))
           .repartition(col("index"), col("__salt"))
           .drop("__nf", "__salt")
-          .write.options(ForklessLocalFileSystem.options)
+          .write.options(StoreFormat.writeOptions)
           .option("maxRecordsPerFile", maxRecords)
           .partitionBy("index").parquet(staging.toString)
         onStep("staged")

@@ -36,7 +36,12 @@ import scala.util.{Failure, Success, Try}
   * builds' headerless and version-1 markers, plain Spark writes) are
   * read by listing until a compaction or retention run adopts them into
   * a snapshot. [[StoreManifest]] holds the formats and the deletion
-  * rule. */
+  * rule.
+  *
+  * Every data file of the store and of its `_failed` log is written in
+  * [[StoreFormat]]: parquet with zstd pages, and no statistics on the
+  * `data` payload, on which no reader filters (a `data` predicate still
+  * answers correctly; it only loses row-group skipping). */
 object IndexedParquetSink {
 
   /** Partition column of the staged write: 0 = the store, 1 = the
@@ -119,7 +124,7 @@ object IndexedParquetSink {
               col(Dest), col("index"))
             .observe(obs, bulkCounts(col("index"), col("app"), col(Dest) === 1).as("bulk"))
             .filter(col(Dest) < roots.size)
-            .write.options(ForklessLocalFileSystem.options)
+            .write.options(StoreFormat.writeOptions)
             .mode("overwrite").partitionBy(Dest, "index")
             .parquet(staging.toString)
           val rows = observedCounts(obs, tag).map { c =>

@@ -1,11 +1,10 @@
 package graft.streaming
 
 import graft.operators.{SyncConfig, SyncPipeline}
-import graft.sinks.{ForklessLocalFileSystem, IndexedParquetSink}
+import graft.sinks.{ForklessLocalFileSystem, IndexedParquetSink, StoreFormat}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.OutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -155,7 +154,8 @@ object StreamingSync {
   }
 
   /** One batch's bulk metrics plus a `batch_id` column, written from the
-    * driver as the one parquet file of `dir` (`<metricsPath>/bid=<id>`).
+    * driver as the one parquet file of `dir` (`<metricsPath>/bid=<id>`),
+    * in the store's [[StoreFormat]].
     * The rows are already on the driver after the sink's commit, so no
     * Spark job runs. `batch_id` stays a LongType DATA column, so readers
     * keep the schema they always had; `bid` is only the partition key a
@@ -188,7 +188,7 @@ object StreamingSync {
         def defaultBlockSize = 0L
       }
       val w = ExampleParquetWriter.builder(out).withType(schema).withConf(fs.getConf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+        .withCompressionCodec(StoreFormat.codec).build()
       val groups = new SimpleGroupFactory(schema)
       try rows.foreach { r =>
         val g = groups.newGroup()
@@ -201,7 +201,7 @@ object StreamingSync {
       } finally w.close()
       fs.listStatus(new Path(dir)).map(_.getPath)
         .filter(_.getName != tmp.getName).foreach(fs.delete(_, true))
-      if (!fs.rename(tmp, new Path(dir, "part-00000.snappy.parquet")))
+      if (!fs.rename(tmp, new Path(dir, "part-00000.parquet")))
         throw new IllegalStateException(s"metrics-store rename failed in $dir")
     }
   }

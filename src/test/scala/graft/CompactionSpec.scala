@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Compaction: a fragmented indexed store collapses to ~1 file per
@@ -89,7 +89,8 @@ class CompactionSpec extends SparkSpec {
     // hammer committed-snapshot reads while three compactions rewrite the
     // store in place: every SUCCESSFUL read must see exactly the rows it
     // had. A relation built before a compaction deleted the files it
-    // superseded fails with FileNotFoundException; nothing else may fail.
+    // superseded fails with FileNotFoundException, or NoSuchFileException
+    // from Hadoop's vectored read; nothing else may fail.
     // (A listing reader is not isolated: it can see a rewrite's moved
     // files beside the ones they replace.)
     import spark.implicits._
@@ -108,7 +109,8 @@ class CompactionSpec extends SparkSpec {
           val got = rows(IndexedParquetSink.readIndexed(spark, store))
           if (got != expect) wrong = Some(Right(got.size))
         } catch {
-          case e: Exception if causes(e).exists(_.isInstanceOf[FileNotFoundException]) => ()
+          case e: Exception if causes(e).exists(c =>
+            c.isInstanceOf[FileNotFoundException] || c.isInstanceOf[NoSuchFileException]) => ()
           case e: Exception => wrong = Some(Left(e))
         }
       }
