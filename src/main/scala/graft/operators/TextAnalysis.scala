@@ -71,7 +71,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("profile_lang").as("pred_lang"), col("score"))
   }
 
-  /** HELD-OUT evaluation face of [[langIdProfile]] (r13, verdict #2):
+  /** HELD-OUT evaluation face of [[langIdProfile]]:
     * profiles train only on the even-`idCol` half of the corpus and the
     * classifier scores only the odd half, so the confusion matrix
     * measures generalization to unseen documents — the in-sample
@@ -329,7 +329,7 @@ object TextAnalysis {
   val FullwidthTo: String = ((0x21 to 0x7E).map(_.toChar) :+ ' ').mkString
 
   /** Locale-sensitive case-fold exceptions as an EXPLICIT 1:1 table
-    * (r13, verdict #4 \u2014 closes the documented \u0130/\u03c2 seam): applied
+    * (closes the documented \u0130/\u03c2 seam): applied
     * BEFORE `lower`, so neither engine's context/locale rules ever
     * fire. \u0130 (U+0130) \u2192 i (ICU lowers it to i + combining dot, a 1\u21922
     * mapping utf8proc doesn't apply); \u0131 (U+0131) \u2192 i (unifies Turkish
@@ -342,7 +342,7 @@ object TextAnalysis {
   val CaseFoldTo: String = "ii\u03c3\u03c3"
 
   /** CCNet-style text normalization — the canonical pre-dedup transform,
-    * Unicode-complete since r12 (verdict #5): NFC composition (a native
+    * Unicode-complete: NFC composition (a native
     * expression over Java's Normalizer ≡ DuckDB `nfc_normalize` —
     * decomposed accents fold to their precomposed forms), full-width →
     * ASCII via the explicit [[FullwidthFrom]] table, Unicode-simple case
@@ -356,7 +356,7 @@ object TextAnalysis {
     *
     * Portability: NFC is UAX #15 on both engines; \p{L}/\p{N} classes
     * agree between Java regex and RE2; `lower` is the Unicode simple
-    * mapping on both once the [[CaseFoldFrom]] table (r13) has
+    * mapping on both once the [[CaseFoldFrom]] table has
     * pre-folded the locale-sensitive exceptions — dotted İ, dotless ı,
     * final sigma — and the post-lower ß → ss replace closes the one
     * 1→2 fold (ẞ included, via lower). Remaining seam is the genuinely

@@ -177,9 +177,9 @@ object Tokenizer {
     * (impossible when artifacts come from this corpus's training, the
     * OOV story of a real deployment) map to null.
     *
-    * Scale (r11, verdict #3): the artifacts ride ONE native expression's
+    * Scale: the artifacts ride ONE native expression's
     * constructor ([[graft.plans.BpeEncodeExpr]] → a single BpeModel
-    * reference object, the HilbertKeyExpr pattern) — the pre-r11
+    * reference object, the HilbertKeyExpr pattern) — the earlier
     * per-merge HOF unroll + `typedLit` map would put a 30k-entry
     * literal chain in the expression tree at a production vocab, the
     * CollapseProject/codegen blowup class C173 measured. The unrolled

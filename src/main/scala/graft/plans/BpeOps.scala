@@ -5,8 +5,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The FROZEN BPE artifacts (ordered merge list + sym→id map) as ONE
   * serializable reference object — the scale-proof carrier for
-  * [[graft.operators.Tokenizer.encodeWith]] (r11, verdict #3): the
-  * pre-r11 formulation unrolled one `aggregate` HOF per merge and a
+  * [[graft.operators.Tokenizer.encodeWith]]: the earlier
+  * formulation unrolled one `aggregate` HOF per merge and a
   * `typedLit` map literal into the expression tree, the exact
   * CollapseProject/codegen blowup class measured on the Hilbert descent
   * (SURVEY C173) — at a real 30k-merge vocab that is a 30k-deep tree.
@@ -46,8 +46,8 @@ final class BpeModel(mergesL: Array[String], mergesR: Array[String],
   private def encodeWord(w: String, out: java.util.ArrayList[AnyRef]): Unit = {
     // start: one symbol per CODE POINT — Java regex never matches inside
     // a surrogate pair, so Portable.chars' split-by-"" yields whole
-    // supplementary characters, and the native seam must agree (r12,
-    // ADVICE): non-BMP text (emoji, supplementary CJK) would otherwise
+    // supplementary characters, and the native seam must agree:
+    // non-BMP text (emoji, supplementary CJK) would otherwise
     // split into lone surrogates and diverge from encodeWithHof
     var syms = new java.util.ArrayList[String](w.length)
     val present = new java.util.HashSet[String]()

@@ -34,17 +34,22 @@ object ABlock {
       s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("topic")).orderBy(col("msg_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    msgs(s, dir)
+    val cum = msgs(s, dir)
       .withColumn("bytes", coalesce(length(col("data")).cast("long"), lit(0L)))
       .withColumn("cum", sum(col("bytes")).over(w))
       .withColumn("gen", expr("(greatest(cum, 1) - 1) div 16384"))
-      .groupBy(col("topic"), col("gen"))
+    genRows(cum)
+  }
+
+  /** One row per (topic, generation) of messages carrying `bytes` and
+    * their `gen`: the batch cumsum's and the streamed counter's readout. */
+  private def genRows(gens: DataFrame): DataFrame =
+    gens.groupBy(col("topic"), col("gen"))
       .agg(count(lit(1)).as("n_msgs"), sum(col("bytes")).as("gen_bytes"))
       .withColumn("index_name",
         concat(col("topic"), lit("-g"), col("gen").cast("string")))
       .select(col("topic"), col("gen"), col("index_name"),
         col("n_msgs"), col("gen_bytes"))
-  }
 
   def queries(msgs: (SparkSession, String) => DataFrame)
       : Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -173,14 +178,8 @@ object ABlock {
       // sync_rollover's own oracle
       val batched = graft.streaming.StreamedBatch
         .chunked(msgs(s, dir), 5, col("msg_id"))
-      graft.streaming.StreamedBatch
-        .rolledGenerations(s, batched, nBatches = 5)
-        .groupBy(col("topic"), col("gen"))
-        .agg(count(lit(1)).as("n_msgs"), sum(col("bytes")).as("gen_bytes"))
-        .withColumn("index_name",
-          concat(col("topic"), lit("-g"), col("gen").cast("string")))
-        .select(col("topic"), col("gen"), col("index_name"),
-          col("n_msgs"), col("gen_bytes"))
+      genRows(graft.streaming.StreamedBatch
+          .rolledGenerations(s, batched, nBatches = 5))
         .orderBy(col("topic"), col("gen"))
     }),
 
@@ -819,6 +818,18 @@ object ABlock {
       |  count(*) AS n_msgs, CAST(SUM(bytes) AS BIGINT) AS gen_bytes
       |FROM c GROUP BY 1, 2, 3 ORDER BY topic, gen""".stripMargin
 
+  /** sync_rate_limit's SQL — shared verbatim by the streamed twin (the
+    * streaming limiter must admit the batch window's exact message set). */
+  private val rateLimitOracleSql: String =
+    """SELECT event_id AS msg_id, event_type AS app
+      |FROM events
+      |QUALIFY row_number() OVER (
+      |    PARTITION BY event_type, date_trunc('hour', ts)
+      |    ORDER BY ts, event_id)
+      |  <= CASE event_type WHEN 'purchase' THEN 2 WHEN 'click' THEN 1
+      |          ELSE 2147483647 END
+      |ORDER BY msg_id""".stripMargin
+
   /** The portable poly hash in DuckDB (CBlock's `ph`, local copy). */
   private def phA(e: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
@@ -1050,15 +1061,7 @@ object ABlock {
         |  count(*) AS n
         |FROM d GROUP BY 1, 2 ORDER BY topic, is_debug""".stripMargin,
 
-    "sync_rate_limit" ->
-      """SELECT event_id AS msg_id, event_type AS app
-        |FROM events
-        |QUALIFY row_number() OVER (
-        |    PARTITION BY event_type, date_trunc('hour', ts)
-        |    ORDER BY ts, event_id)
-        |  <= CASE event_type WHEN 'purchase' THEN 2 WHEN 'click' THEN 1
-        |          ELSE 2147483647 END
-        |ORDER BY msg_id""".stripMargin,
+    "sync_rate_limit" -> rateLimitOracleSql,
 
     // exactly-once under planted duplicate redelivery: the emitted
     // relation is the DISTINCT message set — duplicates either hit
@@ -1097,15 +1100,7 @@ object ABlock {
 
     // IDENTICAL SQL to sync_rate_limit — the streaming limiter must
     // admit the batch window's exact message set
-    "sync_rate_limit_stream" ->
-      """SELECT event_id AS msg_id, event_type AS app
-        |FROM events
-        |QUALIFY row_number() OVER (
-        |    PARTITION BY event_type, date_trunc('hour', ts)
-        |    ORDER BY ts, event_id)
-        |  <= CASE event_type WHEN 'purchase' THEN 2 WHEN 'click' THEN 1
-        |          ELSE 2147483647 END
-        |ORDER BY msg_id""".stripMargin,
+    "sync_rate_limit_stream" -> rateLimitOracleSql,
 
     "sync_bulk_batch" ->
       """WITH d AS (

@@ -778,10 +778,7 @@ object BBlock {
       // days-sized window — at 100 TB the daily rollup is the only
       // corpus-sized pass.
       graft.operators.Temporal.volumeAnomaly(
-          eventsUs(s, dir)
-            .groupBy(col("event_type").as("topic"),
-              to_date(col("ts")).as("day"))
-            .agg(count(lit(1)).as("n")),
+          dailyCounts(eventsUs(s, dir)),
           dense = false)
         .orderBy(col("topic"), col("day"))
     }),
@@ -794,10 +791,7 @@ object BBlock {
       // both feeds the baseline and gets its own (collapse-alarm) z
       // row — see Temporal.volumeAnomaly for the scale shape
       graft.operators.Temporal.volumeAnomaly(
-          eventsUs(s, dir)
-            .groupBy(col("event_type").as("topic"),
-              to_date(col("ts")).as("day"))
-            .agg(count(lit(1)).as("n")),
+          dailyCounts(eventsUs(s, dir)),
           dense = true)
         .orderBy(col("topic"), col("day"))
     }),
@@ -945,10 +939,7 @@ object BBlock {
       // cumulative windows, all-integer — see Temporal.cusum); the daily
       // rollup is the only corpus-sized pass at 100 TB
       graft.operators.Temporal.cusum(
-          eventsUs(s, dir)
-            .groupBy(col("event_type").as("topic"),
-              to_date(col("ts")).as("day"))
-            .agg(count(lit(1)).as("n")),
+          dailyCounts(eventsUs(s, dir)),
           hMult = 4L)
         .orderBy(col("topic"), col("day"))
     }),
@@ -1024,25 +1015,7 @@ object BBlock {
       // — insert with dominance prune; map-side partials ship only
       // their front) IS the scalable algorithm; oracle is the
       // independent 3-way NOT-EXISTS dominance spelling
-      val ss2 = s; import ss2.implicits._
-      val items = Tables.lineitem(s, dir).groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"))
-      Tables.orders(s, dir)
-        .join(items, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_orderkey").as("id"),
-          round(col("o_totalprice") * 100).cast("long").as("x"),
-          datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
-            .cast("long").as("y"),
-          col("n_items").as("z"))
-        .as[graft.plans.FrontPoint3]
-        .groupByKey(_ => 0L)
-        .agg(new graft.plans.Skyline3Aggregator().toColumn.name("front"))
-        .toDF("k", "front")
-        .select(explode(col("front")).as("p"))
-        .select(col("p.id").as("o_orderkey"), col("p.x").as("price_c"),
-          col("p.y").as("day_n"), col("p.z").as("n_items"))
-        .orderBy(col("price_c").desc, col("day_n"), col("n_items"),
-          col("o_orderkey"))
+      front3(orderPoints3(s, dir))
     }),
 
     "q_skyline3_merge" -> ((s, dir) => {
@@ -1052,27 +1025,9 @@ object BBlock {
       // dimension because dominance stays transitive; anchored by
       // q_skyline3's IDENTICAL oracle
       val ss2 = s; import ss2.implicits._
-      val items = Tables.lineitem(s, dir).groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_items"))
-      val pts = Tables.orders(s, dir)
-        .join(items, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_orderkey").as("id"),
-          round(col("o_totalprice") * 100).cast("long").as("x"),
-          datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
-            .cast("long").as("y"),
-          col("n_items").as("z"))
-        .as[graft.plans.FrontPoint3]
-      pts.groupByKey(_.id % 8)
+      front3(orderPoints3(s, dir).groupByKey(_.id % 8)
         .agg(new graft.plans.Skyline3Aggregator().toColumn.name("front"))
-        .flatMap(_._2)
-        .groupByKey(_ => 0L)
-        .agg(new graft.plans.Skyline3Aggregator().toColumn.name("front"))
-        .toDF("k", "front")
-        .select(explode(col("front")).as("p"))
-        .select(col("p.id").as("o_orderkey"), col("p.x").as("price_c"),
-          col("p.y").as("day_n"), col("p.z").as("n_items"))
-        .orderBy(col("price_c").desc, col("day_n"), col("n_items"),
-          col("o_orderkey"))
+        .flatMap(_._2))
     }),
 
     "q_time_window" -> ((s, dir) => {
@@ -1133,13 +1088,7 @@ object BBlock {
       // watermark node for batch): conversions matched to the same
       // user's impressions within 1h — oracle-checked here, streaming ≡
       // batch proven in StreamingJoinSpec
-      val ev = eventsUs(s, dir)
-      val impressions = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("imp_ts"),
-          col("event_id").as("imp_id"))
-      val conversions = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("c_user_id"), col("ts").as("conv_ts"),
-          col("event_id").as("conv_id"))
+      val (impressions, conversions) = attributionSides(eventsUs(s, dir))
       graft.streaming.StreamingIntervalJoin
         .attribute(impressions, conversions, windowSec = 3600)
         .orderBy(col("imp_id"), col("conv_id"))
@@ -1151,13 +1100,7 @@ object BBlock {
       // join buffers keyed state on BOTH sides, and the single
       // AvailableNow micro-batch must emit exactly the batch range
       // join — the IDENTICAL DuckDB SQL as q_attribution anchors both
-      val ev = eventsUs(s, dir)
-      val impressions = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("imp_ts"),
-          col("event_id").as("imp_id"))
-      val conversions = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("c_user_id"), col("ts").as("conv_ts"),
-          col("event_id").as("conv_id"))
+      val (impressions, conversions) = attributionSides(eventsUs(s, dir))
       graft.streaming.StreamedBatch
         .attributed(s, impressions, conversions, windowSec = 3600)
         .orderBy(col("imp_id"), col("conv_id"))
@@ -1385,29 +1328,15 @@ object BBlock {
         .orderBy(col("c_nationkey"))
     }),
 
-    "q_rollup" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir)
-      val nat = Tables.nation(s, dir)
-      cust.join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .rollup(col("n_name"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"),
-          moneySum(dec2(col("c_acctbal"))).as("acctbal"),
-          grouping_id().cast("int").as("lvl"))
-        .orderBy(asc_nulls_first("n_name"), asc_nulls_first("c_mktsegment"))
-    }),
+    "q_rollup" -> ((s, dir) =>
+      segmentGrouping(s, dir)(_.rollup(col("n_name"), col("c_mktsegment")))),
 
     "q_grouping_sets" -> ((s, dir) => {
       // independent grouping sets ((nation), (segment)) — the union
       // ROLLUP/CUBE can't express; one pass, expand + single agg
-      val cust = Tables.customer(s, dir)
-      val nat = Tables.nation(s, dir)
-      cust.join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .groupingSets(Seq(Seq(col("n_name")), Seq(col("c_mktsegment"))),
-          col("n_name"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"),
-          moneySum(dec2(col("c_acctbal"))).as("acctbal"),
-          grouping_id().cast("int").as("lvl"))
-        .orderBy(asc_nulls_first("n_name"), asc_nulls_first("c_mktsegment"))
+      segmentGrouping(s, dir)(_.groupingSets(
+        Seq(Seq(col("n_name")), Seq(col("c_mktsegment"))),
+        col("n_name"), col("c_mktsegment")))
     }),
 
     "q_cube" -> ((s, dir) => {
@@ -1538,14 +1467,7 @@ object BBlock {
       // by the terminal watermark (global max − 1 h). Verified
       // row-for-row against the live stream at both SFs before the
       // oracle was written down.
-      val ranked = eventsUs(s, dir)
-        .select(col("event_type").as("topic"), col("ts"), col("event_id"))
-        .withColumn("arrival", lateArrival)
-      val batched = graft.streaming.StreamedBatch
-        .chunked(ranked, 10, col("arrival"), col("event_id"))
-      graft.streaming.StreamedBatch
-        .watermarkedWindowCounts(s, batched, nBatches = 10)
-        .orderBy(col("win_start"), col("topic"))
+      lateWindowCounts(s, eventsUs(s, dir), "1 hour", "1 hour")
     }),
 
     "q_watermark_decoupled_stream" -> ((s, dir) => {
@@ -1555,15 +1477,7 @@ object BBlock {
       // — the row that makes the horizon/window parameter split
       // observable under the oracle; same pinned engine model with
       // wm = lag-2 running max − 2 h and the 1 h window arithmetic
-      val ranked = eventsUs(s, dir)
-        .select(col("event_type").as("topic"), col("ts"), col("event_id"))
-        .withColumn("arrival", lateArrival)
-      val batched = graft.streaming.StreamedBatch
-        .chunked(ranked, 10, col("arrival"), col("event_id"))
-      graft.streaming.StreamedBatch
-        .watermarkedWindowCounts(s, batched, nBatches = 10,
-          horizon = "2 hours", windowDur = "1 hour")
-        .orderBy(col("win_start"), col("topic"))
+      lateWindowCounts(s, eventsUs(s, dir), "2 hours", "1 hour")
     }),
 
     "q_late_horizon_sweep" -> ((s, dir) => {
@@ -1632,6 +1546,200 @@ object BBlock {
       |      ELSE 0 END AS arrival
       |  FROM events
       |)""".stripMargin
+
+  /** The views and purchases of `ev` as q_attribution's impression and
+    * conversion sides (batch and streamed twin). */
+  private def attributionSides(ev: DataFrame): (DataFrame, DataFrame) =
+    (ev.filter(col("event_type") === "view")
+      .select(col("user_id"), col("ts").as("imp_ts"),
+        col("event_id").as("imp_id")),
+     ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("c_user_id"), col("ts").as("conv_ts"),
+        col("event_id").as("conv_id")))
+
+  /** Hourly window counts of the planted late-arrival stream in 10
+    * micro-batches under a `horizon` watermark (the watermark rows). */
+  private def lateWindowCounts(s: SparkSession, ev: DataFrame,
+      horizon: String, windowDur: String): DataFrame = {
+    val ranked = ev
+      .select(col("event_type").as("topic"), col("ts"), col("event_id"))
+      .withColumn("arrival", lateArrival)
+    val batched = graft.streaming.StreamedBatch
+      .chunked(ranked, 10, col("arrival"), col("event_id"))
+    graft.streaming.StreamedBatch
+      .watermarkedWindowCounts(s, batched, nBatches = 10,
+        horizon = horizon, windowDur = windowDur)
+      .orderBy(col("win_start"), col("topic"))
+  }
+
+  /** Per-(topic, day) event counts: the daily rollup of the volume
+    * anomaly and CUSUM rows. */
+  private def dailyCounts(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type").as("topic"), to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("n"))
+
+  /** Customer balances by (nation, segment) at the grouping levels that
+    * `group` picks (q_rollup, q_grouping_sets). */
+  private def segmentGrouping(s: SparkSession, dir: String)(
+      group: DataFrame => org.apache.spark.sql.RelationalGroupedDataset): DataFrame =
+    group(Tables.customer(s, dir).join(broadcast(Tables.nation(s, dir)),
+        col("c_nationkey") === col("n_nationkey")))
+      .agg(count(lit(1)).as("n"),
+        moneySum(dec2(col("c_acctbal"))).as("acctbal"),
+        grouping_id().cast("int").as("lvl"))
+      .orderBy(asc_nulls_first("n_name"), asc_nulls_first("c_mktsegment"))
+
+  /** Orders as 3-D points (price, recency, basket size). */
+  private def orderPoints3(s: SparkSession, dir: String)
+      : org.apache.spark.sql.Dataset[graft.plans.FrontPoint3] = {
+    val ss2 = s; import ss2.implicits._
+    val items = Tables.lineitem(s, dir).groupBy(col("l_orderkey"))
+      .agg(count(lit(1)).as("n_items"))
+    Tables.orders(s, dir)
+      .join(items, col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_orderkey").as("id"),
+        round(col("o_totalprice") * 100).cast("long").as("x"),
+        datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
+          .cast("long").as("y"),
+        col("n_items").as("z"))
+      .as[graft.plans.FrontPoint3]
+  }
+
+  /** The 3-D Pareto front of `pts` through one Skyline3Aggregator, one
+    * row per front point. */
+  private def front3(pts: org.apache.spark.sql.Dataset[graft.plans.FrontPoint3])
+      : DataFrame = {
+    val ss2 = pts.sparkSession; import ss2.implicits._
+    pts.groupByKey(_ => 0L)
+      .agg(new graft.plans.Skyline3Aggregator().toColumn.name("front"))
+      .toDF("k", "front")
+      .select(explode(col("front")).as("p"))
+      .select(col("p.id").as("o_orderkey"), col("p.x").as("price_c"),
+        col("p.y").as("day_n"), col("p.z").as("n_items"))
+      .orderBy(col("price_c").desc, col("day_n"), col("n_items"),
+        col("o_orderkey"))
+  }
+
+  /** q_attribution's SQL — shared verbatim by the streamed twin (the
+    * stream-stream interval join must emit the batch range join's exact
+    * match set). */
+  private lazy val attributionOracleSql: String =
+    """WITH i AS (
+      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS imp_ts, event_id AS imp_id
+      |  FROM events WHERE event_type = 'view'
+      |), c AS (
+      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS conv_ts, event_id AS conv_id
+      |  FROM events WHERE event_type = 'purchase'
+      |)
+      |SELECT i.user_id, imp_id, conv_id, imp_ts, conv_ts
+      |FROM i JOIN c
+      |  ON i.user_id = c.user_id
+      | AND conv_ts >= imp_ts
+      | AND conv_ts <= imp_ts + INTERVAL 3600 SECOND
+      |ORDER BY imp_id, conv_id""".stripMargin
+
+  /** q_sessionize's SQL — shared verbatim by the streamed twin (the
+    * streaming path must reproduce the batch relation bit for bit). */
+  private lazy val sessionizeOracleSql: String =
+    """WITH g AS (
+      |  SELECT user_id,
+      |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+      |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+      |         THEN 1 ELSE 0 END AS new_session
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+      |)
+      |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events
+      |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** q_rollup's and q_grouping_sets' SQL: customer balances by (nation,
+    * segment), grouped by `groupBy`. */
+  private def segmentGroupingSql(groupBy: String): String =
+    s"""SELECT n_name, c_mktsegment, count(*) AS n,
+       |  CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS acctbal,
+       |  CAST(GROUPING(n_name, c_mktsegment) AS INT) AS lvl
+       |FROM customer JOIN nation ON c_nationkey = n_nationkey
+       |GROUP BY $groupBy
+       |ORDER BY n_name NULLS FIRST, c_mktsegment NULLS FIRST""".stripMargin
+
+  /** The DuckDB model of Spark's executed watermark semantics for the
+    * watermark rows: chunk into 10 arrival batches, filter watermark =
+    * max event time through batch b−2 minus `horizonUs`, drop by window
+    * eviction, emit the hourly windows closed by the terminal watermark. */
+  private def watermarkDropsSql(horizonUs: Long): String =
+    s"""WITH $lateArrivalSql,
+       |r AS (
+       |  SELECT event_type AS topic, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+       |    row_number() OVER (ORDER BY arrival, event_id) - 1 AS rk,
+       |    count(*) OVER () AS n
+       |  FROM a
+       |), b AS (
+       |  SELECT topic, us, rk // greatest((n + 9) // 10, 1) AS batch FROM r
+       |), bm AS (
+       |  SELECT batch, max(us) AS bmax FROM b GROUP BY 1
+       |), wmt AS (
+       |  SELECT batch, max(bmax) OVER (ORDER BY batch
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
+       |    - $horizonUs AS wm
+       |  FROM bm
+       |), fin AS (
+       |  SELECT max(us) - $horizonUs AS fwm FROM b
+       |), kept AS (
+       |  SELECT topic,
+       |    (us // 3600000000) * 3600000000 AS wstart,
+       |    (us // 3600000000 + 1) * 3600000000 AS wend
+       |  FROM b JOIN wmt USING (batch)
+       |  WHERE wm IS NULL OR (us // 3600000000 + 1) * 3600000000 > wm
+       |)
+       |SELECT make_timestamp(wstart) AS win_start, topic,
+       |  count(*) AS cnt
+       |FROM kept, fin
+       |WHERE wend <= fwm
+       |GROUP BY 1, 2 ORDER BY win_start, topic""".stripMargin
+
+  /** SQL twin of [[dailyCounts]]: the CTE `daily`. */
+  private lazy val dailySql: String =
+    """daily AS (
+      |  SELECT event_type AS topic, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+      |    count(*) AS n
+      |  FROM events GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** [[dailySql]] densified per topic with n = 0 fillers over each
+    * topic's calendar span: the CTE `dense`. */
+  private lazy val denseDailySql: String =
+    s"""$dailySql, spans AS (
+       |  SELECT topic, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1
+       |), cal AS (
+       |  SELECT s.topic, CAST(u.d AS DATE) AS day
+       |  FROM spans s,
+       |    unnest(generate_series(CAST(s.d0 AS TIMESTAMP),
+       |      CAST(s.d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS u(d)
+       |), dense AS (
+       |  SELECT c.topic, c.day, CAST(COALESCE(dy.n, 0) AS BIGINT) AS n
+       |  FROM cal c LEFT JOIN daily dy ON dy.topic = c.topic AND dy.day = c.day
+       |)""".stripMargin
+
+  /** The trailing-week volume z-score over observed days, or over
+    * calendar days when `dense` (q_events_anomaly, q_events_anomaly_dense). */
+  private def volumeAnomalySql(dense: Boolean): String =
+    s"""WITH ${if (dense) denseDailySql else dailySql}, win AS (
+       |  SELECT topic, day, n,
+       |    count(n) OVER w AS w_n,
+       |    CAST(sum(n) OVER w AS BIGINT) AS w_sum,
+       |    CAST(sum(n * n) OVER w AS BIGINT) AS w_sum2
+       |  FROM ${if (dense) "dense" else "daily"}
+       |  WINDOW w AS (PARTITION BY topic ORDER BY day
+       |    ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
+       |)
+       |SELECT topic, day, n,
+       |  ROUND(w_sum / 7.0, 6) AS mean7,
+       |  CASE WHEN (w_sum2 - w_sum * 1.0 * w_sum / 7) / 7 > 0
+       |    THEN ROUND((n - w_sum / 7.0)
+       |      / sqrt((w_sum2 - w_sum * 1.0 * w_sum / 7) / 7), 6)
+       |  END AS z
+       |FROM win WHERE w_n = 7
+       |ORDER BY topic, day""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q10_returned" ->
@@ -2162,61 +2270,9 @@ object BBlock {
         |  ROUND(sr - lag(sr) OVER (PARTITION BY topic ORDER BY week), 6) AS drift
         |FROM j ORDER BY topic, week""".stripMargin,
 
-    "q_events_anomaly" ->
-      """WITH daily AS (
-        |  SELECT event_type AS topic, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), win AS (
-        |  SELECT topic, day, n,
-        |    count(n) OVER w AS w_n,
-        |    CAST(sum(n) OVER w AS BIGINT) AS w_sum,
-        |    CAST(sum(n * n) OVER w AS BIGINT) AS w_sum2
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY topic ORDER BY day
-        |    ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-        |)
-        |SELECT topic, day, n,
-        |  ROUND(w_sum / 7.0, 6) AS mean7,
-        |  CASE WHEN (w_sum2 - w_sum * 1.0 * w_sum / 7) / 7 > 0
-        |    THEN ROUND((n - w_sum / 7.0)
-        |      / sqrt((w_sum2 - w_sum * 1.0 * w_sum / 7) / 7), 6)
-        |  END AS z
-        |FROM win WHERE w_n = 7
-        |ORDER BY topic, day""".stripMargin,
+    "q_events_anomaly" -> volumeAnomalySql(dense = false),
 
-    "q_events_anomaly_dense" ->
-      """WITH daily AS (
-        |  SELECT event_type AS topic, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), spans AS (
-        |  SELECT topic, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1
-        |), cal AS (
-        |  SELECT s.topic, CAST(u.d AS DATE) AS day
-        |  FROM spans s,
-        |    unnest(generate_series(CAST(s.d0 AS TIMESTAMP),
-        |      CAST(s.d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS u(d)
-        |), dense AS (
-        |  SELECT c.topic, c.day, CAST(COALESCE(dy.n, 0) AS BIGINT) AS n
-        |  FROM cal c LEFT JOIN daily dy ON dy.topic = c.topic AND dy.day = c.day
-        |), win AS (
-        |  SELECT topic, day, n,
-        |    count(n) OVER w AS w_n,
-        |    CAST(sum(n) OVER w AS BIGINT) AS w_sum,
-        |    CAST(sum(n * n) OVER w AS BIGINT) AS w_sum2
-        |  FROM dense
-        |  WINDOW w AS (PARTITION BY topic ORDER BY day
-        |    ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-        |)
-        |SELECT topic, day, n,
-        |  ROUND(w_sum / 7.0, 6) AS mean7,
-        |  CASE WHEN (w_sum2 - w_sum * 1.0 * w_sum / 7) / 7 > 0
-        |    THEN ROUND((n - w_sum / 7.0)
-        |      / sqrt((w_sum2 - w_sum * 1.0 * w_sum / 7) / 7), 6)
-        |  END AS z
-        |FROM win WHERE w_n = 7
-        |ORDER BY topic, day""".stripMargin,
+    "q_events_anomaly_dense" -> volumeAnomalySql(dense = true),
 
     "q_rfm" ->
       """WITH base AS (
@@ -2343,21 +2399,7 @@ object BBlock {
         |ORDER BY c.user_id""".stripMargin,
 
     "q_cusum" ->
-      """WITH daily AS (
-        |  SELECT event_type AS topic, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), spans AS (
-        |  SELECT topic, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY 1
-        |), cal AS (
-        |  SELECT s.topic, CAST(u.d AS DATE) AS day
-        |  FROM spans s,
-        |    unnest(generate_series(CAST(s.d0 AS TIMESTAMP),
-        |      CAST(s.d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS u(d)
-        |), dense AS (
-        |  SELECT c.topic, c.day, CAST(COALESCE(dy.n, 0) AS BIGINT) AS n
-        |  FROM cal c LEFT JOIN daily dy ON dy.topic = c.topic AND dy.day = c.day
-        |), k AS (
+      s"""WITH $denseDailySql, k AS (
         |  SELECT topic, CAST(sum(n) AS BIGINT) // count(*) AS kk
         |  FROM dense GROUP BY 1
         |), pre AS (
@@ -2424,20 +2466,7 @@ object BBlock {
         |FROM g WHERE gap_us IS NOT NULL
         |GROUP BY 1 ORDER BY event_type""".stripMargin,
 
-    "q_attribution" ->
-      """WITH i AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS imp_ts, event_id AS imp_id
-        |  FROM events WHERE event_type = 'view'
-        |), c AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS conv_ts, event_id AS conv_id
-        |  FROM events WHERE event_type = 'purchase'
-        |)
-        |SELECT i.user_id, imp_id, conv_id, imp_ts, conv_ts
-        |FROM i JOIN c
-        |  ON i.user_id = c.user_id
-        | AND conv_ts >= imp_ts
-        | AND conv_ts <= imp_ts + INTERVAL 3600 SECOND
-        |ORDER BY imp_id, conv_id""".stripMargin,
+    "q_attribution" -> attributionOracleSql,
 
     // the executed-eviction relation: input rows below the lag-2
     // both-sides watermark drop; a cross-batch pair survives only if
@@ -2493,20 +2522,7 @@ object BBlock {
 
     // IDENTICAL SQL to q_attribution — the stream-stream interval join
     // must emit the batch range join's exact match set
-    "q_attribution_stream" ->
-      """WITH i AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS imp_ts, event_id AS imp_id
-        |  FROM events WHERE event_type = 'view'
-        |), c AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS conv_ts, event_id AS conv_id
-        |  FROM events WHERE event_type = 'purchase'
-        |)
-        |SELECT i.user_id, imp_id, conv_id, imp_ts, conv_ts
-        |FROM i JOIN c
-        |  ON i.user_id = c.user_id
-        | AND conv_ts >= imp_ts
-        | AND conv_ts <= imp_ts + INTERVAL 3600 SECOND
-        |ORDER BY imp_id, conv_id""".stripMargin,
+    "q_attribution_stream" -> attributionOracleSql,
 
     "q_range_join" ->
       """WITH c AS (
@@ -2645,21 +2661,10 @@ object BBlock {
         |WHERE c_acctbal > avg_bal
         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
 
-    "q_rollup" ->
-      """SELECT n_name, c_mktsegment, count(*) AS n,
-        |  CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS acctbal,
-        |  CAST(GROUPING(n_name, c_mktsegment) AS INT) AS lvl
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY ROLLUP(n_name, c_mktsegment)
-        |ORDER BY n_name NULLS FIRST, c_mktsegment NULLS FIRST""".stripMargin,
+    "q_rollup" -> segmentGroupingSql("ROLLUP(n_name, c_mktsegment)"),
 
     "q_grouping_sets" ->
-      """SELECT n_name, c_mktsegment, count(*) AS n,
-        |  CAST(ROUND(SUM(CAST(c_acctbal AS DECIMAL(12,2))), 2) AS DOUBLE) AS acctbal,
-        |  CAST(GROUPING(n_name, c_mktsegment) AS INT) AS lvl
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY GROUPING SETS ((n_name), (c_mktsegment))
-        |ORDER BY n_name NULLS FIRST, c_mktsegment NULLS FIRST""".stripMargin,
+      segmentGroupingSql("GROUPING SETS ((n_name), (c_mktsegment))"),
 
     "q_cube" ->
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
@@ -2705,17 +2710,7 @@ object BBlock {
         |  CAST(ROUND(SUM(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS value_sum
         |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
 
-    "q_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |)
-        |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
+    "q_sessionize" -> sessionizeOracleSql,
 
     "q_late_events" ->
       s"""WITH $lateArrivalSql, l AS (
@@ -2769,74 +2764,11 @@ object BBlock {
         |   OR (last_us + 1800000000) // 1000 < wmf.wm_ms
         |ORDER BY user_id, session_start""".stripMargin,
 
-    // the DuckDB model of Spark's executed watermark semantics (see the
-    // query comment): chunk into 10 arrival batches, filter watermark =
-    // max event time through batch b−2 minus 1 h, drop by window
-    // eviction, emit windows closed by the terminal watermark
-    "q_watermark_drops_stream" ->
-      s"""WITH $lateArrivalSql,
-         |r AS (
-         |  SELECT event_type AS topic, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-         |    row_number() OVER (ORDER BY arrival, event_id) - 1 AS rk,
-         |    count(*) OVER () AS n
-         |  FROM a
-         |), b AS (
-         |  SELECT topic, us, rk // greatest((n + 9) // 10, 1) AS batch FROM r
-         |), bm AS (
-         |  SELECT batch, max(us) AS bmax FROM b GROUP BY 1
-         |), wmt AS (
-         |  SELECT batch, max(bmax) OVER (ORDER BY batch
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-         |    - 3600000000 AS wm
-         |  FROM bm
-         |), fin AS (
-         |  SELECT max(us) - 3600000000 AS fwm FROM b
-         |), kept AS (
-         |  SELECT topic,
-         |    (us // 3600000000) * 3600000000 AS wstart,
-         |    (us // 3600000000 + 1) * 3600000000 AS wend
-         |  FROM b JOIN wmt USING (batch)
-         |  WHERE wm IS NULL OR (us // 3600000000 + 1) * 3600000000 > wm
-         |)
-         |SELECT make_timestamp(wstart) AS win_start, topic,
-         |  count(*) AS cnt
-         |FROM kept, fin
-         |WHERE wend <= fwm
-         |GROUP BY 1, 2 ORDER BY win_start, topic""".stripMargin,
+    "q_watermark_drops_stream" -> watermarkDropsSql(3600000000L),
 
-    // the drops model with horizon (2 h) decoupled from window width
-    // (1 h): only the two watermark constants change vs
-    // q_watermark_drops_stream — the window arithmetic stays hourly
-    "q_watermark_decoupled_stream" ->
-      s"""WITH $lateArrivalSql,
-         |r AS (
-         |  SELECT event_type AS topic, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-         |    row_number() OVER (ORDER BY arrival, event_id) - 1 AS rk,
-         |    count(*) OVER () AS n
-         |  FROM a
-         |), b AS (
-         |  SELECT topic, us, rk // greatest((n + 9) // 10, 1) AS batch FROM r
-         |), bm AS (
-         |  SELECT batch, max(us) AS bmax FROM b GROUP BY 1
-         |), wmt AS (
-         |  SELECT batch, max(bmax) OVER (ORDER BY batch
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-         |    - 7200000000 AS wm
-         |  FROM bm
-         |), fin AS (
-         |  SELECT max(us) - 7200000000 AS fwm FROM b
-         |), kept AS (
-         |  SELECT topic,
-         |    (us // 3600000000) * 3600000000 AS wstart,
-         |    (us // 3600000000 + 1) * 3600000000 AS wend
-         |  FROM b JOIN wmt USING (batch)
-         |  WHERE wm IS NULL OR (us // 3600000000 + 1) * 3600000000 > wm
-         |)
-         |SELECT make_timestamp(wstart) AS win_start, topic,
-         |  count(*) AS cnt
-         |FROM kept, fin
-         |WHERE wend <= fwm
-         |GROUP BY 1, 2 ORDER BY win_start, topic""".stripMargin,
+    // horizon (2 h) decoupled from window width: the window arithmetic
+    // stays hourly
+    "q_watermark_decoupled_stream" -> watermarkDropsSql(7200000000L),
 
     "q_late_horizon_sweep" ->
       Seq(600L, 3600L, 21600L).map { h =>
@@ -2857,16 +2789,6 @@ object BBlock {
 
     // IDENTICAL SQL to q_sessionize — the point of the row: the
     // streaming path must reproduce the batch relation bit-for-bit
-    "q_sessionize_stream" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |)
-        |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
+    "q_sessionize_stream" -> sessionizeOracleSql,
   )
 }

@@ -863,14 +863,7 @@ object CBlock {
     "text_pii" -> ((s, dir) => {
       // deterministic PII planting: every 3rd doc gets an email, every
       // 3rd+1 an IPv4 — the scrub pre-pass counted per source
-      val docs = Tables.documents(s, dir)
-      val suffix = when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit(" contact u"), col("doc_id"), lit("@example.com")))
-        .when(pmod(col("doc_id"), lit(3)) === 1,
-          concat(lit(" host 10.0."), pmod(col("doc_id"), lit(256)), lit(".7")))
-        .otherwise(lit(""))
-      TextAnalysis.piiCounts(
-          docs.withColumn("text", concat(col("text"), suffix)))
+      TextAnalysis.piiCounts(piiPlanted(Tables.documents(s, dir)))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("n_emails") + col("n_ips") > 0, 1L).otherwise(0L))
@@ -1273,19 +1266,7 @@ object CBlock {
       // decode via javax.imageio, emit dimensions + channel-weighted
       // pixel sum; undecodable payloads fall back to the stub's header
       // hash with decoded=false
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            val payload =
-              if (id % 7 == 0) Option(text).getOrElse("").getBytes("UTF-8")
-              else Multimodal.synthesizeBmp(id)
-            MediaRecord(id, payload, "", "", payload.length.toLong)
-          }
-        }
-      Multimodal.decodeFeatures(media).toDF()
+      Multimodal.decodeFeatures(synthMedia(s, dir))(s).toDF()
         .select(col("doc_id"), col("decoded"), col("width"), col("height"),
           col("px_sum"))
         .orderBy(col("doc_id"))
@@ -1313,23 +1294,9 @@ object CBlock {
       // bounds the true frequency dot product (collisions only
       // inflate), computed from model-state-sized grids instead of the
       // corpus-sized word-count join the exact column runs beside it
-      val toks = Tables.documents(s, dir)
-        .select(col("source"),
-          explode(graft.functions.Portable.tokens(col("text"))).as("word"))
-      val wc = toks.groupBy(col("source"), col("word"))
-        .agg(count(lit(1)).as("n"))
-      val exact = wc.select(col("source").as("source_a"),
-          col("word"), col("n").as("na"))
-        .join(wc.select(col("source").as("source_b"), col("word"),
-          col("n").as("nb")), Seq("word"))
-        .filter(col("source_a") < col("source_b"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(sum(col("na") * col("nb")).as("exact_dot"))
-      graft.operators.Sketches.cmsDot(toks, col("source"), col("word"))
-        .join(exact, Seq("source_a", "source_b"), "left")
-        .select(col("source_a"), col("source_b"), col("est_dot"),
-          coalesce(col("exact_dot"), lit(0L)).as("exact_dot"))
-        .orderBy(col("source_a"), col("source_b"))
+      val toks = sourceWords(Tables.documents(s, dir))
+      withExactDot(graft.operators.Sketches.cmsDot(toks, col("source"), col("word")),
+        toks)
     }),
 
     "sketch_cms_dot_stream" -> ((s, dir) => {
@@ -1340,22 +1307,8 @@ object CBlock {
       // derived from them lands on sketch_cms_dot's own oracle
       val docs = Tables.documents(s, dir)
       val grids = graft.streaming.StreamedBatch.cmsGridsByKeyStreamed(s, docs)
-      val toks = docs.select(col("source"),
-        explode(graft.functions.Portable.tokens(col("text"))).as("word"))
-      val wc = toks.groupBy(col("source"), col("word"))
-        .agg(count(lit(1)).as("n"))
-      val exact = wc.select(col("source").as("source_a"),
-          col("word"), col("n").as("na"))
-        .join(wc.select(col("source").as("source_b"), col("word"),
-          col("n").as("nb")), Seq("word"))
-        .filter(col("source_a") < col("source_b"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(sum(col("na") * col("nb")).as("exact_dot"))
-      graft.operators.Sketches.cmsDotFromGrids(grids)
-        .join(exact, Seq("source_a", "source_b"), "left")
-        .select(col("source_a"), col("source_b"), col("est_dot"),
-          coalesce(col("exact_dot"), lit(0L)).as("exact_dot"))
-        .orderBy(col("source_a"), col("source_b"))
+      withExactDot(graft.operators.Sketches.cmsDotFromGrids(grids),
+        sourceWords(docs))
     }),
 
     "sketch_freq_cms_stream" -> ((s, dir) => {
@@ -1522,16 +1475,7 @@ object CBlock {
       // O(keys) streaming aggregation state — the continuously-merged
       // table view a CDC consumer maintains; cdc_apply's own oracle
       // anchors the drained relation
-      val docs = Tables.documents(s, dir)
-      val base = docs.select(col("doc_id"), lit(0L).as("version"),
-        lit("I").as("op"), col("text"))
-      val upd = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select(col("doc_id"), lit(1L).as("version"), lit("U").as("op"),
-          concat(col("text"), lit(" updated")).as("text"))
-      val del = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select(col("doc_id"), lit(2L).as("version"), lit("D").as("op"),
-          lit(null).cast("string").as("text"))
-      val log = base.unionByName(upd).unionByName(del)
+      val log = cdcChangelog(Tables.documents(s, dir))
         .withColumn("batch", col("version"))
       graft.streaming.StreamedBatch.cdcApplied(s, log, nBatches = 3)
         .filter(col("op") =!= "D")
@@ -1548,18 +1492,9 @@ object CBlock {
       // window over the unioned changelog, deletes drop, the merge
       // shuffles once on the key; output pins the surviving version
       // and the final text hash
-      val docs = Tables.documents(s, dir)
-      val base = docs.select(col("doc_id"), lit(0L).as("version"),
-        lit("I").as("op"), col("text"))
-      val upd = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select(col("doc_id"), lit(1L).as("version"), lit("U").as("op"),
-          concat(col("text"), lit(" updated")).as("text"))
-      val del = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-        .select(col("doc_id"), lit(2L).as("version"), lit("D").as("op"),
-          lit(null).cast("string").as("text"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("version").desc)
-      base.unionByName(upd).unionByName(del)
+      cdcChangelog(Tables.documents(s, dir))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1 && col("op") =!= "D")
         .select(col("doc_id"), col("version"),
@@ -1591,12 +1526,7 @@ object CBlock {
       // LAST micro-batch (the repost shape), so each must collide with
       // its base; first = earliest (batch, id), oracle recomputes the
       // masked-key hash and the arrival argmin
-      val base = Tables.documents(s, dir)
-      val twins = base.filter(pmod(col("doc_id"), lit(13)) === 0)
-        .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      val stamped = base.unionByName(twins)
-        .withColumn("text",
-          concat(col("text"), lit(" req "), col("doc_id").cast("string")))
+      val stamped = templateTwins(Tables.documents(s, dir))
         .withColumn("batch", when(col("doc_id") >= 1000000L, 2L)
           .otherwise(pmod(col("doc_id"), lit(2L))))
       graft.streaming.StreamedBatch
@@ -1616,12 +1546,7 @@ object CBlock {
       // its own id — twins' raws diverge, masked keys collide, so the
       // detector must find exactly the planted groups. One agg on the
       // masked-key hash.
-      val base = Tables.documents(s, dir)
-      val twins = base.filter(pmod(col("doc_id"), lit(13)) === 0)
-        .withColumn("doc_id", col("doc_id") + lit(1000000L))
-      val stamped = base.unionByName(twins)
-        .withColumn("text",
-          concat(col("text"), lit(" req "), col("doc_id").cast("string")))
+      val stamped = templateTwins(Tables.documents(s, dir))
       val tmplKey = graft.plans.native.poly_hash(
         regexp_replace(col("text"), "[0-9]+", "#"))
       stamped
@@ -2036,14 +1961,7 @@ object CBlock {
           .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
             col("l_linenumber"), z.as("z")),
         Seq(col("z"), col("l_orderkey"), col("l_linenumber")), "rk")
-      ranked
-        .crossJoin(broadcast(ranked.agg(count(lit(1)).as("n"))))
-        .withColumn("file_id", expr("(rk * 32) div n"))
-        .groupBy(col("file_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("pk_min"), max(col("l_partkey")).as("pk_max"),
-          min(col("l_suppkey")).as("sk_min"), max(col("l_suppkey")).as("sk_max"))
-        .orderBy(col("file_id"))
+      fileRangeStats(rankedFiles(ranked))
     }),
 
     "shard_hilbert" -> ((s, dir) => {
@@ -2061,14 +1979,7 @@ object CBlock {
         col("l_partkey"), col("l_suppkey"), 16, "h")
       val ranked = Curation.globalRank(withH,
         Seq(col("h"), col("l_orderkey"), col("l_linenumber")), "rk")
-      ranked
-        .crossJoin(broadcast(ranked.agg(count(lit(1)).as("n"))))
-        .withColumn("file_id", expr("(rk * 32) div n"))
-        .groupBy(col("file_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("pk_min"), max(col("l_partkey")).as("pk_max"),
-          min(col("l_suppkey")).as("sk_min"), max(col("l_suppkey")).as("sk_max"))
-        .orderBy(col("file_id"))
+      fileRangeStats(rankedFiles(ranked))
     }),
 
     "shard_zorder_sampled" -> ((s, dir) => {
@@ -2090,16 +2001,7 @@ object CBlock {
           col("l_linenumber"))
         .withColumn("z", graft.functions.Portable
           .zValue(col("l_partkey"), col("l_suppkey"), 16))
-      val idStr = concat(col("l_orderkey").cast("string"), lit(":"),
-        col("l_linenumber").cast("string"))
-      val bounds = Curation.sampledRangeBounds(base, col("z"), idStr,
-        Seq(col("l_orderkey"), col("l_linenumber")), m = 1024, nFiles = 32)
-      base.withColumn("file_id", Curation.fileIdFor(bounds, col("z")))
-        .groupBy(col("file_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("pk_min"), max(col("l_partkey")).as("pk_max"),
-          min(col("l_suppkey")).as("sk_min"), max(col("l_suppkey")).as("sk_max"))
-        .orderBy(col("file_id"))
+      fileRangeStats(sampledFiles(base, col("z")))
     }),
 
     "shard_hilbert_sampled" -> ((s, dir) => {
@@ -2114,16 +2016,7 @@ object CBlock {
           .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
             col("l_linenumber")),
         col("l_partkey"), col("l_suppkey"), 16, "h")
-      val idStr = concat(col("l_orderkey").cast("string"), lit(":"),
-        col("l_linenumber").cast("string"))
-      val bounds = Curation.sampledRangeBounds(base, col("h"), idStr,
-        Seq(col("l_orderkey"), col("l_linenumber")), m = 1024, nFiles = 32)
-      base.withColumn("file_id", Curation.fileIdFor(bounds, col("h")))
-        .groupBy(col("file_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("l_partkey")).as("pk_min"), max(col("l_partkey")).as("pk_max"),
-          min(col("l_suppkey")).as("sk_min"), max(col("l_suppkey")).as("sk_max"))
-        .orderBy(col("file_id"))
+      fileRangeStats(sampledFiles(base, col("h")))
     }),
 
     "shard_hilbert_prune" -> ((s, dir) => {
@@ -2135,43 +2028,10 @@ object CBlock {
       // layout. Two two-phase ranks over ONE materialized base (the
       // 16-step interleave fold and the 16-step xy2d descent each
       // evaluated once); 64-row stats ⋈ 6-row broadcast probes
-      val ss = s; import ss.implicits._
       val base = graft.operators.Materialize(
-        graft.functions.Portable.withHilbert(
-          Tables.lineitem(s, dir)
-            .select(pmod(col("l_partkey"), lit(100L)).as("pk_bucket"),
-              col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
-            .withColumn("z", graft.functions.Portable
-              .zValue(col("pk_bucket"), col("l_suppkey"), 16)),
+        graft.functions.Portable.withHilbert(bucketedLines(s, dir),
           col("pk_bucket"), col("l_suppkey"), 16, "h"))
-      def fileStats(name: String,
-          order: Seq[org.apache.spark.sql.Column]) = {
-        val ranked = Curation.globalRank(base, order, "rk")
-        ranked
-          .crossJoin(broadcast(ranked.agg(count(lit(1)).as("n"))))
-          .withColumn("file_id", expr("(rk * 32) div n"))
-          .groupBy(col("file_id"))
-          .agg(min(col("pk_bucket")).as("pk_min"),
-            max(col("pk_bucket")).as("pk_max"),
-            min(col("l_suppkey")).as("sk_min"),
-            max(col("l_suppkey")).as("sk_max"))
-          .withColumn("layout", lit(name))
-      }
-      val stats = fileStats("hilbert",
-          Seq(col("h"), col("l_orderkey"), col("l_linenumber")))
-        .unionByName(fileStats("zorder",
-          Seq(col("z"), col("l_orderkey"), col("l_linenumber"))))
-      val probes = Seq(("pk_bucket", 3L), ("pk_bucket", 47L),
-        ("pk_bucket", 91L), ("suppkey", 2L), ("suppkey", 5L),
-        ("suppkey", 9L)).toDF("dim", "probe_val")
-      stats.join(broadcast(probes),
-          (col("dim") === "pk_bucket" && col("pk_min") <= col("probe_val")
-            && col("probe_val") <= col("pk_max")) ||
-          (col("dim") === "suppkey" && col("sk_min") <= col("probe_val")
-            && col("probe_val") <= col("sk_max")))
-        .groupBy(col("layout"), col("dim"), col("probe_val"))
-        .agg(count(lit(1)).as("files_hit"))
-        .orderBy(col("layout"), col("dim"), col("probe_val"))
+      probeFilesHit(base, Seq("hilbert" -> Seq(col("h")), "zorder" -> Seq(col("z"))))
     }),
 
     "shard_zorder_prune" -> ((s, dir) => {
@@ -2184,44 +2044,11 @@ object CBlock {
       // asymmetric 20:1 case where the wide key's high bits dominate).
       // Three two-phase ranks (no single-partition sort); the 96-row
       // stats relation joins a 6-row broadcast probe table
-      val ss = s; import ss.implicits._
       // materialized ONCE: the three layout ranks otherwise re-scan
       // lineitem and re-evaluate the 16-step interleave fold each
-      val base = graft.operators.Materialize(Tables.lineitem(s, dir)
-        .select(pmod(col("l_partkey"), lit(100L)).as("pk_bucket"),
-          col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
-        .withColumn("z", graft.functions.Portable
-          .zValue(col("pk_bucket"), col("l_suppkey"), 16)))
-      def fileStats(name: String,
-          order: Seq[org.apache.spark.sql.Column]) = {
-        val ranked = Curation.globalRank(base, order, "rk")
-        ranked
-          .crossJoin(broadcast(ranked.agg(count(lit(1)).as("n"))))
-          .withColumn("file_id", expr("(rk * 32) div n"))
-          .groupBy(col("file_id"))
-          .agg(min(col("pk_bucket")).as("pk_min"),
-            max(col("pk_bucket")).as("pk_max"),
-            min(col("l_suppkey")).as("sk_min"),
-            max(col("l_suppkey")).as("sk_max"))
-          .withColumn("layout", lit(name))
-      }
-      val stats = fileStats("zorder",
-          Seq(col("z"), col("l_orderkey"), col("l_linenumber")))
-        .unionByName(fileStats("pk_sorted",
-          Seq(col("pk_bucket"), col("l_orderkey"), col("l_linenumber"))))
-        .unionByName(fileStats("natural",
-          Seq(col("l_orderkey"), col("l_linenumber"))))
-      val probes = Seq(("pk_bucket", 3L), ("pk_bucket", 47L),
-        ("pk_bucket", 91L), ("suppkey", 2L), ("suppkey", 5L),
-        ("suppkey", 9L)).toDF("dim", "probe_val")
-      stats.join(broadcast(probes),
-          (col("dim") === "pk_bucket" && col("pk_min") <= col("probe_val")
-            && col("probe_val") <= col("pk_max")) ||
-          (col("dim") === "suppkey" && col("sk_min") <= col("probe_val")
-            && col("probe_val") <= col("sk_max")))
-        .groupBy(col("layout"), col("dim"), col("probe_val"))
-        .agg(count(lit(1)).as("files_hit"))
-        .orderBy(col("layout"), col("dim"), col("probe_val"))
+      val base = graft.operators.Materialize(bucketedLines(s, dir))
+      probeFilesHit(base, Seq("zorder" -> Seq(col("z")),
+        "pk_sorted" -> Seq(col("pk_bucket")), "natural" -> Nil))
     }),
 
     "dedup_contained" -> ((s, dir) => {
@@ -2313,14 +2140,7 @@ object CBlock {
     "text_redact" -> ((s, dir) => {
       // same deterministic PII planting as text_pii, then the redaction
       // TRANSFORM; byte-exact redacted text proven via portable hash
-      val docs = Tables.documents(s, dir)
-      val suffix = when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit(" contact u"), col("doc_id"), lit("@example.com")))
-        .when(pmod(col("doc_id"), lit(3)) === 1,
-          concat(lit(" host 10.0."), pmod(col("doc_id"), lit(256)), lit(".7")))
-        .otherwise(lit(""))
-      TextAnalysis.redactPii(
-          docs.withColumn("text", concat(col("text"), suffix)))
+      TextAnalysis.redactPii(piiPlanted(Tables.documents(s, dir)))
         .select(col("doc_id"), col("n_redactions"),
           graft.plans.native.poly_hash(col("redacted")).as("redacted_hash"))
         .orderBy(col("doc_id"))
@@ -3171,19 +2991,7 @@ object CBlock {
       // perceptual image hash through the REAL codec round-trip (same
       // media synthesis as mm_decode, incl. the %7 undecodable payloads
       // exercising the fallback)
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            val payload =
-              if (id % 7 == 0) Option(text).getOrElse("").getBytes("UTF-8")
-              else Multimodal.synthesizeBmp(id)
-            MediaRecord(id, payload, "", "", payload.length.toLong)
-          }
-        }
-      Multimodal.phashFeatures(media).toDF().orderBy(col("doc_id"))
+      Multimodal.phashFeatures(synthMedia(s, dir))(s).toDF().orderBy(col("doc_id"))
     }),
 
     "mm_phash_gate_stream" -> ((s, dir) => {
@@ -3319,25 +3127,41 @@ object CBlock {
           x => x.getField("line"))).as("text_clean"))
       .orderBy(col("doc_id"))
 
-  /** The planted-corpus → lines → support CTE chain both dedup_lines
-    * oracles share (lineLen = 10 tokens, support = distinct docs). */
-  private lazy val lineCtes: String =
+  /** The line-dedup corpus (`prefix` planted before every 3rd doc) cut
+    * into 10-token lines: `corpus`, `w` (tokens) and `ln` (lines with
+    * their id and the doc's line count). */
+  private def lineSplitCtes(prefix: String, ln: String): String =
     s"""corpus AS (
        |  SELECT doc_id,
-       |    CASE WHEN doc_id % 3 = 0 THEN '$lineHeader ' || text
+       |    CASE WHEN doc_id % 3 = 0 THEN '$prefix' || text
        |         ELSE text END AS text
        |  FROM documents
        |), w AS (
        |  SELECT doc_id, $toksSql AS t FROM corpus
-       |), ln AS (
+       |), $ln AS (
        |  SELECT doc_id, (off // 10) AS line_id,
        |    CAST((len(t) + 9) // 10 AS BIGINT) AS n_lines,
        |    array_to_string(list_slice(t, off + 1, off + 10), ' ') AS line
        |  FROM (SELECT doc_id, t, unnest(range(0, len(t), 10)) AS off
        |        FROM w WHERE len(t) > 0)
-       |), sup AS (
+       |)""".stripMargin
+
+  /** The planted-corpus → lines → support CTE chain both dedup_lines
+    * oracles share (lineLen = 10 tokens, support = distinct docs). */
+  private lazy val lineCtes: String =
+    s"""${lineSplitCtes(s"$lineHeader ", "ln")}, sup AS (
        |  SELECT line, count(DISTINCT doc_id) AS sup FROM ln GROUP BY line
        |)""".stripMargin
+
+  /** Each doc of [[lineCtes]] with its lines of support < 3 kept. */
+  private lazy val lineCleanSql: String =
+    """SELECT ln.doc_id, ln.n_lines,
+      |  CAST(count(*) FILTER (WHERE sup.sup < 3) AS BIGINT) AS n_kept,
+      |  COALESCE(array_to_string(
+      |    list(ln.line ORDER BY ln.line_id) FILTER (WHERE sup.sup < 3),
+      |    ' '), '') AS text_clean
+      |FROM ln JOIN sup USING (line)
+      |GROUP BY ln.doc_id, ln.n_lines""".stripMargin
 
   /** Inline portable poly-hash over a DuckDB string expression (the SQL
     * twin of HashOps.polyHashStr / Portable.polyHash). */
@@ -3400,6 +3224,531 @@ object CBlock {
        |  FROM (SELECT doc_id, $toksSql AS w,
        |          CAST(doc_id % 7 + 3 AS INT) AS k FROM documents)
        |)""".stripMargin
+
+  /** Each source's distinct character-7-gram hashes `g` (from `g0`),
+    * only those divisible by `mod` when `mod` > 1. */
+  private def sourceGramCtes(mod: Int): String =
+    s"""g0 AS (
+       |  SELECT source AS src,
+       |    unnest(list_distinct(CASE WHEN len(text) >= 8
+       |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
+       |      ELSE [${ph("text")}] END)) AS gram
+       |  FROM documents
+       |), g AS (SELECT DISTINCT src, gram FROM g0${
+         if (mod > 1) s" WHERE gram % $mod = 0" else ""})""".stripMargin
+
+  /** The exact gram Jaccard of every source pair over the grams of
+    * [[sourceGramCtes]] (`mod` > 1: a 1-in-`mod` hash sample, shared
+    * counts scaled back by `mod`). */
+  private def sourceOverlapSql(mod: Int): String =
+    s"""WITH ${sourceGramCtes(mod)},
+       |sizes AS (
+       |  SELECT src, count(*) AS n_grams FROM g GROUP BY 1
+       |), p AS (
+       |  SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_shared
+       |  FROM g a JOIN g b ON a.gram = b.gram AND a.src < b.src
+       |  GROUP BY 1, 2
+       |)
+       |SELECT source_a, source_b, ${
+         if (mod > 1) s"CAST(n_shared * $mod AS BIGINT) AS n_shared" else "n_shared"},
+       |  ROUND(n_shared / (sa.n_grams + sb.n_grams - n_shared), 6) AS jaccard,
+       |  CAST($mod AS BIGINT) AS domain_mod
+       |FROM p
+       |JOIN sizes sa ON sa.src = source_a
+       |JOIN sizes sb ON sb.src = source_b
+       |ORDER BY source_a, source_b""".stripMargin
+
+  /** Per source, the minimum of each of the 16 MinHash slots over its
+    * docs' signatures: `slots` (after `ssig`, over the minhash CTEs). */
+  private lazy val sourceSlotsCtes: String =
+    s"""${minhashPairsCte()},
+       |ssig AS (
+       |  SELECT d.source, s.sig FROM sig s JOIN documents d USING (doc_id)
+       |), slots AS (
+       |  SELECT source, i.i AS slot, min(sig[i.i + 1]) AS mh
+       |  FROM ssig, (SELECT unnest(range(0, 16)) AS i) i
+       |  GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** The template plant: `docs` plus an id-offset (+1000000) twin of
+    * every 13th doc, each text stamped with its own id. */
+  private def templateTwins(docs: DataFrame): DataFrame = {
+    val twins = docs.filter(pmod(col("doc_id"), lit(13)) === 0)
+      .withColumn("doc_id", col("doc_id") + lit(1000000L))
+    docs.unionByName(twins)
+      .withColumn("text",
+        concat(col("text"), lit(" req "), col("doc_id").cast("string")))
+  }
+
+  /** `docs` with PII planted: every 3rd doc gets an email appended,
+    * every 3rd+1 an IPv4 address. */
+  private def piiPlanted(docs: DataFrame): DataFrame =
+    docs.withColumn("text", concat(col("text"),
+      when(pmod(col("doc_id"), lit(3)) === 0,
+          concat(lit(" contact u"), col("doc_id"), lit("@example.com")))
+        .when(pmod(col("doc_id"), lit(3)) === 1,
+          concat(lit(" host 10.0."), pmod(col("doc_id"), lit(256)), lit(".7")))
+        .otherwise(lit(""))))
+
+  /** The (source, word) token stream of `docs`. */
+  private def sourceWords(docs: DataFrame): DataFrame =
+    docs.select(col("source"),
+      explode(graft.functions.Portable.tokens(col("text"))).as("word"))
+
+  /** A per-source-pair sketched dot `est_dot` next to the exact word
+    * frequency dot product of `toks` ([[sourceWords]]; 0 when no word is
+    * shared). */
+  private def withExactDot(est: DataFrame, toks: DataFrame): DataFrame = {
+    val wc = toks.groupBy(col("source"), col("word"))
+      .agg(count(lit(1)).as("n"))
+    val exact = wc.select(col("source").as("source_a"),
+        col("word"), col("n").as("na"))
+      .join(wc.select(col("source").as("source_b"), col("word"),
+        col("n").as("nb")), Seq("word"))
+      .filter(col("source_a") < col("source_b"))
+      .groupBy(col("source_a"), col("source_b"))
+      .agg(sum(col("na") * col("nb")).as("exact_dot"))
+    est
+      .join(exact, Seq("source_a", "source_b"), "left")
+      .select(col("source_a"), col("source_b"), col("est_dot"),
+        coalesce(col("exact_dot"), lit(0L)).as("exact_dot"))
+      .orderBy(col("source_a"), col("source_b"))
+  }
+
+  /** The planted changelog of `docs`: the snapshot (version 0), updates
+    * of every 5th doc (1) and deletes of every 7th (2). */
+  private def cdcChangelog(docs: DataFrame): DataFrame = {
+    val base = docs.select(col("doc_id"), lit(0L).as("version"),
+      lit("I").as("op"), col("text"))
+    val upd = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+      .select(col("doc_id"), lit(1L).as("version"), lit("U").as("op"),
+        concat(col("text"), lit(" updated")).as("text"))
+    val del = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
+      .select(col("doc_id"), lit(2L).as("version"), lit("D").as("op"),
+        lit(null).cast("string").as("text"))
+    base.unionByName(upd).unionByName(del)
+  }
+
+  /** Each ranked row's file of 32: `(rk * 32) div n`, exact. */
+  private def rankedFiles(ranked: DataFrame): DataFrame =
+    ranked
+      .crossJoin(broadcast(ranked.agg(count(lit(1)).as("n"))))
+      .withColumn("file_id", expr("(rk * 32) div n"))
+
+  /** Each row's file of 32 by cut points on `key` from a deterministic
+    * 1024-row sample's quantiles (the sampled layout writers). */
+  private def sampledFiles(base: DataFrame, key: Column): DataFrame = {
+    val idStr = concat(col("l_orderkey").cast("string"), lit(":"),
+      col("l_linenumber").cast("string"))
+    val bounds = Curation.sampledRangeBounds(base, key, idStr,
+      Seq(col("l_orderkey"), col("l_linenumber")), m = 1024, nFiles = 32)
+    base.withColumn("file_id", Curation.fileIdFor(bounds, key))
+  }
+
+  /** Rows and [min,max] footer ranges of (l_partkey, l_suppkey) per file. */
+  private def fileRangeStats(files: DataFrame): DataFrame =
+    files.groupBy(col("file_id"))
+      .agg(count(lit(1)).as("n_rows"),
+        min(col("l_partkey")).as("pk_min"), max(col("l_partkey")).as("pk_max"),
+        min(col("l_suppkey")).as("sk_min"), max(col("l_suppkey")).as("sk_max"))
+      .orderBy(col("file_id"))
+
+  /** lineitem on the comparable-cardinality dims of the pruning rows
+    * (pk_bucket = l_partkey % 100, l_suppkey) with their Morton key `z`. */
+  private def bucketedLines(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(pmod(col("l_partkey"), lit(100L)).as("pk_bucket"),
+        col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
+      .withColumn("z", graft.functions.Portable
+        .zValue(col("pk_bucket"), col("l_suppkey"), 16))
+
+  /** For 6 point probes on either dim of `base` ([[bucketedLines]] plus
+    * the layouts' keys), how many of each layout's 32 files' [min,max]
+    * ranges a scan must touch. A layout ranks rows by its `keys`, then
+    * (l_orderkey, l_linenumber). */
+  private def probeFilesHit(base: DataFrame,
+      layouts: Seq[(String, Seq[Column])]): DataFrame = {
+    val ss = base.sparkSession; import ss.implicits._
+    def fileStats(name: String, keys: Seq[Column]) =
+      rankedFiles(Curation.globalRank(base,
+          keys ++ Seq(col("l_orderkey"), col("l_linenumber")), "rk"))
+        .groupBy(col("file_id"))
+        .agg(min(col("pk_bucket")).as("pk_min"),
+          max(col("pk_bucket")).as("pk_max"),
+          min(col("l_suppkey")).as("sk_min"),
+          max(col("l_suppkey")).as("sk_max"))
+        .withColumn("layout", lit(name))
+    val stats = layouts.map { case (name, keys) => fileStats(name, keys) }
+      .reduce(_ unionByName _)
+    val probes = Seq(("pk_bucket", 3L), ("pk_bucket", 47L),
+      ("pk_bucket", 91L), ("suppkey", 2L), ("suppkey", 5L),
+      ("suppkey", 9L)).toDF("dim", "probe_val")
+    stats.join(broadcast(probes),
+        (col("dim") === "pk_bucket" && col("pk_min") <= col("probe_val")
+          && col("probe_val") <= col("pk_max")) ||
+        (col("dim") === "suppkey" && col("sk_min") <= col("probe_val")
+          && col("probe_val") <= col("sk_max")))
+      .groupBy(col("layout"), col("dim"), col("probe_val"))
+      .agg(count(lit(1)).as("files_hit"))
+      .orderBy(col("layout"), col("dim"), col("probe_val"))
+  }
+
+  /** The 16-bit Morton key of (`a`, l_suppkey) as integer arithmetic,
+    * `a`'s bit above l_suppkey's at each level. */
+  private def zTermsSql(a: String): String = (0 until 16).map { i =>
+    s"(($a // ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
+      s" + ((l_suppkey // ${1L << i}) % 2) * ${1L << (2 * i)}"
+  }.mkString(" + ")
+
+  /** lineitem rows of `from` ranked by `key` into 32 files, with each
+    * file's rows and (l_partkey, l_suppkey) [min,max] ranges. */
+  private def rankedFileStatsSql(key: String, from: String): String =
+    s"""r AS (
+       |  SELECT *,
+       |    row_number() OVER (ORDER BY $key, l_orderkey, l_linenumber) - 1 AS rk
+       |  FROM $from
+       |), n AS (SELECT count(*) AS n FROM lineitem)
+       |SELECT (rk * 32) // n AS file_id, count(*) AS n_rows,
+       |  min(l_partkey) AS pk_min, max(l_partkey) AS pk_max,
+       |  min(l_suppkey) AS sk_min, max(l_suppkey) AS sk_max
+       |FROM r, n GROUP BY 1 ORDER BY file_id""".stripMargin
+
+  /** SQL twin of [[probeFilesHit]]: `keyCtes` adds the layout keys to
+    * `z0` (the bucketed lineitem) as `from`; a layout is a name and its
+    * leading sort key ("" for arrival order). */
+  private def probePruneSql(keyCtes: String, from: String,
+      layouts: Seq[(String, String)]): String = {
+    def layoutCte(name: String, key: String): String =
+      s"""SELECT '$name' AS layout, (rk * 32) // n AS file_id,
+         |    min(pk_bucket) AS pk_min, max(pk_bucket) AS pk_max,
+         |    min(l_suppkey) AS sk_min, max(l_suppkey) AS sk_max
+         |  FROM (SELECT $from.*,
+         |      row_number() OVER (ORDER BY ${
+           if (key.isEmpty) "" else s"$key, "}l_orderkey, l_linenumber) - 1 AS rk FROM $from), n
+         |  GROUP BY 1, 2""".stripMargin
+    s"""WITH z0 AS (
+       |  SELECT l_partkey % 100 AS pk_bucket, l_suppkey, l_orderkey,
+       |    l_linenumber
+       |  FROM lineitem
+       |),
+       |$keyCtes, n AS (SELECT count(*) AS n FROM lineitem),
+       |f AS (
+       |  ${layouts.map { case (n, k) => layoutCte(n, k) }.mkString("\n  UNION ALL\n  ")}
+       |), p AS (
+       |  SELECT * FROM (VALUES ('pk_bucket', 3), ('pk_bucket', 47),
+       |    ('pk_bucket', 91), ('suppkey', 2), ('suppkey', 5),
+       |    ('suppkey', 9)) AS t(dim, probe_val)
+       |)
+       |SELECT f.layout, p.dim, CAST(p.probe_val AS BIGINT) AS probe_val,
+       |  count(*) AS files_hit
+       |FROM f JOIN p ON
+       |  (p.dim = 'pk_bucket' AND f.pk_min <= p.probe_val
+       |    AND p.probe_val <= f.pk_max) OR
+       |  (p.dim = 'suppkey' AND f.sk_min <= p.probe_val
+       |    AND p.probe_val <= f.sk_max)
+       |GROUP BY 1, 2, 3
+       |ORDER BY layout, dim, probe_val""".stripMargin
+  }
+
+  /** One media record per doc: a synthesized BMP, or (docs ≡ 0 mod 7)
+    * the text as an undecodable payload that exercises the fallback. */
+  private def synthMedia(s: SparkSession, dir: String)
+      : org.apache.spark.sql.Dataset[MediaRecord] = {
+    implicit val ss: SparkSession = s
+    import ss.implicits._
+    Tables.documents(s, dir)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions { it =>
+        it.map { case (id, text) =>
+          val payload =
+            if (id % 7 == 0) Option(text).getOrElse("").getBytes("UTF-8")
+            else Multimodal.synthesizeBmp(id)
+          MediaRecord(id, payload, "", "", payload.length.toLong)
+        }
+      }
+  }
+
+  /** The synthetic images of the media rows as SQL: `dims` (each doc's
+    * width and height) and `px` (each decodable doc's pixel values, with
+    * their raster position when `withPos`). */
+  private def mediaPixelCtes(withPos: Boolean): String =
+    s"""dims AS (
+       |  SELECT doc_id, text,
+       |    4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
+       |  FROM documents
+       |), px AS (
+       |  SELECT d.doc_id,${if (withPos) " y.y * d.w + x.x AS pos," else ""}
+       |    (d.doc_id * 31 + x.x * 7 + y.y * 13) % 256
+       |      + 2 * ((d.doc_id * 17 + x.x * 3 + y.y * 5) % 256)
+       |      + 4 * ((x.x + y.y * 11) % 256) AS v
+       |  FROM dims d
+       |  JOIN (SELECT unnest(range(0, 9)) AS x) x ON x.x < d.w
+       |  JOIN (SELECT unnest(range(0, 7)) AS y) y ON y.y < d.h
+       |  WHERE d.doc_id % 7 <> 0
+       |)""".stripMargin
+
+  /** One row per doc of the media rows: decoded, dimensions, and the
+    * column `feature` of the CTE `feats` (joined as `a`), or the header hash
+    * for an undecodable payload. */
+  private def mediaRowsSql(feats: String, a: String, feature: String): String =
+    s"""SELECT d.doc_id, d.doc_id % 7 <> 0 AS decoded,
+       |  CAST(CASE WHEN d.doc_id % 7 <> 0 THEN d.w ELSE 0 END AS BIGINT) AS width,
+       |  CAST(CASE WHEN d.doc_id % 7 <> 0 THEN d.h ELSE 0 END AS BIGINT) AS height,
+       |  CASE WHEN d.doc_id % 7 <> 0 THEN $a.$feature
+       |       ELSE ${ph("substr(d.text, 1, 16)")} END AS $feature
+       |FROM dims d LEFT JOIN $feats $a ON d.doc_id = $a.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** One BPE merge of the pair `b` (`b.l`, `b.r`) over the
+    * chr(31)-separated symbols `enc`. */
+  private lazy val bpeMergeSql: String =
+    """list_reduce(list_prepend(CAST('' AS VARCHAR),
+      |      string_split(enc, chr(31))), (acc, s) ->
+      |      CASE WHEN acc = '' THEN s
+      |           WHEN (acc = b.l OR ends_with(acc, chr(31) || b.l)) AND s = b.r
+      |             THEN acc || s
+      |           ELSE acc || chr(31) || s END)""".stripMargin
+
+  /** Per label of the vectors `from`, the decimal-exact coordinate sums
+    * `sxs` and member count `n_label`: the CTE `cen` (after `c0`, `comps`). */
+  private def labelCentroidCtes(from: String): String =
+    s"""c0 AS (
+       |  SELECT label, generate_subscripts(embedding, 1) AS dim,
+       |    unnest(embedding) AS x
+       |  FROM $from
+       |), comps AS (
+       |  SELECT label, dim,
+       |    SUM(CAST(CAST(x AS DOUBLE) AS DECIMAL(20,9))) AS sx, count(*) AS n
+       |  FROM c0 GROUP BY 1, 2
+       |), cen AS (
+       |  SELECT label, max(n) AS n_label,
+       |    list(CAST(sx AS DOUBLE) ORDER BY dim) AS sxs
+       |  FROM comps GROUP BY 1
+       |)""".stripMargin
+
+  /** The minhash candidate pairs that agree on ≥ 8 of 16 slots, as the
+    * edge CTE `name(a, b)` (after the minhash CTEs). */
+  private def minhashEdgeCtes(name: String): String =
+    s"""${minhashPairsCte()},
+       |$name AS (
+       |  SELECT p.doc_a AS a, p.doc_b AS b
+       |  FROM pairs p
+       |  JOIN sig sa ON p.doc_a = sa.doc_id
+       |  JOIN sig sb ON p.doc_b = sb.doc_id
+       |  WHERE list_sum(list_transform(range(1, 17), i ->
+       |    CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) >= 8
+       |)""".stripMargin
+
+  /** Each non-empty doc's token count and running token end per source
+    * in id order (`t`, `s`): the sequence-packing rows' input. */
+  private lazy val packRunCtes: String =
+    s"""t AS (
+       |  SELECT source, doc_id, len($toksSql) AS n_tok FROM documents
+       |), s AS (
+       |  SELECT source, doc_id, n_tok,
+       |    CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id)
+       |      AS BIGINT) AS tok_end
+       |  FROM t WHERE n_tok > 0
+       |)""".stripMargin
+
+  /** The docs `d` that pass every configured curation stage of
+    * [[curationCtes]] (language, component representative, quality,
+    * not benchmark, not contaminated), as a FROM ... WHERE clause. */
+  private lazy val curatedDocsSql: String =
+    """  FROM documents d
+      |  JOIN q ON d.doc_id = q.doc_id
+      |  LEFT JOIN labels l ON d.doc_id = l.ldoc
+      |  WHERE d.lang IN ('en','es','fr')
+      |    AND (l.ldoc IS NULL OR l.cl = d.doc_id)
+      |    AND q.quality >= 0.6
+      |    AND d.doc_id % 97 <> 0
+      |    AND d.doc_id NOT IN (SELECT doc_id FROM cont)""".stripMargin
+
+  /** Each doc's distinct character-7-gram hashes (of the docs `where`
+    * keeps): the CTE `g`. */
+  private def docGramCte(where: String = ""): String =
+    s"""g AS (
+       |  SELECT doc_id,
+       |    unnest(list_distinct(CASE WHEN len(text) >= 8
+       |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
+       |      ELSE [${ph("text")}] END)) AS gram
+       |  FROM documents$where
+       |)""".stripMargin
+
+  /** The decontamination screen over [[docGramCte]]`(where)`: `bg` the
+    * grams of the benchmark split (doc_id % 97 = 0) with df <= 2, and
+    * `cont` the other docs sharing one of them. */
+  private def contaminationCtes(where: String): String =
+    s"""${docGramCte(where)}, gdf AS (
+       |  SELECT gram, count(*) AS df FROM g GROUP BY 1
+       |), bg AS (
+       |  SELECT DISTINCT gram FROM g JOIN gdf USING (gram)
+       |  WHERE doc_id % 97 = 0 AND df <= 2
+       |), cont AS (
+       |  SELECT DISTINCT doc_id FROM g JOIN bg USING (gram)
+       |  WHERE doc_id % 97 <> 0
+       |)""".stripMargin
+
+  /** A gram's 3 Bloom filter positions of 4096. */
+  private lazy val bloomPosSql: String =
+    """list_transform(range(0, 3), j ->
+      |    (gram * (((j+1) * 2654435761) % 2147483647)
+      |      + ((j+1) * 40503) % 2147483647) % 2147483647 % 4096)""".stripMargin
+
+  /** The Bloom filter's set bits `bpos` over the grams of `from`. */
+  private def bloomBitsCte(from: String): String =
+    s"""bpos AS (
+       |  SELECT DISTINCT unnest($bloomPosSql) AS pos
+       |  FROM $from
+       |)""".stripMargin
+
+  /** The Bloom gate over [[docGramCte]]`()`: the benchmark docs' (id % 97 = 0)
+    * bits, and per corpus doc and gram the number `c` of its positions
+    * set (`hit`; all 3 set = a maybe-shared gram). */
+  private lazy val bloomHitCtes: String =
+    s"""${bloomBitsCte("g WHERE doc_id % 97 = 0")}, cpos AS (
+       |  SELECT doc_id, gram, unnest($bloomPosSql) AS pos
+       |  FROM g WHERE doc_id % 97 <> 0
+       |), hit AS (
+       |  SELECT doc_id, gram, count(*) AS c
+       |  FROM cpos JOIN bpos USING (pos)
+       |  GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** The hashed-token quality classifier: each doc's token count and
+    * score (`sc`, over `d`), the benchmark docs left out when
+    * `benchHeldOut`. */
+  private def classifierCtes(benchHeldOut: Boolean): String =
+    s"""d AS (
+       |  SELECT doc_id, lang, $toksSql AS toks FROM documents${
+         if (benchHeldOut) "\n  WHERE doc_id % 97 <> 0" else ""}
+       |), sc AS (
+       |  SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tok,
+       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |      list_transform(toks, t -> (${ph("t")} % 2001) - 1000)),
+       |      (a, x) -> a + x) AS score
+       |  FROM d
+       |)""".stripMargin
+
+  /** quality_classifier's SQL; the streamed twin adds the shard key. */
+  private def classifierSql(withShard: Boolean): String =
+    s"""WITH ${classifierCtes(benchHeldOut = false)}
+       |SELECT doc_id, lang, n_tok, score, score > 0 AS pred${
+         if (withShard) s",\n  ${ph("CAST(doc_id AS VARCHAR)")} % 16 AS shard" else ""}
+       |FROM sc ORDER BY doc_id""".stripMargin
+
+  /** dedup_spans' SQL: the 16-token spans of each doc that start at the
+    * values `v` of the list `starts` (the slice after token `lo`), hashed
+    * and counted over docs, kept where ≥ 2 docs share one. */
+  private def spanCountsSql(starts: String, v: String, lo: String): String =
+    s"""WITH t AS (
+       |  SELECT doc_id, $toksSql AS w FROM documents
+       |), c AS (
+       |  SELECT doc_id, unnest($starts) AS $v, w
+       |  FROM t WHERE len(w) >= 16
+       |), s AS (
+       |  SELECT doc_id,
+       |    ${ph(s"array_to_string(w[$lo+1 : $lo+16], ' ')")} AS span_hash
+       |  FROM c
+       |)
+       |SELECT span_hash, count(DISTINCT doc_id) AS n_docs,
+       |  count(*) AS n_occ, min(doc_id) AS min_doc
+       |FROM s GROUP BY 1
+       |HAVING count(DISTINCT doc_id) >= 2
+       |ORDER BY span_hash""".stripMargin
+
+  /** The span cascade's first stage over docs `src` (`doc_id`, tokens
+    * `w`): the hashes of the 16-token spans every 8 tokens (`<p>sh`),
+    * those that ≥ 2 docs share (`<p>hot`) and their docs (`<p>cand`). */
+  private def spanCandCtes(p: String, src: String, w: String): String =
+    s"""${p}sh AS (
+       |  SELECT doc_id,
+       |    ${ph(s"array_to_string($w[st+1 : st+16], ' ')")} AS span_hash
+       |  FROM (SELECT doc_id, unnest(range(0, len($w) - 16 + 1, 8)) AS st, $w
+       |        FROM $src WHERE len($w) >= 16)
+       |), ${p}hot AS (
+       |  SELECT span_hash FROM ${p}sh GROUP BY 1
+       |  HAVING count(DISTINCT doc_id) >= 2
+       |), ${p}cand AS (
+       |  SELECT DISTINCT doc_id FROM ${p}sh JOIN ${p}hot USING (span_hash)
+       |)""".stripMargin
+
+  /** The exact shared-span islands over docs `src` (`doc_id`, tokens
+    * `w`), only over the `<p>cand` docs when `cand`: every 16-token
+    * window (`<p>wins`), the windows ≥ 2 docs share (`<p>shr`), their
+    * positions (`<p>mk`) and the runs of consecutive positions
+    * (`<p>isl`, one `g` per run). */
+  private def spanIslandCtes(p: String, src: String, w: String,
+      cand: Boolean): String =
+    s"""${p}wins AS (
+       |  SELECT doc_id, off AS pos,
+       |    array_to_string($w[off + 1 : off + 16], ' ') AS wtext
+       |  FROM (SELECT $src.doc_id, $src.$w, unnest(range(0, len($src.$w) - 16 + 1)) AS off
+       |        FROM $src${if (cand) s" JOIN ${p}cand USING (doc_id)" else ""} WHERE len($src.$w) >= 16)
+       |), ${p}shr AS (
+       |  SELECT wtext FROM ${p}wins GROUP BY wtext
+       |  HAVING count(DISTINCT doc_id) >= 2
+       |), ${p}mk AS (
+       |  SELECT w2.doc_id, w2.pos FROM ${p}wins w2 JOIN ${p}shr USING (wtext)
+       |), ${p}isl AS (
+       |  SELECT doc_id, pos,
+       |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
+       |  FROM ${p}mk
+       |)""".stripMargin
+
+  /** One row per island of [[spanIslandCtes]] (prefix ""). */
+  private lazy val spanIslandRowsSql: String =
+    """SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
+      |  CAST(max(pos) + 15 AS BIGINT) AS span_end,
+      |  CAST(count(*) AS BIGINT) AS n_wins
+      |FROM isl GROUP BY doc_id, g
+      |ORDER BY doc_id, span_start""".stripMargin
+
+  /** The character-trigram language profiles over `from`: `g` (each
+    * doc's distinct trigram hashes), `prof` (each language's 20 most
+    * frequent grams) and `scored` (per doc and profile, the grams they
+    * share). With `holdout`, even ids train the profiles and only odd
+    * ids are scored. */
+  private def langProfileCtes(from: String, holdout: Boolean = false): String = {
+    def ifHoldout(sql: String): String = if (holdout) sql else ""
+    s"""g AS (
+       |  SELECT doc_id, lang,${ifHoldout(" doc_id % 2 = 0 AS is_train,")}
+       |    unnest(list_distinct(CASE WHEN len(text) >= 3
+       |      THEN list_transform(range(1, len(text) - 1), i -> ${ph("text[i:i+2]")})
+       |      ELSE [${ph("text")}] END)) AS gram
+       |  FROM $from
+       |), prof AS (
+       |  SELECT lang AS profile_lang, gram
+       |  FROM (
+       |    SELECT lang, gram, count(*) AS cnt,
+       |      row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, gram) AS rk
+       |    FROM g ${ifHoldout("WHERE is_train ")}GROUP BY lang, gram
+       |  ) WHERE rk <= 20
+       |), scored AS (
+       |  SELECT g.doc_id, p.profile_lang, count(*) AS score
+       |  FROM g JOIN prof p ON g.gram = p.gram${ifHoldout("\n  WHERE NOT g.is_train")}
+       |  GROUP BY g.doc_id, p.profile_lang
+       |)""".stripMargin
+  }
+
+  /** Confusion shares (true `lang` × predicted) of the trigram profile
+    * predictions over the planted corpus `from` that `plantedCtes` builds. */
+  private def langProfileConfusionSql(plantedCtes: String, from: String,
+      holdout: Boolean): String =
+    s"""WITH $plantedCtes, ${langProfileCtes(from, holdout)}, preds AS (
+       |  SELECT doc_id, profile_lang AS pred_lang
+       |  FROM scored
+       |  QUALIFY row_number() OVER (PARTITION BY doc_id
+       |    ORDER BY score DESC, profile_lang) = 1
+       |), c AS (
+       |  SELECT $from.lang, preds.pred_lang, count(*) AS n
+       |  FROM preds JOIN $from ON preds.doc_id = $from.doc_id
+       |  GROUP BY 1, 2
+       |)
+       |SELECT lang, pred_lang, n,
+       |  round(CAST(n AS DOUBLE)
+       |    / (SUM(n) OVER (PARTITION BY lang)), 6) AS share
+       |FROM c ORDER BY lang, pred_lang""".stripMargin
 
   /** [[langPlantedCte]] extended with the holdout row's ambiguous test
     * docs (`pl2(doc_id, lang, text)`) — the twin of [[langHoldoutDocs]]. */
@@ -3753,6 +4102,20 @@ object CBlock {
        |)""".stripMargin
   }
 
+  /** The HLL estimate per (event_type, time bucket `b` = `bucket`) next
+    * to the exact distinct user count. */
+  private def hllPerBucketSql(b: String, bucket: String): String =
+    s"""WITH ${hllCtes(s"event_type, $b", s"event_type, $bucket AS $b")},
+       |ex AS (
+       |  SELECT event_type, $bucket AS $b,
+       |    count(DISTINCT user_id) AS exact
+       |  FROM events GROUP BY 1, 2
+       |)
+       |SELECT est.event_type, est.$b, ex.exact,
+       |  CAST(occupied AS BIGINT) AS occupied, hll_est
+       |FROM est JOIN ex ON est.event_type = ex.event_type AND est.$b = ex.$b
+       |ORDER BY est.event_type, est.$b""".stripMargin
+
   /** sketch_hll's oracle (shared verbatim with the streaming-maintained
     * register twin). */
   private lazy val hllOracleSql: String =
@@ -3798,10 +4161,6 @@ object CBlock {
        |  AND est.day = ex.day
        |ORDER BY est.event_type, est.day""".stripMargin
 
-  /** emb_pca's oracle: the 3-step integer power iteration unrolled as
-    * CTEs over a `(vec_id, embedding)` relation (shared with the
-    * planted-cluster twin — `prefix` carries the WITH head so the
-    * planted relation's CTE can be prepended). */
   /** Trigram Kneser–Ney CTE chain ending in `kn3(w1, w2, w3, c123,
     * c12, n1p_fwd, n1p_bwd, t_types, p_kn)` plus the tokenized corpus
     * `w(doc_id, t)` (shared by lm_kn_trigram and lm_kn3_score). */
@@ -3838,18 +4197,6 @@ object CBlock {
     * `q(vec_id, dim, q)` (shared by emb_pca, its planted twin, and the
     * emb_pca_project readout). */
   private def pcaChainCtes(from: String): String = {
-    val iterCtes = (1 to 3).map { k =>
-      s"""u$k AS (
-         |  SELECT g.i, CAST(SUM(g.g * v.v) AS BIGINT) AS u
-         |  FROM g JOIN v${k - 1} v ON g.j = v.i GROUP BY 1
-         |), m$k AS (
-         |  SELECT greatest(max(abs(u)) // 1000000, 1) AS md FROM u$k
-         |), v$k AS (
-         |  SELECT i, (CASE WHEN u < 0 THEN -1 ELSE 1 END)
-         |    * (abs(u) // md) AS v
-         |  FROM u$k, m$k
-         |)""".stripMargin
-    }.mkString(",\n")
     s"""q AS (
        |  SELECT vec_id, d.d AS dim,
        |    CAST(floor(CAST(embedding[d.d + 1] AS DOUBLE) * 1000000) AS BIGINT)
@@ -3865,28 +4212,30 @@ object CBlock {
        |), v0 AS (
        |  SELECT unnest(range(0, 64)) AS i, CAST(1000000 AS BIGINT) AS v
        |),
-       |$iterCtes""".stripMargin
+       |${powerIterCtes("g", "u", "m", "v")}""".stripMargin
   }
 
-  /** Deflation + second power loop over [[pcaChainCtes]]'s g/v3 —
-    * mirrors Similarity.pcaTop2's integer arithmetic step for step
-    * (every div operand non-negative via the sign/abs spelling). */
+  /** Three power-iteration steps on the lattice matrix `g` from the
+    * vector `<v>0`: products `<u>k`, scales `<m>k` and the rescaled
+    * vectors `<v>1`..`<v>3`. */
+  private def powerIterCtes(g: String, u: String, m: String, v: String): String =
+    (1 to 3).map { k =>
+      s"""$u$k AS (
+         |  SELECT g.i, CAST(SUM(g.g * v.v) AS BIGINT) AS u
+         |  FROM $g JOIN $v${k - 1} v ON g.j = v.i GROUP BY 1
+         |), $m$k AS (
+         |  SELECT greatest(max(abs(u)) // 1000000, 1) AS md FROM $u$k
+         |), $v$k AS (
+         |  SELECT i, (CASE WHEN u < 0 THEN -1 ELSE 1 END)
+         |    * (abs(u) // md) AS v
+         |  FROM $u$k, $m$k
+         |)""".stripMargin
+    }.mkString(",\n")
+
   /** The full deflation chain of pca2OracleBody (through comp 1 = v3
     * and comp 2 = pv3), WITHOUT a final select — shared with the
     * whitening oracle, which keeps deriving from both eigenvectors. */
   private def pca2ChainAll(from: String): String = {
-    val iter2 = (1 to 3).map { k =>
-      s"""p$k AS (
-         |  SELECT g.i, CAST(SUM(g.g * v.v) AS BIGINT) AS u
-         |  FROM g2 g JOIN pv${k - 1} v ON g.j = v.i GROUP BY 1
-         |), pm$k AS (
-         |  SELECT greatest(max(abs(u)) // 1000000, 1) AS md FROM p$k
-         |), pv$k AS (
-         |  SELECT i, (CASE WHEN u < 0 THEN -1 ELSE 1 END)
-         |    * (abs(u) // md) AS v
-         |  FROM p$k, pm$k
-         |)""".stripMargin
-    }.mkString(",\n")
     pcaChainCtes(from) +
       s""",
          |u4 AS (
@@ -3914,9 +4263,12 @@ object CBlock {
          |), pv0 AS (
          |  SELECT unnest(range(0, 64)) AS i, CAST(1000000 AS BIGINT) AS v
          |),
-         |$iter2""".stripMargin
+         |${powerIterCtes("g2 g", "p", "pm", "pv")}""".stripMargin
   }
 
+  /** Deflation + second power loop over [[pcaChainCtes]]'s g/v3 —
+    * mirrors Similarity.pcaTop2's integer arithmetic step for step
+    * (every div operand non-negative via the sign/abs spelling). */
   private def pca2OracleBody(from: String, prefix: String): String =
     prefix + pca2ChainAll(from) +
       s"""
@@ -3975,6 +4327,10 @@ object CBlock {
          |ORDER BY pb.vec_id, pb.comp_id""".stripMargin
   }
 
+  /** emb_pca's oracle: the 3-step integer power iteration unrolled as
+    * CTEs over a `(vec_id, embedding)` relation (shared with the
+    * planted-cluster twin — `prefix` carries the WITH head so the
+    * planted relation's CTE can be prepended). */
   private def pcaOracleBody(from: String, prefix: String): String =
     prefix + pcaChainCtes(from) +
       s"""
@@ -4164,12 +4520,7 @@ object CBlock {
          |b$k AS (SELECT l, r, cnt FROM p$k ORDER BY cnt DESC, l, r LIMIT 1),
          |c$k AS (
          |  SELECT doc_id$carry,
-         |    list_reduce(list_prepend(CAST('' AS VARCHAR),
-         |      string_split(enc, chr(31))), (acc, s) ->
-         |      CASE WHEN acc = '' THEN s
-         |           WHEN (acc = b.l OR ends_with(acc, chr(31) || b.l)) AND s = b.r
-         |             THEN acc || s
-         |           ELSE acc || chr(31) || s END) AS enc
+         |    $bpeMergeSql AS enc
          |  FROM c${k - 1}, b$k b
          |)""".stripMargin
     }
@@ -4203,13 +4554,6 @@ object CBlock {
        |  FROM syms JOIN vocab USING (sym)
        |)""".stripMargin
 
-  /** The minhash-LSH candidate-pairs pipeline as a reusable CTE chain
-    * ending in `pairs(doc_a, doc_b)` (shared by dedup_minhash and
-    * dedup_clusters). */
-  /** The xy2d Hilbert descent of Portable.withHilbert, unrolled as 16
-    * chained CTEs h0..h16 (final key = h16.d); p.-qualified references
-    * pin every x/y/d to the PREVIOUS step (no lateral-alias
-    * ambiguity). `carry` columns ride along unchanged. */
   /** The sampled layout writers' shared SQL pieces: the affine
     * sample priority over the (orderkey, linenumber) row key, and the
     * tail CTE chain (deterministic 1024-row bottom-k sample →
@@ -4238,6 +4582,10 @@ object CBlock {
       |  min(l_suppkey) AS sk_min, max(l_suppkey) AS sk_max
       |FROM pr GROUP BY 1 ORDER BY file_id""".stripMargin
 
+  /** The xy2d Hilbert descent of Portable.withHilbert, unrolled as 16
+    * chained CTEs h0..h16 (final key = h16.d); p.-qualified references
+    * pin every x/y/d to the PREVIOUS step (no lateral-alias
+    * ambiguity). `carry` columns ride along unchanged. */
   private def hilbertCtes(carry: Seq[String], x0: String, y0: String,
       from: String): String = {
     val n1 = (1L << 16) - 1
@@ -4265,6 +4613,9 @@ object CBlock {
        |$steps""".stripMargin
   }
 
+  /** The minhash-LSH candidate-pairs pipeline as a reusable CTE chain
+    * ending in `pairs(doc_a, doc_b)` (shared by dedup_minhash and
+    * dedup_clusters). */
   private def minhashPairsCte(where: String = "",
       from: String = "documents", bands: Int = 4): String = {
     val rows = 16 / bands
@@ -4307,6 +4658,26 @@ object CBlock {
   private val embDims = "range(1, len(embedding) + 1)"
   /** Element i of vector `v` as DOUBLE. */
   private def dbl(v: String): String = s"CAST($v[i] AS DOUBLE)"
+
+  /** Brute-force top-5 of each of the 20 probes (`vec_id < 20`, alias
+    * `p`) over every vector `c` that `pairOn` admits, ranked by `score`
+    * (descending for a similarity, ties by candidate id) and output
+    * rounded as `out`: the exact ground truth of the vector search rows
+    * (cosine, L2, inner product, hard negatives). */
+  private def bruteTopKSql(score: String, out: String, desc: Boolean,
+      cand: String = "cand_id", pairOn: String = "p.vec_id <> c.vec_id"): String = {
+    val dir = if (desc) " DESC" else ""
+    s"""WITH probes AS (SELECT * FROM embeddings WHERE vec_id < 20),
+       |sc AS (
+       |  SELECT p.vec_id AS probe_id, c.vec_id AS $cand,
+       |    $score AS score
+       |  FROM probes p JOIN embeddings c ON $pairOn
+       |)
+       |SELECT probe_id, $cand, ROUND(score, 6) AS $out
+       |FROM sc
+       |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY score$dir, $cand) <= 5
+       |ORDER BY probe_id, $out$dir, $cand""".stripMargin
+  }
   /** Dot product of the `d`-dim vectors `x` and `y`. */
   private def dotSql(x: String, y: String, d: Int): String =
     foldSql(dims(d), s"${dbl(x)} * ${dbl(y)}")
@@ -4389,6 +4760,103 @@ object CBlock {
        |  SELECT id_a, id_b FROM cos WHERE c >= 0.35
        |), ${componentsCtes("p", "id_a", "id_b")}""".stripMargin
 
+  /** One Lloyd round of k-means from the seeds `cents0` over the vectors
+    * of `from`: `d1` (distances), `a1` (assignments), `m1` (the
+    * decimal-exact member means) and `c1` (the moved centroids; a seed
+    * with no member stays put). */
+  private def lloydRoundCtes(from: String): String =
+    s"""d1 AS (
+       |  SELECT e.vec_id, e.embedding, c.cent_id,
+       |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
+       |  FROM $from e, cents0 c
+       |), a1 AS (
+       |  SELECT vec_id, embedding, cent_id FROM d1
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
+       |), m1 AS (
+       |  SELECT cent_id, i.i - 1 AS pos,
+       |    ROUND(CAST(sum(CAST(CAST(embedding[CAST(i.i AS INT)] AS DOUBLE)
+       |      AS DECIMAL(27,10))) AS DOUBLE) / count(*), 6) AS mean
+       |  FROM a1, (SELECT unnest(range(1, 65)) AS i) i
+       |  GROUP BY 1, 2
+       |), c1 AS (
+       |  SELECT cent_id, list(mean ORDER BY pos) AS cv
+       |  FROM (
+       |    SELECT c0.cent_id, p.pos,
+       |      COALESCE(m.mean, CAST(c0.cv[CAST(p.pos + 1 AS INT)] AS DOUBLE)) AS mean
+       |    FROM cents0 c0
+       |    CROSS JOIN (SELECT unnest(range(0, 64)) AS pos) p
+       |    LEFT JOIN m1 m ON m.cent_id = c0.cent_id AND m.pos = p.pos
+       |  ) GROUP BY cent_id
+       |)""".stripMargin
+
+  /** The PQ codebook seeds `cents`: every 32nd of the first 256 vectors. */
+  private lazy val pqCentsCte: String =
+    """cents AS (
+      |  SELECT vec_id AS cent_id, embedding AS cv
+      |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
+      |)""".stripMargin
+
+  /** Each vector's distance to each seed in each of the 8 subspaces, as
+    * the CTE `name` (after `ss`, over [[pqCentsCte]]). */
+  private def pqSubdistCtes(name: String): String =
+    s"""ss AS (SELECT unnest(range(0, 8)) AS s),
+       |$name AS (
+       |  SELECT e.vec_id, ss.s, c.cent_id,
+       |    $pqSubDistSql AS dist
+       |  FROM embeddings e, ss, cents c
+       |)""".stripMargin
+
+  /** [[pqSubdistCtes]] as `subdist`, plus `codes`: each vector's nearest
+    * seed per subspace. */
+  private lazy val pqCodesCtes: String =
+    s"""${pqSubdistCtes("subdist")}, codes AS (
+       |  SELECT vec_id, s, cent_id AS code FROM subdist
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, cent_id) = 1
+       |)""".stripMargin
+
+  /** The IVF lists over the seeds: `fulld` (full-vector distances),
+    * `assigned` (each vector's list) and `plists` (the 2 lists each of
+    * the 10 probes searches). */
+  private lazy val pqListsCtes: String =
+    s"""fulld AS (
+       |  SELECT e.vec_id, c.cent_id,
+       |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
+       |  FROM embeddings e, cents c
+       |), assigned AS (
+       |  SELECT vec_id, cent_id FROM fulld
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
+       |), plists AS (
+       |  SELECT vec_id AS probe_id, cent_id FROM fulld WHERE vec_id < 10
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) <= 2
+       |)""".stripMargin
+
+  /** The residual of embedding `e` from seed `c`, as a 64-double list. */
+  private def pqResidualSql(e: String): String =
+    s"""list_transform(range(1, 65), i ->
+       |      CAST($e.embedding[CAST(i AS INT)] AS DOUBLE)
+       |        - CAST(c.cv[CAST(i AS INT)] AS DOUBLE))""".stripMargin
+
+  /** The asymmetric distance: `t.dist` summed in subspace order. */
+  private def pqAdcSum(t: String): String =
+    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list($t.dist ORDER BY $t.s)),
+       |      (a, x) -> a + x)""".stripMargin
+
+  /** The 5 nearest candidates of each probe by `adc.ad`. */
+  private lazy val pqAdcTop5Sql: String =
+    """SELECT probe_id, cand_id, ROUND(ad, 6) AS adc_dist
+      |FROM (SELECT * FROM adc
+      |      QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY ad, cand_id) <= 5)
+      |ORDER BY probe_id, adc_dist, cand_id""".stripMargin
+
+  /** Each vector's PQ code per subspace (with its distance as `err`). */
+  private def pqEncodeSql(withErr: Boolean): String =
+    s"""WITH $pqCentsCte, ${pqSubdistCtes("d")}
+       |SELECT vec_id, CAST(s AS BIGINT) AS subspace, cent_id AS code${
+         if (withErr) ",\n  ROUND(dist, 6) AS err" else ""}
+       |FROM d
+       |QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, cent_id) = 1
+       |ORDER BY vec_id, subspace""".stripMargin
+
   /** Squared L2 distance of subvector `ss.s` (8 dims) of `e.embedding`
     * to that of centroid `c.cv`: the PQ subspace distance. */
   private def pqSubDistSql: String = l2sqSql(
@@ -4430,21 +4898,7 @@ object CBlock {
        |  SELECT doc_id, $qualitySql AS quality
        |  FROM (SELECT doc_id, $toksSql AS w FROM documents
        |        WHERE lang IN ('en','es','fr'))
-       |), g AS (
-       |  SELECT doc_id,
-       |    unnest(list_distinct(CASE WHEN len(text) >= 8
-       |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-       |      ELSE [${ph("text")}] END)) AS gram
-       |  FROM documents WHERE lang IN ('en','es','fr')
-       |), gdf AS (
-       |  SELECT gram, count(*) AS df FROM g GROUP BY 1
-       |), bg AS (
-       |  SELECT DISTINCT gram FROM g JOIN gdf USING (gram)
-       |  WHERE doc_id % 97 = 0 AND df <= 2
-       |), cont AS (
-       |  SELECT DISTINCT doc_id FROM g JOIN bg USING (gram)
-       |  WHERE doc_id % 97 <> 0
-       |)""".stripMargin
+       |), ${contaminationCtes(" WHERE lang IN ('en','es','fr')")}""".stripMargin
 
   /** One arm of a planted-recall eval: the plant's copies unioned into
     * the corpus, its 16-perm minhash pairs at `bands`, and `label`
@@ -4548,19 +5002,7 @@ object CBlock {
       s"""WITH RECURSIVE $semanticComponentsCtes, kept AS (
          |  SELECT v.* FROM embeddings v LEFT JOIN labels l ON v.vec_id = l.ldoc
          |  WHERE l.ldoc IS NULL OR l.cl = v.vec_id
-         |), c0 AS (
-         |  SELECT label, generate_subscripts(embedding, 1) AS dim,
-         |    unnest(embedding) AS x
-         |  FROM kept
-         |), comps AS (
-         |  SELECT label, dim,
-         |    SUM(CAST(CAST(x AS DOUBLE) AS DECIMAL(20,9))) AS sx, count(*) AS n
-         |  FROM c0 GROUP BY 1, 2
-         |), cen AS (
-         |  SELECT label, max(n) AS n_label,
-         |    list(CAST(sx AS DOUBLE) ORDER BY dim) AS sxs
-         |  FROM comps GROUP BY 1
-         |), dist AS (
+         |), ${labelCentroidCtes("kept")}, dist AS (
          |  SELECT vec_id, e.label,
          |    CAST(ROUND(sqrt($centroidSqSql), 6) AS DECIMAL(16,6)) AS d
          |  FROM kept e JOIN cen USING (label)
@@ -4619,14 +5061,7 @@ object CBlock {
          |FROM c, t""".stripMargin,
 
     "source_overlap_sketch" ->
-      s"""WITH ${minhashPairsCte()},
-         |ssig AS (
-         |  SELECT d.source, s.sig FROM sig s JOIN documents d USING (doc_id)
-         |), slots AS (
-         |  SELECT source, i.i AS slot, min(sig[i.i + 1]) AS mh
-         |  FROM ssig, (SELECT unnest(range(0, 16)) AS i) i
-         |  GROUP BY 1, 2
-         |)
+      s"""WITH $sourceSlotsCtes
          |SELECT a.source AS source_a, b.source AS source_b,
          |  CAST(SUM(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_match,
@@ -4651,15 +5086,7 @@ object CBlock {
          |ORDER BY doc_a, doc_b""".stripMargin,
 
     "dedup_graph_triangles" ->
-      s"""WITH ${minhashPairsCte()},
-         |ed AS (
-         |  SELECT p.doc_a AS a, p.doc_b AS b
-         |  FROM pairs p
-         |  JOIN sig sa ON p.doc_a = sa.doc_id
-         |  JOIN sig sb ON p.doc_b = sb.doc_id
-         |  WHERE list_sum(list_transform(range(1, 17), i ->
-         |    CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) >= 8
-         |), tri AS (
+      s"""WITH ${minhashEdgeCtes("ed")}, tri AS (
          |  SELECT e1.a AS ta, e1.b AS tb, e2.b AS tc
          |  FROM ed e1
          |  JOIN ed e2 ON e1.b = e2.a
@@ -4681,15 +5108,7 @@ object CBlock {
          |ORDER BY doc_id""".stripMargin,
 
     "graph_kcore" ->
-      s"""WITH ${minhashPairsCte()},
-         |ed0 AS (
-         |  SELECT p.doc_a AS a, p.doc_b AS b
-         |  FROM pairs p
-         |  JOIN sig sa ON p.doc_a = sa.doc_id
-         |  JOIN sig sb ON p.doc_b = sb.doc_id
-         |  WHERE list_sum(list_transform(range(1, 17), i ->
-         |    CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) >= 8
-         |), keep1 AS (
+      s"""WITH ${minhashEdgeCtes("ed0")}, keep1 AS (
          |  SELECT d FROM (SELECT a AS d FROM ed0 UNION ALL SELECT b FROM ed0)
          |  GROUP BY 1 HAVING count(*) >= 2
          |), ed1 AS (
@@ -4713,15 +5132,7 @@ object CBlock {
          |GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     "dedup_graph_suggest" ->
-      s"""WITH ${minhashPairsCte()},
-         |ed AS (
-         |  SELECT p.doc_a AS a, p.doc_b AS b
-         |  FROM pairs p
-         |  JOIN sig sa ON p.doc_a = sa.doc_id
-         |  JOIN sig sb ON p.doc_b = sb.doc_id
-         |  WHERE list_sum(list_transform(range(1, 17), i ->
-         |    CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) >= 8
-         |), adj AS (
+      s"""WITH ${minhashEdgeCtes("ed")}, adj AS (
          |  SELECT a AS y, b AS x FROM ed
          |  UNION ALL SELECT b AS y, a AS x FROM ed
          |), cn AS (
@@ -4879,16 +5290,6 @@ object CBlock {
          |WHERE h.doc_id % 10 < 8 AND i.doc_id % 10 >= 8
          |GROUP BY 1 ORDER BY i.doc_id""".stripMargin,
 
-    // IDENTICAL SQL to dedup_incremental — the compacted registry must
-    // flag exactly what the full history index flags
-    "dedup_registry_compact" ->
-      s"""WITH ${minhashPairsCte()}
-         |SELECT i.doc_id, min(h.doc_id) AS first_hist_doc,
-         |  CAST(count(DISTINCT i.band * 2147483647 + i.bh) AS BIGINT) AS n_buckets
-         |FROM bands h JOIN bands i ON h.band = i.band AND h.bh = i.bh
-         |WHERE h.doc_id % 10 < 8 AND i.doc_id % 10 >= 8
-         |GROUP BY 1 ORDER BY i.doc_id""".stripMargin,
-
     "dedup_simhash64" ->
       s"""WITH th AS (
          |  SELECT doc_id, list_transform($toksSql, tk -> ${ph("tk")}) AS lo
@@ -4979,16 +5380,7 @@ object CBlock {
         |) WHERE rk = 1 ORDER BY cluster""".stripMargin,
 
     "sim_cosine_topk" ->
-      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
-        |cos AS (
-        |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
-        |  FROM probes p JOIN embeddings c ON p.vec_id <> c.vec_id
-        |)
-        |SELECT probe_id, cand_id, ROUND(cos, 6) AS cosine
-        |FROM cos
-        |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) <= 5
-        |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin,
+      bruteTopKSql(cosSql("p.embedding", "c.embedding", 64), "cosine", desc = true),
 
     "sim_ivf" ->
       s"""WITH $ivfDistCtes
@@ -5019,29 +5411,7 @@ object CBlock {
          |), cents0 AS (
          |  SELECT vec_id AS cent_id, embedding AS cv FROM semb
          |  ORDER BY vec_id LIMIT 8
-         |), d1 AS (
-         |  SELECT e.vec_id, e.embedding, c.cent_id,
-         |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
-         |  FROM semb e, cents0 c
-         |), a1 AS (
-         |  SELECT vec_id, embedding, cent_id FROM d1
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
-         |), m1 AS (
-         |  SELECT cent_id, i.i - 1 AS pos,
-         |    ROUND(CAST(sum(CAST(CAST(embedding[CAST(i.i AS INT)] AS DOUBLE)
-         |      AS DECIMAL(27,10))) AS DOUBLE) / count(*), 6) AS mean
-         |  FROM a1, (SELECT unnest(range(1, 65)) AS i) i
-         |  GROUP BY 1, 2
-         |), c1 AS (
-         |  SELECT cent_id, list(mean ORDER BY pos) AS cv
-         |  FROM (
-         |    SELECT c0.cent_id, p.pos,
-         |      COALESCE(m.mean, CAST(c0.cv[CAST(p.pos + 1 AS INT)] AS DOUBLE)) AS mean
-         |    FROM cents0 c0
-         |    CROSS JOIN (SELECT unnest(range(0, 64)) AS pos) p
-         |    LEFT JOIN m1 m ON m.cent_id = c0.cent_id AND m.pos = p.pos
-         |  ) GROUP BY cent_id
-         |), d2 AS (
+         |), ${lloydRoundCtes("semb")}, d2 AS (
          |  SELECT e.vec_id, c.cent_id,
          |    ${l2sqSql(dbl("e.embedding"), "c.cv[i]", 64)} AS dist
          |  FROM embeddings e, c1 c
@@ -5129,95 +5499,17 @@ object CBlock {
          |FROM c ORDER BY lang, pred_lang""".stripMargin,
 
     "text_langid_profile" ->
-      s"""WITH g AS (
-        |  SELECT doc_id, lang,
-        |    unnest(list_distinct(CASE WHEN len(text) >= 3
-        |      THEN list_transform(range(1, len(text) - 1), i -> ${ph("text[i:i+2]")})
-        |      ELSE [${ph("text")}] END)) AS gram
-        |  FROM documents
-        |), prof AS (
-        |  SELECT lang AS profile_lang, gram
-        |  FROM (
-        |    SELECT lang, gram, count(*) AS cnt,
-        |      row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, gram) AS rk
-        |    FROM g GROUP BY lang, gram
-        |  ) WHERE rk <= 20
-        |), scored AS (
-        |  SELECT g.doc_id, p.profile_lang, count(*) AS score
-        |  FROM g JOIN prof p ON g.gram = p.gram
-        |  GROUP BY g.doc_id, p.profile_lang
-        |)
-        |SELECT doc_id, profile_lang AS pred_lang, score
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, profile_lang) = 1
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH ${langProfileCtes("documents")}
+         |SELECT doc_id, profile_lang AS pred_lang, score
+         |FROM scored
+         |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, profile_lang) = 1
+         |ORDER BY doc_id""".stripMargin,
 
     "text_langid_profile_planted" ->
-      s"""WITH $langPlantedCte, g AS (
-         |  SELECT doc_id, lang,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 3
-         |      THEN list_transform(range(1, len(text) - 1), i -> ${ph("text[i:i+2]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM pl
-         |), prof AS (
-         |  SELECT lang AS profile_lang, gram
-         |  FROM (
-         |    SELECT lang, gram, count(*) AS cnt,
-         |      row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, gram) AS rk
-         |    FROM g GROUP BY lang, gram
-         |  ) WHERE rk <= 20
-         |), scored AS (
-         |  SELECT g.doc_id, p.profile_lang, count(*) AS score
-         |  FROM g JOIN prof p ON g.gram = p.gram
-         |  GROUP BY g.doc_id, p.profile_lang
-         |), preds AS (
-         |  SELECT doc_id, profile_lang AS pred_lang
-         |  FROM scored
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY score DESC, profile_lang) = 1
-         |), c AS (
-         |  SELECT pl.lang, preds.pred_lang, count(*) AS n
-         |  FROM preds JOIN pl ON preds.doc_id = pl.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT lang, pred_lang, n,
-         |  round(CAST(n AS DOUBLE)
-         |    / (SUM(n) OVER (PARTITION BY lang)), 6) AS share
-         |FROM c ORDER BY lang, pred_lang""".stripMargin,
+      langProfileConfusionSql(langPlantedCte, "pl", holdout = false),
 
     "text_langid_profile_holdout" ->
-      s"""WITH $langHoldoutCte, g AS (
-         |  SELECT doc_id, lang, doc_id % 2 = 0 AS is_train,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 3
-         |      THEN list_transform(range(1, len(text) - 1), i -> ${ph("text[i:i+2]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM pl2
-         |), prof AS (
-         |  SELECT lang AS profile_lang, gram
-         |  FROM (
-         |    SELECT lang, gram, count(*) AS cnt,
-         |      row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, gram) AS rk
-         |    FROM g WHERE is_train GROUP BY lang, gram
-         |  ) WHERE rk <= 20
-         |), scored AS (
-         |  SELECT g.doc_id, p.profile_lang, count(*) AS score
-         |  FROM g JOIN prof p ON g.gram = p.gram
-         |  WHERE NOT g.is_train
-         |  GROUP BY g.doc_id, p.profile_lang
-         |), preds AS (
-         |  SELECT doc_id, profile_lang AS pred_lang
-         |  FROM scored
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY score DESC, profile_lang) = 1
-         |), c AS (
-         |  SELECT pl2.lang, preds.pred_lang, count(*) AS n
-         |  FROM preds JOIN pl2 ON preds.doc_id = pl2.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT lang, pred_lang, n,
-         |  round(CAST(n AS DOUBLE)
-         |    / (SUM(n) OVER (PARTITION BY lang)), 6) AS share
-         |FROM c ORDER BY lang, pred_lang""".stripMargin,
+      langProfileConfusionSql(langHoldoutCte, "pl2", holdout = true),
 
     "text_quality" ->
       s"""WITH t AS (SELECT doc_id, $toksSql AS w FROM documents)
@@ -5281,14 +5573,7 @@ object CBlock {
       s"""WITH RECURSIVE $curationCtes, clean AS (
          |  SELECT d.doc_id, ${ph("CAST(d.doc_id AS VARCHAR)")} % 8 AS shard,
          |    len($toksSql) AS n_tok
-         |  FROM documents d
-         |  JOIN q ON d.doc_id = q.doc_id
-         |  LEFT JOIN labels l ON d.doc_id = l.ldoc
-         |  WHERE d.lang IN ('en','es','fr')
-         |    AND (l.ldoc IS NULL OR l.cl = d.doc_id)
-         |    AND q.quality >= 0.6
-         |    AND d.doc_id % 97 <> 0
-         |    AND d.doc_id NOT IN (SELECT doc_id FROM cont)
+         |$curatedDocsSql
          |)
          |SELECT shard, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS tok_sum
          |FROM clean GROUP BY 1 ORDER BY shard""".stripMargin,
@@ -5300,14 +5585,7 @@ object CBlock {
          |    CAST((${ph("'split:' || CAST(d.doc_id AS VARCHAR)")}
          |        * ((1 * 2654435761) % 2147483647) + (1 * 40503) % 2147483647)
          |      % 2147483647 AS DOUBLE) / 2147483647 AS u
-         |  FROM documents d
-         |  JOIN q ON d.doc_id = q.doc_id
-         |  LEFT JOIN labels l ON d.doc_id = l.ldoc
-         |  WHERE d.lang IN ('en','es','fr')
-         |    AND (l.ldoc IS NULL OR l.cl = d.doc_id)
-         |    AND q.quality >= 0.6
-         |    AND d.doc_id % 97 <> 0
-         |    AND d.doc_id NOT IN (SELECT doc_id FROM cont)
+         |$curatedDocsSql
          |)
          |SELECT CASE WHEN u < 0.9 THEN 'train'
          |            WHEN u < 0.9 + 0.05 THEN 'valid'
@@ -5413,17 +5691,6 @@ object CBlock {
          |    AS vocab_id
          |FROM c WHERE cnt >= 2 ORDER BY vocab_id""".stripMargin,
 
-    "vocab_build" ->
-      s"""WITH c AS (
-         |  SELECT word, count(*) AS cnt
-         |  FROM (SELECT unnest($toksSql) AS word FROM documents)
-         |  GROUP BY 1
-         |)
-         |SELECT word, cnt,
-         |  CAST(row_number() OVER (ORDER BY cnt DESC, word) - 1 AS BIGINT)
-         |    AS vocab_id
-         |FROM c WHERE cnt >= 2 ORDER BY vocab_id""".stripMargin,
-
     "sample_temperature" ->
       s"""WITH cnts AS (
          |  SELECT source, count(*) AS cnt FROM documents GROUP BY source
@@ -5442,13 +5709,7 @@ object CBlock {
          |FROM k GROUP BY source ORDER BY source""".stripMargin,
 
     "decontaminate" ->
-      s"""WITH g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), bg AS (
+      s"""WITH ${docGramCte()}, bg AS (
          |  SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0
          |), cg AS (
          |  SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0
@@ -5552,54 +5813,16 @@ object CBlock {
 
     // direct WEEKLY estimate over events — the Spark side rolls day
     // registers into weeks, so the hash match proves merge ≡ direct
-    "sketch_hll_weekly" -> {
-      val week = "CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE)"
-      s"""WITH ${hllCtes("event_type, week", s"event_type, $week AS week")},
-         |ex AS (
-         |  SELECT event_type, $week AS week,
-         |    count(DISTINCT user_id) AS exact
-         |  FROM events GROUP BY 1, 2
-         |)
-         |SELECT est.event_type, est.week, ex.exact,
-         |  CAST(occupied AS BIGINT) AS occupied, hll_est
-         |FROM est JOIN ex ON est.event_type = ex.event_type AND est.week = ex.week
-         |ORDER BY est.event_type, est.week""".stripMargin
-    },
+    "sketch_hll_weekly" ->
+      hllPerBucketSql("week", "CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE)"),
 
     "sketch_hll_sliding" -> hllSlidingOracleSql,
 
-    "sketch_hll_daily" -> {
-      val day = "CAST(CAST(ts AS TIMESTAMP) AS DATE)"
-      s"""WITH ${hllCtes("event_type, day", s"event_type, $day AS day")},
-         |ex AS (
-         |  SELECT event_type, $day AS day,
-         |    count(DISTINCT user_id) AS exact
-         |  FROM events GROUP BY 1, 2
-         |)
-         |SELECT est.event_type, est.day, ex.exact,
-         |  CAST(occupied AS BIGINT) AS occupied, hll_est
-         |FROM est JOIN ex ON est.event_type = ex.event_type AND est.day = ex.day
-         |ORDER BY est.event_type, est.day""".stripMargin
-    },
+    "sketch_hll_daily" -> hllPerBucketSql("day", "CAST(CAST(ts AS TIMESTAMP) AS DATE)"),
 
     // IDENTICAL direct SQL for both the shard-merged and the streamed
     // moments — the hash match IS the proof in each case
     "sketch_moments_stream" ->
-      """WITH q AS (
-        |  SELECT event_type, CAST(floor(value * 1000) AS BIGINT) AS q
-        |  FROM events
-        |), a AS (
-        |  SELECT event_type, count(*) AS n, CAST(SUM(q) AS BIGINT) AS s1,
-        |    CAST(SUM(q * q) AS BIGINT) AS s2
-        |  FROM q GROUP BY 1
-        |)
-        |SELECT event_type, n, s1, s2,
-        |  CAST(s1 // n AS BIGINT) AS mean_milli,
-        |  CAST(s2 // n - (s1 // n) * (s1 // n) AS BIGINT) AS var_milli2
-        |FROM a ORDER BY event_type""".stripMargin,
-
-    // direct (no shards) — the hash match IS the merge ≡ direct proof
-    "sketch_moments" ->
       """WITH q AS (
         |  SELECT event_type, CAST(floor(value * 1000) AS BIGINT) AS q
         |  FROM events
@@ -5745,30 +5968,11 @@ object CBlock {
          |FROM r ORDER BY doc_id""".stripMargin,
 
     "mm_decode" ->
-      s"""WITH dims AS (
-         |  SELECT doc_id, text,
-         |    4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
-         |  FROM documents
-         |), px AS (
-         |  SELECT d.doc_id,
-         |    (d.doc_id * 31 + x.x * 7 + y.y * 13) % 256
-         |      + 2 * ((d.doc_id * 17 + x.x * 3 + y.y * 5) % 256)
-         |      + 4 * ((x.x + y.y * 11) % 256) AS v
-         |  FROM dims d
-         |  JOIN (SELECT unnest(range(0, 9)) AS x) x ON x.x < d.w
-         |  JOIN (SELECT unnest(range(0, 7)) AS y) y ON y.y < d.h
-         |  WHERE d.doc_id % 7 <> 0
-         |), agg AS (
+      s"""WITH ${mediaPixelCtes(withPos = false)}, agg AS (
          |  SELECT doc_id, CAST(sum(v) AS BIGINT) AS px_sum
          |  FROM px GROUP BY 1
          |)
-         |SELECT d.doc_id, d.doc_id % 7 <> 0 AS decoded,
-         |  CAST(CASE WHEN d.doc_id % 7 <> 0 THEN d.w ELSE 0 END AS BIGINT) AS width,
-         |  CAST(CASE WHEN d.doc_id % 7 <> 0 THEN d.h ELSE 0 END AS BIGINT) AS height,
-         |  CASE WHEN d.doc_id % 7 <> 0 THEN a.px_sum
-         |       ELSE ${ph("substr(d.text, 1, 16)")} END AS px_sum
-         |FROM dims d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+         |${mediaRowsSql("agg", "a", "px_sum")}""".stripMargin,
 
     "sketch_freq_cms" -> cmsOracleSql,
 
@@ -5789,40 +5993,10 @@ object CBlock {
     "sketch_quantile_stream" -> quantileOracleSql,
 
     "curate_ingest_stream" ->
-      s"""WITH g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), bpos AS (
-         |  SELECT DISTINCT unnest(list_transform(range(0, 3), j ->
-         |    (gram * (((j+1) * 2654435761) % 2147483647)
-         |      + ((j+1) * 40503) % 2147483647) % 2147483647 % 4096)) AS pos
-         |  FROM g WHERE doc_id % 97 = 0
-         |), cpos AS (
-         |  SELECT doc_id, gram,
-         |    unnest(list_transform(range(0, 3), j ->
-         |      (gram * (((j+1) * 2654435761) % 2147483647)
-         |        + ((j+1) * 40503) % 2147483647) % 2147483647 % 4096)) AS pos
-         |  FROM g WHERE doc_id % 97 <> 0
-         |), hit AS (
-         |  SELECT doc_id, gram, count(*) AS c
-         |  FROM cpos JOIN bpos USING (pos)
-         |  GROUP BY 1, 2
-         |), cont AS (
+      s"""WITH ${docGramCte()}, $bloomHitCtes, cont AS (
          |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_contaminated
          |  FROM hit WHERE c = 3 GROUP BY 1
-         |), d AS (
-         |  SELECT doc_id, lang, $toksSql AS toks FROM documents
-         |  WHERE doc_id % 97 <> 0
-         |), sc AS (
-         |  SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tok,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(toks, t -> (${ph("t")} % 2001) - 1000)),
-         |      (a, x) -> a + x) AS score
-         |  FROM d
-         |)
+         |), ${classifierCtes(benchHeldOut = true)}
          |SELECT sc.doc_id, sc.lang, sc.n_tok, sc.score,
          |  sc.score > 0 AS pred,
          |  ${ph("CAST(sc.doc_id AS VARCHAR)")} % 16 AS shard,
@@ -5831,41 +6005,13 @@ object CBlock {
          |ORDER BY sc.doc_id""".stripMargin,
 
     "decontaminate_bloom" ->
-      s"""WITH g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), bpos AS (
-         |  SELECT DISTINCT unnest(list_transform(range(0, 3), j ->
-         |    (gram * (((j+1) * 2654435761) % 2147483647)
-         |      + ((j+1) * 40503) % 2147483647) % 2147483647 % 4096)) AS pos
-         |  FROM g WHERE doc_id % 97 = 0
-         |), cpos AS (
-         |  SELECT doc_id, gram,
-         |    unnest(list_transform(range(0, 3), j ->
-         |      (gram * (((j+1) * 2654435761) % 2147483647)
-         |        + ((j+1) * 40503) % 2147483647) % 2147483647 % 4096)) AS pos
-         |  FROM g WHERE doc_id % 97 <> 0
-         |), hit AS (
-         |  SELECT doc_id, gram, count(*) AS c
-         |  FROM cpos JOIN bpos USING (pos)
-         |  GROUP BY 1, 2
-         |)
+      s"""WITH ${docGramCte()}, $bloomHitCtes
          |SELECT doc_id, count(*) AS n_maybe_shared
          |FROM hit WHERE c = 3
          |GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     "pack_sequences" ->
-      s"""WITH t AS (
-         |  SELECT source, doc_id, len($toksSql) AS n_tok FROM documents
-         |), s AS (
-         |  SELECT source, doc_id, n_tok,
-         |    CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id)
-         |      AS BIGINT) AS tok_end
-         |  FROM t WHERE n_tok > 0
-         |), e AS (
+      s"""WITH $packRunCtes, e AS (
          |  SELECT source, tok_end, tok_end - n_tok AS tok_start,
          |    unnest(range((tok_end - n_tok) // 256, (tok_end - 1) // 256 + 1))
          |      AS seq_id
@@ -6057,14 +6203,7 @@ object CBlock {
          |ORDER BY from_shard, to_shard""".stripMargin,
 
     "pack_efficiency" ->
-      s"""WITH t AS (
-         |  SELECT source, doc_id, len($toksSql) AS n_tok FROM documents
-         |), s AS (
-         |  SELECT source, doc_id, n_tok,
-         |    CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id)
-         |      AS BIGINT) AS tok_end
-         |  FROM t WHERE n_tok > 0
-         |), d AS (
+      s"""WITH $packRunCtes, d AS (
          |  SELECT source, tok_end,
          |    (tok_end - n_tok) // 256 AS first_seq,
          |    (tok_end - 1) // 256 AS last_seq
@@ -6082,14 +6221,7 @@ object CBlock {
          |FROM a ORDER BY source""".stripMargin,
 
     "pack_seqlen_sweep" ->
-      s"""WITH t AS (
-         |  SELECT source, doc_id, len($toksSql) AS n_tok FROM documents
-         |), s AS (
-         |  SELECT source, doc_id, n_tok,
-         |    CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id)
-         |      AS BIGINT) AS tok_end
-         |  FROM t WHERE n_tok > 0
-         |), arms AS (
+      s"""WITH $packRunCtes, arms AS (
          |  SELECT CAST(unnest([32, 64, 128, 256]) AS BIGINT) AS seq_len
          |), d AS (
          |  SELECT source, seq_len, tok_end, n_tok,
@@ -6133,26 +6265,6 @@ object CBlock {
          |GROUP BY tau ORDER BY tau""".stripMargin,
 
     "lm_unigram_score" ->
-      s"""WITH w AS (
-         |  SELECT doc_id, unnest($toksSql) AS word FROM documents
-         |), c AS (
-         |  SELECT word, count(*) AS cnt FROM w GROUP BY 1
-         |), t AS (
-         |  SELECT count(*) AS n_words, CAST(sum(cnt) AS BIGINT) AS n_total
-         |  FROM c
-         |)
-         |SELECT doc_id, count(*) AS n_tok,
-         |  CAST(sum(cnt) AS BIGINT) AS freq_sum,
-         |  CAST(sum(CASE WHEN cnt * n_words < n_total THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_rare,
-         |  CAST(sum(cnt) AS DOUBLE) / count(*) AS avg_freq
-         |FROM w JOIN c USING (word) CROSS JOIN t
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // scored against the stored vocab artifact; with minCount=1 the
-    // vocab's counts are exactly the corpus counts, so the twin is the
-    // inline-count SQL
-    "lm_unigram_vocab" ->
       s"""WITH w AS (
          |  SELECT doc_id, unnest($toksSql) AS word FROM documents
          |), c AS (
@@ -6225,164 +6337,29 @@ object CBlock {
          |FROM b JOIN c USING (bigram) CROSS JOIN t
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
-    // scored against the stored bigram-vocab artifact (minCount=1 →
-    // counts are exactly the corpus bigram counts)
-    "lm_bigram_vocab" ->
-      s"""WITH w AS (
-         |  SELECT doc_id, $toksSql AS t FROM documents
-         |), b AS (
-         |  SELECT doc_id,
-         |    unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bigram
-         |  FROM w WHERE len(t) >= 2
-         |), c AS (
-         |  SELECT bigram, count(*) AS cnt FROM b GROUP BY 1
-         |), t AS (
-         |  SELECT count(*) AS n_types, CAST(sum(cnt) AS BIGINT) AS n_total
-         |  FROM c
-         |)
-         |SELECT doc_id, count(*) AS n_bigrams,
-         |  CAST(sum(cnt) AS BIGINT) AS freq_sum,
-         |  CAST(sum(CASE WHEN cnt * n_types < n_total THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_rare,
-         |  CAST(sum(cnt) AS DOUBLE) / count(*) AS avg_freq
-         |FROM b JOIN c USING (bigram) CROSS JOIN t
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
     "dedup_spans" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, $toksSql AS w FROM documents
-         |), c AS (
-         |  SELECT doc_id, unnest(range(0, len(w) // 16)) AS j, w
-         |  FROM t WHERE len(w) >= 16
-         |), s AS (
-         |  SELECT doc_id,
-         |    ${ph("array_to_string(w[j*16+1 : j*16+16], ' ')")} AS span_hash
-         |  FROM c
-         |)
-         |SELECT span_hash, count(DISTINCT doc_id) AS n_docs,
-         |  count(*) AS n_occ, min(doc_id) AS min_doc
-         |FROM s GROUP BY 1
-         |HAVING count(DISTINCT doc_id) >= 2
-         |ORDER BY span_hash""".stripMargin,
+      spanCountsSql("range(0, len(w) // 16)", "j", "j*16"),
 
     "dedup_spans_overlap" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, $toksSql AS w FROM documents
-         |), c AS (
-         |  SELECT doc_id, unnest(range(0, len(w) - 16 + 1, 8)) AS st, w
-         |  FROM t WHERE len(w) >= 16
-         |), s AS (
-         |  SELECT doc_id,
-         |    ${ph("array_to_string(w[st+1 : st+16], ' ')")} AS span_hash
-         |  FROM c
-         |)
-         |SELECT span_hash, count(DISTINCT doc_id) AS n_docs,
-         |  count(*) AS n_occ, min(doc_id) AS min_doc
-         |FROM s GROUP BY 1
-         |HAVING count(DISTINCT doc_id) >= 2
-         |ORDER BY span_hash""".stripMargin,
+      spanCountsSql("range(0, len(w) - 16 + 1, 8)", "st", "st"),
 
     "dedup_spans_cascade" ->
       s"""WITH t AS (
          |  SELECT doc_id, $toksSql AS w FROM documents
-         |), c AS (
-         |  SELECT doc_id, unnest(range(0, len(w) - 16 + 1, 8)) AS st, w
-         |  FROM t WHERE len(w) >= 16
-         |), sh AS (
-         |  SELECT doc_id,
-         |    ${ph("array_to_string(w[st+1 : st+16], ' ')")} AS span_hash
-         |  FROM c
-         |), hot AS (
-         |  SELECT span_hash FROM sh GROUP BY 1
-         |  HAVING count(DISTINCT doc_id) >= 2
-         |), cand AS (
-         |  SELECT DISTINCT doc_id FROM sh JOIN hot USING (span_hash)
-         |), wins AS (
-         |  SELECT doc_id, off AS pos,
-         |    array_to_string(w[off + 1 : off + 16], ' ') AS wtext
-         |  FROM (SELECT t.doc_id, t.w, unnest(range(0, len(t.w) - 16 + 1)) AS off
-         |        FROM t JOIN cand USING (doc_id) WHERE len(t.w) >= 16)
-         |), shared AS (
-         |  SELECT wtext FROM wins GROUP BY wtext
-         |  HAVING count(DISTINCT doc_id) >= 2
-         |), mk AS (
-         |  SELECT w2.doc_id, w2.pos FROM wins w2 JOIN shared USING (wtext)
-         |), isl AS (
-         |  SELECT doc_id, pos,
-         |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
-         |  FROM mk
-         |)
-         |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-         |  CAST(max(pos) + 15 AS BIGINT) AS span_end,
-         |  CAST(count(*) AS BIGINT) AS n_wins
-         |FROM isl GROUP BY doc_id, g
-         |ORDER BY doc_id, span_start""".stripMargin,
+         |), ${spanCandCtes("", "t", "w")},
+         |${spanIslandCtes("", "t", "w", cand = true)}
+         |$spanIslandRowsSql""".stripMargin,
 
     "dedup_spans_exact" ->
-      s"""WITH $spanPlantedCte, wins AS (
-         |  SELECT doc_id, off AS pos,
-         |    array_to_string(t[off + 1 : off + 16], ' ') AS wtext
-         |  FROM (SELECT doc_id, t, unnest(range(0, len(t) - 16 + 1)) AS off
-         |        FROM pl WHERE len(t) >= 16)
-         |), sh AS (
-         |  SELECT wtext FROM wins GROUP BY wtext
-         |  HAVING count(DISTINCT doc_id) >= 2
-         |), mk AS (
-         |  SELECT w.doc_id, w.pos FROM wins w JOIN sh USING (wtext)
-         |), isl AS (
-         |  SELECT doc_id, pos,
-         |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
-         |  FROM mk
-         |)
-         |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-         |  CAST(max(pos) + 15 AS BIGINT) AS span_end,
-         |  CAST(count(*) AS BIGINT) AS n_wins
-         |FROM isl GROUP BY doc_id, g
-         |ORDER BY doc_id, span_start""".stripMargin,
+      s"""WITH $spanPlantedCte, ${spanIslandCtes("", "pl", "t", cand = false)}
+         |$spanIslandRowsSql""".stripMargin,
 
     "dedup_spans_recall" ->
-      s"""WITH $spanPlantedCte, wins AS (
-         |  SELECT doc_id, off AS pos,
-         |    array_to_string(t[off + 1 : off + 16], ' ') AS wtext
-         |  FROM (SELECT doc_id, t, unnest(range(0, len(t) - 16 + 1)) AS off
-         |        FROM pl WHERE len(t) >= 16)
-         |), sh AS (
-         |  SELECT wtext FROM wins GROUP BY wtext
-         |  HAVING count(DISTINCT doc_id) >= 2
-         |), mk AS (
-         |  SELECT w.doc_id, w.pos FROM wins w JOIN sh USING (wtext)
-         |), isl AS (
-         |  SELECT doc_id, pos,
-         |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
-         |  FROM mk
-         |), ex AS (
+      s"""WITH $spanPlantedCte, ${spanIslandCtes("", "pl", "t", cand = false)}, ex AS (
          |  SELECT doc_id, min(pos) AS span_start, max(pos) + 15 AS span_end
          |  FROM isl GROUP BY doc_id, g
-         |), csh AS (
-         |  SELECT doc_id,
-         |    ${ph("array_to_string(t[st+1 : st+16], ' ')")} AS span_hash
-         |  FROM (SELECT doc_id, unnest(range(0, len(t) - 16 + 1, 8)) AS st, t
-         |        FROM pl WHERE len(t) >= 16)
-         |), chot AS (
-         |  SELECT span_hash FROM csh GROUP BY 1
-         |  HAVING count(DISTINCT doc_id) >= 2
-         |), ccand AS (
-         |  SELECT DISTINCT doc_id FROM csh JOIN chot USING (span_hash)
-         |), cwins AS (
-         |  SELECT doc_id, off AS pos,
-         |    array_to_string(t[off + 1 : off + 16], ' ') AS wtext
-         |  FROM (SELECT pl.doc_id, pl.t, unnest(range(0, len(pl.t) - 16 + 1)) AS off
-         |        FROM pl JOIN ccand USING (doc_id) WHERE len(pl.t) >= 16)
-         |), cshr AS (
-         |  SELECT wtext FROM cwins GROUP BY wtext
-         |  HAVING count(DISTINCT doc_id) >= 2
-         |), cmk AS (
-         |  SELECT w2.doc_id, w2.pos FROM cwins w2 JOIN cshr USING (wtext)
-         |), cisl AS (
-         |  SELECT doc_id, pos,
-         |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
-         |  FROM cmk
-         |), ca AS (
+         |), ${spanCandCtes("c", "pl", "t")},
+         |${spanIslandCtes("c", "pl", "t", cand = true)}, ca AS (
          |  SELECT doc_id, min(pos) AS span_start, max(pos) + 15 AS span_end
          |  FROM cisl GROUP BY doc_id, g
          |), flag AS (
@@ -6399,36 +6376,9 @@ object CBlock {
          |FROM flag GROUP BY span_len
          |ORDER BY span_len""".stripMargin,
 
-    "sim_pq" ->
-      s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), ss AS (SELECT unnest(range(0, 8)) AS s),
-        |d AS (
-        |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    $pqSubDistSql AS dist
-        |  FROM embeddings e, ss, cents c
-        |)
-        |SELECT vec_id, CAST(s AS BIGINT) AS subspace, cent_id AS code,
-        |  ROUND(dist, 6) AS err
-        |FROM d
-        |QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, cent_id) = 1
-        |ORDER BY vec_id, subspace""".stripMargin,
+    "sim_pq" -> pqEncodeSql(withErr = true),
 
-    "sim_pq_stream" ->
-      s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), ss AS (SELECT unnest(range(0, 8)) AS s),
-        |d AS (
-        |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    $pqSubDistSql AS dist
-        |  FROM embeddings e, ss, cents c
-        |)
-        |SELECT vec_id, CAST(s AS BIGINT) AS subspace, cent_id AS code
-        |FROM d
-        |QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, cent_id) = 1
-        |ORDER BY vec_id, subspace""".stripMargin,
+    "sim_pq_stream" -> pqEncodeSql(withErr = false),
 
     "sim_pq_books" ->
       s"""WITH cents AS (
@@ -6462,56 +6412,19 @@ object CBlock {
         |ORDER BY subspace, code, pos""".stripMargin,
 
     "sim_pq_topk" ->
-      s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), ss AS (SELECT unnest(range(0, 8)) AS s),
-        |subdist AS (
-        |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    $pqSubDistSql AS dist
-        |  FROM embeddings e, ss, cents c
-        |), codes AS (
-        |  SELECT vec_id, s, cent_id AS code FROM subdist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, cent_id) = 1
-        |), adc AS (
+      s"""WITH $pqCentsCte, $pqCodesCtes, adc AS (
         |  SELECT p.vec_id AS probe_id, v.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(p.dist ORDER BY p.s)),
-        |      (a, x) -> a + x) AS ad
+        |    ${pqAdcSum("p")} AS ad
         |  FROM codes v JOIN subdist p ON v.s = p.s AND v.code = p.cent_id
         |  WHERE p.vec_id < 10 AND p.vec_id <> v.vec_id
         |  GROUP BY 1, 2
         |)
-        |SELECT probe_id, cand_id, ROUND(ad, 6) AS adc_dist
-        |FROM (SELECT * FROM adc
-        |      QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY ad, cand_id) <= 5)
-        |ORDER BY probe_id, adc_dist, cand_id""".stripMargin,
+        |$pqAdcTop5Sql""".stripMargin,
 
     "sim_pq_ivf" ->
-      s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), fulld AS (
-        |  SELECT e.vec_id, c.cent_id,
-        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
-        |  FROM embeddings e, cents c
-        |), assigned AS (
-        |  SELECT vec_id, cent_id FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
-        |), plists AS (
-        |  SELECT vec_id AS probe_id, cent_id FROM fulld WHERE vec_id < 10
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) <= 2
-        |), ss AS (SELECT unnest(range(0, 8)) AS s),
-        |subdist AS (
-        |  SELECT e.vec_id, ss.s, c.cent_id,
-        |    $pqSubDistSql AS dist
-        |  FROM embeddings e, ss, cents c
-        |), codes AS (
-        |  SELECT vec_id, s, cent_id AS code FROM subdist
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, cent_id) = 1
-        |), adc AS (
+      s"""WITH $pqCentsCte, $pqListsCtes, $pqCodesCtes, adc AS (
         |  SELECT p.vec_id AS probe_id, v.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(p.dist ORDER BY p.s)),
-        |      (a, x) -> a + x) AS ad
+        |    ${pqAdcSum("p")} AS ad
         |  FROM codes v
         |  JOIN assigned a ON a.vec_id = v.vec_id
         |  JOIN plists pl ON pl.cent_id = a.cent_id
@@ -6520,30 +6433,11 @@ object CBlock {
         |  WHERE p.vec_id <> v.vec_id
         |  GROUP BY 1, 2
         |)
-        |SELECT probe_id, cand_id, ROUND(ad, 6) AS adc_dist
-        |FROM (SELECT * FROM adc
-        |      QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY ad, cand_id) <= 5)
-        |ORDER BY probe_id, adc_dist, cand_id""".stripMargin,
+        |$pqAdcTop5Sql""".stripMargin,
 
     "sim_pq_residual" ->
-      s"""WITH cents AS (
-        |  SELECT vec_id AS cent_id, embedding AS cv
-        |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), fulld AS (
-        |  SELECT e.vec_id, c.cent_id,
-        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
-        |  FROM embeddings e, cents c
-        |), assigned AS (
-        |  SELECT vec_id, cent_id FROM fulld
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
-        |), plists AS (
-        |  SELECT vec_id AS probe_id, cent_id FROM fulld WHERE vec_id < 10
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) <= 2
-        |), res AS (
-        |  SELECT a.vec_id, a.cent_id,
-        |    list_transform(range(1, 65), i ->
-        |      CAST(e.embedding[CAST(i AS INT)] AS DOUBLE)
-        |        - CAST(c.cv[CAST(i AS INT)] AS DOUBLE)) AS r
+      s"""WITH $pqCentsCte, $pqListsCtes, res AS (
+        |  SELECT a.vec_id, a.cent_id, ${pqResidualSql("e")} AS r
         |  FROM assigned a
         |  JOIN embeddings e USING (vec_id)
         |  JOIN cents c ON c.cent_id = a.cent_id
@@ -6556,10 +6450,7 @@ object CBlock {
         |  SELECT vec_id, s, cb AS code FROM rsub
         |  QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, cb) = 1
         |), pres AS (
-        |  SELECT pl.probe_id, pl.cent_id,
-        |    list_transform(range(1, 65), i ->
-        |      CAST(e.embedding[CAST(i AS INT)] AS DOUBLE)
-        |        - CAST(c.cv[CAST(i AS INT)] AS DOUBLE)) AS r
+        |  SELECT pl.probe_id, pl.cent_id, ${pqResidualSql("e")} AS r
         |  FROM plists pl
         |  JOIN embeddings e ON e.vec_id = pl.probe_id
         |  JOIN cents c ON c.cent_id = pl.cent_id
@@ -6569,46 +6460,20 @@ object CBlock {
         |  FROM pres p, ss, cents c
         |), adc AS (
         |  SELECT t.probe_id, v.vec_id AS cand_id,
-        |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t.dist ORDER BY t.s)),
-        |      (a, x) -> a + x) AS ad
+        |    ${pqAdcSum("t")} AS ad
         |  FROM codes v
         |  JOIN assigned a ON a.vec_id = v.vec_id
         |  JOIN pdt t ON t.cent_id = a.cent_id AND t.s = v.s AND t.cb = v.code
         |  WHERE t.probe_id <> v.vec_id
         |  GROUP BY 1, 2
         |)
-        |SELECT probe_id, cand_id, ROUND(ad, 6) AS adc_dist
-        |FROM (SELECT * FROM adc
-        |      QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY ad, cand_id) <= 5)
-        |ORDER BY probe_id, adc_dist, cand_id""".stripMargin,
+        |$pqAdcTop5Sql""".stripMargin,
 
     "sim_ivf_trained" ->
       s"""WITH cents0 AS (
         |  SELECT vec_id AS cent_id, embedding AS cv
         |  FROM embeddings WHERE vec_id % 32 = 0 AND vec_id < 256
-        |), d1 AS (
-        |  SELECT e.vec_id, e.embedding, c.cent_id,
-        |    ${l2sqSql(dbl("e.embedding"), dbl("c.cv"), 64)} AS dist
-        |  FROM embeddings e, cents0 c
-        |), a1 AS (
-        |  SELECT vec_id, embedding, cent_id FROM d1
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cent_id) = 1
-        |), m1 AS (
-        |  SELECT cent_id, i.i - 1 AS pos,
-        |    ROUND(CAST(sum(CAST(CAST(embedding[CAST(i.i AS INT)] AS DOUBLE)
-        |      AS DECIMAL(27,10))) AS DOUBLE) / count(*), 6) AS mean
-        |  FROM a1, (SELECT unnest(range(1, 65)) AS i) i
-        |  GROUP BY 1, 2
-        |), c1 AS (
-        |  SELECT cent_id, list(mean ORDER BY pos) AS cv
-        |  FROM (
-        |    SELECT c0.cent_id, p.pos,
-        |      COALESCE(m.mean, CAST(c0.cv[CAST(p.pos + 1 AS INT)] AS DOUBLE)) AS mean
-        |    FROM cents0 c0
-        |    CROSS JOIN (SELECT unnest(range(0, 64)) AS pos) p
-        |    LEFT JOIN m1 m ON m.cent_id = c0.cent_id AND m.pos = p.pos
-        |  ) GROUP BY cent_id
-        |), d2 AS (
+        |), ${lloydRoundCtes("embeddings")}, d2 AS (
         |  SELECT e.vec_id, e.embedding, c.cent_id,
         |    ${l2sqSql(dbl("e.embedding"), "c.cv[i]", 64)} AS dist
         |  FROM embeddings e, c1 c
@@ -6650,34 +6515,11 @@ object CBlock {
          |       ELSE (a.score - a.med) / md.mad > -1.0 END AS keep
          |FROM a JOIN md USING (source) ORDER BY a.doc_id""".stripMargin,
 
-    "quality_classifier" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, lang, $toksSql AS toks FROM documents
-         |), sc AS (
-         |  SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tok,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(toks, t -> (${ph("t")} % 2001) - 1000)),
-         |      (a, x) -> a + x) AS score
-         |  FROM d
-         |)
-         |SELECT doc_id, lang, n_tok, score, score > 0 AS pred
-         |FROM sc ORDER BY doc_id""".stripMargin,
+    "quality_classifier" -> classifierSql(withShard = false),
 
     // the batch classifier's SQL + the shard key — the streamed
     // projection must land on it exactly
-    "quality_classifier_stream" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, lang, $toksSql AS toks FROM documents
-         |), sc AS (
-         |  SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tok,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(toks, t -> (${ph("t")} % 2001) - 1000)),
-         |      (a, x) -> a + x) AS score
-         |  FROM d
-         |)
-         |SELECT doc_id, lang, n_tok, score, score > 0 AS pred,
-         |  ${ph("CAST(doc_id AS VARCHAR)")} % 16 AS shard
-         |FROM sc ORDER BY doc_id""".stripMargin,
+    "quality_classifier_stream" -> classifierSql(withShard = true),
 
     "train_export" ->
       s"""WITH RECURSIVE ${minhashPairsCte()},
@@ -6688,21 +6530,7 @@ object CBlock {
          |), kept AS (
          |  SELECT q.doc_id FROM q LEFT JOIN labels l ON q.doc_id = l.ldoc
          |  WHERE q.quality >= 0.62 AND (l.ldoc IS NULL OR l.cl = q.doc_id)
-         |), g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), gdf AS (
-         |  SELECT gram, count(*) AS df FROM g GROUP BY 1
-         |), bg AS (
-         |  SELECT DISTINCT gram FROM g JOIN gdf USING (gram)
-         |  WHERE doc_id % 97 = 0 AND df <= 2
-         |), cont AS (
-         |  SELECT DISTINCT doc_id FROM g JOIN bg USING (gram)
-         |  WHERE doc_id % 97 <> 0
-         |), clean AS (
+         |), ${contaminationCtes("")}, clean AS (
          |  SELECT d.doc_id, ${ph("CAST(d.doc_id AS VARCHAR)")} % 16 AS shard,
          |    len($toksSql) AS n_tok
          |  FROM documents d JOIN kept k ON d.doc_id = k.doc_id
@@ -6745,37 +6573,19 @@ object CBlock {
          |  CAST(sum(n_tok) AS BIGINT) AS tok_sum
          |FROM s GROUP BY 1 ORDER BY shard""".stripMargin,
 
-    "shard_zorder" -> {
-      val zTerms = (0 until 16).map { i =>
-        s"((l_partkey // ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
-          s" + ((l_suppkey // ${1L << i}) % 2) * ${1L << (2 * i)}"
-      }.mkString(" + ")
+    "shard_zorder" ->
       s"""WITH z AS (
          |  SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber,
-         |    ($zTerms) AS z
+         |    (${zTermsSql("l_partkey")}) AS z
          |  FROM lineitem
-         |), r AS (
-         |  SELECT *,
-         |    row_number() OVER (ORDER BY z, l_orderkey, l_linenumber) - 1 AS rk
-         |  FROM z
-         |), n AS (SELECT count(*) AS n FROM lineitem)
-         |SELECT (rk * 32) // n AS file_id, count(*) AS n_rows,
-         |  min(l_partkey) AS pk_min, max(l_partkey) AS pk_max,
-         |  min(l_suppkey) AS sk_min, max(l_suppkey) AS sk_max
-         |FROM r, n GROUP BY 1 ORDER BY file_id""".stripMargin
-    },
+         |), ${rankedFileStatsSql("z", "z")}""".stripMargin,
 
-    "shard_zorder_sampled" -> {
-      val zTerms = (0 until 16).map { i =>
-        s"((l_partkey // ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
-          s" + ((l_suppkey // ${1L << i}) % 2) * ${1L << (2 * i)}"
-      }.mkString(" + ")
+    "shard_zorder_sampled" ->
       s"""WITH pr AS (
          |  SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber,
-         |    ($zTerms) AS z, $sampledPuSql AS pu
+         |    (${zTermsSql("l_partkey")}) AS z, $sampledPuSql AS pu
          |  FROM lineitem
-         |), $sampledLayoutTailSql""".stripMargin
-    },
+         |), $sampledLayoutTailSql""".stripMargin,
 
     "shard_hilbert_sampled" ->
       s"""WITH ${hilbertCtes(
@@ -6787,101 +6597,25 @@ object CBlock {
          |  FROM h16
          |), $sampledLayoutTailSql""".stripMargin,
 
-    "shard_hilbert" -> {
+    "shard_hilbert" ->
       s"""WITH ${hilbertCtes(
             Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
             "l_partkey", "l_suppkey", "lineitem")},
-         |r AS (
-         |  SELECT *,
-         |    row_number() OVER (ORDER BY d, l_orderkey, l_linenumber) - 1 AS rk
-         |  FROM h16
-         |), n AS (SELECT count(*) AS n FROM lineitem)
-         |SELECT (rk * 32) // n AS file_id, count(*) AS n_rows,
-         |  min(l_partkey) AS pk_min, max(l_partkey) AS pk_max,
-         |  min(l_suppkey) AS sk_min, max(l_suppkey) AS sk_max
-         |FROM r, n GROUP BY 1 ORDER BY file_id""".stripMargin
-    },
+         |${rankedFileStatsSql("d", "h16")}""".stripMargin,
 
-    "shard_hilbert_prune" -> {
-      val zTerms = (0 until 16).map { i =>
-        s"((pk_bucket // ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
-          s" + ((l_suppkey // ${1L << i}) % 2) * ${1L << (2 * i)}"
-      }.mkString(" + ")
-      def layoutCte(name: String, order: String): String =
-        s"""SELECT '$name' AS layout, (rk * 32) // n AS file_id,
-           |    min(pk_bucket) AS pk_min, max(pk_bucket) AS pk_max,
-           |    min(l_suppkey) AS sk_min, max(l_suppkey) AS sk_max
-           |  FROM (SELECT hz.*,
-           |      row_number() OVER (ORDER BY $order) - 1 AS rk FROM hz), n
-           |  GROUP BY 1, 2""".stripMargin
-      s"""WITH z0 AS (
-         |  SELECT l_partkey % 100 AS pk_bucket, l_suppkey, l_orderkey,
-         |    l_linenumber
-         |  FROM lineitem
-         |),
-         |${hilbertCtes(
+    "shard_hilbert_prune" ->
+      probePruneSql(s"""${hilbertCtes(
             Seq("pk_bucket", "l_suppkey", "l_orderkey", "l_linenumber"),
             "pk_bucket", "l_suppkey", "z0")},
          |hz AS (
-         |  SELECT h16.*, ($zTerms) AS z FROM h16
-         |), n AS (SELECT count(*) AS n FROM lineitem),
-         |f AS (
-         |  ${layoutCte("hilbert", "d, l_orderkey, l_linenumber")}
-         |  UNION ALL
-         |  ${layoutCte("zorder", "z, l_orderkey, l_linenumber")}
-         |), p AS (
-         |  SELECT * FROM (VALUES ('pk_bucket', 3), ('pk_bucket', 47),
-         |    ('pk_bucket', 91), ('suppkey', 2), ('suppkey', 5),
-         |    ('suppkey', 9)) AS t(dim, probe_val)
-         |)
-         |SELECT f.layout, p.dim, CAST(p.probe_val AS BIGINT) AS probe_val,
-         |  count(*) AS files_hit
-         |FROM f JOIN p ON
-         |  (p.dim = 'pk_bucket' AND f.pk_min <= p.probe_val
-         |    AND p.probe_val <= f.pk_max) OR
-         |  (p.dim = 'suppkey' AND f.sk_min <= p.probe_val
-         |    AND p.probe_val <= f.sk_max)
-         |GROUP BY 1, 2, 3
-         |ORDER BY layout, dim, probe_val""".stripMargin
-    },
+         |  SELECT h16.*, (${zTermsSql("pk_bucket")}) AS z FROM h16
+         |)""".stripMargin, "hz", Seq("hilbert" -> "d", "zorder" -> "z")),
 
-    "shard_zorder_prune" -> {
-      val zTerms = (0 until 16).map { i =>
-        s"((pk_bucket // ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
-          s" + ((l_suppkey // ${1L << i}) % 2) * ${1L << (2 * i)}"
-      }.mkString(" + ")
-      def layoutCte(name: String, order: String): String =
-        s"""SELECT '$name' AS layout, (rk * 32) // n AS file_id,
-           |    min(pk_bucket) AS pk_min, max(pk_bucket) AS pk_max,
-           |    min(l_suppkey) AS sk_min, max(l_suppkey) AS sk_max
-           |  FROM (SELECT z2.*,
-           |      row_number() OVER (ORDER BY $order) - 1 AS rk FROM z2), n
-           |  GROUP BY 1, 2""".stripMargin
-      s"""WITH z0 AS (
-         |  SELECT l_partkey % 100 AS pk_bucket, l_suppkey, l_orderkey,
-         |    l_linenumber
-         |  FROM lineitem
-         |), z2 AS (
-         |  SELECT z0.*, ($zTerms) AS z FROM z0
-         |), n AS (SELECT count(*) AS n FROM lineitem),
-         |f AS (
-         |  ${layoutCte("zorder", "z, l_orderkey, l_linenumber")}
-         |  UNION ALL
-         |  ${layoutCte("pk_sorted", "pk_bucket, l_orderkey, l_linenumber")}
-         |  UNION ALL
-         |  ${layoutCte("natural", "l_orderkey, l_linenumber")}
-         |), p AS (
-         |  SELECT * FROM (VALUES ('pk_bucket', 3), ('pk_bucket', 47),
-         |    ('pk_bucket', 91), ('suppkey', 2), ('suppkey', 5),
-         |    ('suppkey', 9)) AS t(dim, pv)
-         |)
-         |SELECT layout, dim, CAST(pv AS BIGINT) AS probe_val,
-         |  count(*) AS files_hit
-         |FROM f JOIN p
-         |  ON (dim = 'pk_bucket' AND pk_min <= pv AND pv <= pk_max)
-         |  OR (dim = 'suppkey' AND sk_min <= pv AND pv <= sk_max)
-         |GROUP BY 1, 2, 3 ORDER BY layout, dim, probe_val""".stripMargin
-    },
+    "shard_zorder_prune" ->
+      probePruneSql(s"""z2 AS (
+         |  SELECT z0.*, (${zTermsSql("pk_bucket")}) AS z FROM z0
+         |)""".stripMargin, "z2",
+        Seq("zorder" -> "z", "pk_sorted" -> "pk_bucket", "natural" -> "")),
 
     "dedup_contained" ->
       """WITH d AS (SELECT doc_id, text FROM documents)
@@ -6952,74 +6686,19 @@ object CBlock {
          |  CAST(sum(n_tok) AS BIGINT) AS tok_sum, min(doc_id) AS min_id
          |FROM a GROUP BY 1 ORDER BY split""".stripMargin,
 
-    "source_overlap" ->
-      s"""WITH g0 AS (
-         |  SELECT source AS src,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), g AS (SELECT DISTINCT src, gram FROM g0),
-         |sizes AS (
-         |  SELECT src, count(*) AS n_grams FROM g GROUP BY 1
-         |), p AS (
-         |  SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_shared
-         |  FROM g a JOIN g b ON a.gram = b.gram AND a.src < b.src
-         |  GROUP BY 1, 2
-         |)
-         |SELECT source_a, source_b, n_shared,
-         |  ROUND(n_shared / (sa.n_grams + sb.n_grams - n_shared), 6) AS jaccard,
-         |  CAST(1 AS BIGINT) AS domain_mod
-         |FROM p
-         |JOIN sizes sa ON sa.src = source_a
-         |JOIN sizes sb ON sb.src = source_b
-         |ORDER BY source_a, source_b""".stripMargin,
+    "source_overlap" -> sourceOverlapSql(1),
 
-    "source_overlap_bounded" ->
-      s"""WITH g0 AS (
-         |  SELECT source AS src,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), g AS (SELECT DISTINCT src, gram FROM g0 WHERE gram % 16 = 0),
-         |sizes AS (
-         |  SELECT src, count(*) AS n_grams FROM g GROUP BY 1
-         |), p AS (
-         |  SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_shared
-         |  FROM g a JOIN g b ON a.gram = b.gram AND a.src < b.src
-         |  GROUP BY 1, 2
-         |)
-         |SELECT source_a, source_b, CAST(n_shared * 16 AS BIGINT) AS n_shared,
-         |  ROUND(n_shared / (sa.n_grams + sb.n_grams - n_shared), 6) AS jaccard,
-         |  CAST(16 AS BIGINT) AS domain_mod
-         |FROM p
-         |JOIN sizes sa ON sa.src = source_a
-         |JOIN sizes sb ON sb.src = source_b
-         |ORDER BY source_a, source_b""".stripMargin,
+    "source_overlap_bounded" -> sourceOverlapSql(16),
 
     "source_overlap_flagged" ->
-      s"""WITH ${minhashPairsCte()},
-         |ssig AS (
-         |  SELECT d.source, s.sig FROM sig s JOIN documents d USING (doc_id)
-         |), slots AS (
-         |  SELECT source, i.i AS slot, min(sig[i.i + 1]) AS mh
-         |  FROM ssig, (SELECT unnest(range(0, 16)) AS i) i
-         |  GROUP BY 1, 2
-         |), flag AS (
+      s"""WITH $sourceSlotsCtes, flag AS (
          |  SELECT a.source AS source_a, b.source AS source_b,
          |    CAST(SUM(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS DOUBLE) / 16
          |      AS est_jaccard
          |  FROM slots a JOIN slots b ON a.slot = b.slot AND a.source < b.source
          |  GROUP BY 1, 2
          |  HAVING SUM(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) >= 2
-         |), g0 AS (
-         |  SELECT source AS src,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), g AS (SELECT DISTINCT src, gram FROM g0),
+         |), ${sourceGramCtes(1)},
          |sizes AS (SELECT src, count(*) AS n_grams FROM g GROUP BY 1),
          |p AS (
          |  SELECT f.source_a, f.source_b, count(*) AS n
@@ -7103,19 +6782,7 @@ object CBlock {
     "sketch_heavy_hitters_stream" -> heavyHittersOracleSql,
 
     "emb_centroid" ->
-      s"""WITH c0 AS (
-        |  SELECT label, generate_subscripts(embedding, 1) AS dim,
-        |    unnest(embedding) AS x
-        |  FROM embeddings
-        |), comps AS (
-        |  SELECT label, dim,
-        |    SUM(CAST(CAST(x AS DOUBLE) AS DECIMAL(20,9))) AS sx, count(*) AS n
-        |  FROM c0 GROUP BY 1, 2
-        |), cen AS (
-        |  SELECT label, max(n) AS n_label,
-        |    list(CAST(sx AS DOUBLE) ORDER BY dim) AS sxs
-        |  FROM comps GROUP BY 1
-        |)
+      s"""WITH ${labelCentroidCtes("embeddings")}
         |SELECT vec_id, e.label, n_label,
         |  ROUND(sqrt($centroidSqSql), 6) AS centroid_dist
         |FROM embeddings e JOIN cen USING (label)
@@ -7179,12 +6846,7 @@ object CBlock {
       val eChain = (1 to 5).map(k =>
         s"""e$k AS (
            |  SELECT doc_id, wpos,
-           |    list_reduce(list_prepend(CAST('' AS VARCHAR),
-           |      string_split(enc, chr(31))), (acc, s) ->
-           |      CASE WHEN acc = '' THEN s
-           |           WHEN (acc = b.l OR ends_with(acc, chr(31) || b.l)) AND s = b.r
-           |             THEN acc || s
-           |           ELSE acc || chr(31) || s END) AS enc
+           |    $bpeMergeSql AS enc
            |  FROM e${k - 1}, b$k b
            |)""".stripMargin).mkString(",\n")
       s"""WITH u AS (
@@ -7236,14 +6898,6 @@ object CBlock {
          |)
          |SELECT doc_id, pos, tok_id FROM enc2 ORDER BY doc_id, pos""".stripMargin
     },
-
-    // IDENTICAL chain to tokenizer_encode — the streamed narrow encoder
-    // must emit the batch join+window encode's exact id relation
-    "tokenizer_encode_stream" ->
-      s"""WITH ${bpeEncodeCtes(5)}
-         |SELECT doc_id, pos, tok_id, sym FROM enc
-         |WHERE doc_id % 7 = 0
-         |ORDER BY doc_id, pos""".stripMargin,
 
     "pack_length_hist" ->
       s"""WITH t AS (
@@ -7345,47 +6999,17 @@ object CBlock {
          |FROM p ORDER BY vec_id""".stripMargin,
 
     "sim_l2_topk" ->
-      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
-        |ds AS (
-        |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    ${l2sqSql(dbl("p.embedding"), dbl("c.embedding"), 64)} AS d
-        |  FROM probes p JOIN embeddings c ON p.vec_id <> c.vec_id
-        |)
-        |SELECT probe_id, cand_id, ROUND(d, 6) AS l2sq
-        |FROM ds
-        |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY d, cand_id) <= 5
-        |ORDER BY probe_id, l2sq, cand_id""".stripMargin,
+      bruteTopKSql(l2sqSql(dbl("p.embedding"), dbl("c.embedding"), 64), "l2sq",
+        desc = false),
 
     "sim_mips" ->
-      s"""WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
-        |ips AS (
-        |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-        |    ${dotSql("p.embedding", "c.embedding", 64)} AS ip
-        |  FROM probes p JOIN embeddings c ON p.vec_id <> c.vec_id
-        |)
-        |SELECT probe_id, cand_id, ROUND(ip, 6) AS dot
-        |FROM ips
-        |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY ip DESC, cand_id) <= 5
-        |ORDER BY probe_id, dot DESC, cand_id""".stripMargin,
+      bruteTopKSql(dotSql("p.embedding", "c.embedding", 64), "dot", desc = true),
 
     "sketch_bloom_fpr" ->
-      s"""WITH g AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(CASE WHEN len(text) >= 8
-         |      THEN list_transform(range(1, len(text) - 6), i -> ${ph("text[i:i+7]")})
-         |      ELSE [${ph("text")}] END)) AS gram
-         |  FROM documents
-         |), bg AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
+      s"""WITH ${docGramCte()}, bg AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
          |cg AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 <> 0),
-         |bpos AS (
-         |  SELECT DISTINCT unnest(list_transform(range(0, 3), j ->
-         |    (gram * (((j+1) * 2654435761) % 2147483647)
-         |      + ((j+1) * 40503) % 2147483647) % 2147483647 % 4096)) AS pos
-         |  FROM bg
-         |), cpos AS (
-         |  SELECT gram, unnest(list_transform(range(0, 3), j ->
-         |    (gram * (((j+1) * 2654435761) % 2147483647)
-         |      + ((j+1) * 40503) % 2147483647) % 2147483647 % 4096)) AS pos
+         |${bloomBitsCte("bg")}, cpos AS (
+         |  SELECT gram, unnest($bloomPosSql) AS pos
          |  FROM cg
          |), hit AS (
          |  SELECT gram, count(*) AS c FROM cpos JOIN bpos USING (pos)
@@ -7472,16 +7096,6 @@ object CBlock {
          |ORDER BY a.source""".stripMargin,
 
     "quota_gate" ->
-      """SELECT doc_id, domain, slot FROM (
-        |  SELECT doc_id, source AS domain,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY doc_id) AS BIGINT) AS slot
-        |  FROM documents
-        |) WHERE slot <= 20 ORDER BY domain, slot""".stripMargin,
-
-    // IDENTICAL SQL to quota_gate — the streaming gate must admit the
-    // batch window's exact (doc, slot) relation
-    "quota_gate_stream" ->
       """SELECT doc_id, domain, slot FROM (
         |  SELECT doc_id, source AS domain,
         |    CAST(row_number() OVER (PARTITION BY source
@@ -7639,23 +7253,6 @@ object CBlock {
     // fixed total order merges)
     "sample_weighted_k_merge" -> weightedKOracleSql,
 
-    // IDENTICAL SQL to sample_exact_k — the shard-merged draw must
-    // equal the direct draw row for row (the bottom-k merge theorem)
-    "sample_exact_k_merge" ->
-      s"""WITH u AS (
-         |  SELECT doc_id, source,
-         |    (${ph("'sample:' || CAST(doc_id AS VARCHAR)")}
-         |      * ((1 * 2654435761) % 2147483647)
-         |      + (1 * 40503) % 2147483647) % 2147483647 AS pu
-         |  FROM documents
-         |)
-         |SELECT doc_id, source, sample_rank FROM (
-         |  SELECT doc_id, source,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY pu, doc_id) AS BIGINT) AS sample_rank
-         |  FROM u
-         |) WHERE sample_rank <= 7 ORDER BY source, sample_rank""".stripMargin,
-
     "lm_kn_model" ->
       s"""WITH ${knCtesOver("documents")}
          |SELECT w1, w2, c12, c1, n1p_fwd, n1p_bwd, b_types, p_kn
@@ -7748,13 +7345,7 @@ object CBlock {
 
     "dedup_lines" ->
       s"""WITH $lineCtes
-         |SELECT ln.doc_id, ln.n_lines,
-         |  CAST(count(*) FILTER (WHERE sup.sup < 3) AS BIGINT) AS n_kept,
-         |  COALESCE(array_to_string(
-         |    list(ln.line ORDER BY ln.line_id) FILTER (WHERE sup.sup < 3),
-         |    ' '), '') AS text_clean
-         |FROM ln JOIN sup USING (line)
-         |GROUP BY ln.doc_id, ln.n_lines
+         |$lineCleanSql
          |ORDER BY doc_id""".stripMargin,
 
     "dedup_lines_support" ->
@@ -7767,21 +7358,7 @@ object CBlock {
          |SELECT line, sup FROM sup ORDER BY line""".stripMargin,
 
     "dedup_lines_intra" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 3 = 0
-         |         THEN '$lineHeader $lineHeader ' || text
-         |         ELSE text END AS text
-         |  FROM documents
-         |), w AS (
-         |  SELECT doc_id, $toksSql AS t FROM corpus
-         |), ln AS (
-         |  SELECT doc_id, (off // 10) AS line_id,
-         |    CAST((len(t) + 9) // 10 AS BIGINT) AS n_lines,
-         |    array_to_string(list_slice(t, off + 1, off + 10), ' ') AS line
-         |  FROM (SELECT doc_id, t, unnest(range(0, len(t), 10)) AS off
-         |        FROM w WHERE len(t) > 0)
-         |), v AS (
+      s"""WITH ${lineSplitCtes(s"$lineHeader $lineHeader ", "ln")}, v AS (
          |  SELECT doc_id, n_lines, line_id, line,
          |    row_number() OVER (PARTITION BY doc_id, line
          |      ORDER BY line_id) = 1 AS keep
@@ -7809,20 +7386,7 @@ object CBlock {
          |GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "dedup_lines_stored" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 3 = 0 THEN '$lineHeader ' || text
-         |         ELSE text END AS text
-         |  FROM documents
-         |), w AS (
-         |  SELECT doc_id, $toksSql AS t FROM corpus
-         |), lnall AS (
-         |  SELECT doc_id, (off // 10) AS line_id,
-         |    CAST((len(t) + 9) // 10 AS BIGINT) AS n_lines,
-         |    array_to_string(list_slice(t, off + 1, off + 10), ' ') AS line
-         |  FROM (SELECT doc_id, t, unnest(range(0, len(t), 10)) AS off
-         |        FROM w WHERE len(t) > 0)
-         |), sup_old AS (
+      s"""WITH ${lineSplitCtes(s"$lineHeader ", "lnall")}, sup_old AS (
          |  SELECT line, count(DISTINCT doc_id) AS sup FROM lnall
          |  WHERE doc_id % 2 = 0 GROUP BY line
          |), ln AS (SELECT * FROM lnall WHERE doc_id % 2 = 1),
@@ -7845,13 +7409,7 @@ object CBlock {
     "curate_boilerplate" ->
       s"""WITH $lineCtes,
          |cleaned AS (
-         |  SELECT ln.doc_id, ln.n_lines,
-         |    CAST(count(*) FILTER (WHERE sup.sup < 3) AS BIGINT) AS n_kept,
-         |    COALESCE(array_to_string(
-         |      list(ln.line ORDER BY ln.line_id) FILTER (WHERE sup.sup < 3),
-         |      ' '), '') AS text_clean
-         |  FROM ln JOIN sup USING (line)
-         |  GROUP BY ln.doc_id, ln.n_lines
+         |$lineCleanSql
          |)
          |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(CASE WHEN len(list_filter(
@@ -8045,33 +7603,11 @@ object CBlock {
          |ORDER BY doc_id, rank""".stripMargin,
 
     "sim_hard_negatives" ->
-      s"""WITH probes AS (
-        |  SELECT vec_id, embedding, label FROM embeddings WHERE vec_id < 20
-        |), cos AS (
-        |  SELECT p.vec_id AS probe_id, c.vec_id AS neg_id,
-        |    ${cosSql("p.embedding", "c.embedding", 64)} AS cos
-        |  FROM probes p JOIN embeddings c ON p.label <> c.label
-        |)
-        |SELECT probe_id, neg_id, ROUND(cos, 6) AS cosine
-        |FROM cos
-        |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, neg_id) <= 5
-        |ORDER BY probe_id, cosine DESC, neg_id""".stripMargin,
+      bruteTopKSql(cosSql("p.embedding", "c.embedding", 64), "cosine", desc = true,
+        cand = "neg_id", pairOn = "p.label <> c.label"),
 
     "mm_phash" ->
-      s"""WITH dims AS (
-         |  SELECT doc_id, text,
-         |    4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h
-         |  FROM documents
-         |), px AS (
-         |  SELECT d.doc_id, y.y * d.w + x.x AS pos,
-         |    (d.doc_id * 31 + x.x * 7 + y.y * 13) % 256
-         |      + 2 * ((d.doc_id * 17 + x.x * 3 + y.y * 5) % 256)
-         |      + 4 * ((x.x + y.y * 11) % 256) AS v
-         |  FROM dims d
-         |  JOIN (SELECT unnest(range(0, 9)) AS x) x ON x.x < d.w
-         |  JOIN (SELECT unnest(range(0, 7)) AS y) y ON y.y < d.h
-         |  WHERE d.doc_id % 7 <> 0
-         |), agg AS (
+      s"""WITH ${mediaPixelCtes(withPos = true)}, agg AS (
          |  SELECT doc_id, CAST(sum(v) AS BIGINT) AS total,
          |    CAST(count(*) AS BIGINT) AS n
          |  FROM px GROUP BY 1
@@ -8082,13 +7618,7 @@ object CBlock {
          |      AS BIGINT) AS phash
          |  FROM px p JOIN agg a USING (doc_id) GROUP BY 1
          |)
-         |SELECT d.doc_id, d.doc_id % 7 <> 0 AS decoded,
-         |  CAST(CASE WHEN d.doc_id % 7 <> 0 THEN d.w ELSE 0 END AS BIGINT) AS width,
-         |  CAST(CASE WHEN d.doc_id % 7 <> 0 THEN d.h ELSE 0 END AS BIGINT) AS height,
-         |  CASE WHEN d.doc_id % 7 <> 0 THEN s.phash
-         |       ELSE ${ph("substr(d.text, 1, 16)")} END AS phash
-         |FROM dims d LEFT JOIN hsh s ON d.doc_id = s.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+         |${mediaRowsSql("hsh", "s", "phash")}""".stripMargin,
 
     "mm_phash_dups" ->
       s"""WITH $phashCtes
@@ -8185,5 +7715,26 @@ object CBlock {
       ("sample_weighted_k_stream" -> baseOracle("sample_weighted_k")) +
       // the ingest-side Bloom gate must flag the batch gate's exact
       // doc set, measured false positives included
-      ("decontaminate_stream" -> baseOracle("decontaminate_bloom"))
+      ("decontaminate_stream" -> baseOracle("decontaminate_bloom")) +
+      // the compacted registry must flag exactly what the full history
+      // index flags
+      ("dedup_registry_compact" -> baseOracle("dedup_incremental")) +
+      // the incremental merge must equal the full build
+      ("vocab_build" -> baseOracle("vocab_merge")) +
+      // direct (no shards): the hash match is the merge ≡ direct proof
+      ("sketch_moments" -> baseOracle("sketch_moments_stream")) +
+      // scored against the stored vocab artifacts: with minCount=1 their
+      // counts are exactly the corpus counts, so the twins are the
+      // inline-count SQL
+      ("lm_unigram_vocab" -> baseOracle("lm_unigram_score")) +
+      ("lm_bigram_vocab" -> baseOracle("lm_bigram_score")) +
+      // the streamed narrow encoder must emit the batch join+window
+      // encode's exact id relation
+      ("tokenizer_encode_stream" -> baseOracle("tokenizer_encode")) +
+      // the streaming gate must admit the batch window's exact
+      // (doc, slot) relation
+      ("quota_gate_stream" -> baseOracle("quota_gate")) +
+      // the shard-merged draw must equal the direct draw row for row
+      // (the bottom-k merge theorem)
+      ("sample_exact_k_merge" -> baseOracle("sample_exact_k"))
 }

@@ -35,8 +35,11 @@ import scala.util.{Failure, Success, Try}
   * no marker names. Stores without a version-2 manifest (earlier
   * builds' headerless and version-1 markers, plain Spark writes) are
   * read by listing until a compaction or retention run adopts them into
-  * a snapshot. [[StoreManifest]] holds the formats and the deletion
-  * rule.
+  * a snapshot. A commit into a plain-written store that no run has
+  * adopted yet (no `_commits`, no `_snapshot`) throws
+  * `IllegalStateException` before it stages anything: its marker would
+  * hide the plain files from [[readIndexed]]. [[StoreManifest]] holds
+  * the formats and the deletion rule.
   *
   * Every data file of the store and of its `_failed` log is written in
   * [[StoreFormat]]: parquet with zstd pages, and no statistics on the
@@ -112,6 +115,7 @@ object IndexedParquetSink {
           Row.fromSeq(f.take(2) ++ f.drop(2).map(_.toLong))
         })
         case None =>
+          StoreManifest.requireAdopted(fs, new Path(path))
           val tag = batchId.fold(s"u${java.util.UUID.randomUUID()}")(id => s"b$id")
           val roots = (path +: isFailed.flatMap(_ => failedPath).toSeq).map(new Path(_))
           val staging = new Path(s"$path/_staging/$tag")

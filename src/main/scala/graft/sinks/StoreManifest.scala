@@ -155,6 +155,23 @@ private[sinks] object StoreManifest {
     case _ => ()
   }
 
+  /** Refuse a commit into a store that holds data files no manifest can
+    * serve yet: no `_commits`, no `_snapshot`, and `index=` files that no
+    * commit wrote (plain Spark writes). Its first version-2 marker would
+    * make [[live]] serve the marker's files only and drop the rest, so
+    * such a store is adopted by a maintenance run ([[Compaction]],
+    * [[Retention]]) before it takes commits. A store with markers costs
+    * one `exists` call. */
+  def requireAdopted(fs: FileSystem, root: Path): Unit =
+    if (!fs.exists(new Path(root, "_commits")) && !fs.exists(new Path(root, "_snapshot"))) {
+      val plain = glob(fs, new Path(root, "index=*/*.parquet"))
+        .filter(st => Commit.findFirstIn(st.getPath.getName).isEmpty)
+      if (plain.nonEmpty) throw new IllegalStateException(
+        s"store $root holds ${plain.size} data files that no commit marker or " +
+          "snapshot names; adopt it with Compaction.compact or a Retention run " +
+          "before committing into it")
+    }
+
   /** Delete what a died attempt tagged `tag` left: its staging dir
     * `<first root>/_staging/<tag>` and its files under each root's
     * `index=` dirs. */

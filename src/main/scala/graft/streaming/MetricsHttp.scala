@@ -16,7 +16,7 @@ object MetricsHttp {
     * port from `server.getAddress.getPort`). Binds LOOPBACK by default —
     * the registry is driver-global, and a wildcard bind would expose it
     * on every interface; pass an explicit `addr` (e.g. a pod IP) when a
-    * cluster scraper needs to reach it (r12 ADVICE). */
+    * cluster scraper needs to reach it. */
   def start(port: Int = 0,
       addr: InetAddress = InetAddress.getLoopbackAddress): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(addr, port), 0)

@@ -13,6 +13,6 @@ object ColumnBridge {
 
   /** `AbstractDataType` is `private[sql]`; expressions outside the
     * spark package need this alias to declare `ExpectsInputTypes`
-    * input types (analysis-time type checks, r12 ADVICE). */
+    * input types (analysis-time type checks). */
   type InputType = org.apache.spark.sql.types.AbstractDataType
 }

@@ -142,6 +142,27 @@ class CommittedSnapshotSpec extends SparkSpec {
     val plain = Files.createTempDirectory("graft-snap-plain").resolve("store").toString
     docs(0, 80).write.partitionBy("index").parquet(plain)
     assert(listed(assertContract(plain)))
+    // a commit into it is refused before it stages anything: its marker
+    // would make the store serve the marker's files only
+    def tree(): Seq[String] = {
+      val base = java.nio.file.Paths.get(plain)
+      val walk = Files.walk(base)
+      try walk.iterator.asScala.map(base.relativize(_).toString).toSeq.sorted
+      finally walk.close()
+    }
+    val before = tree()
+    val refused = intercept[IllegalStateException](
+      IndexedParquetSink.commitBatch(docs(100, 20), plain, batchId = Some(0L)))
+    assert(refused.getMessage.contains("Compaction.compact"), refused.getMessage)
+    assert(tree() == before)
+    val stillListed = assertContract(plain)
+    assert(listed(stillListed) && stillListed.count() == 80)
+    // once a compaction has adopted it, the commit lands beside its rows
+    Compaction.compact(spark, plain, targetBytes = 1L << 30)
+    IndexedParquetSink.commitBatch(docs(100, 20), plain, batchId = Some(0L))
+    val adopted = assertContract(plain)
+    assert(!listed(adopted))
+    assert(ids(adopted) == ((0L until 80L) ++ (100L until 120L)))
 
     // markers as earlier builds wrote them: version 1, then headerless
     val root = Files.createTempDirectory("graft-snap-v1")

@@ -116,4 +116,56 @@ class ContractSpec extends SparkSpec {
       assert(depth == 0, s"$name: $depth unclosed '('")
     }
   }
+
+  test("each twin answers to its base row's oracle SQL verbatim") {
+    // (twin, base): a replay, merge, stored-artifact or restart row whose
+    // relation must equal its base row's exactly names the base's SQL
+    // instead of a copy; a copy that drifts would check the twin
+    // against a different relation
+    val twins = Seq(
+      "sync_pipeline_stream" -> "sync_pipeline",
+      "sync_compacted_store" -> "sync_pipeline",
+      "sync_rate_limit_stream" -> "sync_rate_limit",
+      "sync_rollover_stream" -> "sync_rollover",
+      "sync_ack_ledger_stream" -> "sync_ack_ledger",
+      "q_attribution_stream" -> "q_attribution",
+      "q_sessionize_stream" -> "q_sessionize",
+      "q_skyline_merge" -> "q_skyline",
+      "q_skyline_stream" -> "q_skyline",
+      "q_skyline3_merge" -> "q_skyline3",
+      "dedup_registry_compact" -> "dedup_incremental",
+      "dedup_index_stored" -> "dedup_incremental",
+      "vocab_build" -> "vocab_merge",
+      "sketch_moments" -> "sketch_moments_stream",
+      "lm_unigram_vocab" -> "lm_unigram_score",
+      "lm_bigram_vocab" -> "lm_bigram_score",
+      "tokenizer_encode_stream" -> "tokenizer_encode",
+      "quota_gate_stream" -> "quota_gate",
+      "sample_exact_k_merge" -> "sample_exact_k",
+      "sample_exact_k_stream" -> "sample_exact_k",
+      "sample_weighted_k_merge" -> "sample_weighted_k",
+      "sample_weighted_k_stream" -> "sample_weighted_k",
+      "sim_pq_stored" -> "sim_pq_ivf",
+      "dedup_lines_evict" -> "dedup_lines_stream",
+      "dedup_lines_ttl" -> "dedup_lines_stream",
+      "dedup_lines_ttl_stored" -> "dedup_lines_stream",
+      "dedup_gate_evict" -> "dedup_gate_multibatch",
+      "dedup_gate_ttl" -> "dedup_gate_multibatch",
+      "dedup_gate_ttl_stored" -> "dedup_gate_multibatch",
+      "decontaminate_stream" -> "decontaminate_bloom",
+      "dedup_ngram_jaccard_prefix" -> "dedup_ngram_jaccard",
+      "dedup_ngram_jaccard_merge" -> "dedup_ngram_jaccard",
+      "sketch_hll_stream" -> "sketch_hll",
+      "sketch_kmv_stream" -> "sketch_kmv",
+      "sketch_cms_dot_stream" -> "sketch_cms_dot",
+      "sketch_freq_cms_stream" -> "sketch_freq_cms",
+      "sketch_quantile_stream" -> "sketch_quantile",
+      "sketch_heavy_hitters_stream" -> "sketch_heavy_hitters",
+      "cdc_apply_stream" -> "cdc_apply")
+    val sql = SparkEntry.oracleSql
+    twins.foreach { case (twin, base) =>
+      assert(sql.contains(twin) && sql.contains(base), s"$twin or $base has no oracle")
+      assert(sql(twin) == sql(base), s"$twin's oracle SQL is not $base's")
+    }
+  }
 }
